@@ -219,6 +219,28 @@ object DedupOps {
       .distinct()
   }
 
+  /** Per-doc distinct word-shingle sets `(doc_id, sh)`, docs without a
+    * shingle dropped — pinned, so the array_distinct pass runs once and not
+    * once per [[joinBack]] side. */
+  private def shingleSets(docs: DataFrame): DataFrame =
+    Tables.fanOut(docs)
+      .select(col("doc_id"), array_distinct(shingles(col("text"))).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** THE LSH join-back: attach `d`'s per-doc `payload` to both ends of the
+    * candidate `pairs` (id columns `a`, `b`) as `<payload>_a` /
+    * `<payload>_b`. The candidate list is the tiny (LSH-bounded) side, so
+    * it — and the pair + `<payload>_a` intermediate — broadcast onto `d`,
+    * which is never shuffled. */
+  private def joinBack(pairs: DataFrame, d: DataFrame, a: String, b: String,
+      payload: String): DataFrame = {
+    val withA = d.select(col("doc_id").as(a), col(payload).as(s"${payload}_a"))
+      .join(broadcast(pairs), a)
+    d.select(col("doc_id").as(b), col(payload).as(s"${payload}_b"))
+      .join(broadcast(withA), b)
+  }
+
   /** Directed Broder containment on the MinHash-LSH candidate set: for each
     * candidate pair, |A∩B|/|A| and |A∩B|/|B| over distinct word-shingle
     * sets, keeping pairs where either direction reaches `threshold`.
@@ -228,20 +250,9 @@ object DedupOps {
     * [[minhashCandidatePairs]] + shingle join-back: never all-pairs.
     */
   def containmentOnCandidates(docs: DataFrame, threshold: Double): DataFrame = {
-    // the candidate list is the tiny side (LSH-bounded) — broadcast it (and
-    // the pair+sh_a intermediate) so the heavy shingle frame is never
-    // shuffled, and pin the shingle frame so its per-doc array_distinct
-    // pass runs once, not once per join side
     val pairs = minhashCandidatePairs(docs, "text", "doc_id")
-    val d = Tables.fanOut(docs)
-      .select(col("doc_id"), array_distinct(shingles(col("text"))).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    val withA = d.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-      .join(broadcast(pairs), "doc_a")
-    d.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-      .join(broadcast(withA), "doc_b")
+    joinBack(pairs, shingleSets(docs), "doc_a", "doc_b", "sh")
       .select(col("doc_a"), col("doc_b"),
         (inter.cast("double") / size(col("sh_a")).cast("double"))
           .as("contain_a_in_b"),
@@ -266,11 +277,7 @@ object DedupOps {
     // shape) — without the hint the planner shuffles the full text table
     // twice for the two join-backs
     val pairs = minhashCandidatePairs(docs, "text", "doc_id")
-    val d = Tables.fanOut(docs).select(col("doc_id"), col("text"))
-    val withA = d.select(col("doc_id").as("doc_a"), col("text").as("text_a"))
-      .join(broadcast(pairs), "doc_a")
-    d.select(col("doc_id").as("doc_b"), col("text").as("text_b"))
-      .join(broadcast(withA), "doc_b")
+    joinBack(pairs, Tables.fanOut(docs), "doc_a", "doc_b", "text")
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("text_a"), col("text_b")).cast("long").as("edit_dist"),
         length(col("text_a")).cast("long").as("len_a"),
@@ -305,18 +312,9 @@ object DedupOps {
       .join(ob.select(col("doc").as("dup_of"), col("band_idx"), col("band_hash")),
         Seq("band_idx", "band_hash"))
       .select(col("new_doc"), col("dup_of")).distinct()
-    // candidate list broadcasts onto the pinned shingle frame (the same
-    // join-back shape as q_jaccard_lsh — no shuffle of the arrays, one
-    // array_distinct pass)
-    val d = Tables.fanOut(docs).select(col("doc_id"),
-        array_distinct(shingles(col("text"))).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // exact Jaccard on the candidates only (the q_jaccard_lsh join-back)
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    val withA = d.select(col("doc_id").as("new_doc"), col("sh").as("sh_a"))
-      .join(broadcast(cand), "new_doc")
-    d.select(col("doc_id").as("dup_of"), col("sh").as("sh_b"))
-      .join(broadcast(withA), "dup_of")
+    joinBack(cand, shingleSets(docs), "new_doc", "dup_of", "sh")
       .select(col("new_doc"), col("dup_of"),
         (inter.cast("double") /
           (size(col("sh_a")) + size(col("sh_b")) - inter).cast("double"))
@@ -560,19 +558,9 @@ object DedupOps {
       "q_jaccard_lsh",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        // broadcast the LSH-bounded pair list (and the pair+sh_a
-        // intermediate) onto the pinned shingle frame: zero shuffles of
-        // the shingle arrays, one array_distinct pass instead of two
         val pairs = minhashCandidatePairs(docs, "text", "doc_id")
-        val d = Tables.fanOut(docs)
-          .select(col("doc_id"), array_distinct(shingles(col("text"))).as("sh"))
-          .filter(size(col("sh")) > 0)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-        val withA = d.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-          .join(broadcast(pairs), "doc_a")
-        d.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-          .join(broadcast(withA), "doc_b")
+        joinBack(pairs, shingleSets(docs), "doc_a", "doc_b", "sh")
           .select(col("doc_a"), col("doc_b"),
             (inter.cast("double") /
               (size(col("sh_a")) + size(col("sh_b")) - inter).cast("double"))

@@ -436,10 +436,10 @@ object TopKPerKeyStrategy extends SparkStrategy {
   * Gated to `k ≥ spark.graft.topk.rewriteMinK` (default 2): at k=1 the
   * idiom is usually a first-wins dedup over a near-unique key (the
   * crawl's in-round URL dedup), where hash-grouping every key loses ~2×
-  * to the window's radix sort (measured, DrainProbe) and nothing can
-  * prune — and the rule has no cardinality estimate to tell that apart
-  * from a heavy-group argmin, so it stays conservative. Workloads with
-  * few heavy groups can set the conf to 1.
+  * to the window's radix sort (measured; PLANS.md, "Measured regime
+  * boundary") and nothing can prune — and the rule has no cardinality
+  * estimate to tell that apart from a heavy-group argmin, so it stays
+  * conservative. Workloads with few heavy groups can set the conf to 1.
   */
 object RewriteRankLimitToTopK extends Rule[LogicalPlan] with PredicateHelper {
   private def limitOf(e: Expression, rn: Attribute): Option[Int] = e match {

@@ -2,29 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.{QueryEntry, Tables}
 import graft.streaming.StreamingDedup.DocEvent
 
-/** Driver-visible correctness artifact for the streaming surface: replay a
-  * deterministic event table through the REAL streaming engine
-  * (`MemoryStream` micro-batches + `processAllAvailable`) and hand the
-  * verdict table to the DuckDB oracle — streaming output becomes a hashed
-  * CORRECTNESS row instead of trust-the-spec.
-  *
-  * Reference semantics anchor: cumulative first-wins membership
-  * (download_files.py:142-187), the same rule `DedupOps.exactDedup`
-  * checks in batch.
-  *
-  * This is a replay HARNESS, not a scale path: the sf table is collected
-  * to the driver once to feed MemoryStream (the only way to drive
-  * deterministic micro-batch boundaries), so it stays out of Bench's
-  * headline set. The operator under test ([[StreamingDedup
-  * .exactDedupStream]]) is the scale path — state on the shuffle key,
-  * one record per distinct hash.
-  */
 /** Oracle-facing projection of [[StreamingDedup.DedupVerdict]] (snake_case
   * names so the SQL side needs no quoting; `unique` is a keyword). Top
   * level — a private nested class makes janino's codegen fall back to
@@ -62,10 +47,41 @@ final case class ViewEv(vts: Timestamp, v_user: Long, view_id: Long)
 final case class AttributedPair(click_id: Long, view_id: Long, user_id: Long,
     gap_us: Long)
 
+/** Driver-visible correctness artifact for the streaming surface: replay a
+  * deterministic event table through the REAL streaming engine
+  * (`MemoryStream` micro-batches, each drained before the next) and hand
+  * the output table to the DuckDB oracle — streaming output becomes a hashed
+  * CORRECTNESS row instead of trust-the-spec.
+  *
+  * These are replay HARNESSES, not scale paths: each sf table is collected
+  * to the driver once to feed MemoryStream (the only way to drive
+  * deterministic micro-batch boundaries), so they stay out of Bench's
+  * headline set. The operators under test (e.g. [[StreamingDedup
+  * .exactDedupStream]], [[StreamingSessionize.sessionizeStream]]) are the
+  * scale paths. Every entry runs through ONE lifecycle ([[replay]]); an
+  * entry owns only its input rows, its query shape, its row filter and its
+  * order.
+  */
 object StreamQueries {
 
   /** Fixed epoch base so event times are bit-deterministic. */
   private val EpochBaseMs = 1700000000000L
+
+  /** Replay slice width: one micro-batch per FOUR WEEKS of event time.
+    * Within-slice disorder never drops (drops are judged against the
+    * PREVIOUS batch's watermark, which trails the next slice's data — the
+    * argument holds for ANY slice size), so every emitted set is
+    * slice-size-invariant, and coarse slices keep the per-micro-batch
+    * state-store commit off the bench (daily batching measured 31 batches
+    * ≈ 50 s at sf0.1; weekly ≈ 5; the 30-day events table yields 2
+    * four-week batches). */
+  private val SliceMs = 28L * 86400000L
+
+  /** Flush-sentinel time past the last real event (52 slices, ~4 years):
+    * the sentinel advances the watermark past every real window / session
+    * so Append emits them all, while its own output never emits (the
+    * watermark never passes it) and is filtered by time or by sign. */
+  private val FlushOffsetMs = 52L * SliceMs
 
   /** Streaming checkpoints on tmpfs when available — the replay measures
     * the engine, not one shared local disk (same reasoning as Bench's
@@ -89,60 +105,99 @@ object StreamQueries {
     * conf at start(); the session value is restored before returning
     * (batch queries are unaffected). A production stream sizes this to its
     * real key volume instead. */
-  private def withStreamParts[A](s: org.apache.spark.sql.SparkSession)(
-      body: => A): A = {
+  private def withStreamParts[A](s: SparkSession)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     s.conf.set(key, "4")
     try body finally s.conf.set(key, prev)
   }
 
+  /** Event-time slices of `rows`, oldest first (input order kept within a
+    * slice). */
+  private def slices[E](rows: Seq[E], widthMs: Long)(tsMs: E => Long)
+      : Seq[Seq[E]] =
+    rows.groupBy(e => tsMs(e) / widthMs).toSeq.sortBy(_._1).map(_._2)
+
+  /** THE replay lifecycle. Without batches no stream starts (None).
+    * Otherwise `writer` starts under [[withStreamParts]] with a fresh
+    * checkpoint dir, each batch is fed and drained, `result` is read while
+    * the stream is still up, and the stream stops. */
+  private def replay[B, A](s: SparkSession, batches: Seq[B],
+      writer: => DataStreamWriter[Row])(feed: B => Unit)(result: => A)
+      : Option[A] =
+    if (batches.isEmpty) None
+    else {
+      val q = withStreamParts(s)(
+        writer.option("checkpointLocation", checkpointDir()).start())
+      try {
+        batches.foreach { b => feed(b); q.processAllAvailable() }
+        Some(result)
+      } finally q.stop()
+    }
+
+  /** [[replay]] of `query` into the memory sink `<name>_sink`. The sink rows
+    * are read with O's encoder, kept by `keep`, and detached from the
+    * stopped stream as a plain local Dataset (what the driver's parquet
+    * dump gets). */
+  private def toMemory[B, O: Encoder](s: SparkSession, name: String,
+      query: DataFrame, batches: Seq[B], keep: O => Boolean = (_: O) => true)(
+      feed: B => Unit): DataFrame = {
+    val sink = s"${name}_sink"
+    s.catalog.dropTempView(sink)
+    val out =
+      try replay(s, batches, query.writeStream.format("memory")
+          .queryName(sink).outputMode("append"))(feed)(
+          s.table(sink).as[O].collect().toSeq)
+      finally s.catalog.dropTempView(sink)
+    s.createDataset(out.getOrElse(Nil).filter(keep)).toDF()
+  }
+
+  /** One-stream [[toMemory]]: `rows` in event-time slices of `widthMs`,
+    * then — when `flush` builds one — a sentinel event [[FlushOffsetMs]]
+    * past the last real one, through `shape` over a fresh MemoryStream.
+    * `keep` sees each output row with the last real event time. */
+  private def replayRows[E: Encoder, O: Encoder](s: SparkSession,
+      name: String, rows: Seq[E], tsMs: E => Long,
+      flush: Option[Timestamp => E] = None,
+      keep: (O, Long) => Boolean = (_: O, _: Long) => true,
+      widthMs: Long = SliceMs)(shape: Dataset[E] => DataFrame): DataFrame = {
+    val mem = MemoryStream[E](s)
+    val lastMs = rows.map(tsMs).maxOption
+    val sentinel = for (f <- flush; m <- lastMs)
+      yield Seq(f(new Timestamp(m + FlushOffsetMs)))
+    toMemory[Seq[E], O](s, name, shape(mem.toDS()),
+      slices(rows, widthMs)(tsMs) ++ sentinel,
+      o => lastMs.exists(keep(o, _)))(b => mem.addData(b))
+  }
+
   def entries: Seq[QueryEntry] = Seq(
+    // ---- first-wins exact dedup through the real engine --------------------
+    // Reference semantics anchor: cumulative first-wins membership
+    // (download_files.py:142-187), the same rule `DedupOps.exactDedup`
+    // checks in batch. Deterministic event stream: ts = base + (doc_id %
+    // 100) s, fed in two ts-ordered micro-batches (50 s buckets) so
+    // cross-batch arrival order == global (ts, docId) order and the SQL
+    // oracle's window rank reproduces first-wins exactly (the dedup kernel
+    // sorts each group by (ts, docId), so the verdict set is
+    // bucket-size-invariant — two batches still exercise cross-batch state
+    // while keeping micro-batch overhead off the bench).
     QueryEntry(
       "q_stream_dedup_replay",
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        // deterministic event stream: ts = base + (doc_id % 100) s, fed in
-        // two ts-ordered micro-batches (50 s buckets) so cross-batch
-        // arrival order == global (ts, docId) order and the SQL oracle's
-        // window rank reproduces first-wins exactly (the dedup kernel
-        // sorts each group by (ts, docId), so the verdict set is
-        // bucket-size-invariant — two batches still exercise cross-batch
-        // state while keeping micro-batch overhead off the bench)
         val events = Tables.t(s, dir, "documents")
           .select(col("doc_id").cast("long"), col("text"))
-          .collect()
+          .collect().toSeq
           .map { r =>
             val id = r.getLong(0)
             DocEvent(new Timestamp(EpochBaseMs + (id % 100) * 1000L),
               id.toString, r.getString(1))
           }
-        val batches = events
-          .groupBy(e => (e.ts.getTime - EpochBaseMs) / 50000L)
-          .toSeq.sortBy(_._1).map(_._2.toSeq)
-
-        val mem = MemoryStream[DocEvent]
-        val sinkName = "q_stream_dedup_replay_sink"
-        s.catalog.dropTempView(sinkName)
-        val q = withStreamParts(s) {
-          StreamingDedup.exactDedupStream(mem.toDS())
-            .writeStream.format("memory").queryName(sinkName)
-            .option("checkpointLocation", checkpointDir())
-            .outputMode("append").start()
-        }
-        val verdicts =
-          try {
-            batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-            s.table(sinkName).collect().map(r => ReplayVerdict(
-              r.getString(0), r.getString(1), r.getBoolean(2), r.getString(3)))
-          } finally {
-            q.stop()
-            s.catalog.dropTempView(sinkName)
-          }
-        // detach from the stopped stream: a plain local Dataset goes to
-        // the driver's parquet dump
-        s.createDataset(verdicts.toSeq).toDF().orderBy("doc_id")
+        replayRows[DocEvent, ReplayVerdict](s, "q_stream_dedup_replay",
+            events, _.ts.getTime, widthMs = 50000L) { ds =>
+          StreamingDedup.exactDedupStream(ds)
+            .toDF("doc_id", "content_hash", "is_unique", "keep_id")
+        }.orderBy("doc_id")
       },
       Some("""WITH ev AS (
             SELECT CAST(doc_id AS VARCHAR) AS did, md5(text) AS h,
@@ -161,73 +216,33 @@ object StreamQueries {
     // ---- watermarked tumbling-window aggregation through the real engine --
     // The second canonical streaming op (after stateful dedup): 6-hour
     // tumbling windows over the events table, counted per (window,
-    // event_type) in Append mode behind a 1-hour watermark. Replay feeds
-    // one micro-batch per FOUR WEEKS — within-batch disorder never drops
-    // (drops are judged against the PREVIOUS batch's watermark, which
-    // trails the next slice's data — the argument holds for ANY slice
-    // size), and coarse batching keeps the per-micro-batch state-store
-    // commit overhead off the bench (daily batching measured 31 batches
-    // ≈ 50 s at sf0.1; weekly ≈ 5; the 30-day events table yields 2
-    // four-week batches). A far-future flush sentinel
-    // then closes every real window so Append emits them all — the oracle
-    // is a plain DuckDB epoch-floor rollup.
+    // event_type) in Append mode behind a 1-hour watermark, replayed in
+    // four-week slices. The flush sentinel then closes every real window
+    // so Append emits them all — the oracle is a plain DuckDB epoch-floor
+    // rollup.
     QueryEntry(
       "q_stream_window_counts",
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val rows = Tables.t(s, dir, "events")
           .select(col("ts").cast("timestamp"), col("event_type"),
             col("value").cast("double"))
-          .collect()
-          .map(r => WindowEvent(r.getTimestamp(0), r.getString(1), r.getDouble(2)))
-        if (rows.isEmpty) {
-          // empty source → empty frame (the oracle's result), not a crash
-          s.createDataset(Seq.empty[WindowCount]).toDF()
-        } else {
-        val sliceMs = 28L * 86400000L
-        val batches = rows.groupBy(e => e.ts.getTime / sliceMs)
-          .toSeq.sortBy(_._1).map(_._2.toSeq)
-        val maxRealTs = rows.map(_.ts.getTime).max
-        val flushTs = new Timestamp(maxRealTs + 52L * sliceMs)
-
-        val mem = MemoryStream[WindowEvent]
-        val sinkName = "q_stream_window_counts_sink"
-        s.catalog.dropTempView(sinkName)
-        val agg = mem.toDS()
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(28,6)")).as("total_dec"))
-        val q = withStreamParts(s) {
-          agg
+          .as[WindowEvent].collect().toSeq
+        // drop the sentinel by TIME, never by event_type (a real event
+        // type named "flush" must survive): every real window starts at or
+        // before the last real event; the sentinel's window starts years
+        // after it (and can't emit anyway — the watermark never passes it)
+        replayRows[WindowEvent, WindowCount](s, "q_stream_window_counts",
+            rows, _.ts.getTime, Some(WindowEvent(_, "flush", 0.0)),
+            (o, lastMs) => o.window_start.getTime <= lastMs) { ev =>
+          ev.withWatermark("ts", "1 hour")
+            .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+            .agg(count(lit(1)).as("n"),
+              sum(col("value").cast("decimal(28,6)")).as("total_dec"))
             .select(col("window.start").as("window_start"),
               col("event_type"), col("n"),
               col("total_dec").cast("double").as("total"))
-            .writeStream.format("memory").queryName(sinkName)
-            .option("checkpointLocation", checkpointDir())
-            .outputMode("append").start()
-        }
-        val out =
-          try {
-            batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-            mem.addData(Seq(WindowEvent(flushTs, "flush", 0.0)))
-            q.processAllAvailable()
-            s.table(sinkName).collect().map(r => WindowCount(
-              r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-          } finally {
-            q.stop()
-            s.catalog.dropTempView(sinkName)
-          }
-        // drop the sentinel by TIME, never by event_type (a real event
-        // type named "flush" must survive): every real window starts at or
-        // before the max real event ts; the sentinel's window starts a
-        // year after it (and can't emit anyway — the watermark never
-        // passes it)
-        s.createDataset(out.toSeq.filter(_.window_start.getTime <= maxRealTs))
-          .toDF()
-          .orderBy("window_start", "event_type")
-        }
+        }.orderBy("window_start", "event_type")
       },
       Some("""WITH b AS (SELECT
             TIMESTAMP '1970-01-01 00:00:00'
@@ -244,76 +259,40 @@ object StreamQueries {
     // The fourth canonical streaming op: the event stream joined to a
     // STATIC dimension (a crawl enriching fetched URLs with host metadata).
     // The static side is a plain batch DataFrame — Structured Streaming
-    // re-plans and broadcasts it under the stream side every micro-batch;
-    // the join itself holds NO state, only the downstream windowed count
-    // does. The flush sentinel (user -1) advances the watermark from the
-    // SOURCE even though the inner join drops its row, so every real
-    // window closes and Append emits it. Oracle = plain batch join +
-    // epoch-floor rollup.
+    // re-plans and broadcasts it under the stream side every micro-batch,
+    // so batch count — not row count — dominates this replay; the join
+    // itself holds NO state, only the downstream windowed count does. The
+    // flush sentinel (user -1) advances the watermark from the SOURCE even
+    // though the inner join drops its row, so every real window closes and
+    // Append emits it. Oracle = plain batch join + epoch-floor rollup.
     QueryEntry(
       "q_stream_static_join",
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val rows = Tables.t(s, dir, "events")
           .select(col("ts").cast("timestamp"), col("user_id"),
             col("value").cast("double"))
-          .collect()
-          .map(r => EnrichEvent(r.getTimestamp(0), r.getLong(1), r.getDouble(2)))
-        if (rows.isEmpty) {
-          s.createDataset(Seq.empty[SegmentWindowCount]).toDF()
-        } else {
-          // 4-week batches (the q_stream_stream_join precedent, defined
-          // below in this file): the static side is re-broadcast and the
-          // join re-planned EVERY micro-batch,
-          // so batch count — not row count — dominates this replay; the
-          // window aggregate is event-time-keyed and the flush sentinel
-          // closes every window, so the emitted set is batching-invariant
-          val sliceMs = 28L * 86400000L
-          val batches = rows.groupBy(e => e.ts.getTime / sliceMs)
-            .toSeq.sortBy(_._1).map(_._2.toSeq)
-          val maxRealTs = rows.map(_.ts.getTime).max
-          val flush = EnrichEvent(
-            new Timestamp(maxRealTs + 52L * sliceMs), -1L, 0.0)
-          // pinned: the engine re-plans and re-broadcasts the static side
-          // EVERY micro-batch — serve those rebuilds from the block cache
-          // instead of re-reading parquet each time
-          val dim = Tables.t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_mktsegment"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-          val mem = MemoryStream[EnrichEvent]
-          val sinkName = "q_stream_static_join_sink"
-          s.catalog.dropTempView(sinkName)
-          val agg = mem.toDS()
-            .withWatermark("ts", "1 hour")
+          .as[EnrichEvent].collect().toSeq
+        // pinned: the engine re-plans and re-broadcasts the static side
+        // EVERY micro-batch — serve those rebuilds from the block cache
+        // instead of re-reading parquet each time; released once the
+        // stream has stopped (its rows are on the driver by then)
+        val dim = Tables.t(s, dir, "customer")
+          .select(col("c_custkey"), col("c_mktsegment"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try replayRows[EnrichEvent, SegmentWindowCount](s,
+            "q_stream_static_join", rows, _.ts.getTime,
+            Some(EnrichEvent(_, -1L, 0.0))) { ev =>
+          ev.withWatermark("ts", "1 hour")
             .join(broadcast(dim), col("user_id") + 1 === col("c_custkey"))
             .groupBy(window(col("ts"), "6 hours"), col("c_mktsegment"))
             .agg(count(lit(1)).as("n"),
               sum(col("value").cast("decimal(28,6)")).as("total_dec"))
-          val q = withStreamParts(s) {
-            agg
-              .select(col("window.start").as("window_start"),
-                col("c_mktsegment").as("segment"), col("n"),
-                col("total_dec").cast("double").as("total"))
-              .writeStream.format("memory").queryName(sinkName)
-              .option("checkpointLocation", checkpointDir())
-              .outputMode("append").start()
-          }
-          val out =
-            try {
-              batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-              mem.addData(Seq(flush))
-              q.processAllAvailable()
-              s.table(sinkName).collect().map(r => SegmentWindowCount(
-                r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-            } finally {
-              q.stop()
-              s.catalog.dropTempView(sinkName)
-            }
-          s.createDataset(out.toSeq).toDF()
-            .orderBy("window_start", "segment")
-        }
+            .select(col("window.start").as("window_start"),
+              col("c_mktsegment").as("segment"), col("n"),
+              col("total_dec").cast("double").as("total"))
+        }.orderBy("window_start", "segment")
+        finally dim.unpersist()
       },
       Some("""WITH b AS (SELECT
             TIMESTAMP '1970-01-01 00:00:00'
@@ -334,67 +313,42 @@ object StreamQueries {
     // retention window per side and evicts joined state as the watermarks
     // advance (unbounded state otherwise — the classic stream-join trap).
     // Inner join in Append emits each matched pair in the micro-batch where
-    // both rows are present; replaying both streams in lockstep weekly
-    // batches makes the emitted SET the full join result, so no flush
+    // both rows are present; replaying both streams in lockstep four-week
+    // slices makes the emitted SET the full join result, so no flush
     // sentinel is needed (watermarks only bound state here, never output).
     // Oracle = the plain batch interval join.
     QueryEntry(
       "q_stream_stream_join",
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val rows = Tables.t(s, dir, "events")
           .filter(col("event_type").isin("click", "view"))
           .select(col("ts").cast("timestamp"), col("user_id"),
             col("event_id"), col("event_type"))
-          .collect()
-        val clicks = rows.filter(_.getString(3) == "click")
-          .map(r => ClickEv(r.getTimestamp(0), r.getLong(1), r.getLong(2)))
-        val views = rows.filter(_.getString(3) == "view")
-          .map(r => ViewEv(r.getTimestamp(0), r.getLong(1), r.getLong(2)))
-        if (rows.isEmpty) {
-          s.createDataset(Seq.empty[AttributedPair]).toDF()
-        } else {
-          // 4-week batches: the emitted pair SET is batching-invariant
-          // (inner join, lockstep delivery), and each micro-batch pays two
-          // state-store commit rounds — 13 batches keep the replay at the
-          // other harnesses' overhead class instead of 2× it
-          val sliceMs = 28L * 86400000L
-          val slices = rows.map(_.getTimestamp(0).getTime / sliceMs).distinct.sorted
-          val cByW = clicks.groupBy(_.cts.getTime / sliceMs)
-          val vByW = views.groupBy(_.vts.getTime / sliceMs)
-
-          val memC = MemoryStream[ClickEv]
-          val memV = MemoryStream[ViewEv]
-          val sinkName = "q_stream_stream_join_sink"
-          s.catalog.dropTempView(sinkName)
-          val joined = memC.toDS().withWatermark("cts", "1 hour")
-            .join(memV.toDS().withWatermark("vts", "1 hour"),
-              expr("""c_user = v_user AND
-                      vts >= cts AND vts <= cts + interval 24 hours"""))
-            .select(col("click_id"), col("view_id"),
-              col("c_user").as("user_id"),
-              (unix_micros(col("vts")) - unix_micros(col("cts"))).as("gap_us"))
-          val q = withStreamParts(s) {
-            joined.writeStream.format("memory").queryName(sinkName)
-              .option("checkpointLocation", checkpointDir())
-              .outputMode("append").start()
+          .collect().toSeq
+          .map[Either[ClickEv, ViewEv]] { r =>
+            if (r.getString(3) == "click")
+              Left(ClickEv(r.getTimestamp(0), r.getLong(1), r.getLong(2)))
+            else Right(ViewEv(r.getTimestamp(0), r.getLong(1), r.getLong(2)))
           }
-          val out =
-            try {
-              slices.foreach { w =>
-                memC.addData(cByW.getOrElse(w, Array.empty).toSeq)
-                memV.addData(vByW.getOrElse(w, Array.empty).toSeq)
-                q.processAllAvailable()
-              }
-              s.table(sinkName).collect().map(r => AttributedPair(
-                r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-            } finally {
-              q.stop()
-              s.catalog.dropTempView(sinkName)
-            }
-          s.createDataset(out.toSeq).toDF().orderBy("click_id", "view_id")
-        }
+        val memC = MemoryStream[ClickEv](s)
+        val memV = MemoryStream[ViewEv](s)
+        val joined = memC.toDS().withWatermark("cts", "1 hour")
+          .join(memV.toDS().withWatermark("vts", "1 hour"),
+            expr("""c_user = v_user AND
+                    vts >= cts AND vts <= cts + interval 24 hours"""))
+          .select(col("click_id"), col("view_id"),
+            col("c_user").as("user_id"),
+            (unix_micros(col("vts")) - unix_micros(col("cts"))).as("gap_us"))
+        // each lockstep micro-batch pays two state-store commit rounds;
+        // four-week slices keep this replay in the other entries' class
+        val batches = slices(rows, SliceMs)(e => e.fold(_.cts, _.vts).getTime)
+          .map(_.partitionMap(identity))
+        toMemory[(Seq[ClickEv], Seq[ViewEv]), AttributedPair](s,
+            "q_stream_stream_join", joined, batches) { case (c, v) =>
+          memC.addData(c)
+          memV.addData(v)
+        }.orderBy("click_id", "view_id")
       },
       Some("""WITH a AS (SELECT event_id AS click_id, ts AS cts, user_id
               FROM events WHERE event_type = 'click'),
@@ -409,56 +363,40 @@ object StreamQueries {
 
     // ---- exactly-once Glacier sink through the real engine -----------------
     // Streaming ingestion INTO the snapshot layer ([[GlacierSink]]): the
-    // events table replayed in four-week slices through foreachBatch,
-    // each micro-batch
-    // an atomic Glacier commit carrying its batch id. After the stream
-    // stops, batch 0 is re-delivered by hand (the crash-replay shape) —
-    // the sink must skip it, and the ORACLE proves it: any duplicate rows
-    // would break the hashed row-count/values against the plain table
-    // read. This turns the exactly-once write path into a CORRECTNESS row
-    // instead of trust-the-spec (`GlacierSinkSpec` covers the mechanics).
+    // events table replayed in four-week slices through foreachBatch, each
+    // micro-batch an atomic Glacier commit carrying its batch id. After the
+    // stream stops, batch 0 is re-delivered by hand (the crash-replay
+    // shape) — the sink must skip it, and the ORACLE proves it: any
+    // duplicate rows would break the hashed row-count/values against the
+    // plain table read. This turns the exactly-once write path into a
+    // CORRECTNESS row instead of trust-the-spec (`GlacierSinkSpec` covers
+    // the mechanics).
     QueryEntry(
       "q_stream_sink_replay",
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+        val cols = Seq("ts", "event_id", "user_id", "value")
         val rows = Tables.t(s, dir, "events")
           .select(col("ts").cast("timestamp"), col("event_id"),
             col("user_id"), col("value").cast("double"))
-          .collect()
-          .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2),
-            r.getDouble(3)))
-        val sliceMs = 28L * 86400000L
-        val batches = rows
-          .groupBy(_._1.getTime / sliceMs).toSeq.sortBy(_._1).map(_._2.toSeq)
-        if (batches.isEmpty) {
-          // empty source → the oracle's empty frame, not a head() crash
-          s.createDataset(Seq.empty[(Long, Long, Double)])
-            .toDF("event_id", "user_id", "value")
-        } else {
-          val root = graft.BenchDirs.scratchDir("stream-sink")
-          val g = new graft.tables.Glacier(root)
-          val mem = MemoryStream[(java.sql.Timestamp, Long, Long, Double)]
-          val q = withStreamParts(s) {
-            mem.toDF().toDF("ts", "event_id", "user_id", "value")
-              .writeStream
-              .option("checkpointLocation", checkpointDir())
-              .foreachBatch(GlacierSink.appendBatch(g, "events_sink") _)
-              .start()
+          .as[(Timestamp, Long, Long, Double)].collect().toSeq
+        val batches = slices(rows, SliceMs)(_._1.getTime)
+        val g =
+          new graft.tables.Glacier(graft.BenchDirs.scratchDir("stream-sink"))
+        val mem = MemoryStream[(Timestamp, Long, Long, Double)](s)
+        replay(s, batches, mem.toDF().toDF(cols: _*).writeStream
+            .foreachBatch(GlacierSink.appendBatch(g, "events_sink") _))(
+            b => mem.addData(b))(())
+          .fold(s.createDataset(Seq.empty[(Long, Long, Double)])
+            .toDF(cols.tail: _*)) { _ =>
+            // crash-replay: re-deliver batch 0 with its original id — the
+            // sink's high-water mark skips it; duplicates would fail the hash
+            GlacierSink.appendBatch(g, "events_sink")(
+              s.createDataset(batches.head).toDF(cols: _*), 0L)
+            g.read(s, "events_sink").get
+              .select(cols.tail.map(col): _*)
+              .orderBy("event_id")
           }
-          try {
-            batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-          } finally q.stop()
-          // crash-replay: re-deliver batch 0 with its original id — the
-          // sink's high-water mark skips it; duplicates would fail the hash
-          GlacierSink.appendBatch(g, "events_sink")(
-            s.createDataset(batches.head)
-              .toDF("ts", "event_id", "user_id", "value"),
-            0L)
-          g.read(s, "events_sink").get
-            .select(col("event_id"), col("user_id"), col("value"))
-            .orderBy("event_id")
-        }
       },
       Some("""SELECT event_id, user_id, value FROM events
           ORDER BY event_id"""),
@@ -468,61 +406,27 @@ object StreamQueries {
     // The third canonical streaming op: 30-min-gap sessions per user via
     // flatMapGroupsWithState with event-time timeouts
     // ([[StreamingSessionize]]), replayed in event-time-ordered four-week
-    // slices (the watermark-trailing argument makes the emitted session
-    // set slice-size-invariant; see q_stream_window_counts). The
-    // oracle is the BATCH sessionizer's SQL verbatim — the stream must
-    // reproduce the batch rollups (ordinals, decimal-exact sums) exactly.
-    // A far-future sentinel (user -1) advances the watermark so every real
-    // user's open session times out and Append emits it; sentinel output
-    // is excluded by TIME (its session starts a year past max real ts —
-    // and it can't emit anyway, the watermark never passes it).
+    // slices. The oracle is the BATCH sessionizer's SQL verbatim — the
+    // stream must reproduce the batch rollups (ordinals, decimal-exact
+    // sums) exactly. The flush sentinel (user -1) advances the watermark so
+    // every real user's open session times out and Append emits it;
+    // sentinel output is excluded by TIME (its session starts years past
+    // the last real event — and it can't emit anyway, the watermark never
+    // passes it).
     QueryEntry(
       "q_stream_sessionize_replay",
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         import StreamingSessionize.{SessionEvent, SessionRow}
         val rows = Tables.t(s, dir, "events")
-          .select(col("ts").cast("timestamp"), col("user_id"),
-            col("event_id"), col("value").cast("double"))
-          .collect()
-          .map(r => SessionEvent(r.getTimestamp(0), r.getLong(1),
-            r.getLong(2), r.getDouble(3)))
-        if (rows.isEmpty) {
-          s.createDataset(Seq.empty[SessionRow]).toDF()
-        } else {
-          val sliceMs = 28L * 86400000L
-          val batches = rows.groupBy(e => e.ts.getTime / sliceMs)
-            .toSeq.sortBy(_._1).map(_._2.toSeq)
-          val maxRealMs = rows.map(_.ts.getTime).max
-          val flush = SessionEvent(
-            new Timestamp(maxRealMs + 52L * sliceMs), -1L, 0L, 0.0)
-
-          val mem = MemoryStream[SessionEvent]
-          val sinkName = "q_stream_sessionize_replay_sink"
-          s.catalog.dropTempView(sinkName)
-          val q = withStreamParts(s) {
-            StreamingSessionize.sessionizeStream(mem.toDS())
-              .writeStream.format("memory").queryName(sinkName)
-              .option("checkpointLocation", checkpointDir())
-              .outputMode("append").start()
-          }
-          val out =
-            try {
-              batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-              mem.addData(Seq(flush))
-              q.processAllAvailable()
-              s.table(sinkName).collect().map(r => SessionRow(r.getLong(0),
-                r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-                r.getDouble(5), r.getLong(6)))
-            } finally {
-              q.stop()
-              s.catalog.dropTempView(sinkName)
-            }
-          s.createDataset(out.toSeq.filter(_.start_us <= maxRealMs * 1000L + 999L))
-            .toDF()
-            .orderBy("user_id", "session_id")
-        }
+          .select(col("ts").cast("timestamp"), col("user_id").as("userId"),
+            col("event_id").as("eventId"), col("value").cast("double"))
+          .as[SessionEvent].collect().toSeq
+        replayRows[SessionEvent, SessionRow](s, "q_stream_sessionize_replay",
+            rows, _.ts.getTime, Some(SessionEvent(_, -1L, 0L, 0.0)),
+            (o, lastMs) => o.start_us <= lastMs * 1000L + 999L) { ev =>
+          StreamingSessionize.sessionizeStream(ev).toDF()
+        }.orderBy("user_id", "session_id")
       },
       Some("""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value
               FROM events),
@@ -554,62 +458,30 @@ object StreamQueries {
     // finalizes when the watermark passes session end. Merge rule
     // (diff <= gap joins the run) matches the batch lag-rule twin exactly,
     // so the oracle is the same lag + running-sum SQL aggregated to session
-    // bounds (end = max ts + gap = session_window.end). Four-week replay
-    // slices keep per-micro-batch state commits off the bench; the far-future
-    // sentinel (user -1, dropped by sign) closes every real session.
+    // bounds (end = max ts + gap = session_window.end). Replayed in
+    // four-week slices; the flush sentinel (user -1, dropped by sign)
+    // closes every real session.
     QueryEntry(
       "q_stream_session_window",
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val rows = Tables.t(s, dir, "events")
           .select(col("ts").cast("timestamp"), col("user_id"),
             col("value").cast("double"))
-          .collect()
-          .map(r => SessEvent(r.getTimestamp(0), r.getLong(1), r.getDouble(2)))
-        if (rows.isEmpty) {
-          s.createDataset(Seq.empty[SessionOut]).toDF()
-        } else {
-          val sliceMs = 28L * 86400000L
-          val batches = rows.groupBy(e => e.ts.getTime / sliceMs)
-            .toSeq.sortBy(_._1).map(_._2.toSeq)
-          val maxRealTs = rows.map(_.ts.getTime).max
-          val flush = SessEvent(
-            new Timestamp(maxRealTs + 365L * 86400000L), -1L, 0.0)
-
-          val mem = MemoryStream[SessEvent]
-          val sinkName = "q_stream_session_window_sink"
-          s.catalog.dropTempView(sinkName)
-          val agg = mem.toDS()
-            .withWatermark("ts", "1 hour")
+          .as[SessEvent].collect().toSeq
+        replayRows[SessEvent, SessionOut](s, "q_stream_session_window", rows,
+            _.ts.getTime, Some(SessEvent(_, -1L, 0.0)),
+            (o, _) => o.user_id >= 0) { ev =>
+          ev.withWatermark("ts", "1 hour")
             .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
             .agg(count(lit(1)).as("n_events"),
               sum(col("value").cast("decimal(28,6)")).as("total_dec"))
-          val q = withStreamParts(s) {
-            agg.select(col("user_id"),
-                unix_micros(col("session_window.start")).as("start_us"),
-                unix_micros(col("session_window.end")).as("end_us"),
-                col("n_events"),
-                col("total_dec").cast("double").as("total_value"))
-              .writeStream.format("memory").queryName(sinkName)
-              .option("checkpointLocation", checkpointDir())
-              .outputMode("append").start()
-          }
-          val out =
-            try {
-              batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-              mem.addData(Seq(flush))
-              q.processAllAvailable()
-              s.table(sinkName).collect().map(r => SessionOut(
-                r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-                r.getDouble(4)))
-            } finally {
-              q.stop()
-              s.catalog.dropTempView(sinkName)
-            }
-          s.createDataset(out.toSeq.filter(_.user_id >= 0)).toDF()
-            .orderBy("user_id", "start_us")
-        }
+            .select(col("user_id"),
+              unix_micros(col("session_window.start")).as("start_us"),
+              unix_micros(col("session_window.end")).as("end_us"),
+              col("n_events"),
+              col("total_dec").cast("double").as("total_value"))
+        }.orderBy("user_id", "start_us")
       },
       Some("""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
               value FROM events),
