@@ -42,14 +42,6 @@ object CrawlBench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // AQE re-plans every shuffle stage at runtime — the right default for
-      // big exploratory queries, but a BSP crawl round is MANY small
-      // known-shape stages, and the per-stage re-optimization latency is
-      // pure fixed cost there (SPARK_GRAFT_AQE=true to re-enable and
-      // measure the difference; the logical results are identical either
-      // way — same checksum).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
       .config("spark.driver.memory",
         sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
       .getOrCreate()
@@ -76,18 +68,15 @@ object CrawlBench {
     val budget = Map("zenodo" -> 16000 * scale, "figshare" -> 12000 * scale,
       "osf" -> 12000 * scale, "nomad" -> 200, "gpcrmd" -> 4000 * scale,
       "mddb" -> 3200 * scale, "atlas" -> 2000 * scale)
-    // salts is a LOGICAL constant (drain candidates = salts × budget per
-    // host) — identical at every parallelism so the two cluster-size runs
-    // execute the same logical plan on the same input.
+    // salts is ignored by the drain (see CrawlLoop.drainSelectManaged), so
+    // the two cluster-size runs execute the same logical plan on the same
+    // input at every parallelism.
     // seen-set sketch under test: bloom (default) or cuckoo — same crawl,
     // same checksum, different fast-path membership bytes
     val sketch = sys.env.getOrElse("SPARK_GRAFT_SEEN_SKETCH", "bloom")
-    // commit pipelining under test (default on): round N's bulk output
-    // writes overlap round N+1's drain+fetch — same checksum either way
-    val pipeline = sys.env.getOrElse("SPARK_GRAFT_PIPELINE", "true").toBoolean
     val cfg = CrawlConfig(repo, budget, maxRounds = 8, root,
       salts = 8, bloomShards = 64, bloomExpectedPerShard = 1L << 16,
-      seenSketch = sketch, pipelineCommits = pipeline)
+      seenSketch = sketch)
 
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
@@ -141,7 +130,7 @@ object CrawlBench {
       s""""seconds":$secs,"seen":$seen,"docs":$docs,""" +
       s""""kernel_urls_per_sec":${urls / kernelSecs},""" +
       s""""kernel_seconds":$kernelSecs,"kernel_rows":$kernelRows,""" +
-      s""""sketch":"$sketch","pipeline":$pipeline,""" +
+      s""""sketch":"$sketch",""" +
       s""""loop_gc_ms":$loopGcMs,""" +
       s""""log_checksum":"$checksum"}""")
     spark.stop()

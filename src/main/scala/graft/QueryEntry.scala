@@ -13,9 +13,6 @@ final case class QueryEntry(
 )
 
 object Tables {
-  /** Read one of the driver-generated parquet tables under `dir`. Plain
-    * `spark.read.parquet` so Catalyst keeps full pushdown/pruning freedom.
-    */
   /** Footer-schema memo: the sf parquet files are immutable for a JVM's
     * lifetime, but every `spark.read.parquet` without an explicit schema
     * pays a driver-side footer read + schema merge per call — ~10-30 ms
@@ -28,6 +25,9 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
       org.apache.spark.sql.types.StructType]()
 
+  /** Read one of the driver-generated parquet tables under `dir`. Plain
+    * `spark.read.parquet` so Catalyst keeps full pushdown/pruning freedom.
+    */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val schema = schemaMemo.computeIfAbsent((spark, path),

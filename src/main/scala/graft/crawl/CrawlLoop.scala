@@ -50,7 +50,8 @@ object CrawlLoop {
       hostBudget: Map[String, Int],
       maxRounds: Int,
       glacierRoot: String,
-      /** salts per host for the drain/fetch partitioning */
+      /** ignored: kept for call-site compatibility — the drain's partial
+        * pass makes salting unnecessary (see [[drainSelectManaged]]) */
       salts: Int = 8,
       bloomShards: Int = 64,
       bloomExpectedPerShard: Long = 1L << 16,
@@ -66,13 +67,6 @@ object CrawlLoop {
         * (deletion-capable — see SeenSet.forgetUrls). Routing-only either
         * way; crawl order and the exact seen set are sketch-independent. */
       seenSketch: String = "bloom",
-      /** overlap each round's bulk output writes (crawl_log/docs/datasets/
-        * files) with the NEXT round's drain+fetch via
-        * [[Glacier.commitPipelined]]: the frontier/seen/bloom writes stay a
-        * synchronous barrier, the manifest flip stays atomic and strictly
-        * ordered, and crawl order/seen set are bit-identical either way
-        * (parity-tested). false = fully serial rounds (round-3 behavior). */
-      pipelineCommits: Boolean = true,
       /** the fetch seam (SURVEY §7.1(6)): None = the deterministic
         * synthetic fleet; a deployment supplies [[HttpFetchClient]] (or its
         * own) and touches nothing else. Must be Serializable — captured in
@@ -100,8 +94,31 @@ object CrawlLoop {
     "seen_sketch" -> cfg.sketch.tag,
   )
 
-  /** Run (or resume) the crawl to completion; returns the Glacier handle. */
+  /** Run (or resume) the crawl to completion; returns the Glacier handle.
+    *
+    * This is the one place that decides how a crawl executes, for every
+    * caller (tests, the query entries, the benches): AQE is off for the
+    * whole run — a BSP round is many small known-shape stages, and
+    * per-stage re-planning is pure fixed cost there (BENCH.md round 2; the
+    * logical results are identical either way) — and [[crawl]] sizes the
+    * shuffle grain round by round. Both session confs are restored on
+    * every exit, a failed round included.
+    */
   def run(spark: SparkSession, cfg: CrawlConfig): Glacier = {
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try crawl(spark, cfg, partsBefore)
+    finally {
+      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
+  }
+
+  /** The crawl under [[run]]'s plan policy; the post-pass runs at the
+    * session's own shuffle grain, `sessionParts`. */
+  private def crawl(spark: SparkSession, cfg: CrawlConfig,
+                    sessionParts: String): Glacier = {
     import spark.implicits._
     val tStart = System.nanoTime()
     val g = new Glacier(cfg.glacierRoot)
@@ -169,23 +186,22 @@ object CrawlLoop {
     // on the order of `pending` rows, and a micro-crawl frontier of a few
     // hundred URLs gains nothing from defaultParallelism-wide barriers —
     // each of the round's ~dozen shuffles would spawn 32 near-empty tasks
-    // (AQE is deliberately off here, so nothing coalesces them). Target
+    // ([[run]] keeps AQE off, so nothing coalesces them). Target
     // ~256 rows per partition, clamped to [2, defaultParallelism]: a
     // production-scale frontier (tens of thousands pending) keeps full
     // width, so this is the adaptive form of the same setting, not a
-    // local-mode tune. Restored after the loop (results are partition-
-    // count-invariant — the bit-identical log_checksum across the 8- vs
-    // 32-core BASELINE protocols pins that property).
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    // local-mode tune. The session grain returns for the post-pass
+    // (results are partition-count-invariant — the bit-identical
+    // log_checksum across the 8- vs 32-core BASELINE protocols pins that
+    // property).
     def roundParts(p: Long): Int = math.max(2, math.min(
       spark.sparkContext.defaultParallelism, ((p + 255) / 256).toInt))
-    try {
     while (pending > 0 && round <= cfg.maxRounds) {
       val t0 = System.nanoTime()
       spark.conf.set("spark.sql.shuffle.partitions",
         roundParts(pending).toString)
       val r = runRound(spark, g, cfg, round, pending, readTable, fill)
-      prev = r.handle
+      prev = Some(r.handle)
       pending = r.pendingAfter
       if (sys.env.contains("SPARK_GRAFT_CRAWL_VERBOSE")) {
         System.err.println(f"[crawl] round $round%2d: fetched=${r.fetched}%6d " +
@@ -201,7 +217,7 @@ object CrawlLoop {
       }
       round += 1
     }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
+    spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
     prev.foreach(_.await()); prev = None
     // post-pass once the crawl is done (idempotent on resume: skipped when
     // the current snapshot already is the post-pass)
@@ -357,9 +373,8 @@ object CrawlLoop {
 
   /** What a round hands back to the loop: the observation-derived counts
     * (so the loop never blocks on the in-flight commit for them) and the
-    * pipelined-commit handle when `cfg.pipelineCommits` (None = committed
-    * synchronously). */
-  final case class RoundResult(handle: Option[Glacier.PendingCommit],
+    * round's pipelined-commit handle. */
+  final case class RoundResult(handle: Glacier.PendingCommit,
                                pendingAfter: Long, fetched: Long,
                                enqueued: Long)
 
@@ -368,10 +383,9 @@ object CrawlLoop {
     * round's per-shard delta counts arrive via the bloom write's own
     * Observation — the saturation watch costs ZERO per-round Spark jobs
     * and never rescans the append-only state history. Synchronized:
-    * under pipelined commits the metrics thunk runs on the background
-    * commit thread (FIFO-ordered, so round N's update happens-before
-    * round N+1's read). nShards longs of driver memory — 4096 at the
-    * design point. */
+    * the metrics thunk runs on the background pipelined-commit thread
+    * (FIFO-ordered, so round N's update happens-before round N+1's read).
+    * nShards longs of driver memory — 4096 at the design point. */
   final class SketchFillState(init: Map[Int, Long]) {
     private val counts = scala.collection.mutable.Map.empty[Int, Long] ++ init
     /** fold in a round's per-shard deltas → (max inserted, saturated #) */
@@ -604,8 +618,8 @@ object CrawlLoop {
     // all stages, reading observations already fired. This replaces round
     // 1's standalone count() staging jobs — the round fires ZERO actions
     // that aren't table writes (minus the drain's tiny offsets collect).
-    // barrier = the three tables the NEXT round reads. Under pipelined
-    // commits they are written synchronously in stage order (frontier
+    // barrier = the three tables the NEXT round reads. The pipelined
+    // commit writes them synchronously in stage order (frontier
     // materializes the fetch+link caches, then seen/bloom read them) and
     // the bulk outputs (log/docs/datasets/files) follow on the background
     // lane, overlapped with the next round's drain+fetch.
@@ -628,7 +642,7 @@ object CrawlLoop {
     ) ++ (if (cfg.repo.gpcrmdCount > 0) Seq(
       g.TableWrite("head_sizes", headSizes, g.Append,
         Some(() => m(obsParsed, "hV")), stage = 2)) else Seq.empty)
-    // evaluated at manifest time (background under pipelining — obsParsed
+    // evaluated at manifest time (on the background lane — obsParsed
     // fires with the datasets write there)
     // Sketch saturation watch: this round's per-shard delta counts arrive
     // on the bloom write's Observation (fired by the synchronous barrier
@@ -674,16 +688,9 @@ object CrawlLoop {
         .foreach(_.unpersist(blocking = false))
     }
 
-    val handle =
-      if (cfg.pipelineCommits) {
-        Some(g.commitPipelined(spark, writes, roundMetrics,
-          note = s"round $round", onComplete = () => release()))
-      } else {
-        g.commit(spark, writes, roundMetrics, note = s"round $round")
-        release()
-        None
-      }
-    // phase A fired the fetch/link/new observations either way
+    val handle = g.commitPipelined(spark, writes, roundMetrics,
+      note = s"round $round", onComplete = () => release())
+    // phase A fired the fetch/link/new observations
     RoundResult(handle,
       pendingAfter = pendingBefore - m(obsFetch, "n") + m(obsNew, "n"),
       fetched = m(obsFetch, "n"), enqueued = m(obsNew, "n"))

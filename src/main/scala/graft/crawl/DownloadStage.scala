@@ -81,12 +81,12 @@ object DownloadStage {
     val files = g.read(spark, "files_clean").orElse(g.read(spark, "files"))
       .getOrElse(return Map.empty)
 
-    // ---- targets: direct files (+ archives when --withzipfiles) ----------
-    val direct = selectFiles(files, types, DirectFiles)
-    val targets0 =
-      if (withZipFiles) direct.unionByName(selectFiles(files, types, ZipArchives))
-      else direct
-    val targets = targets0.select(
+    // Direct files and zip members share ONE target projection and ONE
+    // cache check, so their cache key — (file_url, file_md5) — is equal by
+    // construction: an archive member whose md5 changed re-extracts
+    // exactly like a direct file re-downloads (divergent keys would let
+    // one path append dup urls the other path would have skipped).
+    def cacheTargets(selected: DataFrame): DataFrame = selected.select(
       col("file_url_in_repository").as("file_url"),
       coalesce(col("file_md5"), lit("")).as("file_md5"),
       col("file_name"),
@@ -97,13 +97,20 @@ object DownloadStage {
 
     // ---- pooch cache check: skip bodies already in the store --------------
     val cache = g.read(spark, "download_cache")
-    val toFetch = cache match {
+    def uncached(targets: DataFrame): DataFrame = cache match {
       case None => targets
       case Some(c) => targets.join(
         c.select(col("file_url").as("__curl"), col("file_md5").as("__cmd5")),
         col("file_url") === col("__curl") && col("file_md5") === col("__cmd5"),
         "left_anti")
     }
+
+    // ---- targets: direct files (+ archives when --withzipfiles) ----------
+    val direct = selectFiles(files, types, DirectFiles)
+    val targets = cacheTargets(
+      if (withZipFiles) direct.unionByName(selectFiles(files, types, ZipArchives))
+      else direct)
+    val toFetch = uncached(targets)
 
     val obsFetch = Observation("dl_fetch")
     val fetched = toFetch
@@ -133,25 +140,7 @@ object DownloadStage {
       spark.emptyDataset[CachedFile].toDF()
         .observe(obsExtract, count(lit(1)).as("n"))
     } else {
-      val members = selectFiles(files, types, InZipFiles)
-        .select(col("file_url_in_repository").as("file_url"),
-          coalesce(col("file_md5"), lit("")).as("file_md5"),
-          col("file_name"),
-          col("dataset_id_in_repository").as("dataset_id"),
-          col("file_type"))
-        .dropDuplicates("file_url")
-      // same cache key as the direct-file path — (file_url, file_md5) — so
-      // an archive member whose md5 changed re-extracts exactly like a
-      // direct file re-downloads (divergent keys let one path append dup
-      // urls the other path would have skipped)
-      val memberCached = cache match {
-        case None => members
-        case Some(c) => members.join(
-          c.select(col("file_url").as("__curl"), col("file_md5").as("__cmd5")),
-          col("file_url") === col("__curl") && col("file_md5") === col("__cmd5"),
-          "left_anti")
-      }
-      memberCached
+      uncached(cacheTargets(selectFiles(files, types, InZipFiles)))
         .repartition(spark.sparkContext.defaultParallelism, xxhash64(col("file_url")))
         .as[(String, String, String, String, String)]
         .mapPartitions { it =>

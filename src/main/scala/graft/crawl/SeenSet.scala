@@ -115,23 +115,18 @@ object SeenSet {
   def shardCol(url: org.apache.spark.sql.Column, nShards: Int) =
     pmod(xxhash64(url), lit(nShards.toLong)).cast("int")
 
-  /** Build per-shard Bloom filters for a batch of URLs → (shard, bloom).
-    * One shuffle of the raw urls, then one filter built per shard in a
-    * single pass (`groupByKey.mapGroups`). Deliberately NOT the [[BloomAgg]]
-    * aggregator: hash-partial aggregation would materialize a java-
-    * serialized filter buffer per (task × shard) — measured to collapse
-    * scaling at high core counts. BloomAgg remains the typed-aggregate API
-    * for ad-hoc use and is covered by its own spec.
-    */
-  def buildShards(urls: DataFrame, nShards: Int, expectedPerShard: Long,
-                  fpp: Double): DataFrame =
-    buildShardsWith(urls, nShards, BloomSeen(expectedPerShard, fpp))
-
-  /** Sketch-generic form of [[buildShards]]; the `bloom` column name is the
-    * historical table schema and holds whichever sketch's bytes. The
-    * `inserted` count rides every state row (summed by the fold, decremented
-    * by cuckoo deletes) so cumulative per-shard fill is an O(nShards)
-    * column-pruned aggregate — never a rescan of the sketch bytes or the
+  /** Build per-shard sketches for a batch of URLs → (shard, bloom,
+    * inserted). One shuffle of the raw urls, then one sketch built per
+    * shard in a single pass (`groupByKey.mapGroups`). Deliberately NOT the
+    * [[BloomAgg]] aggregator: hash-partial aggregation would materialize a
+    * java-serialized filter buffer per (task × shard) — measured to
+    * collapse scaling at high core counts. BloomAgg remains the
+    * typed-aggregate API for ad-hoc use and is covered by its own spec.
+    *
+    * The `bloom` column name is the historical table schema and holds
+    * whichever sketch's bytes. The `inserted` count rides every state row
+    * (summed by the fold, decremented by cuckoo deletes) so cumulative
+    * per-shard fill is an O(nShards) column-pruned aggregate — never a rescan of the sketch bytes or the
     * exact table. Mis-sized shards degrade FPP silently otherwise; the
     * crawl loop turns this into `sketch_fill_max_pct` /
     * `sketch_saturated_shards` round metrics and a saturation warning. */
@@ -150,13 +145,6 @@ object SeenSet {
       .toDF("shard", "bloom", "inserted")
   }
 
-  /** Fold a (shard, bloom) state with multiple rows per shard (delta
-    * appends) down to one merged row per shard — the compaction transform
-    * (`Glacier.compact(spark, "bloom", transformFn = SeenSet.foldShards)`).
-    */
-  def foldShards(state: DataFrame): DataFrame =
-    foldShardsWith(state, BloomSeen(0L, 0.03)) // merge path ignores sizing
-
   /** `inserted` for states written before the fill-accounting column
     * existed: 0 (baseline unknown). Every reader goes through this so a
     * resume on a pre-upgrade Glacier root keeps working; its fill metrics
@@ -168,7 +156,12 @@ object SeenSet {
       coalesce(col("inserted").cast("long"), lit(0L)).as("inserted")
     else lit(0L).as("inserted")
 
-  /** Sketch-generic form of [[foldShards]]. */
+  /** Fold a (shard, bloom) state with multiple rows per shard (delta
+    * appends) down to one merged row per shard — the compaction transform
+    * (`Glacier.compact(spark, "bloom", transformFn =
+    * SeenSet.foldShardsWith(_, sk))`). The merge uses only the sketch
+    * kind; each row's serialized bytes carry their own sizing.
+    */
   def foldShardsWith(state: DataFrame, sk: SeenSketch): DataFrame = {
     val spark = state.sparkSession
     import spark.implicits._
@@ -183,14 +176,8 @@ object SeenSet {
       .toDF("shard", "bloom", "inserted")
   }
 
-  /** Merge an existing shard table with a delta batch's shards. */
-  def mergeShards(old: DataFrame, delta: DataFrame): DataFrame =
-    foldShards(old.select(col("shard"), col("bloom"), insertedOr0(old))
-      .unionByName(delta.select(col("shard"), col("bloom"),
-        insertedOr0(delta))))
-
   /** Split `candidates` (must have a `url` column) into definitely-new rows
-    * (Bloom miss) and rows needing exact confirmation, then anti-join only
+    * (sketch miss) and rows needing exact confirmation, then anti-join only
     * the latter against the exact seen table. Returns the exactly-new rows.
     *
     * Shard-partitioned probe: candidates are cogrouped with the bloom state
@@ -199,14 +186,9 @@ object SeenSet {
     * shard per committed round). NOTHING is collected to the driver or
     * broadcast: at the 10^10-URL design point (4096 shards × ~3 MB) the
     * state stays distributed; a driver collect+broadcast would move ~12 GB
-    * through the driver every round.
+    * through the driver every round. The probe uses only the sketch kind;
+    * the state rows' bytes carry their own sizing.
     */
-  def filterNew(candidates: DataFrame, bloom: DataFrame,
-                seenExact: DataFrame, nShards: Int): DataFrame =
-    filterNewWith(candidates, bloom, seenExact, nShards,
-      BloomSeen(0L, 0.03)) // probe path ignores sizing
-
-  /** Sketch-generic form of [[filterNew]]. */
   def filterNewWith(candidates: DataFrame, state: DataFrame,
                     seenExact: DataFrame, nShards: Int,
                     sk: SeenSketch): DataFrame = {

@@ -35,15 +35,8 @@ object CrawlQueries {
       case Some((sess, g)) if sess eq s => g
       case _ =>
         val root = Files.createTempDirectory("crawl-q").toString
-        // AQE off for the BSP loop only (many tiny known-shape stages;
-        // per-stage re-planning is pure latency — see BENCH.md round 2);
-        // restored for the analytical queries around this crawl.
-        val aqeBefore = s.conf.get("spark.sql.adaptive.enabled")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        val g = try CrawlLoop.run(s,
-            CrawlConfig(repo, budget, maxRounds = 6, root,
-              salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))
-          finally s.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+        val g = CrawlLoop.run(s, CrawlConfig(repo, budget, maxRounds = 6,
+          root, salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))
         cached = Some((s, g))
         g
     }

@@ -1188,10 +1188,6 @@ object DedupOps {
       .filter(col("src") =!= col("dst"))
       .distinct(), localFinishEdges)
 
-  /** Fast path when the caller guarantees edges are already canonical
-    * (src > dst) and distinct — e.g. LSH candidate pairs, which arrive as
-    * distinct (doc_a < doc_b) rows — skipping one full shuffle+distinct
-    * of the initial (largest) edge set. */
   /** Free a localCheckpoint-backed frame's blocks NOW. `Dataset.unpersist`
     * only clears CacheManager entries — a checkpointed RDD's
     * MEMORY_AND_DISK blocks otherwise linger until the ContextCleaner
@@ -1220,6 +1216,10 @@ object DedupOps {
     * logarithmic tail collapses. */
   val LocalFinishEdges: Long = 2000000L
 
+  /** Fast path when the caller guarantees edges are already canonical
+    * (src > dst) and distinct — e.g. LSH candidate pairs, which arrive as
+    * distinct (doc_a < doc_b) rows — skipping one full shuffle+distinct
+    * of the initial (largest) edge set. */
   def connectedComponentsCanonical(edges: DataFrame,
       localFinishEdges: Long = LocalFinishEdges): (DataFrame, Int) = {
     var e = edges.localCheckpoint(true)

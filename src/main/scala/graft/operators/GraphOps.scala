@@ -32,10 +32,15 @@ object GraphOps {
 
   private val Quant = 1e12
 
+  /** The affine link coefficients (a, b) of the synthetic graph: every
+    * node links to (a·node + b) mod N. The oracle SQL spells the same
+    * three pairs out. */
+  private val LinkCoeffs = Seq((7L, 1L), (13L, 5L), (31L, 11L))
+
   /** Deterministic synthetic out-links: node → (a·node + b) mod N for
-    * (a,b) ∈ {(7,1), (13,5), (31,11)}, self-loops dropped, deduplicated. */
+    * (a,b) ∈ [[LinkCoeffs]], self-loops dropped, deduplicated. */
   def syntheticEdges(nodes: DataFrame, nDf: DataFrame): DataFrame = {
-    val dsts = Seq((7L, 1L), (13L, 5L), (31L, 11L)).map { case (a, b) =>
+    val dsts = LinkCoeffs.map { case (a, b) =>
       pmod(col("node") * a + b, col("n_docs")).as("dst")
     }
     nodes.crossJoin(broadcast(nDf))
@@ -83,7 +88,7 @@ object GraphOps {
     * scalar aggs for the norms; same bucketed-edge story as PageRank at
     * 100 TB.
     */
-  def hits(docs: DataFrame, iterations: Int): DataFrame = {
+  def hits(docs: DataFrame, iterations: Int): DataFrame =
     // Small-graph fast path (the bfsLayers/DedupOps.LocalFinishEdges
     // pattern): collect the node ids only — the 3·|nodes| edge set is
     // derived arithmetic — and run the fixed iterations in memory. Every
@@ -91,11 +96,20 @@ object GraphOps {
     // divisions the distributed loop performs, so the result is
     // bit-identical (pinned by the equality spec); one job replaces the
     // ~8 join/agg/norm barriers per iteration that amplify under load.
-    val nodeIdsArr = docs.select(col("doc_id").cast("long")).collect()
-      .map(_.getLong(0))
-    if (3L * nodeIdsArr.length <= DedupOps.LocalFinishEdges)
-      return hitsLocal(docs.sparkSession, nodeIdsArr, iterations)
-    hitsDistributed(docs, iterations)
+    localNodeIds(docs.select(col("doc_id").cast("long"))) match {
+      case Some(ids) => hitsLocal(docs.sparkSession, ids, iterations)
+      case None      => hitsDistributed(docs, iterations)
+    }
+
+  /** The node ids of a one-column (long) id frame when the synthetic
+    * graph over them — 3 directed edges per node — fits the driver-local
+    * budget [[DedupOps.LocalFinishEdges]]; None above it. Collects at most
+    * bound + 1 ids, so a graph above the bound never crosses the driver:
+    * the size gate comes before the collect, not after it. */
+  private[graft] def localNodeIds(ids: DataFrame): Option[Array[Long]] = {
+    val bound = DedupOps.LocalFinishEdges / 3
+    val got = ids.limit((bound + 1).toInt).collect().map(_.getLong(0))
+    if (got.length > bound) None else Some(got)
   }
 
   private def hitsLocal(spark: org.apache.spark.sql.SparkSession,
@@ -104,11 +118,10 @@ object GraphOps {
     def mod(x: Long): Long = { val m = x % n; if (m < 0) m + n else m }
     // distinct out-neighbors per node (self-loops dropped) — the exact
     // syntheticEdges set; in-neighbors derived by reversal
-    val coeffs = Seq((7L, 1L), (13L, 5L), (31L, 11L))
     val out = new java.util.HashMap[Long, Array[Long]]()
     val in = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
     nodeIds.foreach { v =>
-      val ds = coeffs.map { case (a, b) => mod(v * a + b) }
+      val ds = LinkCoeffs.map { case (a, b) => mod(v * a + b) }
         .distinct.filter(_ != v).toArray
       out.put(v, ds)
       ds.foreach { d =>
@@ -258,57 +271,54 @@ object GraphOps {
     // the distributed level loop below runs unchanged — at web scale the
     // anti-join becomes the SeenSet probe, as documented above.
     val spark = docs.sparkSession
-    val nodeIds = docs.select(col("doc_id").cast("long")).collect()
-      .map(_.getLong(0))
-    if (3L * nodeIds.length <= DedupOps.LocalFinishEdges) {
-      val n = nodeIds.length.toLong
-      val idSet = new java.util.HashSet[Long](nodeIds.length * 2)
-      nodeIds.foreach(idSet.add)
-      def mod(x: Long): Long = { val m = x % n; if (m < 0) m + n else m }
-      // adjacency is implicit: out(v) = (a·v+b) mod N, self-loops dropped.
-      // Mirror the distributed semantics exactly: edges exist only for
-      // src ∈ node table (a discovered dst that is not a real node id has
-      // NO out-edges — the level join keys edges on src), while any dst
-      // value participates in layers and the rollup.
-      val depthOf = new java.util.HashMap[Long, Int]()
-      var frontier = nodeIds.filter(v => mod0(v, 97L) == 0).sorted
-      frontier.foreach(v => depthOf.put(v, 0))
-      var d = 1
-      while (d <= maxDepth && frontier.nonEmpty) {
-        val nxt = new java.util.TreeSet[java.lang.Long]()
-        frontier.foreach { v =>
-          if (idSet.contains(v)) {
-            Seq((7L, 1L), (13L, 5L), (31L, 11L)).foreach { case (a, b) =>
-              val w = mod(v * a + b)
-              if (w != v && !depthOf.containsKey(w)) nxt.add(w)
-            }
+    val nodeIds = localNodeIds(docs.select(col("doc_id").cast("long")))
+      .getOrElse(return bfsLayersDistributed(docs, maxDepth))
+    val n = nodeIds.length.toLong
+    val idSet = new java.util.HashSet[Long](nodeIds.length * 2)
+    nodeIds.foreach(idSet.add)
+    def mod(x: Long): Long = { val m = x % n; if (m < 0) m + n else m }
+    // adjacency is implicit: out(v) = (a·v+b) mod N, self-loops dropped.
+    // Mirror the distributed semantics exactly: edges exist only for
+    // src ∈ node table (a discovered dst that is not a real node id has
+    // NO out-edges — the level join keys edges on src), while any dst
+    // value participates in layers and the rollup.
+    val depthOf = new java.util.HashMap[Long, Int]()
+    var frontier = nodeIds.filter(v => mod0(v, 97L) == 0).sorted
+    frontier.foreach(v => depthOf.put(v, 0))
+    var d = 1
+    while (d <= maxDepth && frontier.nonEmpty) {
+      val nxt = new java.util.TreeSet[java.lang.Long]()
+      frontier.foreach { v =>
+        if (idSet.contains(v)) {
+          LinkCoeffs.foreach { case (a, b) =>
+            val w = mod(v * a + b)
+            if (w != v && !depthOf.containsKey(w)) nxt.add(w)
           }
         }
-        val arr = new Array[Long](nxt.size())
-        val it = nxt.iterator()
-        var i = 0
-        while (it.hasNext) { arr(i) = it.next(); i += 1 }
-        arr.foreach(w => depthOf.put(w, d))
-        frontier = arr
-        d += 1
       }
-      import scala.jdk.CollectionConverters._
-      val rollup = depthOf.asScala.toSeq
-        .groupBy(_._2).toSeq.sortBy(_._1)
-        .map { case (depth, vs) =>
-          org.apache.spark.sql.Row(depth.toLong, vs.size.toLong,
-            vs.map(_._1).sum)
-        }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("depth",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_nodes",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("sum_nodes",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(rollup.asJava, schema).orderBy("depth")
+      val arr = new Array[Long](nxt.size())
+      val it = nxt.iterator()
+      var i = 0
+      while (it.hasNext) { arr(i) = it.next(); i += 1 }
+      arr.foreach(w => depthOf.put(w, d))
+      frontier = arr
+      d += 1
     }
-    bfsLayersDistributed(docs, maxDepth)
+    import scala.jdk.CollectionConverters._
+    val rollup = depthOf.asScala.toSeq
+      .groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (depth, vs) =>
+        org.apache.spark.sql.Row(depth.toLong, vs.size.toLong,
+          vs.map(_._1).sum)
+      }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("depth",
+        org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField("n_nodes",
+        org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField("sum_nodes",
+        org.apache.spark.sql.types.LongType, nullable = true)))
+    spark.createDataFrame(rollup.asJava, schema).orderBy("depth")
   }
 
   /** The distributed level loop — public surface above the local-finish

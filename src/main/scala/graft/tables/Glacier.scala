@@ -240,24 +240,18 @@ final class Glacier(val root: String) {
     * concurrent submission in a shared executor is an anti-optimization —
     * two heavy jobs racing for the same task slots + cache blocks ran the
     * same round 4-5× slower at 32 local cores (140 s vs 26 s round-1
-    * wall; see BENCH.md round 2). On a real multi-executor cluster where
-    * single small writes genuinely under-fill the cluster, set
-    * SPARK_GRAFT_COMMIT_PAR>1 to overlap them — `TableWrite.stage`
+    * wall; see BENCH.md round 2). A caller whose writes are KNOWN to share
+    * no uncached chain (the post-pass's two independent rewrites) passes
+    * `par` > 1 to overlap them within a stage — `TableWrite.stage`
     * ordering (ascending stages, concurrency only within a stage) still
     * protects writes that share an uncached upstream chain. Order-
     * sensitive effects (manifest, row-count thunks) happen after the
     * final barrier either way.
     */
   private def writeStages(stageRoot: String, ws: Seq[TableWrite],
-                          callerPar: Int = 1): Unit = {
+                          par: Int = 1): Unit = {
     if (ws.isEmpty) return
     val verbose = sys.env.contains("SPARK_GRAFT_COMMIT_VERBOSE")
-    // caller-requested within-stage concurrency (for writes KNOWN to share
-    // no uncached chain — e.g. the post-pass's two independent rewrites).
-    // An explicit SPARK_GRAFT_COMMIT_PAR always wins, in BOTH directions —
-    // a memory-tight deployment must be able to force =1 serial writes.
-    val par = sys.env.get("SPARK_GRAFT_COMMIT_PAR").map(_.toInt)
-      .getOrElse(callerPar)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(par, ws.size)))
     try {
@@ -318,19 +312,6 @@ final class Glacier(val root: String) {
       w.table -> TableState(parentFiles :+ dir, parentRows + rows, parts)
     }.toMap
 
-  /** Write the manifest and flip CURRENT — the atomic commit point, as a
-    * COMPARE-AND-SWAP on the parent id: under an exclusive lock (a JVM-wide
-    * per-root monitor nested inside an OS file lock on `meta/COMMIT_LOCK`,
-    * covering both same-process and cross-process committers) verify
-    * CURRENT still names the parent this commit was built on, then publish
-    * manifest + pointer. A committer that lost the race gets a retryable
-    * [[Glacier.CommitConflictException]] and publishes NOTHING — two
-    * drivers on one root can no longer silently fork history with
-    * last-writer-wins. Staged data dirs carry a per-attempt unique tag
-    * (see [[newStagingDir]]), so a loser's staged files never touched the
-    * winner's — the loser retries cleanly and its orphan dirs await
-    * expiry.
-    */
   /** The commit-critical-section guard: JVM-wide per-root monitor nested
     * inside an OS file lock on `meta/COMMIT_LOCK` — covers same-process
     * AND cross-process committers. Every CURRENT mutation goes through
@@ -359,6 +340,19 @@ final class Glacier(val root: String) {
                StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Write the manifest and flip CURRENT — the atomic commit point, as a
+    * COMPARE-AND-SWAP on the parent id: under an exclusive lock (a JVM-wide
+    * per-root monitor nested inside an OS file lock on `meta/COMMIT_LOCK`,
+    * covering both same-process and cross-process committers) verify
+    * CURRENT still names the parent this commit was built on, then publish
+    * manifest + pointer. A committer that lost the race gets a retryable
+    * [[Glacier.CommitConflictException]] and publishes NOTHING — two
+    * drivers on one root can no longer silently fork history with
+    * last-writer-wins. Staged data dirs carry a per-attempt unique tag
+    * (see [[newStagingDir]]), so a loser's staged files never touched the
+    * winner's — the loser retries cleanly and its orphan dirs await
+    * expiry.
+    */
   private def flip(newId: Long, parent: Option[Manifest],
                    written: Map[String, TableState],
                    metrics: Map[String, Long], note: String): Unit =
@@ -1049,10 +1043,6 @@ object Glacier {
     rootLocks.computeIfAbsent(
       Paths.get(root).toAbsolutePath.normalize.toString, _ => new Object)
 
-  /** Per-column zone-map entry recorded from the parquet footer at commit
-    * time: physical-ish type tag ("long"/"int"/"double"/"float"/"boolean"/
-    * "string"), min/max rendered as strings (None when the part is
-    * all-null), and the null count. */
   /** Driver-side twin of the executor-side md5 bloom positions (the
     * conv(substring(md5("i:" || v), 1, 8), 16, 10) % bits idiom) — MUST
     * stay in lockstep with [[Glacier.buildBloomIndex]]'s column form. */
@@ -1094,6 +1084,10 @@ object Glacier {
     terms.reduce[org.apache.spark.sql.Column](_ + _)
   }
 
+  /** Per-column zone-map entry recorded from the parquet footer at commit
+    * time: physical-ish type tag ("long"/"int"/"double"/"float"/"boolean"/
+    * "string"), min/max rendered as strings (None when the part is
+    * all-null), and the null count. */
   final case class ColStats(tpe: String, min: Option[String],
                             max: Option[String], nulls: Long)
 

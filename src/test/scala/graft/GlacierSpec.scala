@@ -128,17 +128,18 @@ class GlacierSpec extends AnyFunSuite {
   test("compaction + expiry bound a growing seen/bloom state (crawl shape)") {
     import spark.implicits._
     val g = new Glacier(tmpRoot())
+    val sk = graft.crawl.SeenSet.BloomSeen(100, 0.01)
     (1 to 4).foreach { i =>
       val urls = (1 to 20).map(k => s"u://$i-$k").toDF("url")
       g.commit(spark, Seq(
         g.TableWrite("seen", urls, g.Append),
         g.TableWrite("bloom",
-          graft.crawl.SeenSet.buildShards(urls, 4, 100, 0.01), g.Append)))
+          graft.crawl.SeenSet.buildShardsWith(urls, 4, sk), g.Append)))
     }
     assert(g.read(spark, "bloom").get.count() > 4) // delta rows accreted
     g.compact(spark, "seen", parts = 2)
     g.compact(spark, "bloom", parts = 1,
-      transformFn = graft.crawl.SeenSet.foldShards)
+      transformFn = graft.crawl.SeenSet.foldShardsWith(_, sk))
     val bloom = g.read(spark, "bloom").get
     assert(bloom.count() <= 4) // one row per shard
     // folded filters still contain every url

@@ -110,6 +110,13 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(local.head._1 === 0L) // seeds present
   }
 
+  test("local node-id gate: None above the bound, every id below it") {
+    val bound = operators.DedupOps.LocalFinishEdges / 3
+    assert(GraphOps.localNodeIds(spark.range(bound + 10).toDF()).isEmpty)
+    assert(GraphOps.localNodeIds(spark.range(50).toDF())
+      .map(_.sorted.toSeq) === Some(0L until 50L))
+  }
+
   test("hits local finish == distributed loop, bit-exact doubles") {
     import spark.implicits._
     val ids = (0L until 300L).filter(v => v % 5 != 2)
