@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.crawl._
@@ -36,16 +35,8 @@ object CrawlBench {
       java.nio.file.Paths.get(benchBase), s"crawl-bench-$cpus").toString)
     val localDir = BenchDirs.deleteOnExit(Files.createTempDirectory(
       java.nio.file.Paths.get(benchBase), s"spark-local-$cpus").toString)
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", localDir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory",
-        sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, "spark.local.dir" -> localDir,
+      "spark.driver.memory" -> sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
 
     // Workload sized so politeness-bounded rounds stay FULL for most of the
     // crawl (the loop-scaling number is only meaningful when rounds carry

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection helper: prints the formatted physical plan of selected
   * queries so pushdown / pruning / broadcast / codegen claims are checked
   * against what Catalyst actually planned (see PLANS.md).
@@ -12,12 +10,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_filter_pushdown", "q_join_agg", "q_agg_pricing",
         "q_span_field_scan", "q_minhash_pairs")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
     names.foreach { n =>
       // "exec:<name>" runs the query first and prints the FINAL adaptive
       // plan (shows AQE decisions: ReusedExchange, replanned joins).

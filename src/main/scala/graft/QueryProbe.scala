@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench-triage probe: times the named SparkEntry queries `reps` times
   * ROUND-ROBIN interleaved — co-tenant noise on this shared box hits every
   * variant equally instead of whichever query ran during the spike — and
@@ -17,14 +15,8 @@ object QueryProbe {
     require(args.nonEmpty, "usage: QueryProbe <query-name> [more names]")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "5").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSession(cpus)
 
     val unknown = args.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")

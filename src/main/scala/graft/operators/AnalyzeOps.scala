@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's post-hoc analysis surface (`analyze.py`): file-extension
@@ -32,41 +32,66 @@ object AnalyzeOps {
   val amberExts = Seq("prmtop", "coord", "prm7", "top", "crdbox", "inpcrd",
     "mdcrd", "nc", "ncdf", "trj")
 
-  /** ext_cat (analyze.py:256-267): first-match-wins category cascade,
-    * case-insensitive, unknown → "other". */
-  def extCategory(ext: Column): Column = {
-    val e = lower(ext)
-    when(e.isin(coordinateExts: _*), "coordinate")
-      .when(e.isin(topologyExts: _*), "topology")
-      .when(e.isin(trajectoryExts: _*), "trajectory")
-      .otherwise("other")
-  }
+  /** ext_cat (analyze.py:256-267): category arms in match order. */
+  private val categoryArms = Seq("coordinate" -> coordinateExts,
+    "topology" -> topologyExts, "trajectory" -> trajectoryExts)
 
   /** engine (analyze.py:269-280): gromacs before namd before amber —
     * shared extensions (top, crd…) resolve to the EARLIER engine, the
     * reference's declaration-order semantics. */
-  def extEngine(ext: Column): Column = {
+  private val engineArms = Seq("gromacs" -> gromacsExts,
+    "namd" -> namdExts, "amber" -> amberExts)
+
+  /** First-match-wins classification of `ext` over `arms`,
+    * case-insensitive, unknown → "other". */
+  private def classify(ext: Column, arms: Seq[(String, Seq[String])]): Column = {
     val e = lower(ext)
-    when(e.isin(gromacsExts: _*), "gromacs")
-      .when(e.isin(namdExts: _*), "namd")
-      .when(e.isin(amberExts: _*), "amber")
-      .otherwise("other")
+    val (label0, exts0) = arms.head
+    arms.tail.foldLeft(when(e.isin(exts0: _*), label0)) {
+      case (c, (label, exts)) => c.when(e.isin(exts: _*), label)
+    }.otherwise("other")
   }
+
+  /** The SQL `CASE` twin of [[classify]] over the column `ext`. */
+  private def sqlClassify(arms: Seq[(String, Seq[String])]): String =
+    arms.map { case (label, exts) =>
+      s"WHEN lower(ext) IN (${exts.map(e => s"'$e'").mkString(",")}) THEN '$label'"
+    }.mkString("CASE\n              ", "\n              ",
+      "\n              ELSE 'other' END")
+
+  def extCategory(ext: Column): Column = classify(ext, categoryArms)
+
+  def extEngine(ext: Column): Column = classify(ext, engineArms)
 
   private val extPool = Seq("gro", "mdp", "xtc", "psf", "dcd", "prmtop",
     "nc", "pdb", "top", "txt", "zip", "cpt")
   private val sqlExtPool =
     extPool.map(e => s"'$e'").mkString("[", ",", "]")
 
+  /** A synthetic file extension per document, drawn from [[extPool]]. */
+  private def extCol: Column = element_at(typedLit(extPool),
+    (pmod(col("doc_id") * 7, lit(extPool.size)) + 1).cast("int"))
+
+  private val sqlExt = s"($sqlExtPool)[CAST((doc_id * 7) % 12 AS INT) + 1]"
+
+  /** The synthetic dated file frame: (doc_id, year, ext) per document. */
+  private def datedFiles(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select(col("doc_id"))
+      .withColumn("year", (pmod(col("doc_id") * 13, lit(15)) + 2010).cast("int"))
+      .withColumn("ext", extCol)
+
+  /** The select list of [[datedFiles]] in SQL, open for more columns. */
+  private val sqlDatedFiles =
+    s"""SELECT doc_id,
+            CAST((doc_id * 13) % 15 + 2010 AS INT) AS year,
+            $sqlExt AS ext"""
+
   def entries: Seq[QueryEntry] = Seq(
     // ---- year × engine pivot (plot_timeline_engine, analyze.py:333-352) --
     QueryEntry(
       "q_ext_engine_pivot",
       (s, dir) => {
-        val d = t(s, dir, "documents").select(col("doc_id"))
-          .withColumn("year", (pmod(col("doc_id") * 13, lit(15)) + 2010).cast("int"))
-          .withColumn("ext", element_at(typedLit(extPool),
-            (pmod(col("doc_id") * 7, lit(extPool.size)) + 1).cast("int")))
+        val d = datedFiles(s, dir)
         d.withColumn("engine", extEngine(col("ext")))
           .groupBy(col("year"))
           // declared pivot domain → single-shuffle plan
@@ -76,17 +101,11 @@ object AnalyzeOps {
           .orderBy("year")
       },
       Some(s"""WITH src AS (
-          SELECT doc_id,
-            CAST((doc_id * 13) % 15 + 2010 AS INT) AS year,
-            ($sqlExtPool)[CAST((doc_id * 7) % 12 AS INT) + 1] AS ext
+          $sqlDatedFiles
           FROM documents),
         classified AS (
           SELECT year,
-            CASE
-              WHEN lower(ext) IN ('tpr','gro','mdp','itp','ndx','top','xtc','trr','edr','cpt') THEN 'gromacs'
-              WHEN lower(ext) IN ('psf','namd','inp','prm','ntf','crd','dcd','coor','namdbin','vel','xsc') THEN 'namd'
-              WHEN lower(ext) IN ('prmtop','coord','prm7','top','crdbox','inpcrd','mdcrd','nc','ncdf','trj') THEN 'amber'
-              ELSE 'other' END AS engine
+            ${sqlClassify(engineArms)} AS engine
           FROM src)
         SELECT year,
           count(*) FILTER (WHERE engine = 'gromacs') AS gromacs,
@@ -101,28 +120,19 @@ object AnalyzeOps {
       "q_ext_category",
       (s, dir) => {
         val d = t(s, dir, "documents").select(col("doc_id"))
-          .withColumn("ext", element_at(typedLit(extPool),
-            (pmod(col("doc_id") * 7, lit(extPool.size)) + 1).cast("int")))
+          .withColumn("ext", extCol)
         d.select(extCategory(col("ext")).as("cat"),
             extEngine(col("ext")).as("engine"))
           .groupBy("cat", "engine").agg(count(lit(1)).as("n"))
           .orderBy("cat", "engine")
       },
       Some(s"""WITH src AS (
-          SELECT ($sqlExtPool)[CAST((doc_id * 7) % 12 AS INT) + 1] AS ext
+          SELECT $sqlExt AS ext
           FROM documents),
         classified AS (
           SELECT
-            CASE
-              WHEN lower(ext) IN ('tpr','gro','psf','crd','coor','namdbin','coord','pdb') THEN 'coordinate'
-              WHEN lower(ext) IN ('mdp','itp','ndx','top','cpt','namd','inp','prm','ntf','xsc','prmtop') THEN 'topology'
-              WHEN lower(ext) IN ('xtc','trr','edr','dcd','vel','prm7','crdbox','inpcrd','mdcrd','nc','ncdf','trj') THEN 'trajectory'
-              ELSE 'other' END AS cat,
-            CASE
-              WHEN lower(ext) IN ('tpr','gro','mdp','itp','ndx','top','xtc','trr','edr','cpt') THEN 'gromacs'
-              WHEN lower(ext) IN ('psf','namd','inp','prm','ntf','crd','dcd','coor','namdbin','vel','xsc') THEN 'namd'
-              WHEN lower(ext) IN ('prmtop','coord','prm7','top','crdbox','inpcrd','mdcrd','nc','ncdf','trj') THEN 'amber'
-              ELSE 'other' END AS engine
+            ${sqlClassify(categoryArms)} AS cat,
+            ${sqlClassify(engineArms)} AS engine
           FROM src)
         SELECT cat, engine, count(*) AS n
         FROM classified GROUP BY cat, engine ORDER BY cat, engine"""),
@@ -159,10 +169,7 @@ object AnalyzeOps {
     QueryEntry(
       "q_ext_size_pivot",
       (s, dir) => {
-        val d = t(s, dir, "documents").select(col("doc_id"))
-          .withColumn("year", (pmod(col("doc_id") * 13, lit(15)) + 2010).cast("int"))
-          .withColumn("ext", element_at(typedLit(extPool),
-            (pmod(col("doc_id") * 7, lit(extPool.size)) + 1).cast("int")))
+        val d = datedFiles(s, dir)
           .withColumn("size",
             (pmod(col("doc_id") * 131, lit(100000)) + 1000).cast("long"))
         d.where(extCategory(col("ext")) === "trajectory")
@@ -174,24 +181,14 @@ object AnalyzeOps {
           .orderBy("year")
       },
       Some(s"""WITH src AS (
-          SELECT doc_id,
-            CAST((doc_id * 13) % 15 + 2010 AS INT) AS year,
-            ($sqlExtPool)[CAST((doc_id * 7) % 12 AS INT) + 1] AS ext,
+          $sqlDatedFiles,
             CAST((doc_id * 131) % 100000 + 1000 AS BIGINT) AS size
           FROM documents),
         classified AS (
           SELECT year, size,
-            CASE
-              WHEN lower(ext) IN ('tpr','gro','mdp','itp','ndx','top','xtc','trr','edr','cpt') THEN 'gromacs'
-              WHEN lower(ext) IN ('psf','namd','inp','prm','ntf','crd','dcd','coor','namdbin','vel','xsc') THEN 'namd'
-              WHEN lower(ext) IN ('prmtop','coord','prm7','top','crdbox','inpcrd','mdcrd','nc','ncdf','trj') THEN 'amber'
-              ELSE 'other' END AS engine
+            ${sqlClassify(engineArms)} AS engine
           FROM src
-          WHERE CASE
-              WHEN lower(ext) IN ('tpr','gro','psf','crd','coor','namdbin','coord','pdb') THEN 'coordinate'
-              WHEN lower(ext) IN ('mdp','itp','ndx','top','cpt','namd','inp','prm','ntf','xsc','prmtop') THEN 'topology'
-              WHEN lower(ext) IN ('xtc','trr','edr','dcd','vel','prm7','crdbox','inpcrd','mdcrd','nc','ncdf','trj') THEN 'trajectory'
-              ELSE 'other' END = 'trajectory')
+          WHERE ${sqlClassify(categoryArms)} = 'trajectory')
         SELECT year,
           CAST(coalesce(sum(size) FILTER (WHERE engine = 'gromacs'), 0) AS BIGINT) AS gromacs,
           CAST(coalesce(sum(size) FILTER (WHERE engine = 'namd'), 0) AS BIGINT) AS namd,
@@ -207,10 +204,7 @@ object AnalyzeOps {
     QueryEntry(
       "q_ext_category_pivot",
       (s, dir) => {
-        val d = t(s, dir, "documents").select(col("doc_id"))
-          .withColumn("year", (pmod(col("doc_id") * 13, lit(15)) + 2010).cast("int"))
-          .withColumn("ext", element_at(typedLit(extPool),
-            (pmod(col("doc_id") * 7, lit(extPool.size)) + 1).cast("int")))
+        val d = datedFiles(s, dir)
         d.withColumn("cat", extCategory(col("ext")))
           .where(col("cat") =!= "other")
           .groupBy(col("year"))
@@ -220,17 +214,11 @@ object AnalyzeOps {
           .orderBy("year")
       },
       Some(s"""WITH src AS (
-          SELECT doc_id,
-            CAST((doc_id * 13) % 15 + 2010 AS INT) AS year,
-            ($sqlExtPool)[CAST((doc_id * 7) % 12 AS INT) + 1] AS ext
+          $sqlDatedFiles
           FROM documents),
         classified AS (
           SELECT year,
-            CASE
-              WHEN lower(ext) IN ('tpr','gro','psf','crd','coor','namdbin','coord','pdb') THEN 'coordinate'
-              WHEN lower(ext) IN ('mdp','itp','ndx','top','cpt','namd','inp','prm','ntf','xsc','prmtop') THEN 'topology'
-              WHEN lower(ext) IN ('xtc','trr','edr','dcd','vel','prm7','crdbox','inpcrd','mdcrd','nc','ncdf','trj') THEN 'trajectory'
-              ELSE 'other' END AS cat
+            ${sqlClassify(categoryArms)} AS cat
           FROM src)
         SELECT year,
           count(*) FILTER (WHERE cat = 'coordinate') AS coordinate,

@@ -112,6 +112,95 @@ object DedupOps {
     }.mkString("(", " + ", ")")
   }
 
+  // The MinHash LSH oracles (the SQL twin of [[bandedSignatures]]): the
+  // signature columns, their band hashes, and one `bands` row per
+  // (doc, band); `carry` names columns kept through to `bands`.
+  private val sqlSigCols: String = {
+    val sh = sqlShingles("text")
+    (0 until NumHashes)
+      .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
+  }
+
+  private val sqlBandCols: String =
+    (0 until NumHashes / BandRows).map { b =>
+      val parts = (0 until BandRows).map(r => s"sig_${b * BandRows + r}")
+      s"md5(${parts.mkString(" || ")}) AS band_$b"
+    }.mkString(", ")
+
+  private def sqlBandUnion(carry: String): String =
+    (0 until NumHashes / BandRows)
+      .map(b => s"SELECT doc_id AS doc, $carry$b AS band_idx, band_$b AS band_hash FROM sigs")
+      .mkString(" UNION ALL ")
+
+  /** CTEs `raw` (signatures), `sigs` (band hashes) and `bands`. */
+  private val sqlLshBands: String =
+    s"""raw AS (
+              SELECT doc_id, $sqlSigCols FROM documents
+              WHERE len(string_split(text,' ')) >= $ShingleSize),
+            sigs AS (SELECT doc_id, $sqlBandCols FROM raw),
+            bands AS (${sqlBandUnion("")})"""
+
+  /** [[sqlLshBands]] plus `cand`: the distinct pairs (doc_a < doc_b) that
+    * share a band (the oracle of [[minhashCandidatePairs]]). */
+  private val sqlLshCand: String =
+    s"""$sqlLshBands,
+            cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+              FROM bands a JOIN bands b
+                ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
+               AND a.doc < b.doc)"""
+
+  /** [[sqlLshCand]] closed transitively as a recursive CTE: min reachable
+    * id = the component representative (UNION dedups, so the recursion is
+    * bounded by |component|² rows). */
+  private val sqlLshReach: String =
+    s"""WITH RECURSIVE $sqlLshCand,
+            edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
+                      UNION SELECT doc_b, doc_a FROM cand),
+            reach(id, r) AS (
+              SELECT doc_id, doc_id FROM documents
+              UNION
+              SELECT e.src, reach.r FROM edges e
+              JOIN reach ON reach.id = e.dst)"""
+
+  /** CTE `d`: per-doc distinct shingle sets (the oracle of [[shingleSets]]). */
+  private val sqlShingleSets: String =
+    s"""d AS (SELECT doc_id, list_distinct(${sqlShingles("text")}) AS sh FROM documents
+                  WHERE len(string_split(text,' ')) >= $ShingleSize)"""
+
+  /** Exact Jaccard of the shingle sets `a.sh` and `b.sh`. */
+  private val sqlJaccardAB: String =
+    """CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+              CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE)"""
+
+  /** CTEs `rr` → `rk`: the HLL (b, r) register rows over the md5 column
+    * `h` of `tv` (the oracle of [[hllBucketRank]]); `carry` is a leading
+    * column kept through. */
+  private def sqlHllRanks(carry: String): String =
+    s"""rr AS (SELECT$carry
+                CAST(('0x' || substr(h, 1, 2)) AS INTEGER) AS b,
+                length(regexp_extract(substr(h, 3, 30), '^0*')) AS zlen,
+                substr(h, 3 + length(regexp_extract(substr(h, 3, 30), '^0*')), 1) AS fd
+              FROM tv),
+            rk AS (SELECT$carry b,
+                CASE WHEN zlen = 30 THEN 121
+                     ELSE zlen * 4 +
+                       (CASE WHEN fd = '1' THEN 3
+                             WHEN fd IN ('2','3') THEN 2
+                             WHEN fd IN ('4','5','6','7') THEN 1
+                             ELSE 0 END) + 1 END AS r
+              FROM rr)"""
+
+  /** CTE `<name>`: the (present, f) harmonic fold of register CTE `reg`. */
+  private def sqlHllRoll(name: String, reg: String): String =
+    s"""$name AS (SELECT count(*) AS present,
+                list_aggregate(list(1e0 / CAST((CAST(1 AS BIGINT) << least(m, 62)) AS DOUBLE) ORDER BY b), 'sum') AS f
+              FROM $reg)"""
+
+  /** The raw HLL estimate of fold CTE `roll` (the oracle of [[hllEstimate]]). */
+  private def sqlHllEstimate(roll: String): String =
+    s"""(0.7213e0 / (1e0 + 1.079e0 / 256e0)) * 65536e0
+                / ($roll.f + (256 - $roll.present) * 1e0)"""
+
   // ---- reusable operators ---------------------------------------------------
   /** Exact near-duplicate groups: one row per distinct content hash with the
     * first (lowest-id) keeper and the duplicate count.
@@ -241,6 +330,13 @@ object DedupOps {
       .join(broadcast(withA), b)
   }
 
+  /** Exact Jaccard of the joined-back shingle sets `sh_a` and `sh_b`. */
+  private def joinedJaccard: Column = {
+    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
+    inter.cast("double") /
+      (size(col("sh_a")) + size(col("sh_b")) - inter).cast("double")
+  }
+
   /** Directed Broder containment on the MinHash-LSH candidate set: for each
     * candidate pair, |A∩B|/|A| and |A∩B|/|B| over distinct word-shingle
     * sets, keeping pairs where either direction reaches `threshold`.
@@ -313,12 +409,8 @@ object DedupOps {
         Seq("band_idx", "band_hash"))
       .select(col("new_doc"), col("dup_of")).distinct()
     // exact Jaccard on the candidates only (the q_jaccard_lsh join-back)
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
     joinBack(cand, shingleSets(docs), "new_doc", "dup_of", "sh")
-      .select(col("new_doc"), col("dup_of"),
-        (inter.cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - inter).cast("double"))
-          .as("jaccard"))
+      .select(col("new_doc"), col("dup_of"), joinedJaccard.as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -438,14 +530,9 @@ object DedupOps {
         withArr.select(col("doc_id") +: sigs: _*)
           .orderBy("doc_id")
       },
-      Some {
-        val sh = sqlShingles("text")
-        val sigs = (0 until NumHashes)
-          .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
-        s"""SELECT doc_id, $sigs FROM documents
+      Some(s"""SELECT doc_id, $sqlSigCols FROM documents
             WHERE len(string_split(text,' ')) >= $ShingleSize
-            ORDER BY doc_id"""
-      },
+            ORDER BY doc_id"""),
     ),
     // ---- MinHash LSH candidate pairs --------------------------------------
     QueryEntry(
@@ -453,28 +540,12 @@ object DedupOps {
       (s, dir) =>
         minhashCandidatePairs(t(s, dir, "documents"), "text", "doc_id")
           .orderBy("doc_a", "doc_b"),
-      Some {
-        val sh = sqlShingles("text")
-        val sigCols = (0 until NumHashes)
-          .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
-        val bandCols = (0 until NumHashes / BandRows).map { b =>
-          val parts = (0 until BandRows).map(r => s"sig_${b * BandRows + r}")
-          s"md5(${parts.mkString(" || ")}) AS band_$b"
-        }.mkString(", ")
-        val bandUnion = (0 until NumHashes / BandRows)
-          .map(b => s"SELECT doc_id AS doc, $b AS band_idx, band_$b AS band_hash FROM sigs")
-          .mkString(" UNION ALL ")
-        s"""WITH raw AS (
-              SELECT doc_id, $sigCols FROM documents
-              WHERE len(string_split(text,' ')) >= $ShingleSize),
-            sigs AS (SELECT doc_id, $bandCols FROM raw),
-            bands AS ($bandUnion)
+      Some(s"""WITH $sqlLshBands
             SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
             FROM bands a JOIN bands b
               ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
              AND a.doc < b.doc
-            ORDER BY doc_a, doc_b"""
-      },
+            ORDER BY doc_a, doc_b"""),
     ),
     // ---- SimHash sketch -----------------------------------------------------
     QueryEntry(
@@ -540,8 +611,7 @@ object DedupOps {
               FROM documents
               WHERE len(string_split(text,' ')) >= $ShingleSize)
             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-              CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-              CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+              $sqlJaccardAB
                 AS jaccard
             FROM d a JOIN d b
               ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
@@ -559,49 +629,22 @@ object DedupOps {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val pairs = minhashCandidatePairs(docs, "text", "doc_id")
-        val inter = size(array_intersect(col("sh_a"), col("sh_b")))
         joinBack(pairs, shingleSets(docs), "doc_a", "doc_b", "sh")
-          .select(col("doc_a"), col("doc_b"),
-            (inter.cast("double") /
-              (size(col("sh_a")) + size(col("sh_b")) - inter).cast("double"))
-              .as("jaccard"))
+          .select(col("doc_a"), col("doc_b"), joinedJaccard.as("jaccard"))
           .filter(col("jaccard") >= 0.5)
           .orderBy("doc_a", "doc_b")
       },
-      Some {
-        val sh = sqlShingles("text")
-        val sigCols = (0 until NumHashes)
-          .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
-        val bandCols = (0 until NumHashes / BandRows).map { b =>
-          val parts = (0 until BandRows).map(r => s"sig_${b * BandRows + r}")
-          s"md5(${parts.mkString(" || ")}) AS band_$b"
-        }.mkString(", ")
-        val bandUnion = (0 until NumHashes / BandRows)
-          .map(b => s"SELECT doc_id AS doc, $b AS band_idx, band_$b AS band_hash FROM sigs")
-          .mkString(" UNION ALL ")
-        s"""WITH raw AS (
-              SELECT doc_id, $sigCols FROM documents
-              WHERE len(string_split(text,' ')) >= $ShingleSize),
-            sigs AS (SELECT doc_id, $bandCols FROM raw),
-            bands AS ($bandUnion),
-            cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc < b.doc),
-            d AS (SELECT doc_id, list_distinct($sh) AS sh FROM documents
-                  WHERE len(string_split(text,' ')) >= $ShingleSize)
+      Some(s"""WITH $sqlLshCand,
+            $sqlShingleSets
             SELECT c.doc_a, c.doc_b,
-              CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-              CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+              $sqlJaccardAB
                 AS jaccard
             FROM cand c
             JOIN d a ON a.doc_id = c.doc_a
             JOIN d b ON b.doc_id = c.doc_b
-            WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-              CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+            WHERE $sqlJaccardAB
               >= 0.5
-            ORDER BY doc_a, doc_b"""
-      },
+            ORDER BY doc_a, doc_b"""),
     ),
     // ---- directed containment over LSH candidates --------------------------
     // Broder containment |A∩B|/|A| (and the mirror |A∩B|/|B|) on the same
@@ -615,28 +658,8 @@ object DedupOps {
       "q_containment",
       (s, dir) => containmentOnCandidates(t(s, dir, "documents"), 0.5)
         .orderBy("doc_a", "doc_b"),
-      Some {
-        val sh = sqlShingles("text")
-        val sigCols = (0 until NumHashes)
-          .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
-        val bandCols = (0 until NumHashes / BandRows).map { b =>
-          val parts = (0 until BandRows).map(r => s"sig_${b * BandRows + r}")
-          s"md5(${parts.mkString(" || ")}) AS band_$b"
-        }.mkString(", ")
-        val bandUnion = (0 until NumHashes / BandRows)
-          .map(b => s"SELECT doc_id AS doc, $b AS band_idx, band_$b AS band_hash FROM sigs")
-          .mkString(" UNION ALL ")
-        s"""WITH raw AS (
-              SELECT doc_id, $sigCols FROM documents
-              WHERE len(string_split(text,' ')) >= $ShingleSize),
-            sigs AS (SELECT doc_id, $bandCols FROM raw),
-            bands AS ($bandUnion),
-            cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc < b.doc),
-            d AS (SELECT doc_id, list_distinct($sh) AS sh FROM documents
-                  WHERE len(string_split(text,' ')) >= $ShingleSize)
+      Some(s"""WITH $sqlLshCand,
+            $sqlShingleSets
             SELECT c.doc_a, c.doc_b,
               CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
                 / CAST(len(a.sh) AS DOUBLE) AS contain_a_in_b,
@@ -650,8 +673,7 @@ object DedupOps {
                   / CAST(len(a.sh) AS DOUBLE),
                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
                   / CAST(len(b.sh) AS DOUBLE)) >= 0.5e0
-            ORDER BY doc_a, doc_b"""
-      },
+            ORDER BY doc_a, doc_b"""),
     ),
     // ---- exact edit-distance verification of LSH candidates ----------------
     // character-level ground truth on the bucket-bounded candidate set;
@@ -660,26 +682,7 @@ object DedupOps {
       "q_edit_distance",
       (s, dir) => editDistanceOnCandidates(t(s, dir, "documents"))
         .orderBy("doc_a", "doc_b"),
-      Some {
-        val sh = sqlShingles("text")
-        val sigCols = (0 until NumHashes)
-          .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
-        val bandCols = (0 until NumHashes / BandRows).map { b =>
-          val parts = (0 until BandRows).map(r => s"sig_${b * BandRows + r}")
-          s"md5(${parts.mkString(" || ")}) AS band_$b"
-        }.mkString(", ")
-        val bandUnion = (0 until NumHashes / BandRows)
-          .map(b => s"SELECT doc_id AS doc, $b AS band_idx, band_$b AS band_hash FROM sigs")
-          .mkString(" UNION ALL ")
-        s"""WITH raw AS (
-              SELECT doc_id, $sigCols FROM documents
-              WHERE len(string_split(text,' ')) >= $ShingleSize),
-            sigs AS (SELECT doc_id, $bandCols FROM raw),
-            bands AS ($bandUnion),
-            cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc < b.doc)
+      Some(s"""WITH $sqlLshCand
             SELECT c.doc_a, c.doc_b,
               CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist,
               CAST(len(a.text) AS BIGINT) AS len_a,
@@ -690,8 +693,7 @@ object DedupOps {
             FROM cand c
             JOIN documents a ON a.doc_id = c.doc_a
             JOIN documents b ON b.doc_id = c.doc_b
-            ORDER BY c.doc_a, c.doc_b"""
-      },
+            ORDER BY c.doc_a, c.doc_b"""),
     ),
     // ---- incremental near-dup: delta vs indexed corpus --------------------
     // see [[incrementalNearDup]] for the continuous-crawl scale shape
@@ -699,31 +701,18 @@ object DedupOps {
       "q_incremental_neardup",
       (s, dir) => incrementalNearDup(t(s, dir, "documents"), 0.5)
         .orderBy("new_doc", "dup_of"),
-      Some {
-        val sh = sqlShingles("text")
-        val sigCols = (0 until NumHashes)
-          .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
-        val bandCols = (0 until NumHashes / BandRows).map { b =>
-          val parts = (0 until BandRows).map(r => s"sig_${b * BandRows + r}")
-          s"md5(${parts.mkString(" || ")}) AS band_$b"
-        }.mkString(", ")
-        val bandUnion = (0 until NumHashes / BandRows)
-          .map(b => s"SELECT doc_id AS doc, bucket, $b AS band_idx, " +
-            s"band_$b AS band_hash FROM sigs")
-          .mkString(" UNION ALL ")
-        s"""WITH b AS (SELECT doc_id, text,
+      Some(s"""WITH b AS (SELECT doc_id, text,
               CAST(('0x' || substr(md5('split:' || doc_id), 1, 8)) AS BIGINT) % 100
                 AS bucket FROM documents),
-            raw AS (SELECT doc_id, bucket, $sigCols FROM b
+            raw AS (SELECT doc_id, bucket, $sqlSigCols FROM b
                     WHERE len(string_split(text,' ')) >= $ShingleSize),
-            sigs AS (SELECT doc_id, bucket, $bandCols FROM raw),
-            bands AS ($bandUnion),
+            sigs AS (SELECT doc_id, bucket, $sqlBandCols FROM raw),
+            bands AS (${sqlBandUnion("bucket, ")}),
             cand AS (SELECT DISTINCT n.doc AS new_doc, o.doc AS dup_of
                      FROM bands n JOIN bands o
                        ON n.band_idx = o.band_idx AND n.band_hash = o.band_hash
                      WHERE n.bucket >= 90 AND o.bucket < 90),
-            d AS (SELECT doc_id, list_distinct($sh) AS sh FROM documents
-                  WHERE len(string_split(text,' ')) >= $ShingleSize),
+            $sqlShingleSets,
             j AS (SELECT c.new_doc, c.dup_of,
                     CAST(len(list_intersect(a.sh, o.sh)) AS DOUBLE) /
                     CAST(len(a.sh) + len(o.sh) - len(list_intersect(a.sh, o.sh))
@@ -731,8 +720,7 @@ object DedupOps {
                   FROM cand c JOIN d a ON a.doc_id = c.new_doc
                               JOIN d o ON o.doc_id = c.dup_of)
             SELECT new_doc, dup_of, jaccard FROM j WHERE jaccard >= 0.5
-            ORDER BY new_doc, dup_of"""
-      },
+            ORDER BY new_doc, dup_of"""),
     ),
     // ---- near-dup CLUSTERS: connected components over LSH pairs -----------
     // A training-data dedup pipeline keeps ONE canonical document per
@@ -747,39 +735,9 @@ object DedupOps {
     QueryEntry(
       "q_dedup_clusters",
       (s, dir) => clustersFor(s, dir),
-      Some {
-        val sh = sqlShingles("text")
-        val sigCols = (0 until NumHashes)
-          .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
-        val bandCols = (0 until NumHashes / BandRows).map { b =>
-          val parts = (0 until BandRows).map(r => s"sig_${b * BandRows + r}")
-          s"md5(${parts.mkString(" || ")}) AS band_$b"
-        }.mkString(", ")
-        val bandUnion = (0 until NumHashes / BandRows)
-          .map(b => s"SELECT doc_id AS doc, $b AS band_idx, band_$b AS band_hash FROM sigs")
-          .mkString(" UNION ALL ")
-        // transitive closure as a recursive CTE: min reachable id = the
-        // component representative (UNION dedups, so the recursion is
-        // bounded by |component|² rows)
-        s"""WITH RECURSIVE raw AS (
-              SELECT doc_id, $sigCols FROM documents
-              WHERE len(string_split(text,' ')) >= $ShingleSize),
-            sigs AS (SELECT doc_id, $bandCols FROM raw),
-            bands AS ($bandUnion),
-            cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc < b.doc),
-            edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                      UNION SELECT doc_b, doc_a FROM cand),
-            reach(id, r) AS (
-              SELECT doc_id, doc_id FROM documents
-              UNION
-              SELECT e.src, reach.r FROM edges e
-              JOIN reach ON reach.id = e.dst)
+      Some(s"""$sqlLshReach
             SELECT id AS doc_id, min(r) AS component
-            FROM reach GROUP BY id ORDER BY doc_id"""
-      },
+            FROM reach GROUP BY id ORDER BY doc_id"""),
     ),
     // ---- deterministic HLL cardinality sketch over corpus 3-grams ----------
     // see [[hllSketch]]; exact distinct emitted alongside as the error
@@ -794,19 +752,7 @@ object DedupOps {
         s"""WITH tok AS (SELECT unnest($sh) AS t FROM documents
               WHERE len(string_split(text,' ')) >= $ShingleSize),
             tv AS (SELECT t, md5(t) AS h FROM tok),
-            rr AS (SELECT
-                CAST(('0x' || substr(h, 1, 2)) AS INTEGER) AS b,
-                length(regexp_extract(substr(h, 3, 30), '^0*')) AS zlen,
-                substr(h, 3 + length(regexp_extract(substr(h, 3, 30), '^0*')), 1) AS fd
-              FROM tv),
-            rk AS (SELECT b,
-                CASE WHEN zlen = 30 THEN 121
-                     ELSE zlen * 4 +
-                       (CASE WHEN fd = '1' THEN 3
-                             WHEN fd IN ('2','3') THEN 2
-                             WHEN fd IN ('4','5','6','7') THEN 1
-                             ELSE 0 END) + 1 END AS r
-              FROM rr),
+            ${sqlHllRanks("")},
             reg AS (SELECT b, max(r) AS m FROM rk GROUP BY b),
             inv AS (SELECT b,
                 1e0 / CAST((CAST(1 AS BIGINT) << least(m, 62)) AS DOUBLE) AS iv
@@ -820,8 +766,7 @@ object DedupOps {
               CAST(256 AS BIGINT) AS n_registers,
               CAST(256 - roll.present AS BIGINT) AS n_zero_registers,
               roll.f + (256 - roll.present) * 1e0 AS sum_inv,
-              (0.7213e0 / (1e0 + 1.079e0 / 256e0)) * 65536e0
-                / (roll.f + (256 - roll.present) * 1e0) AS hll_estimate
+              ${sqlHllEstimate("roll")} AS hll_estimate
             FROM roll, ex"""
       },
     ),
@@ -868,39 +813,19 @@ object DedupOps {
         s"""WITH tok AS (SELECT source, unnest($sh) AS t FROM documents
               WHERE len(string_split(text,' ')) >= $ShingleSize),
             tv AS (SELECT source, md5(t) AS h FROM tok),
-            rr AS (SELECT source,
-                CAST(('0x' || substr(h, 1, 2)) AS INTEGER) AS b,
-                length(regexp_extract(substr(h, 3, 30), '^0*')) AS zlen,
-                substr(h, 3 + length(regexp_extract(substr(h, 3, 30), '^0*')), 1) AS fd
-              FROM tv),
-            rk AS (SELECT source, b,
-                CASE WHEN zlen = 30 THEN 121
-                     ELSE zlen * 4 +
-                       (CASE WHEN fd = '1' THEN 3
-                             WHEN fd IN ('2','3') THEN 2
-                             WHEN fd IN ('4','5','6','7') THEN 1
-                             ELSE 0 END) + 1 END AS r
-              FROM rr),
+            ${sqlHllRanks(" source,")},
             psrc AS (SELECT source, b, max(r) AS m FROM rk GROUP BY 1, 2),
             mreg AS (SELECT b, max(m) AS m FROM psrc GROUP BY 1),
             dreg AS (SELECT b, max(r) AS m FROM rk GROUP BY 1),
-            mroll AS (SELECT count(*) AS present,
-                list_aggregate(list(1e0 / CAST((CAST(1 AS BIGINT) << least(m, 62)) AS DOUBLE) ORDER BY b), 'sum') AS f
-              FROM mreg),
-            droll AS (SELECT count(*) AS present,
-                list_aggregate(list(1e0 / CAST((CAST(1 AS BIGINT) << least(m, 62)) AS DOUBLE) ORDER BY b), 'sum') AS f
-              FROM dreg),
+            ${sqlHllRoll("mroll", "mreg")},
+            ${sqlHllRoll("droll", "dreg")},
             ns AS (SELECT CAST(count(DISTINCT source) AS BIGINT) AS n_sources
               FROM psrc)
             SELECT ns.n_sources,
-              (0.7213e0 / (1e0 + 1.079e0 / 256e0)) * 65536e0
-                / (mroll.f + (256 - mroll.present) * 1e0) AS merged_estimate,
-              (0.7213e0 / (1e0 + 1.079e0 / 256e0)) * 65536e0
-                / (droll.f + (256 - droll.present) * 1e0) AS direct_estimate,
-              ((0.7213e0 / (1e0 + 1.079e0 / 256e0)) * 65536e0
-                / (mroll.f + (256 - mroll.present) * 1e0)) =
-              ((0.7213e0 / (1e0 + 1.079e0 / 256e0)) * 65536e0
-                / (droll.f + (256 - droll.present) * 1e0)) AS lossless_merge
+              ${sqlHllEstimate("mroll")} AS merged_estimate,
+              ${sqlHllEstimate("droll")} AS direct_estimate,
+              (${sqlHllEstimate("mroll")}) =
+              (${sqlHllEstimate("droll")}) AS lossless_merge
             FROM ns, mroll, droll"""
       },
     ),
@@ -929,16 +854,6 @@ object DedupOps {
           .orderBy("component")
       },
       Some {
-        val sh = sqlShingles("text")
-        val sigCols = (0 until NumHashes)
-          .map(i => s"${sqlMinhashSig(sh, i)} AS sig_$i").mkString(", ")
-        val bandCols = (0 until NumHashes / BandRows).map { b =>
-          val parts = (0 until BandRows).map(r => s"sig_${b * BandRows + r}")
-          s"md5(${parts.mkString(" || ")}) AS band_$b"
-        }.mkString(", ")
-        val bandUnion = (0 until NumHashes / BandRows)
-          .map(b => s"SELECT doc_id AS doc, $b AS band_idx, band_$b AS band_hash FROM sigs")
-          .mkString(" UNION ALL ")
         val w = "string_split(text, ' ')"
         val lw = "string_split(lower(text), ' ')"
         val stop = Seq("the", "and", "of", "a", "is")
@@ -950,22 +865,7 @@ object DedupOps {
             + 0.2 * (1.0 - least(
                 CAST(len(text) - len(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
                 / CAST(len(text) AS DOUBLE) * 10.0, 1.0))"""
-        s"""WITH RECURSIVE raw AS (
-              SELECT doc_id, $sigCols FROM documents
-              WHERE len(string_split(text,' ')) >= $ShingleSize),
-            sigs AS (SELECT doc_id, $bandCols FROM raw),
-            bands AS ($bandUnion),
-            cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-               AND a.doc < b.doc),
-            edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                      UNION SELECT doc_b, doc_a FROM cand),
-            reach(id, r) AS (
-              SELECT doc_id, doc_id FROM documents
-              UNION
-              SELECT e.src, reach.r FROM edges e
-              JOIN reach ON reach.id = e.dst),
+        s"""$sqlLshReach,
             comp AS (SELECT id AS doc_id, min(r) AS component
                      FROM reach GROUP BY id),
             qd AS (SELECT doc_id, $quality AS quality FROM documents),

@@ -33,8 +33,8 @@ object GraphOps {
   private val Quant = 1e12
 
   /** The affine link coefficients (a, b) of the synthetic graph: every
-    * node links to (a·node + b) mod N. The oracle SQL spells the same
-    * three pairs out. */
+    * node links to (a·node + b) mod N. The oracle SQL is rendered from the
+    * same pairs ([[sqlLinks]]). */
   private val LinkCoeffs = Seq((7L, 1L), (13L, 5L), (31L, 11L))
 
   /** Deterministic synthetic out-links: node → (a·node + b) mod N for
@@ -49,13 +49,21 @@ object GraphOps {
       .distinct()
   }
 
-  /** Fixed-iteration PageRank (damping 0.85) with quantized-exact mass. */
-  def pagerank(docs: DataFrame, iterations: Int): DataFrame = {
+  /** The synthetic graph over `docs`: the one-row node count, and the
+    * node and edge frames, both persisted across the caller's iterations. */
+  private def persistedGraph(docs: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
     val nDf = docs.agg(count(lit(1)).as("n_docs"))
     val nodes = docs.select(col("doc_id").as("node"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val edges = syntheticEdges(nodes, nDf)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    (nDf, nodes, edges)
+  }
+
+  /** Fixed-iteration PageRank (damping 0.85) with quantized-exact mass. */
+  def pagerank(docs: DataFrame, iterations: Int): DataFrame = {
+    val (nDf, nodes, edges) = persistedGraph(docs)
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     var ranks = nodes.crossJoin(broadcast(nDf))
       .select(col("node"), (lit(1.0) / col("n_docs")).as("r"))
@@ -188,11 +196,7 @@ object GraphOps {
     * and pinned equal to [[hitsLocal]] by the equality spec. */
   def hitsDistributed(docs: DataFrame, iterations: Int): DataFrame = {
     val QuantN = 1e9
-    val nDf = docs.agg(count(lit(1)).as("n_docs"))
-    val nodes = docs.select(col("doc_id").as("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = syntheticEdges(nodes, nDf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (_, nodes, edges) = persistedGraph(docs)
     var auth = nodes.select(col("node"), lit(1.0).as("a"))
     var hub = nodes.select(col("node"), lit(1.0).as("h"))
     for (_ <- 1 to iterations) {
@@ -326,11 +330,7 @@ object GraphOps {
     * local == distributed on the same graph. */
   def bfsLayersDistributed(docs: DataFrame,
       maxDepth: Int): DataFrame = {
-    val nDf = docs.agg(count(lit(1)).as("n_docs"))
-    val nodes = docs.select(col("doc_id").as("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = syntheticEdges(nodes, nDf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (_, nodes, edges) = persistedGraph(docs)
     var visited = nodes.where(pmod(col("node"), lit(97L)) === 0)
       .select(col("node"), lit(0L).as("depth"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -357,6 +357,23 @@ object GraphOps {
   }
 
   private val sqlN = "(SELECT count(*) FROM documents)"
+
+  /** CTEs `nodes` and `e0`: the synthetic graph's nodes and raw out-links
+    * (self-loops and repeats kept), rendered from [[LinkCoeffs]]. */
+  private val sqlLinks: String = {
+    val links = LinkCoeffs.zipWithIndex.map {
+      case ((a, b), 0) => s"SELECT node AS src, (node*$a+$b) % $sqlN AS dst FROM nodes"
+      case ((a, b), _) => s"SELECT node, (node*$a+$b) % $sqlN FROM nodes"
+    }
+    s"""nodes AS (SELECT doc_id AS node FROM documents),
+          e0 AS (${links.mkString("\n                 UNION ALL ")})"""
+  }
+
+  /** [[sqlLinks]] plus `e`: the distinct out-links, self-loops dropped
+    * (the oracle of [[syntheticEdges]]). */
+  private val sqlEdges: String =
+    s"""$sqlLinks,
+          e AS (SELECT DISTINCT src, dst FROM e0 WHERE dst <> src)"""
   private def sqlStep(prev: String, i: Int): String =
     s"""s$i AS (SELECT e.dst AS node,
           sum(CAST(floor($prev.r / od.outdeg * 1e12) AS DECIMAL(38,0))) AS sq
@@ -384,11 +401,7 @@ object GraphOps {
     QueryEntry(
       "q_hits",
       (s, dir) => hits(t(s, dir, "documents"), 2).orderBy("node"),
-      Some(s"""WITH nodes AS (SELECT doc_id AS node FROM documents),
-          e0 AS (SELECT node AS src, (node*7+1) % $sqlN AS dst FROM nodes
-                 UNION ALL SELECT node, (node*13+5) % $sqlN FROM nodes
-                 UNION ALL SELECT node, (node*31+11) % $sqlN FROM nodes),
-          e AS (SELECT DISTINCT src, dst FROM e0 WHERE dst <> src),
+      Some(s"""WITH $sqlEdges,
           a0 AS (SELECT node, 1e0 AS a FROM nodes),
           ${sqlHitsIter(1, 0)},
           ${sqlHitsIter(2, 1)}
@@ -398,11 +411,7 @@ object GraphOps {
     QueryEntry(
       "q_bfs_layers",
       (s, dir) => bfsLayers(t(s, dir, "documents"), 4),
-      Some(s"""WITH RECURSIVE nodes AS (SELECT doc_id AS node FROM documents),
-          e0 AS (SELECT node AS src, (node*7+1) % $sqlN AS dst FROM nodes
-                 UNION ALL SELECT node, (node*13+5) % $sqlN FROM nodes
-                 UNION ALL SELECT node, (node*31+11) % $sqlN FROM nodes),
-          e AS (SELECT DISTINCT src, dst FROM e0 WHERE dst <> src),
+      Some(s"""WITH RECURSIVE $sqlEdges,
           bfs AS (
             SELECT node, 0 AS depth FROM nodes WHERE node % 97 = 0
             UNION
@@ -418,10 +427,7 @@ object GraphOps {
     QueryEntry(
       "q_triangle_count",
       (s, dir) => triangleCount(t(s, dir, "documents")),
-      Some(s"""WITH nodes AS (SELECT doc_id AS node FROM documents),
-          e0 AS (SELECT node AS src, (node*7+1) % $sqlN AS dst FROM nodes
-                 UNION ALL SELECT node, (node*13+5) % $sqlN FROM nodes
-                 UNION ALL SELECT node, (node*31+11) % $sqlN FROM nodes),
+      Some(s"""WITH $sqlLinks,
           und AS (SELECT DISTINCT least(src, dst) AS lo,
                          greatest(src, dst) AS hi
                   FROM e0 WHERE dst <> src)
@@ -432,11 +438,7 @@ object GraphOps {
     QueryEntry(
       "q_pagerank",
       (s, dir) => pagerank(t(s, dir, "documents"), 3).orderBy("node"),
-      Some(s"""WITH nodes AS (SELECT doc_id AS node FROM documents),
-          e0 AS (SELECT node AS src, (node*7+1) % $sqlN AS dst FROM nodes
-                 UNION ALL SELECT node, (node*13+5) % $sqlN FROM nodes
-                 UNION ALL SELECT node, (node*31+11) % $sqlN FROM nodes),
-          e AS (SELECT DISTINCT src, dst FROM e0 WHERE dst <> src),
+      Some(s"""WITH $sqlEdges,
           od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
           r0 AS (SELECT node, 1e0 / $sqlN AS r FROM nodes),
           ${sqlStep("r0", 1)},

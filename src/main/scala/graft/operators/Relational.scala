@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -80,6 +80,53 @@ object Relational {
         ORDER BY c_acctbal DESC, c_name LIMIT 3
       ) l
       ORDER BY n.n_name, acctbal_cents DESC, l.c_name"""
+
+  /** Run one verbatim ANSI text over temp views of `tables`. `sql()`
+    * resolves the views eagerly, so dropping them before the frame is
+    * returned can't break its plan; it only keeps catalog state from
+    * leaking into later queries. */
+  private def sqlOverViews(s: SparkSession, dir: String, tables: Seq[String],
+      query: String): DataFrame = {
+    tables.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    val df = s.sql(query)
+    tables.foreach(s.catalog.dropTempView)
+    df
+  }
+
+  /** Each user's events in (ts, event_id) order. */
+  private def userTimeline =
+    Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+
+  /** Per-event_type row count and decimal-exact value total. */
+  private def eventTypeTotals(df: DataFrame): DataFrame =
+    df.groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(28, 6))).cast("double")
+          .as("total"))
+      .orderBy("event_type")
+
+  /** The SQL twin of [[eventTypeTotals]] over `events`, up to its filter. */
+  private val sqlEventTypeTotals =
+    """SELECT event_type, count(*) AS n,
+            CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
+          FROM events WHERE"""
+
+  /** Per grouping set of (o_orderstatus, o_orderpriority): order count,
+    * decimal-exact price total and the grouping id. */
+  private def groupingSetTotals(g: RelationalGroupedDataset): DataFrame =
+    g.agg(count(lit(1)).as("n"),
+        sum(col("o_totalprice").cast("decimal(28,6)")).cast("double")
+          .as("total"),
+        grouping_id().as("gid"))
+      .orderBy("gid", "o_orderstatus", "o_orderpriority")
+
+  /** The SQL twin of [[groupingSetTotals]] over `orders`, up to the
+    * grouping clause. */
+  private val sqlGroupingSetTotals =
+    """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
+            CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS total,
+            CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
+          FROM orders GROUP BY"""
 
   def entries: Seq[QueryEntry] = Seq(
     // ---- A-ops: aggregation --------------------------------------------
@@ -337,8 +384,7 @@ object Relational {
     QueryEntry(
       "q_window_running",
       (s, dir) => {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
+        val w = userTimeline
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         t(s, dir, "events")
           .withColumn("running_value", sum(col("value").cast(Dec)).over(w).cast("double"))
@@ -395,14 +441,8 @@ object Relational {
     // Catalyst optimizes exactly like the DataFrame form
     QueryEntry(
       "q_sql_surface",
-      (s, dir) => {
-        t(s, dir, "orders").createOrReplaceTempView("orders")
-        t(s, dir, "customer").createOrReplaceTempView("customer")
-        val df = s.sql(SqlSurfaceQuery) // sql() resolves views eagerly…
-        s.catalog.dropTempView("orders") // …so dropping here can't break
-        s.catalog.dropTempView("customer") // the plan, only unleak catalog
-        df                                 // state from later queries
-      },
+      (s, dir) => sqlOverViews(s, dir, Seq("orders", "customer"),
+        SqlSurfaceQuery),
       Some(SqlSurfaceQuery),
     ),
     // ---- correlated subqueries through the SQL surface ----------------------
@@ -413,14 +453,8 @@ object Relational {
     // doubles would be visit-order-dependent in Spark's float sum).
     QueryEntry(
       "q_correlated_subquery",
-      (s, dir) => {
-        t(s, dir, "orders").createOrReplaceTempView("orders")
-        t(s, dir, "customer").createOrReplaceTempView("customer")
-        t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-        val df = s.sql(CorrelatedSubqueryQuery)
-        Seq("orders", "customer", "lineitem").foreach(s.catalog.dropTempView)
-        df
-      },
+      (s, dir) => sqlOverViews(s, dir, Seq("orders", "customer", "lineitem"),
+        CorrelatedSubqueryQuery),
       Some(CorrelatedSubqueryQuery),
     ),
     // ---- TPC-H Q3 shape: selective 3-table join + grouped top-k -------------
@@ -622,8 +656,11 @@ object Relational {
     ),
     // ---- ntile decile bucketing (quality-tier assignment) --------------------
     // the curriculum/filter-tier primitive: rank docs into 10 equal-depth
-    // quality buckets; ONE global-sort shuffle of (id, score) pairs only —
-    // the narrow frame makes the range partitioner's sort cheap at scale
+    // quality buckets. The window has no partition key, so Spark moves
+    // every (id, score) pair into ONE partition and sorts it there — a
+    // single-task bottleneck at corpus scale (a distributed rewrite: a
+    // range-partitioned sort plus per-partition row offsets, the
+    // CrawlLoop.assignGlobalSeq shape)
     QueryEntry(
       "q_ntile_quality",
       (s, dir) => {
@@ -679,17 +716,9 @@ object Relational {
     // bit order (verified).
     QueryEntry(
       "q_cube",
-      (s, dir) => t(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(28,6)")).cast("double")
-            .as("total"),
-          grouping_id().as("gid"))
-        .orderBy("gid", "o_orderstatus", "o_orderpriority"),
-      Some("""SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-            CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS total,
-            CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
-          FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+      (s, dir) => groupingSetTotals(t(s, dir, "orders")
+        .cube(col("o_orderstatus"), col("o_orderpriority"))),
+      Some(s"""$sqlGroupingSetTotals CUBE (o_orderstatus, o_orderpriority)
           ORDER BY gid, o_orderstatus, o_orderpriority"""),
     ),
     // ---- sliding-frame window aggregate --------------------------------------
@@ -699,9 +728,7 @@ object Relational {
     QueryEntry(
       "q_window_sliding",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("ts"), col("event_id")).rowsBetween(-2, 0)
+        val w = userTimeline.rowsBetween(-2, 0)
         t(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("value"),
             sum(col("value").cast("decimal(28,6)")).over(w).cast("double")
@@ -804,12 +831,7 @@ object Relational {
     // crawl-depth closures) at cluster scale.
     QueryEntry(
       "q_recursive_cte",
-      (s, dir) => {
-        t(s, dir, "customer").createOrReplaceTempView("customer")
-        val df = s.sql(RecursiveCteQuery)
-        s.catalog.dropTempView("customer")
-        df
-      },
+      (s, dir) => sqlOverViews(s, dir, Seq("customer"), RecursiveCteQuery),
       Some(RecursiveCteQuery),
     ),
     // ---- correlated LATERAL top-k -------------------------------------------
@@ -820,14 +842,8 @@ object Relational {
     // in PLANS.md).
     QueryEntry(
       "q_lateral_topk",
-      (s, dir) => {
-        t(s, dir, "nation").createOrReplaceTempView("nation")
-        t(s, dir, "customer").createOrReplaceTempView("customer")
-        val df = s.sql(LateralTopkQuery)
-        s.catalog.dropTempView("nation")
-        s.catalog.dropTempView("customer")
-        df
-      },
+      (s, dir) => sqlOverViews(s, dir, Seq("nation", "customer"),
+        LateralTopkQuery),
       Some(LateralTopkQuery),
     ),
     // ---- exact multi-quantile (percentile agg) ------------------------------
@@ -1288,15 +1304,9 @@ object Relational {
         val id2 = g.commit(s, Seq(g.TableWrite("ev",
           base.filter(col("event_id") % 5 >= 2), g.Append)))
         g.readChanges(s, "ev", id1, id2).get
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(DecimalType(28, 6))).cast("double")
-              .as("total"))
-          .orderBy("event_type")
+          .transform(eventTypeTotals)
       },
-      Some("""SELECT event_type, count(*) AS n,
-            CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
-          FROM events WHERE event_id % 5 >= 2 GROUP BY 1 ORDER BY 1"""),
+      Some(s"""$sqlEventTypeTotals event_id % 5 >= 2 GROUP BY 1 ORDER BY 1"""),
     ),
     // ---- write-audit-publish through the driver gate -------------------------
     // The production ingestion pattern: stage the new corpus version, run
@@ -1329,20 +1339,12 @@ object Relational {
     // (first arg = MSB) by that entry's spec.
     QueryEntry(
       "q_grouping_sets",
-      (s, dir) => t(s, dir, "orders")
+      (s, dir) => groupingSetTotals(t(s, dir, "orders")
         .groupingSets(
           Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
             Seq(col("o_orderpriority")), Seq.empty),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(28,6)")).cast("double")
-            .as("total"),
-          grouping_id().as("gid"))
-        .orderBy("gid", "o_orderstatus", "o_orderpriority"),
-      Some("""SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-            CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS total,
-            CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
-          FROM orders GROUP BY GROUPING SETS
+          col("o_orderstatus"), col("o_orderpriority"))),
+      Some(s"""$sqlGroupingSetTotals GROUPING SETS
             ((o_orderstatus, o_orderpriority), (o_orderpriority), ())
           ORDER BY gid, o_orderstatus, o_orderpriority"""),
     ),
@@ -1397,15 +1399,9 @@ object Relational {
           .parquet(s"$base/ev")
         s.read.parquet(s"$base/ev")
           .filter(col("event_type").isin("click", "view"))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(DecimalType(28, 6))).cast("double")
-              .as("total"))
-          .orderBy("event_type")
+          .transform(eventTypeTotals)
       },
-      Some("""SELECT event_type, count(*) AS n,
-            CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
-          FROM events WHERE event_type IN ('click', 'view')
+      Some(s"""$sqlEventTypeTotals event_type IN ('click', 'view')
           GROUP BY 1 ORDER BY 1"""),
     ),
     // ---- ordered list / string aggregation ----------------------------------
@@ -1441,8 +1437,7 @@ object Relational {
     QueryEntry(
       "q_window_firstlast",
       (s, dir) => {
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("ts"), col("event_id"))
+        val w = userTimeline
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         t(s, dir, "events")
           .select(col("event_id"), col("user_id"),

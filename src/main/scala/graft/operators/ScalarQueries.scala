@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
 object ScalarQueries {
   import Tables.t
 
+  /** SQL twin of [[graft.functions.TextFunctions.stripWhitespace]]. */
+  private def sqlStripWhitespace(x: String): String =
+    raw"""regexp_replace(regexp_replace(
+          $x,
+          '[\n\r\t]', ' ', 'g'), ' {2,}', ' ', 'g')"""
+
   def entries: Seq[QueryEntry] = Seq(
     // ---- Unicode canonicalization (NFC + accent fold) ---------------------
     // see [[graft.functions.NormalizeText]]: native expression (doGenCode);
@@ -89,11 +95,9 @@ object ScalarQueries {
         noisy.withColumn("clean", stripWhitespace(col("noisy")))
           .select("doc_id", "clean").orderBy("doc_id")
       },
-      Some("""SELECT doc_id,
-        regexp_replace(regexp_replace(
-          concat(' ', chr(9), regexp_replace(text, ' ', chr(9) || '  ', 'g'),
-                 chr(13) || chr(10)),
-          '[\n\r\t]', ' ', 'g'), ' {2,}', ' ', 'g') AS clean
+      Some(s"""SELECT doc_id,
+        ${sqlStripWhitespace("""concat(' ', chr(9), regexp_replace(text, ' ', chr(9) || '  ', 'g'),
+                 chr(13) || chr(10))""")} AS clean
         FROM documents ORDER BY doc_id"""),
     ),
     // ---- C1: strip_html ----------------------------------------------------
@@ -107,15 +111,13 @@ object ScalarQueries {
         html.withColumn("text_clean", cleanText(col("html")))
           .select("doc_id", "text_clean").orderBy("doc_id")
       },
-      Some("""SELECT doc_id,
-        regexp_replace(regexp_replace(
-          replace(replace(replace(replace(replace(replace(
+      Some(s"""SELECT doc_id,
+        ${sqlStripWhitespace("""replace(replace(replace(replace(replace(replace(
             regexp_replace(concat('<p class="x">', text,
                            '</p> <b>a&amp;b &lt;ok&gt;</b><br/>'),
                            '<[^>]*>', '', 'g'),
           '&amp;','&'),'&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',''''),
-          '&nbsp;',' '),
-          '[\n\r\t]', ' ', 'g'), ' {2,}', ' ', 'g') AS text_clean
+          '&nbsp;',' ')""")} AS text_clean
         FROM documents ORDER BY doc_id"""),
     ),
     // ---- C5: human-readable size (integer-exact ladder) --------------------

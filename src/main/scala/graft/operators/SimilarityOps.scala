@@ -62,8 +62,7 @@ object SimilarityOps {
     * the signature, not by data skew in a label column.
     */
   def embeddingLshPairs(emb: DataFrame, threshold: Double): DataFrame = {
-    val e = emb.select(col("vec_id"),
-      transform(col("embedding"), _.cast("double")).as("v"))
+    val e = emb.select(col("vec_id"), vecCol)
     // all 16 signature bits in ONE native pass over the vector
     // ([[graft.functions.LshBandValues]], bit-identical to the per-band
     // [[bandValue]] HOF chain — golden-spec pinned); posexplode's position
@@ -126,16 +125,57 @@ object SimilarityOps {
         (sqrt(list_aggregate(list_transform($a, x -> x*x), 'sum')) *
          sqrt(list_aggregate(list_transform($b, x -> x*x), 'sum'))))"""
 
-  /** Brute-force cosine top-k against one query vector. */
-  def bruteForceTopK(emb: DataFrame, queryVecId: Long, k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), col("label"),
-      transform(col("embedding"), _.cast("double")).as("v"))
-    val q = e.filter(col("vec_id") === queryVecId).select(col("v").as("qv"))
-    e.crossJoin(broadcast(q))
+  /** An embedding as array<double>: the column `v`. */
+  private def vecCol: Column =
+    transform(col("embedding"), _.cast("double")).as("v")
+
+  /** The (vec_id, label, v) frame of an embeddings table. */
+  private def labelledVecs(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("label"), vecCol)
+
+  /** The one-row frame holding the query vector `qv` of `queryVecId`. */
+  private def queryVec(e: DataFrame, queryVecId: Long): DataFrame =
+    e.filter(col("vec_id") === queryVecId).select(col("v").as("qv"))
+
+  /** The k vectors of `cands` nearest the query `q` by cosine, the query
+    * itself excluded. */
+  private def nearest(cands: DataFrame, q: DataFrame, queryVecId: Long,
+      k: Int): DataFrame =
+    cands.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= queryVecId)
       .select(col("vec_id"), col("label"), cosine(col("v"), col("qv")).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("vec_id"))
       .limit(k)
+
+  /** SQL twin of [[vecCol]]. */
+  private val sqlVec = "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
+
+  /** CTEs `e` (the SQL twin of [[labelledVecs]]) and `q` ([[queryVec]] of
+    * vector 0). */
+  private val sqlQueryVec =
+    s"""WITH e AS (SELECT vec_id, label,
+              $sqlVec
+            FROM embeddings),
+          q AS (SELECT v AS qv FROM e WHERE vec_id = 0)"""
+
+  /** CTE `flat`: the SQL twin of [[components]]. */
+  private val sqlComponents =
+    """flat AS (SELECT label, generate_subscripts(v, 1) AS pos,
+                          unnest(v) AS x FROM e)"""
+
+  /** CTEs `flat`, `cm` and `cent`: the SQL twin of [[labelCentroids]],
+    * centroid column `cv`. */
+  private val sqlLabelCentroids =
+    s"""$sqlComponents,
+          cm AS (SELECT label, pos,
+                   CAST(sum(CAST(x AS DECIMAL(38,18))) AS DOUBLE) / count(*) AS m
+                 FROM flat GROUP BY label, pos),
+          cent AS (SELECT label, list(m ORDER BY pos) AS cv FROM cm GROUP BY label)"""
+
+  /** Brute-force cosine top-k against one query vector. */
+  def bruteForceTopK(emb: DataFrame, queryVecId: Long, k: Int): DataFrame = {
+    val e = labelledVecs(emb)
+    nearest(e, queryVec(e, queryVecId), queryVecId, k)
   }
 
   /** Per-label centroid vectors over a (label, v:array<double>) frame:
@@ -146,12 +186,20 @@ object SimilarityOps {
     * grain is labels×dims rows (centroid count, not corpus size).
     */
   def labelCentroids(e: DataFrame): DataFrame =
-    e.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
+    centroidVectors(components(e)
       .groupBy(col("label"), col("pos"))
       .agg((sum(col("x").cast("decimal(38,18)")).cast("double") /
             count(lit(1))).as("m"),
-        count(lit(1)).as("n"))
-      .groupBy(col("label"))
+        count(lit(1)).as("n")))
+
+  /** One (label, pos, x) row per vector component of a (label, v) frame. */
+  private def components(e: DataFrame): DataFrame =
+    e.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
+
+  /** Per-label (n_vectors, centroid) from per-component means
+    * (label, pos, m, n): the means ordered by position. */
+  private def centroidVectors(means: DataFrame): DataFrame =
+    means.groupBy(col("label"))
       .agg(max(col("n")).as("n_vectors"),
         transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m")).as("centroid"))
@@ -169,38 +217,29 @@ object SimilarityOps {
     * statistic; determinism-by-construction is what the oracle needs.
     */
   def labelCentroidsQuantized(e: DataFrame): DataFrame =
-    e.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
+    centroidVectors(components(e)
       .groupBy(col("label"), col("pos"))
       .agg(sum(floor(col("x") * 1e9).cast("decimal(38,0)"))
              .cast("double").as("sq"),
         count(lit(1)).as("n"))
       .select(col("label"), col("pos"),
-        (col("sq") / col("n") / 1e9).as("m"), col("n"))
-      .groupBy(col("label"))
-      .agg(max(col("n")).as("n_vectors"),
-        transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("centroid"))
+        (col("sq") / col("n") / 1e9).as("m"), col("n")))
 
   /** IVF search: per-label centroids (exact decimal means → bit-stable),
     * probe the `nprobe` centroids nearest to the query, then brute-force
     * only within the probed labels.
     */
   def ivfTopK(emb: DataFrame, queryVecId: Long, nprobe: Int, k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), col("label"),
-      transform(col("embedding"), _.cast("double")).as("v"))
+    val e = labelledVecs(emb)
     val cent = labelCentroids(e).select(col("label"), col("centroid").as("cv"))
-    val q = e.filter(col("vec_id") === queryVecId).select(col("v").as("qv"))
+    val q = queryVec(e, queryVecId)
     val probed = cent.crossJoin(broadcast(q))
       .select(col("label"), cosine(col("cv"), col("qv")).as("ccos"))
       .orderBy(desc("ccos"), asc("label"))
       .limit(nprobe)
       .select(col("label"))
-    e.join(broadcast(probed), Seq("label"), "left_semi")
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= queryVecId)
-      .select(col("vec_id"), col("label"), cosine(col("v"), col("qv")).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-      .limit(k)
+    nearest(e.join(broadcast(probed), Seq("label"), "left_semi"), q,
+      queryVecId, k)
   }
 
   /** Recall@k of the IVF index against brute force — the evaluation loop
@@ -224,10 +263,7 @@ object SimilarityOps {
     QueryEntry(
       "q_cosine_topk",
       (s, dir) => bruteForceTopK(t(s, dir, "embeddings"), 0L, 10),
-      Some(s"""WITH e AS (SELECT vec_id, label,
-              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings),
-          q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+      Some(s"""$sqlQueryVec
           SELECT vec_id, label, ${sqlCosine("v", "qv")} AS cos_sim
           FROM e, q WHERE vec_id <> 0
           ORDER BY cos_sim DESC, vec_id LIMIT 10"""),
@@ -235,16 +271,8 @@ object SimilarityOps {
     QueryEntry(
       "q_ann_ivf",
       (s, dir) => ivfTopK(t(s, dir, "embeddings"), 0L, 3, 10),
-      Some(s"""WITH e AS (SELECT vec_id, label,
-              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings),
-          q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-          flat AS (SELECT label, generate_subscripts(v, 1) AS pos,
-                          unnest(v) AS x FROM e),
-          cm AS (SELECT label, pos,
-                   CAST(sum(CAST(x AS DECIMAL(38,18))) AS DOUBLE) / count(*) AS m
-                 FROM flat GROUP BY label, pos),
-          cent AS (SELECT label, list(m ORDER BY pos) AS cv FROM cm GROUP BY label),
+      Some(s"""$sqlQueryVec,
+          $sqlLabelCentroids,
           probed AS (SELECT label FROM cent, q
                      ORDER BY ${sqlCosine("cv", "qv")} DESC, label LIMIT 3)
           SELECT vec_id, label, ${sqlCosine("v", "qv")} AS cos_sim
@@ -258,18 +286,10 @@ object SimilarityOps {
     QueryEntry(
       "q_ann_recall",
       (s, dir) => ivfRecall(t(s, dir, "embeddings"), 0L, 2, 10),
-      Some(s"""WITH e AS (SELECT vec_id, label,
-              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings),
-          q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+      Some(s"""$sqlQueryVec,
           bf AS (SELECT vec_id FROM e, q WHERE vec_id <> 0
                  ORDER BY ${sqlCosine("v", "qv")} DESC, vec_id LIMIT 10),
-          flat AS (SELECT label, generate_subscripts(v, 1) AS pos,
-                          unnest(v) AS x FROM e),
-          cm AS (SELECT label, pos,
-                   CAST(sum(CAST(x AS DECIMAL(38,18))) AS DOUBLE) / count(*) AS m
-                 FROM flat GROUP BY label, pos),
-          cent AS (SELECT label, list(m ORDER BY pos) AS cv FROM cm GROUP BY label),
+          $sqlLabelCentroids,
           probed AS (SELECT label FROM cent, q
                      ORDER BY ${sqlCosine("cv", "qv")} DESC, label LIMIT 2),
           ivf AS (SELECT vec_id FROM e, q
@@ -285,8 +305,7 @@ object SimilarityOps {
       "q_embedding_neardup",
       (s, dir) => {
         val e = DedupOps.requireBoundedBlocks(
-          t(s, dir, "embeddings").select(col("vec_id"), col("label"),
-            transform(col("embedding"), _.cast("double")).as("v")),
+          labelledVecs(t(s, dir, "embeddings")),
           Seq("label"), "q_embedding_neardup", "q_embedding_lsh")
         val a = e.as("a")
         val b = e.as("b")
@@ -298,7 +317,7 @@ object SimilarityOps {
           .orderBy("vec_a", "vec_b")
       },
       Some(s"""WITH e AS (SELECT vec_id, label,
-              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+              $sqlVec
             FROM embeddings)
           SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                  ${sqlCosine("a.v", "b.v")} AS cos_sim
@@ -316,8 +335,7 @@ object SimilarityOps {
       // array cells. The norm stays a fixed-order array fold over the
       // internal centroid array so the double is bit-identical either way.
       (s, dir) => {
-        val e = t(s, dir, "embeddings").select(col("label"),
-          transform(col("embedding"), _.cast("double")).as("v"))
+        val e = t(s, dir, "embeddings").select(col("label"), vecCol)
         labelCentroidsQuantized(e)
           .withColumn("norm",
             sqrt(aggregate(transform(col("centroid"), x => x * x),
@@ -329,11 +347,10 @@ object SimilarityOps {
             col("norm"))
           .orderBy("label", "pos")
       },
-      Some("""WITH e AS (SELECT label,
-              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      Some(s"""WITH e AS (SELECT label,
+              $sqlVec
             FROM embeddings),
-          flat AS (SELECT label, generate_subscripts(v, 1) AS pos,
-                          unnest(v) AS x FROM e),
+          $sqlComponents,
           cm AS (SELECT label, pos,
                    CAST(sum(CAST(floor(x * 1000000000.0) AS DECIMAL(38,0)))
                         AS DOUBLE) / count(*) / 1000000000.0 AS m,
@@ -362,7 +379,7 @@ object SimilarityOps {
           s"SELECT vec_id, v, $b AS band, ${sqlBandValue("v", b)} AS bv FROM e")
           .mkString(" UNION ALL ")
         s"""WITH e AS (SELECT vec_id,
-              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+              $sqlVec
             FROM embeddings),
           bands AS ($bandUnion)
           SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -78,6 +78,37 @@ object TemporalJoins {
       .agg(count(col("__rts")).as("prior_events"))
       .drop("__lb")
   }
+
+  /** An event's timestamp as epoch microseconds. */
+  private def tsMicros: Column = unix_micros(col("ts").cast("timestamp"))
+
+  /** The events table with [[tsMicros]] added as `ts_us`. */
+  private def eventsMicros(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events").withColumn("ts_us", tsMicros)
+
+  /** The oracle of `q_sessionize` — and of its streaming twin
+    * `q_stream_sessionize_replay`, which must reproduce the batch rollups
+    * exactly. */
+  private[graft] val SessionizeSql =
+    """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value
+              FROM events),
+            f AS (SELECT *,
+              CASE WHEN lag(ts_us) OVER w IS NULL
+                     OR ts_us - lag(ts_us) OVER w > 1800000000
+                   THEN 1 ELSE 0 END AS new_session
+              FROM e WINDOW w AS (PARTITION BY user_id
+                ORDER BY ts_us, event_id)),
+            g AS (SELECT *,
+              CAST(sum(new_session) OVER (PARTITION BY user_id
+                ORDER BY ts_us, event_id
+                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+              FROM f)
+          SELECT user_id, session_id, count(*) AS n_events,
+            min(ts_us) AS start_us, max(ts_us) AS end_us,
+            CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total_value,
+            max(ts_us) - min(ts_us) AS duration_us
+          FROM g GROUP BY user_id, session_id
+          ORDER BY user_id, session_id"""
 
   def entries: Seq[QueryEntry] = Seq(
     // ---- weekly cohort retention --------------------------------------------
@@ -157,8 +188,7 @@ object TemporalJoins {
     QueryEntry(
       "q_asof_join",
       (s, dir) => {
-        val ev = t(s, dir, "events")
-          .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
+        val ev = eventsMicros(s, dir)
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("user_id"), col("ts_us"), col("event_id"), col("value"))
         val purchases = ev.filter(col("event_type") === "purchase")
@@ -189,8 +219,7 @@ object TemporalJoins {
       "q_range_join",
       (s, dir) => {
         val tenMin = 600L * 1000000L
-        val ev = t(s, dir, "events")
-          .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
+        val ev = eventsMicros(s, dir)
         val errors = ev.filter(col("event_type") === "error")
           .select(col("user_id"), col("ts_us"), col("event_id"))
         val all = ev.select(col("user_id"), col("ts_us"))
@@ -221,7 +250,7 @@ object TemporalJoins {
         val gap = 1800L * 1000000L
         val ev = t(s, dir, "events")
           .select(col("user_id"),
-            unix_micros(col("ts").cast("timestamp")).as("ts_us"),
+            tsMicros.as("ts_us"),
             col("event_id"), col("value"))
         val w = Window.partitionBy(col("user_id"))
           .orderBy(col("ts_us").asc, col("event_id").asc)
@@ -241,25 +270,7 @@ object TemporalJoins {
           .withColumn("duration_us", col("end_us") - col("start_us"))
           .orderBy("user_id", "session_id")
       },
-      Some("""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value
-              FROM events),
-            f AS (SELECT *,
-              CASE WHEN lag(ts_us) OVER w IS NULL
-                     OR ts_us - lag(ts_us) OVER w > 1800000000
-                   THEN 1 ELSE 0 END AS new_session
-              FROM e WINDOW w AS (PARTITION BY user_id
-                ORDER BY ts_us, event_id)),
-            g AS (SELECT *,
-              CAST(sum(new_session) OVER (PARTITION BY user_id
-                ORDER BY ts_us, event_id
-                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-              FROM f)
-          SELECT user_id, session_id, count(*) AS n_events,
-            min(ts_us) AS start_us, max(ts_us) AS end_us,
-            CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total_value,
-            max(ts_us) - min(ts_us) AS duration_us
-          FROM g GROUP BY user_id, session_id
-          ORDER BY user_id, session_id"""),
+      Some(SessionizeSql),
     ),
     // ---- time-series gap fill (resample to a regular daily grid) -----------
     // The series-regularization op every downstream model wants: per user,
@@ -358,7 +369,7 @@ object TemporalJoins {
         import s.implicits._
         t(s, dir, "events")
           .select(col("user_id"),
-            unix_micros(col("ts").cast("timestamp")).as("ts_us"),
+            tsMicros.as("ts_us"),
             col("event_id"),
             (expr("CAST(round(value * 100) AS BIGINT)") - lit(5000L))
               .as("cents"))

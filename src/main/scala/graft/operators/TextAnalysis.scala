@@ -90,6 +90,17 @@ object TextAnalysis {
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
   }
 
+  /** Whole-word count of the English marker words in `text`, as a double. */
+  private def enStopCount(text: Column): Column =
+    profiles.toMap.apply("en")
+      .map(wordCount(split(lower(text), " "), _)).reduce(_ + _)
+      .cast("double")
+
+  /** Count of the characters of `text` outside `[a-zA-Z0-9 ]`, as a double. */
+  private def nonAlnumCount(text: Column): Column =
+    (length(text) -
+      length(regexp_replace(text, "[^a-zA-Z0-9 ]", ""))).cast("double")
+
   /** The `q_quality_score` formula as one expression over a text column
     * (same operation order, so the doubles are bit-identical): weighted
     * stopword-ratio, length and punctuation terms. Reused by the cluster-
@@ -98,11 +109,8 @@ object TextAnalysis {
   def qualityExpr(text: Column): Column = {
     val words = split(text, " ")
     val nTokens = size(words).cast("double")
-    val stopCount = profiles.toMap.apply("en")
-      .map(wordCount(split(lower(text), " "), _)).reduce(_ + _)
-      .cast("double")
-    val nonAlnum = (length(text) -
-      length(regexp_replace(text, "[^a-zA-Z0-9 ]", ""))).cast("double")
+    val stopCount = enStopCount(text)
+    val nonAlnum = nonAlnumCount(text)
     val stopwordRatio = stopCount / nTokens
     val punctRatio = nonAlnum / length(text).cast("double")
     lit(0.5) * least(stopwordRatio * 5.0, lit(1.0)) +
@@ -128,6 +136,14 @@ object TextAnalysis {
         md5(concat_ws(" ", slice(col("w"), col("start") + 1, lit(chunkLen))))
           .as("chunk_md5"))
 
+  /** (doc_id, term) per non-empty space-separated token of `docs`, the
+    * scan fanned out over every core. */
+  private def termTokens(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.Tables.fanOut(docs)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .where(length(col("term")) > 0)
+
   /** Top-k salient terms per document by tf·N/df (TF×IDF-shaped, log-free
     * so both engines compute bit-identical doubles). df derives from the tf
     * frame (vocab-bounded → broadcast); per-doc top-k goes through the
@@ -140,10 +156,8 @@ object TextAnalysis {
     */
   def termSalience(docs: org.apache.spark.sql.DataFrame,
                    k: Int): org.apache.spark.sql.DataFrame = {
-    val tok = graft.Tables.fanOut(docs)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .where(length(col("term")) > 0)
-    val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val tf = termTokens(docs)
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
@@ -187,9 +201,7 @@ object TextAnalysis {
     */
   def invertedIndex(docs: org.apache.spark.sql.DataFrame,
                     k: Int): org.apache.spark.sql.DataFrame = {
-    val presence = graft.Tables.fanOut(docs)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .where(length(col("term")) > 0)
+    val presence = termTokens(docs)
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val df = presence.groupBy("term").agg(count(lit(1)).as("df"))
@@ -213,9 +225,7 @@ object TextAnalysis {
     */
   def bm25(docs: org.apache.spark.sql.DataFrame,
            terms: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val tok = graft.Tables.fanOut(docs)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .where(length(col("term")) > 0)
+    val tok = termTokens(docs)
     // dl feeds BOTH the corpus-stats agg and the scoring join; Catalyst
     // does not reuse the exchange across the 1-row crossJoin boundary
     // (same finding as termSalience), so pin it
@@ -245,9 +255,9 @@ object TextAnalysis {
     * re-emitted as position-ordered id sequences with out-of-vocabulary
     * tokens mapped to the reserved id 0 — the tokenizer-table step every
     * training pipeline runs before packing. Scale shape: one tokenize
-    * shuffle for the frequency table; the rank is a window over the
-    * VOCABULARY (not the corpus — bounded by distinct terms; at 100 TB
-    * the top-`maxVocab` cut runs as TopK before the rank); the encode join
+    * shuffle for the frequency table; the top-`maxVocab` cut runs as a
+    * top-k before the rank, so the rank's single-partition window sees at
+    * most `maxVocab` rows; the encode join
     * broadcasts the dictionary; sequence re-assembly rides the doc_id
     * shuffle with an in-array sort, never an ordered collect.
     */
@@ -259,10 +269,13 @@ object TextAnalysis {
         posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
       .where(length(col("term")) > 0)
     val freq = tok.groupBy("term").agg(count(lit(1)).as("freq"))
+    // the top-maxVocab cut comes BEFORE the rank: the window has no
+    // partition key, so it runs in one partition, and the cut bounds it
+    // to maxVocab rows instead of the whole vocabulary
     val dict = freq
+      .orderBy(col("freq").desc, col("term")).limit(maxVocab)
       .withColumn("token_id", row_number()
         .over(Window.orderBy(col("freq").desc, col("term"))).cast("long"))
-      .filter(col("token_id") <= maxVocab)
       .select(col("term"), col("token_id"))
     tok.join(broadcast(dict), Seq("term"), "left")
       .groupBy("doc_id")
@@ -292,9 +305,7 @@ object TextAnalysis {
   def cosinePairsIndexed(docs: org.apache.spark.sql.DataFrame,
                          thrNum: Long, thrDen: Long,
                          maxDfPct: Int): org.apache.spark.sql.DataFrame = {
-    val tf0 = graft.Tables.fanOut(docs)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .where(length(col("term")) > 0)
+    val tf0 = termTokens(docs)
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -467,6 +478,24 @@ object TextAnalysis {
   private def sqlLangScore(words: String, lang: String): String =
     profiles.toMap.apply(lang).map(sqlWordCount(words, _)).mkString("(", " + ", ")")
 
+  /** SQL twin of [[enStopCount]] (before the cast). */
+  private val sqlEnStopCount = sqlLangScore("string_split(lower(text), ' ')", "en")
+
+  /** SQL twin of [[splitBucket]]. */
+  private val sqlSplitBucket =
+    "CAST(('0x' || substr(md5('split:' || doc_id), 1, 8)) AS BIGINT) % 100"
+
+  /** CTE `tok`: (doc_id, term) per token of `words`, empty terms kept. */
+  private def sqlTermTok(words: String): String =
+    s"""WITH tok AS (SELECT doc_id, unnest($words) AS term
+            FROM documents)"""
+
+  /** CTE `df`: the document frequency of each term of CTE `tf`. */
+  private val sqlDocFreq = "df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1)"
+
+  /** CTE `n`: the corpus document count. */
+  private val sqlNDocs = "n AS (SELECT count(*) AS n_docs FROM documents)"
+
   def entries: Seq[QueryEntry] = Seq(
     // ---- language identification -----------------------------------------
     QueryEntry(
@@ -502,11 +531,8 @@ object TextAnalysis {
         val nTokens = size(words).cast("double")
         val totalWordChars =
           aggregate(words, lit(0), (acc, w) => acc + length(w)).cast("double")
-        val stopCount = profiles.toMap.apply("en")
-          .map(wordCount(split(lower(col("text")), " "), _)).reduce(_ + _)
-          .cast("double")
-        val nonAlnum = (length(col("text")) -
-          length(regexp_replace(col("text"), "[^a-zA-Z0-9 ]", ""))).cast("double")
+        val stopCount = enStopCount(col("text"))
+        val nonAlnum = nonAlnumCount(col("text"))
         d.select(
           col("doc_id"),
           size(words).cast("long").as("n_tokens"),
@@ -521,8 +547,6 @@ object TextAnalysis {
       },
       Some {
         val w = "string_split(text, ' ')"
-        val lw = "string_split(lower(text), ' ')"
-        val stop = sqlLangScore(lw, "en")
         s"""SELECT doc_id, n_tokens, avg_token_len, stopword_ratio, punct_ratio,
               0.5 * least(stopword_ratio * 5.0, 1.0)
             + 0.3 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
@@ -531,7 +555,7 @@ object TextAnalysis {
               CAST(len($w) AS BIGINT) AS n_tokens,
               CAST(list_aggregate(list_transform($w, x -> len(x)), 'sum') AS DOUBLE)
                 / CAST(len($w) AS DOUBLE) AS avg_token_len,
-              CAST($stop AS DOUBLE) / CAST(len($w) AS DOUBLE) AS stopword_ratio,
+              CAST($sqlEnStopCount AS DOUBLE) / CAST(len($w) AS DOUBLE) AS stopword_ratio,
               CAST(len(text) - len(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
                 / CAST(len(text) AS DOUBLE) AS punct_ratio
               FROM documents)
@@ -582,8 +606,8 @@ object TextAnalysis {
             .otherwise("test").as("split"),
         ).orderBy("doc_id")
       },
-      Some("""WITH b AS (SELECT doc_id,
-            CAST(('0x' || substr(md5('split:' || doc_id), 1, 8)) AS BIGINT) % 100
+      Some(s"""WITH b AS (SELECT doc_id,
+            $sqlSplitBucket
               AS bucket FROM documents)
           SELECT doc_id, bucket,
             CASE WHEN bucket < 90 THEN 'train'
@@ -810,8 +834,8 @@ object TextAnalysis {
           withB.filter(col("bucket") >= 90), 4)
           .orderBy("doc_id")
       },
-      Some("""WITH b AS (SELECT doc_id, text,
-            CAST(('0x' || substr(md5('split:' || doc_id), 1, 8)) AS BIGINT) % 100
+      Some(s"""WITH b AS (SELECT doc_id, text,
+            $sqlSplitBucket
               AS bucket FROM documents),
         g AS (SELECT doc_id, bucket,
             unnest(list_transform(range(1, greatest(len(string_split(text,' ')) - 2, 1)),
@@ -844,12 +868,11 @@ object TextAnalysis {
       "q_term_salience",
       (s, dir) => termSalience(t(s, dir, "documents"), 3)
         .orderBy(col("doc_id"), col("salience").desc, col("term")),
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-            FROM documents),
+      Some(s"""${sqlTermTok("string_split(text, ' ')")},
           tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
                  WHERE len(term) > 0 GROUP BY 1, 2),
-          df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-          n AS (SELECT count(*) AS n_docs FROM documents),
+          $sqlDocFreq,
+          $sqlNDocs,
           s AS (SELECT doc_id, term, tf, df,
                   CAST(tf AS DOUBLE) * n_docs / CAST(df AS DOUBLE) AS salience
                 FROM tf JOIN df USING (term), n),
@@ -871,10 +894,9 @@ object TextAnalysis {
             .as("postings_md5"),
           size(col("postings")).cast("long").as("n_postings"))
         .orderBy("term"),
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-            FROM documents),
+      Some(s"""${sqlTermTok("string_split(text, ' ')")},
           tf AS (SELECT DISTINCT doc_id, term FROM tok WHERE len(term) > 0),
-          df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+          $sqlDocFreq,
           p AS (SELECT term, list(doc_id ORDER BY doc_id)[1:5] AS postings
                 FROM tf GROUP BY 1)
           SELECT term, df,
@@ -906,15 +928,14 @@ object TextAnalysis {
       "q_bm25",
       (s, dir) => bm25(t(s, dir, "documents"), Seq("hash", "join", "scan"))
         .orderBy("doc_id"),
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
-            FROM documents),
+      Some(s"""${sqlTermTok("string_split(text,' ')")},
           tk AS (SELECT doc_id, term FROM tok WHERE len(term) > 0),
           dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY 1),
           st AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl
                  FROM dl),
           tf AS (SELECT doc_id, term, count(*) AS tf FROM tk
                  WHERE term IN ('hash', 'join', 'scan') GROUP BY 1, 2),
-          df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+          $sqlDocFreq,
           w AS (SELECT tf.doc_id, tf.term,
               ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5e0)
                 / (CAST(df AS DOUBLE) + 0.5e0))
@@ -970,11 +991,10 @@ object TextAnalysis {
       "q_cosine_pairs_index",
       (s, dir) => cosinePairsIndexed(t(s, dir, "documents"), 4, 5, 20)
         .orderBy("doc_a", "doc_b"),
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
-            FROM documents),
+      Some(s"""${sqlTermTok("string_split(text,' ')")},
           tf0 AS (SELECT doc_id, term, count(*) AS tf FROM tok
                   WHERE len(term) > 0 GROUP BY 1, 2),
-          n AS (SELECT count(*) AS n_docs FROM documents),
+          $sqlNDocs,
           keep AS (SELECT term FROM
               (SELECT term, count(*) AS df FROM tf0 GROUP BY 1), n
             WHERE df * 100 <= n_docs * 20),
@@ -1027,10 +1047,8 @@ object TextAnalysis {
       (s, dir) => qualitySample(t(s, dir, "documents")).orderBy("doc_id"),
       Some {
         val w = "string_split(text, ' ')"
-        val lw = "string_split(lower(text), ' ')"
-        val stop = sqlLangScore(lw, "en")
         s"""WITH q AS (SELECT doc_id,
-              0.5 * least(CAST($stop AS DOUBLE) / CAST(len($w) AS DOUBLE) * 5.0, 1.0)
+              0.5 * least(CAST($sqlEnStopCount AS DOUBLE) / CAST(len($w) AS DOUBLE) * 5.0, 1.0)
             + 0.3 * least(CAST(len($w) AS DOUBLE) / 100.0, 1.0)
             + 0.2 * (1.0 - least(
                 CAST(len(text) - len(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)

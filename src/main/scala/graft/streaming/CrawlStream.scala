@@ -87,10 +87,6 @@ object CrawlStream {
       }
   }
 
-  /** Batch twin of [[hostRates]] for parity checks: same windows, same
-    * aggregates, computed with the batch engine over the same rows. */
-  def hostRatesBatch(events: DataFrame): DataFrame = hostRates(events)
-
   /** Tail a Glacier table directory tree as a file-source stream with the
     * table's schema inferred from its existing batch content. */
   def tableStream(spark: SparkSession, glacierDataGlob: String): DataFrame = {

@@ -170,6 +170,21 @@ object StreamQueries {
       o => lastMs.exists(keep(o, _)))(b => mem.addData(b))
   }
 
+  /** Oracle of a 6-hour tumbling-window rollup: per (window_start,
+    * `key`), the row count `n` and the decimal-exact value total, over
+    * `from` with `keyCol` (projecting `key`) carried. */
+  private def sqlWindowRollup(keyCol: String, key: String,
+      from: String): String =
+    s"""WITH b AS (SELECT
+            TIMESTAMP '1970-01-01 00:00:00'
+              + CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT)
+                * INTERVAL 1 SECOND AS window_start,
+            $keyCol, value
+          FROM $from)
+        SELECT window_start, $key, count(*) AS n,
+          CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
+        FROM b GROUP BY 1, 2 ORDER BY 1, 2"""
+
   def entries: Seq[QueryEntry] = Seq(
     // ---- first-wins exact dedup through the real engine --------------------
     // Reference semantics anchor: cumulative first-wins membership
@@ -244,15 +259,7 @@ object StreamQueries {
               col("total_dec").cast("double").as("total"))
         }.orderBy("window_start", "event_type")
       },
-      Some("""WITH b AS (SELECT
-            TIMESTAMP '1970-01-01 00:00:00'
-              + CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT)
-                * INTERVAL 1 SECOND AS window_start,
-            event_type, value
-          FROM events)
-        SELECT window_start, event_type, count(*) AS n,
-          CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
-        FROM b GROUP BY 1, 2 ORDER BY 1, 2"""),
+      Some(sqlWindowRollup("event_type", "event_type", "events")),
     ),
 
     // ---- stream-static broadcast enrichment through the real engine --------
@@ -294,15 +301,8 @@ object StreamQueries {
         }.orderBy("window_start", "segment")
         finally dim.unpersist()
       },
-      Some("""WITH b AS (SELECT
-            TIMESTAMP '1970-01-01 00:00:00'
-              + CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT)
-                * INTERVAL 1 SECOND AS window_start,
-            c_mktsegment AS segment, value
-          FROM events JOIN customer ON user_id + 1 = c_custkey)
-        SELECT window_start, segment, count(*) AS n,
-          CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
-        FROM b GROUP BY 1, 2 ORDER BY 1, 2"""),
+      Some(sqlWindowRollup("c_mktsegment AS segment", "segment",
+        "events JOIN customer ON user_id + 1 = c_custkey")),
     ),
 
     // ---- stream-stream interval join through the real engine ---------------
@@ -428,25 +428,7 @@ object StreamQueries {
           StreamingSessionize.sessionizeStream(ev).toDF()
         }.orderBy("user_id", "session_id")
       },
-      Some("""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, value
-              FROM events),
-            f AS (SELECT *,
-              CASE WHEN lag(ts_us) OVER w IS NULL
-                     OR ts_us - lag(ts_us) OVER w > 1800000000
-                   THEN 1 ELSE 0 END AS new_session
-              FROM e WINDOW w AS (PARTITION BY user_id
-                ORDER BY ts_us, event_id)),
-            g AS (SELECT *,
-              CAST(sum(new_session) OVER (PARTITION BY user_id
-                ORDER BY ts_us, event_id
-                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-              FROM f)
-          SELECT user_id, session_id, count(*) AS n_events,
-            min(ts_us) AS start_us, max(ts_us) AS end_us,
-            CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total_value,
-            max(ts_us) - min(ts_us) AS duration_us
-          FROM g GROUP BY user_id, session_id
-          ORDER BY user_id, session_id"""),
+      Some(graft.operators.TemporalJoins.SessionizeSql),
     ),
 
     // ---- NATIVE session windows through the real engine ---------------------

@@ -54,7 +54,7 @@ class CrawlStreamSpec extends AnyFunSuite {
         .select(col("window.start").cast("long").as("w"), col("host"),
           col("fetched"), col("ok"), col("errors"), col("attempts"))
         .collect().map(_.toString).sorted
-      val batch = CrawlStream.hostRatesBatch(events.toDF())
+      val batch = CrawlStream.hostRates(events.toDF())
         .select(col("window.start").cast("long").as("w"), col("host"),
           col("fetched"), col("ok"), col("errors"), col("attempts"))
         .collect().map(_.toString).sorted

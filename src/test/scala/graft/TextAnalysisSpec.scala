@@ -234,6 +234,22 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(got(1) === ((2L, Seq(2L, 1L, 0L), 1)))
   }
 
+  test("vocab encode: the single-partition rank window sees at most maxVocab rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    // a realistic vocabulary cap, above the limit (1000 by default) up to
+    // which Catalyst would infer the top-k cut from a rank filter itself
+    val maxVocab = 5000
+    val corpus = Seq((1L, "b a b c d e f"), (2L, "a b zz y")).toDF("doc_id", "text")
+    val plan = TextAnalysis.vocabEncode(corpus, maxVocab)
+      .queryExecution.optimizedPlan
+    val windows = plan.collect { case w: Window => w }
+    assert(windows.nonEmpty)
+    windows.foreach { w =>
+      assert(w.child.maxRows.exists(_ <= maxVocab),
+        s"window input unbounded:\n$w")
+    }
+  }
+
   test("cosine pairs: hot terms pruned from the vector space, exact cut") {
     import spark.implicits._
     // "the" (df 6/6) is pruned at maxDfPct=50; on the surviving vocabulary
