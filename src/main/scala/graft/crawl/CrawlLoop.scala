@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -125,8 +125,13 @@ object CrawlLoop {
 
     // ---- bootstrap or resume ----------------------------------------------
     // resume off the newest snapshot that recorded a round (maintenance
-    // commits — compaction, expiry — carry no crawl metrics)
-    var round: Int = g.history.reverse.find(_.metrics.contains("round"))
+    // commits — compaction, expiry — carry no crawl metrics). Either way
+    // the saturation watch gets its per-shard baseline: a resume reads it
+    // from the state table (ONE column-pruned job), a bootstrap takes it
+    // from the observation on its own bloom write (no job); each round's
+    // deltas then ride that round's bloom write.
+    val (firstRound, fill) = g.history.reverse
+      .find(_.metrics.contains("round"))
       .map { m =>
         // Bloom deltas are merged per shard at probe time, which requires
         // every delta built with identical sizing — fail fast on a resume
@@ -141,21 +146,25 @@ object CrawlLoop {
           Some(cfg.sketch.tag))
         require(rec._1.isEmpty || rec == now,
           s"resume with different seen-set sizing/sketch: snapshot has $rec, config has $now")
-        m.metrics.getOrElse("round", 0L).toInt + 1
+        (m.metrics.getOrElse("round", 0L).toInt + 1, new SketchFillState(
+          g.read(spark, "bloom").map(stateFillCounts).getOrElse(Map.empty)))
       }.getOrElse {
         val seeds = SyntheticRepo.seedTasks(cfg.repo)
           .filter(t => Robots.allowed(t.url))
         val seedDs = spark.createDataset(seeds)
         val seedUrls = seedDs.select($"url", lit(0).as("round_seen"))
+        val obsBloom = Observation("bloom_r0")
         val bloom = SeenSet.buildShardsWith(seedUrls, cfg.bloomShards,
-          cfg.sketch)
+          cfg.sketch).observe(obsBloom, shardDeltas)
         g.commit(spark, Seq(
           g.TableWrite("frontier", seedDs.toDF(), g.Replace),
           g.TableWrite("seen", seedUrls, g.Append),
           g.TableWrite("bloom", bloom, g.Append),
         ), bloomSizing(cfg) + ("round" -> 0L), note = "bootstrap")
-        1
+        (1, new SketchFillState(observedDeltas(obsBloom)
+          .groupMapReduce(_._1)(_._2)(_ + _)))
       }
+    var round = firstRound
 
     if (sys.env.contains("SPARK_GRAFT_CRAWL_VERBOSE"))
       System.err.println(f"[crawl] bootstrap/resume done at ${(System.nanoTime() - tStart) / 1e9}%.1fs")
@@ -177,10 +186,6 @@ object CrawlLoop {
     // served by the handle.
     def readTable(table: String): Option[DataFrame] =
       prev.flatMap(_.read(spark, table)).orElse(g.read(spark, table))
-    // saturation-watch baseline: ONE column-pruned read here, then the
-    // per-round deltas ride the bloom write's observation
-    val fill = new SketchFillState(
-      g.read(spark, "bloom").map(stateFillCounts).getOrElse(Map.empty))
     // Scale-adaptive shuffle grain for the BSP rounds (guide §2.2: size
     // partitions to the data, not to a constant): a round's shuffles carry
     // on the order of `pending` rows, and a micro-crawl frontier of a few
@@ -378,11 +383,12 @@ object CrawlLoop {
                                pendingAfter: Long, fetched: Long,
                                enqueued: Long)
 
-  /** Driver-side cumulative per-shard sketch fill. Seeded ONCE from the
-    * state table at bootstrap/resume (a single column-pruned job); each
-    * round's per-shard delta counts arrive via the bloom write's own
-    * Observation — the saturation watch costs ZERO per-round Spark jobs
-    * and never rescans the append-only state history. Synchronized:
+  /** Driver-side cumulative per-shard sketch fill. Seeded ONCE: from the
+    * bootstrap bloom write's observation, or from the state table on a
+    * resume (a single column-pruned job); each round's per-shard delta
+    * counts arrive via the bloom write's own Observation — the saturation
+    * watch costs ZERO per-round Spark jobs and never rescans the
+    * append-only state history. Synchronized:
     * the metrics thunk runs on the background pipelined-commit thread
     * (FIFO-ordered, so round N's update happens-before round N+1's read).
     * nShards longs of driver memory — 4096 at the design point. */
@@ -396,6 +402,16 @@ object CrawlLoop {
         else (counts.values.max, counts.values.count(_ > expected).toLong)
       }
   }
+
+  /** The per-shard fill deltas of a sketch-state frame, as an observed
+    * metric: one (shard, inserted) struct per state row. */
+  private def shardDeltas: Column =
+    collect_list(struct(col("shard"), col("inserted"))).as("deltas")
+
+  /** The (shard, inserted) pairs a [[shardDeltas]] observation collected. */
+  private def observedDeltas(o: Observation): Seq[(Int, Long)] =
+    o.get("deltas").asInstanceOf[scala.collection.Seq[Row]]
+      .map(r => (r.getInt(0), r.getLong(1))).toSeq
 
   /** Seed counts from a state table; pre-upgrade roots (no `inserted`
     * column) start at an unknown baseline of 0 — the watch under-reports
@@ -587,8 +603,7 @@ object CrawlLoop {
       // rows AND per-shard fill deltas ride the write like every other
       // metric — without the thunks the commit would fire a read-back
       // count job (rows) and a state-history rescan (fill) every round
-      .observe(obsBloom, count(lit(1)).as("n"),
-        collect_list(struct($"shard", $"inserted")).as("deltas"))
+      .observe(obsBloom, count(lit(1)).as("n"), shardDeltas)
 
     def m(o: Observation, k: String): Long =
       o.get(k).asInstanceOf[Number].longValue()
@@ -653,10 +668,7 @@ object CrawlLoop {
     // warning names the fix.
     def sketchFill: (Long, Long) = {
       val expected = math.max(1L, cfg.bloomExpectedPerShard)
-      val deltas = obsBloom.get("deltas")
-        .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
-        .map(r => (r.getInt(0), r.getLong(1))).toSeq
-      val (mx, sat) = fill.update(deltas, expected)
+      val (mx, sat) = fill.update(observedDeltas(obsBloom), expected)
       if (sat > 0)
         System.err.println(s"[crawl] WARN round $round: $sat seen-sketch " +
           s"shard(s) past expected capacity $expected (max fill " +

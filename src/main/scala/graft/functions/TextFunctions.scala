@@ -151,9 +151,8 @@ object TextFunctions {
   // --- C11: md5 prefix strip (scrapers/zenodo.py:355) -----------------------
   def stripMd5Prefix(c: Column): Column = regexp_replace(c, "^md5:", "")
 
-  // --- C12: keyword join/split (scripts/scrape_osf.py:336-339) --------------
+  // --- C12: keyword join (scripts/scrape_osf.py:336-339) -------------------
   def joinKeywords(c: Column): Column = concat_ws(";", c)
-  def splitKeywords(c: Column): Column = split(c, ";")
 
   // --- C13: thermostat / barostat normalization (parse_mdp_files.py:37-52) --
   val thermostats: Map[String, String] = Map(

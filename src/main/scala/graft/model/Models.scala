@@ -188,10 +188,6 @@ object Validators {
   /** DOI regex gate (models/dataset.py:19-22). */
   def validDoi(s: String): Boolean = DoiRe.matches(s)
 
-  /** Empty string / empty list → None (models/dataset.py:189-218). */
-  def emptyToNone(s: String): Option[String] =
-    Option(s).map(_.trim).filter(_.nonEmpty)
-
   /** Python Path.suffix semantics minus the dot (models/file.py:67-80,
     * pinned by tests/models/test_file.py:60-82): extension of the basename;
     * `archive.tar.gz → gz`; no dot or leading-dot-only → "".

@@ -1353,10 +1353,13 @@ object Relational {
     // columns, a new one with three, read together under
     // `mergeSchema=true` — old rows surface NULL for the added column
     // instead of failing or silently picking one footer's schema (the
-    // default single-schema read). At 100 TB the union schema comes from
-    // manifest metadata (Glacier records per-table schemas per snapshot)
-    // rather than footer sampling; the NULL-fill semantics this entry
-    // hashes are identical.
+    // default single-schema read). Glacier records a table's schema in its
+    // snapshot manifest only while every dir of the table was written with
+    // that one schema, and then reads it without footer sampling; a table
+    // whose dirs differ, as v1 and v2 do here, records none and is read by
+    // inference. So an evolved table's union schema still comes from a
+    // `mergeSchema` read like this one, with the NULL-fill semantics this
+    // entry hashes.
     QueryEntry(
       "q_schema_merge",
       (s, dir) => {

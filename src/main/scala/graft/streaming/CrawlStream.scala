@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,8 +10,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stream. The reference is a batch crawler (SURVEY §2.9 — no streams),
   * but a production deployment of this engine tails its own crawl log:
   * the BSP loop appends to the Glacier `crawl_log` table, and these
-  * queries run against the same rows as an unbounded stream (file-source
-  * `readStream` on the table directories, or any event bus in between).
+  * queries run against the same rows as an unbounded stream (an event
+  * bus between the two; a file-source stream over the table directories
+  * would bypass the manifests and pick up uncommitted staged dirs).
   *
   *  - [[hostRates]]: watermarked sliding-window fetch/error rates per host
   *    (the dashboard surface).
@@ -85,12 +86,5 @@ object CrawlStream {
           state.update(s)
           out.result().iterator
       }
-  }
-
-  /** Tail a Glacier table directory tree as a file-source stream with the
-    * table's schema inferred from its existing batch content. */
-  def tableStream(spark: SparkSession, glacierDataGlob: String): DataFrame = {
-    val schema = spark.read.parquet(glacierDataGlob).schema
-    spark.readStream.schema(schema).parquet(glacierDataGlob)
   }
 }

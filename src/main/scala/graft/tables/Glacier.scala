@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -21,7 +22,8 @@ import org.json4s.jackson.Serialization
   *                             a staging dir)
   *   meta/snap-<id>.json       manifest: parent id, per-table file lists
   *                             (per-partition lineage: part-file names +
-  *                             byte sizes + row counts), metrics
+  *                             byte sizes + row counts), per-table schema,
+  *                             metrics
   *   meta/CURRENT              atomic pointer (tmp-write + ATOMIC_MOVE)
   * }}}
   *
@@ -32,6 +34,9 @@ import org.json4s.jackson.Serialization
   *    each round).
   *  - Time travel: `read(table, Some(snapshotId))` unions exactly that
   *    snapshot's file list.
+  *  - Schema: a table state records the schema its dirs were written with
+  *    when they all share one, and every read passes it to the scan (no
+  *    schema-inference job); see [[Glacier.TableState]].
   *  - Crash safety: data + manifest are written first; the commit *is* the
   *    pointer rename. A crash before the rename leaves the previous
   *    snapshot current and only orphan data files (never a torn table).
@@ -104,18 +109,20 @@ final class Glacier(val root: String) {
     }
   }
 
+  /** A table's state at a snapshot (default: current); None when the
+    * snapshot or the table is missing. */
+  private def stateAt(table: String,
+                      snapshotId: Option[Long]): Option[TableState] =
+    snapshotId.orElse(currentSnapshotId).flatMap(manifestOpt)
+      .flatMap(_.tables.get(table))
+
   /** Read a table at a snapshot (default: current). Missing table/snapshot
-    * → None (caller supplies the empty-state Dataset; schemas live with the
-    * caller's Encoders, not the table layer).
+    * → None (caller supplies the empty-state Dataset).
     */
   def read(spark: SparkSession, table: String,
-           snapshotId: Option[Long] = None): Option[DataFrame] = {
-    val id = snapshotId.orElse(currentSnapshotId)
-    id.flatMap(manifestOpt).flatMap(_.tables.get(table)).flatMap { st =>
-      if (st.files.isEmpty) None
-      else Some(spark.read.parquet(st.files: _*))
-    }
-  }
+           snapshotId: Option[Long] = None): Option[DataFrame] =
+    stateAt(table, snapshotId).filter(_.files.nonEmpty)
+      .map(st => scan(spark, st.files, st.schema))
 
   /** Zone-map read: open only the part-files whose recorded footer range on
     * `column` can intersect `[lo, hi]` — Iceberg-style data skipping over
@@ -130,8 +137,7 @@ final class Glacier(val root: String) {
   def readBetween(spark: SparkSession, table: String, column: String,
                   lo: Any, hi: Any,
                   snapshotId: Option[Long] = None): Option[DataFrame] = {
-    val id = snapshotId.orElse(currentSnapshotId)
-    id.flatMap(manifestOpt).flatMap(_.tables.get(table)).flatMap { st =>
+    stateAt(table, snapshotId).flatMap { st =>
       val selected: List[String] = st.files.flatMap { dir =>
         // per-partition lineage is per-commit: the stats for this dir's
         // parts live in the manifest of the snapshot that WROTE the dir
@@ -143,7 +149,7 @@ final class Glacier(val root: String) {
             s"$dir/${pe.path}"
         }
       }
-      if (selected.isEmpty) None else Some(spark.read.parquet(selected: _*))
+      if (selected.isEmpty) None else Some(scan(spark, selected, st.schema))
     }
   }
 
@@ -203,8 +209,7 @@ final class Glacier(val root: String) {
     }
 
   def rowCount(table: String, snapshotId: Option[Long] = None): Long =
-    snapshotId.orElse(currentSnapshotId).flatMap(manifestOpt)
-      .flatMap(_.tables.get(table)).map(_.rows).getOrElse(0L)
+    stateAt(table, snapshotId).map(_.rows).getOrElse(0L)
 
   // ---- commit --------------------------------------------------------------
 
@@ -299,17 +304,14 @@ final class Glacier(val root: String) {
       // by this very write can supply it), else the sum of per-part footer
       // counts — driver-local metadata reads, NO Spark job either way
       val rows = w.rows.map(_.apply()).getOrElse(parts.map(_.rows).sum)
-      val parentFiles = w.mode match {
-        case Append =>
-          parent.flatMap(_.tables.get(w.table)).map(_.files).getOrElse(Nil)
-        case Replace => Nil
+      val base = w.mode match {
+        case Append  => parent.flatMap(_.tables.get(w.table))
+        case Replace => None
       }
-      val parentRows = w.mode match {
-        case Append =>
-          parent.flatMap(_.tables.get(w.table)).map(_.rows).getOrElse(0L)
-        case Replace => 0L
-      }
-      w.table -> TableState(parentFiles :+ dir, parentRows + rows, parts)
+      val baseFiles = base.map(_.files).getOrElse(Nil)
+      w.table -> TableState(baseFiles :+ dir,
+        base.map(_.rows).getOrElse(0L) + rows, parts,
+        schemaAfter(baseFiles, base.flatMap(_.schema), w))
     }.toMap
 
   /** The commit-critical-section guard: JVM-wide per-root monitor nested
@@ -422,9 +424,10 @@ final class Glacier(val root: String) {
       val prev = headPending.filterNot(h => h.isDone && !h.failed)
       val id = prev.map(_.snapshotId + 1)
         .orElse(currentSnapshotId.map(_ + 1)).getOrElse(1L)
-      val baseView: Map[String, List[String]] = prev.map(_.readableTables)
+      val baseView: Map[String, Readable] = prev.map(_.readableTables)
         .getOrElse(currentManifest
-          .map(_.tables.view.mapValues(_.files).toMap)
+          .map(_.tables.view.mapValues(st => Readable(st.files, st.schema))
+            .toMap)
           .getOrElse(Map.empty))
       (id, prev, baseView)
     }
@@ -432,15 +435,16 @@ final class Glacier(val root: String) {
     val (front, back) = writes.partition(_.barrier)
     val stageRoot = newStagingDir(newId)
     writeStages(stageRoot, front) // phase A: durable before the handle returns
-    val readable: Map[String, List[String]] = {
+    val readable: Map[String, Readable] = {
       val dropped = base -- back.map(_.table) // their dirs don't exist yet
       front.foldLeft(dropped) { (acc, w) =>
         val dir = s"$stageRoot/${w.table}"
-        val parentDirs = w.mode match {
-          case Append  => acc.getOrElse(w.table, Nil)
-          case Replace => Nil
+        val prior = w.mode match {
+          case Append  => acc.getOrElse(w.table, Readable(Nil, None))
+          case Replace => Readable(Nil, None)
         }
-        acc + (w.table -> (parentDirs :+ dir))
+        acc + (w.table -> Readable(prior.dirs :+ dir,
+          schemaAfter(prior.dirs, prior.schema, w)))
       }
     }
     val fut = new java.util.concurrent.CompletableFuture[Long]()
@@ -624,7 +628,8 @@ final class Glacier(val root: String) {
             case _       => false
           }) => file
     }
-    if (parts.isEmpty) None else Some(spark.read.parquet(parts: _*))
+    if (parts.isEmpty) None
+    else Some(scan(spark, parts, stateAt(table, Some(snap)).flatMap(_.schema)))
   }
 
   /** Delete all snapshots except the most recent `keepLast`: expired
@@ -744,16 +749,19 @@ final class Glacier(val root: String) {
   def readChanges(spark: SparkSession, table: String,
                   fromId: Long, toId: Long): Option[DataFrame] = {
     require(fromId <= toId, s"fromId $fromId > toId $toId")
-    def files(id: Long) = manifestOpt(id).getOrElse(throw
+    def state(id: Long) = manifestOpt(id).getOrElse(throw
         new IllegalArgumentException(s"snapshot $id unknown or expired"))
-      .tables.get(table).map(_.files).getOrElse(Nil)
-    val from = files(fromId)
-    val to = files(toId)
+      .tables.get(table)
+    val from = state(fromId).map(_.files).getOrElse(Nil)
+    val toState = state(toId)
+    val to = toState.map(_.files).getOrElse(Nil)
     require(to.startsWith(from),
       s"$table: snap-$fromId's file list is not a prefix of snap-$toId's " +
         "(Replace/rollback lineage) — use a keyed diff (q_table_diff) instead")
     val delta = to.drop(from.size)
-    if (delta.isEmpty) None else Some(spark.read.parquet(delta: _*))
+    // `to`'s schema covers every dir of its list, the delta's included
+    if (delta.isEmpty) None
+    else Some(scan(spark, delta, toState.flatMap(_.schema)))
   }
 
   // ---- named refs (tags) ----------------------------------------------------
@@ -859,7 +867,7 @@ final class Glacier(val root: String) {
   def readStaged(spark: SparkSession, sc: StagedCommit,
                  table: String): Option[DataFrame] =
     stagedManifest(sc).tables.get(table).filter(_.files.nonEmpty)
-      .map(st => spark.read.parquet(st.files: _*))
+      .map(st => scan(spark, st.files, st.schema))
 
   /** Publish a staged commit: CAS on the parent (CURRENT must not have
     * moved during the audit), promote the staged manifest to `snap-<id>`,
@@ -1096,8 +1104,40 @@ object Glacier {
     * landed still deserialize. */
   final case class FileEntry(path: String, bytes: Long, rows: Long = -1L,
                              stats: Map[String, ColStats] = Map.empty)
+
+  /** A table at one snapshot. `schema` (a StructType's JSON) is set only
+    * when EVERY dir of `files` was written with exactly that schema: a
+    * Replace records its frame's; an Append keeps it only over no prior
+    * dirs or over a byte-equal recorded one. A table whose dirs differ
+    * (e.g. a sketch state from before a column was added) and manifests
+    * written before the field existed carry None and read by inference. */
   final case class TableState(files: List[String], rows: Long,
-                              partitions: List[FileEntry])
+                              partitions: List[FileEntry],
+                              schema: Option[String] = None)
+
+  /** The schema a state records once `w`'s dir follows `priorDirs`, whose
+    * recorded schema is `priorSchema` (see [[TableState]]). */
+  private def schemaAfter(priorDirs: List[String], priorSchema: Option[String],
+                          w: TableWrite): Option[String] = {
+    val written = w.df.schema.json
+    if (priorDirs.isEmpty || priorSchema.contains(written)) Some(written)
+    else None
+  }
+
+  /** Every Glacier read goes through here. A recorded schema spares Spark
+    * its inference (a one-task job plus a footer read on each call); the
+    * reader makes every field nullable either way, so the relation is the
+    * one inference would give. No schema: infer, as a bare parquet read. */
+  private def scan(spark: SparkSession, files: Seq[String],
+                   schema: Option[String]): DataFrame =
+    schema.fold(spark.read)(s =>
+      spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]))
+      .parquet(files: _*)
+
+  /** A pipelined commit's readable table: its durable dirs and the schema
+    * they share, under the [[TableState]] rule. */
+  private[tables] final case class Readable(dirs: List[String],
+                                            schema: Option[String])
 
   /** Handle to a staged (write-audit-publish) commit: the would-be
     * snapshot id, the parent it was built on (the publish CAS check), and
@@ -1139,11 +1179,11 @@ object Glacier {
     */
   final class PendingCommit private[tables] (
       val snapshotId: Long,
-      private[tables] val readableTables: Map[String, List[String]],
+      private[tables] val readableTables: Map[String, Readable],
       completion: java.util.concurrent.CompletableFuture[Long]) {
     def read(spark: SparkSession, table: String): Option[DataFrame] =
-      readableTables.get(table).filter(_.nonEmpty)
-        .map(dirs => spark.read.parquet(dirs: _*))
+      readableTables.get(table).filter(_.dirs.nonEmpty)
+        .map(r => scan(spark, r.dirs, r.schema))
     def await(): Long =
       try completion.get()
       catch {

@@ -245,17 +245,32 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(rounds.nonEmpty)
     assert(rounds.forall(_.metrics.contains("sketch_fill_max_pct")))
     assert(rounds.forall(_.metrics("sketch_saturated_shards") === 0L))
+    assert(roundFills(engineRoot).head === (2L, 0L))
 
     // a deliberately mis-sized run (4 urls/shard) must cross 100% fill and
-    // count saturated shards — the silent-FPP-degradation watch
+    // count saturated shards — the silent-FPP-degradation watch. A fresh
+    // crawl's baseline is the bootstrap sketch state, a resumed one's the
+    // state table it resumes on; both give the same (max fill %, saturated
+    // shards) per round. The values were recorded while the bootstrap
+    // baseline still came from a read-back of the state table.
+    def satRun(root: String, rounds: Int): Unit =
+      CrawlLoop.run(spark, CrawlConfig(repo, budget, maxRounds = rounds, root,
+        salts = 4, bloomShards = 8, bloomExpectedPerShard = 4))
+    val expected = Seq((2050L, 8L), (2425L, 8L), (2825L, 8L))
     val root = Files.createTempDirectory("crawl-sat").toString
-    CrawlLoop.run(spark, CrawlConfig(repo, budget, maxRounds = 3, root,
-      salts = 4, bloomShards = 8, bloomExpectedPerShard = 4))
-    val sat = new graft.tables.Glacier(root).history
-      .filter(_.note.startsWith("round")).maxBy(_.snapshotId).metrics
-    assert(sat("sketch_fill_max_pct") > 100L, sat)
-    assert(sat("sketch_saturated_shards") > 0L, sat)
+    satRun(root, 3)
+    assert(roundFills(root) === expected)
+    val resumed = Files.createTempDirectory("crawl-sat-resume").toString
+    satRun(resumed, 1)
+    satRun(resumed, 3)
+    assert(roundFills(resumed) === expected)
   }
+
+  /** (sketch_fill_max_pct, sketch_saturated_shards) of each round. */
+  private def roundFills(root: String): Seq[(Long, Long)] =
+    new graft.tables.Glacier(root).history.filter(_.note.startsWith("round"))
+      .map(m => (m.metrics("sketch_fill_max_pct"),
+        m.metrics("sketch_saturated_shards")))
 
   test("post-pass: exclusion filter + false-positive removal match the oracle") {
     import spark.implicits._
@@ -363,5 +378,12 @@ class CrawlParitySpec extends AnyFunSuite {
     val seenB = new graft.tables.Glacier(root2).read(spark, "seen").get
       .select("url").collect().map(_.getString(0)).toSet
     assert(seenB === oracle.seen)
+
+    // the resumed rounds' sketch fill starts from the state table's
+    // baseline: every round reports what the uninterrupted crawl reports
+    // (round 4, the first resumed one, recorded as (3, 0))
+    val resumedFills = roundFills(root2)
+    assert(resumedFills === roundFills(engineRoot))
+    assert(resumedFills(3) === (3L, 0L))
   }
 }
