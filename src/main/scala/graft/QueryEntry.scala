@@ -12,6 +12,26 @@ final case class QueryEntry(
     oracle: Option[String] = None,
 )
 
+object QueryEntry {
+  /** An entry whose Spark side runs its oracle text: one ANSI string that
+    * both engines execute, so there is no DataFrame twin to drift from it.
+    * The text must stay byte-identical (the driver hashes it). */
+  def sql(name: String, tables: String*)(text: String): QueryEntry =
+    QueryEntry(name, (s, dir) => overViews(s, dir, tables, text), Some(text))
+
+  /** Run `text` over temp views of `tables`. `sql()` resolves the views
+    * eagerly, so dropping them before the frame is returned can't break
+    * its plan; it only keeps catalog state from leaking into later
+    * queries. */
+  private def overViews(s: SparkSession, dir: String, tables: Seq[String],
+      text: String): DataFrame = {
+    tables.foreach(n => Tables.t(s, dir, n).createOrReplaceTempView(n))
+    val df = s.sql(text)
+    tables.foreach(s.catalog.dropTempView)
+    df
+  }
+}
+
 object Tables {
   /** Footer-schema memo: the sf parquet files are immutable for a JVM's
     * lifetime, but every `spark.read.parquet` without an explicit schema

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -10,11 +10,21 @@ import org.apache.spark.sql.types.DecimalType
   * join / aggregation semantics (SURVEY.md §2.3-§2.7) over the driver's
   * TPC-H-ish tables.
   *
+  * Plain-relational entries (dedup, semi/anti joins, rollups, timelines,
+  * windows, set ops, null semantics, the SQL surface) run their oracle
+  * text: `QueryEntry.sql` hands the one frozen ANSI string to `spark.sql`
+  * as well as to DuckDB, so no DataFrame twin can drift from it. A
+  * DataFrame builder remains where the text does not run in Spark, or
+  * where the builder adds what the text can't say: a broadcast or shuffle
+  * hint, salting, a bloom pre-filter, a Glacier or file-layout step, a
+  * reusable operator (`excludeFiles`, `snapshotDiff`, `profileColumns`)
+  * or a single-operator plan (`unpivot`'s Expand).
+  *
   * Scale notes (100 TB design intent):
   *  - aggregations are plain `groupBy` → Catalyst plans partial (map-side)
   *    aggregation automatically, so the shuffle carries pre-combined rows;
   *  - dimension joins (`nation`, `region`, `customer`) are explicitly
-  *    `broadcast()` — no shuffle of the fact side;
+  *    `broadcast()` where the builder stays — no shuffle of the fact side;
   *  - double sums go through `Decimal(28,6)` so results are
   *    order-independent (bit-exact under any partitioning / AQE re-plan),
   *    which is what makes them checkable against a single-threaded oracle
@@ -24,78 +34,13 @@ import org.apache.spark.sql.types.DecimalType
   *    ordered by the discovery sequence.
   */
 object Relational {
-  private val Dec = DecimalType(28, 6)
   /** Exact, order-independent sum of a double column (bit-stable at any
     * parallelism): sum in decimal, surface as double.
     */
-  private def dsum(c: Column): Column = sum(c.cast(Dec)).cast("double")
+  private def dsum(c: Column): Column =
+    sum(c.cast(DecimalType(28, 6))).cast("double")
 
   import Tables.t
-
-  /** One query text, two engines (q_sql_surface): must stay ANSI-portable —
-    * explicit CASTs, no engine-specific functions. */
-  private val SqlSurfaceQuery: String =
-    """SELECT c_mktsegment, count(*) AS n_orders,
-        CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment"""
-
-  /** Verbatim two-engine text for q_correlated_subquery: an EXISTS and a
-    * correlated scalar count over the same outer row. */
-  private val CorrelatedSubqueryQuery: String =
-    """SELECT o.o_orderkey, o.o_orderstatus
-      FROM orders o
-      WHERE EXISTS (SELECT 1 FROM customer c
-                    WHERE c.c_custkey = o.o_custkey
-                      AND c.c_mktsegment = 'BUILDING')
-        AND (SELECT count(*) FROM lineitem l
-             WHERE l.l_orderkey = o.o_orderkey) >= 5
-      ORDER BY o.o_orderkey"""
-
-  /** Verbatim two-engine text for q_recursive_cte: the binary-heap parent
-    * edge (parent = floor(id/2)) makes the hierarchy derivable from the
-    * customer table itself — no auxiliary edge table — and `/` is double
-    * division in BOTH engines, so FLOOR(x/2) is portable integer halving. */
-  private val RecursiveCteQuery: String =
-    """WITH RECURSIVE tree(id, depth) AS (
-        SELECT CAST(0 AS BIGINT) AS id, CAST(0 AS BIGINT) AS depth
-        UNION ALL
-        SELECT c.c_custkey, t.depth + 1
-        FROM customer c JOIN tree t
-          ON CAST(FLOOR(c.c_custkey / 2) AS BIGINT) = t.id
-        WHERE c.c_custkey > 0
-      )
-      SELECT id, depth FROM tree ORDER BY id"""
-
-  /** Verbatim two-engine text for q_lateral_topk: correlated LATERAL
-    * subquery with ORDER BY + LIMIT — per-outer-row top-k through the SQL
-    * surface. Cents quantization keeps the emitted money column integral
-    * (rendered doubles differ across engines). */
-  private val LateralTopkQuery: String =
-    """SELECT n.n_name, l.c_name,
-        CAST(ROUND(l.c_acctbal * 100) AS BIGINT) AS acctbal_cents
-      FROM nation n, LATERAL (
-        SELECT c_name, c_acctbal FROM customer c
-        WHERE c.c_nationkey = n.n_nationkey
-        ORDER BY c_acctbal DESC, c_name LIMIT 3
-      ) l
-      ORDER BY n.n_name, acctbal_cents DESC, l.c_name"""
-
-  /** Run one verbatim ANSI text over temp views of `tables`. `sql()`
-    * resolves the views eagerly, so dropping them before the frame is
-    * returned can't break its plan; it only keeps catalog state from
-    * leaking into later queries. */
-  private def sqlOverViews(s: SparkSession, dir: String, tables: Seq[String],
-      query: String): DataFrame = {
-    tables.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-    val df = s.sql(query)
-    tables.foreach(s.catalog.dropTempView)
-    df
-  }
-
-  /** Each user's events in (ts, event_id) order. */
-  private def userTimeline =
-    Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
 
   /** Per-event_type row count and decimal-exact value total. */
   private def eventTypeTotals(df: DataFrame): DataFrame =
@@ -130,22 +75,8 @@ object Relational {
 
   def entries: Seq[QueryEntry] = Seq(
     // ---- A-ops: aggregation --------------------------------------------
-    QueryEntry(
-      "q_agg_pricing",
-      (s, dir) => {
-        val li = t(s, dir, "lineitem")
-        li.groupBy(col("l_returnflag"), col("l_linestatus"))
-          .agg(
-            dsum(col("l_quantity")).as("sum_qty"),
-            dsum(col("l_extendedprice")).as("sum_base_price"),
-            dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-              .as("sum_disc_price"),
-            (dsum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-            count(lit(1)).as("count_order"),
-          )
-          .orderBy("l_returnflag", "l_linestatus")
-      },
-      Some("""SELECT l_returnflag, l_linestatus,
+    QueryEntry.sql("q_agg_pricing", "lineitem")(
+      """SELECT l_returnflag, l_linestatus,
         CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty,
         CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) AS sum_base_price,
         CAST(sum(CAST(l_extendedprice * (CAST(1.0 AS DOUBLE) - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS sum_disc_price,
@@ -153,23 +84,12 @@ object Relational {
         count(*) AS count_order
         FROM lineitem GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus"""),
-    ),
     // ---- F-ops: filter + projection (pushed to the parquet scan) --------
-    QueryEntry(
-      "q_filter_pushdown",
-      (s, dir) => {
-        t(s, dir, "lineitem")
-          .filter(
-            col("l_shipdate") < lit("1996-06-01").cast("timestamp")
-              && col("l_discount") > lit(0.05))
-          .select("l_orderkey", "l_linenumber", "l_extendedprice")
-          .orderBy("l_orderkey", "l_linenumber")
-      },
-      Some("""SELECT l_orderkey, l_linenumber, l_extendedprice
+    QueryEntry.sql("q_filter_pushdown", "lineitem")(
+      """SELECT l_orderkey, l_linenumber, l_extendedprice
         FROM lineitem
         WHERE l_shipdate < TIMESTAMP '1996-06-01' AND l_discount > 0.05
         ORDER BY l_orderkey, l_linenumber"""),
-    ),
     // ---- J-ops: star join, dimensions broadcast -------------------------
     QueryEntry(
       "q_join_agg",
@@ -195,53 +115,24 @@ object Relational {
         JOIN region ON n_regionkey = r_regionkey
         GROUP BY r_name, n_name ORDER BY r_name, n_name"""),
     ),
-    QueryEntry(
-      "q_left_join_agg",
-      (s, dir) => {
-        val c = t(s, dir, "customer")
-        val o = t(s, dir, "orders")
-        c.join(o, c("c_custkey") === o("o_custkey"), "left")
-          .groupBy(col("c_custkey"))
-          .agg(count(col("o_orderkey")).as("n_orders"),
-               coalesce(dsum(col("o_totalprice")), lit(0.0)).as("total_spent"))
-          .orderBy("c_custkey")
-      },
-      Some("""SELECT c_custkey, count(o_orderkey) AS n_orders,
+    QueryEntry.sql("q_left_join_agg", "customer", "orders")(
+      """SELECT c_custkey, count(o_orderkey) AS n_orders,
         coalesce(CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE), 0.0) AS total_spent
         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         GROUP BY c_custkey ORDER BY c_custkey"""),
-    ),
     // semi / anti joins: the reference's isin / ~isin removal semantics
     // (false-positive removal, toolbox.py:390-418) → left_semi / left_anti.
-    QueryEntry(
-      "q_semi_join",
-      (s, dir) => {
-        val c = t(s, dir, "customer")
-        val f = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-        c.join(f, c("c_custkey") === f("o_custkey"), "left_semi")
-          .select("c_custkey", "c_name")
-          .orderBy("c_custkey")
-      },
-      Some("""SELECT c_custkey, c_name FROM customer c
+    QueryEntry.sql("q_semi_join", "customer", "orders")(
+      """SELECT c_custkey, c_name FROM customer c
         WHERE EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
         ORDER BY c_custkey"""),
-    ),
-    QueryEntry(
-      "q_anti_join",
-      (s, dir) => {
-        val c = t(s, dir, "customer")
-        val big = t(s, dir, "orders").filter(col("o_totalprice") > lit(150000.0))
-        c.join(big, c("c_custkey") === big("o_custkey"), "left_anti")
-          .select("c_custkey", "c_name", "c_acctbal")
-          .orderBy("c_custkey")
-      },
-      Some("""SELECT c_custkey, c_name, c_acctbal FROM customer c
+    QueryEntry.sql("q_anti_join", "customer", "orders")(
+      """SELECT c_custkey, c_name, c_acctbal FROM customer c
         WHERE NOT EXISTS (SELECT 1 FROM orders o
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_totalprice > CAST(150000.0 AS DOUBLE))
         ORDER BY c_custkey"""),
-    ),
     // ---- A1: false-positive detector (groupBy + collect_set + intersect)
     // reference core/toolbox.py:328-387 re-keyed onto the events table:
     // "datasets" = users in the first 6 crawl-hours, "md file types" =
@@ -268,68 +159,30 @@ object Relational {
         ORDER BY total_events DESC, user_id"""),
     ),
     // ---- A3: per-origin rollup with grand-total row ----------------------
-    QueryEntry(
-      "q_rollup",
-      (s, dir) => {
-        t(s, dir, "orders")
-          .rollup(col("o_orderpriority"))
-          .agg(count(lit(1)).as("n_orders"),
-               dsum(col("o_totalprice")).as("total"))
-          .select(coalesce(col("o_orderpriority"), lit("TOTAL")).as("priority"),
-                  col("n_orders"), col("total"))
-          .orderBy("priority")
-      },
-      Some("""SELECT coalesce(o_orderpriority, 'TOTAL') AS priority,
+    QueryEntry.sql("q_rollup", "orders")(
+      """SELECT coalesce(o_orderpriority, 'TOTAL') AS priority,
         count(*) AS n_orders,
         CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS total
         FROM orders GROUP BY ROLLUP(o_orderpriority) ORDER BY priority"""),
-    ),
     // ---- A4: timeline (year buckets) -------------------------------------
-    QueryEntry(
-      "q_timeline",
-      (s, dir) => {
-        t(s, dir, "orders")
-          .withColumn("yr", year(col("o_orderdate")).cast("long"))
-          .groupBy(col("yr"))
-          .agg(countDistinct(col("o_custkey")).as("active_customers"),
-               count(lit(1)).as("n_orders"),
-               dsum(col("o_totalprice")).as("total"))
-          .orderBy("yr")
-      },
-      Some("""SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
+    QueryEntry.sql("q_timeline", "orders")(
+      """SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
         count(DISTINCT o_custkey) AS active_customers,
         count(*) AS n_orders,
         CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS total
         FROM orders GROUP BY 1 ORDER BY yr"""),
-    ),
     // ---- D1/D2: order-preserving first-wins dedup ------------------------
     // reference toolbox.py:192-209 keeps the FIRST occurrence in encounter
     // order; here the encounter order is (ts, event_id) per (user, type).
-    QueryEntry(
-      "q_dedup_first_wins",
-      (s, dir) => {
-        val w = Window.partitionBy(col("user_id"), col("event_type"))
-          .orderBy(col("ts"), col("event_id"))
-        t(s, dir, "events")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select("user_id", "event_type", "event_id", "value")
-          .orderBy("user_id", "event_type")
-      },
-      Some("""SELECT user_id, event_type, event_id, value FROM (
+    QueryEntry.sql("q_dedup_first_wins", "events")(
+      """SELECT user_id, event_type, event_id, value FROM (
           SELECT user_id, event_type, event_id, value,
                  row_number() OVER (PARTITION BY user_id, event_type
                                     ORDER BY ts, event_id) AS rn
           FROM events) WHERE rn = 1 ORDER BY user_id, event_type"""),
-    ),
     // ---- D6: exact distinct on a projection ------------------------------
-    QueryEntry(
-      "q_dedup_exact",
-      (s, dir) =>
-        t(s, dir, "documents").select("lang", "source").distinct()
-          .orderBy("lang", "source"),
-      Some("SELECT DISTINCT lang, source FROM documents ORDER BY lang, source"),
-    ),
+    QueryEntry.sql("q_dedup_exact", "documents")(
+      "SELECT DISTINCT lang, source FROM documents ORDER BY lang, source"),
     // ---- F3: exclusion filter (path-substring then basename-startswith) --
     // reference core/toolbox.py:265-325; filenames synthesized
     // deterministically from the documents table.
@@ -370,34 +223,17 @@ object Relational {
         ORDER BY doc_id"""),
     ),
     // ---- sorts / limits: top-k ------------------------------------------
-    QueryEntry(
-      "q_topk",
-      (s, dir) =>
-        t(s, dir, "orders")
-          .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-          .limit(10),
-      Some("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+    QueryEntry.sql("q_topk", "orders")(
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
         ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""),
-    ),
     // ---- A5: running metrics (window cumulative sum) ----------------------
-    QueryEntry(
-      "q_window_running",
-      (s, dir) => {
-        val w = userTimeline
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        t(s, dir, "events")
-          .withColumn("running_value", sum(col("value").cast(Dec)).over(w).cast("double"))
-          .select("user_id", "event_id", "running_value")
-          .orderBy("user_id", "event_id")
-      },
-      Some("""SELECT user_id, event_id,
+    QueryEntry.sql("q_window_running", "events")(
+      """SELECT user_id, event_id,
         CAST(sum(CAST(value AS DECIMAL(28,6)))
              OVER (PARTITION BY user_id ORDER BY ts, event_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
           AS running_value
         FROM events ORDER BY user_id, event_id"""),
-    ),
     // ---- salted join (explicit skew handling, north-rule axis A) -----------
     // The manual form of what the crawl loop's `salts` config does for hot
     // hosts: the fact side gets a deterministic salt, the (small) dim side
@@ -438,25 +274,29 @@ object Relational {
     // ---- ANSI SQL surface: the same query text runs on Spark AND DuckDB ----
     // a user of the reference can keep their SQL verbatim: spark.sql over
     // temp views, oracle = the identical string — the declarative surface
-    // Catalyst optimizes exactly like the DataFrame form
-    QueryEntry(
-      "q_sql_surface",
-      (s, dir) => sqlOverViews(s, dir, Seq("orders", "customer"),
-        SqlSurfaceQuery),
-      Some(SqlSurfaceQuery),
-    ),
+    // Catalyst optimizes exactly like the DataFrame form.
+    // The text must stay ANSI-portable: explicit CASTs, no engine-specific functions.
+    QueryEntry.sql("q_sql_surface", "orders", "customer")(
+      """SELECT c_mktsegment, count(*) AS n_orders,
+        CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+      FROM orders JOIN customer ON o_custkey = c_custkey
+      GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
     // ---- correlated subqueries through the SQL surface ----------------------
     // EXISTS (→ Catalyst left-semi rewrite) and a correlated scalar count
-    // (→ aggregate + outer-join rewrite) in ONE verbatim ANSI text both
-    // engines run — the de-correlation surface reference users' SQL leans
-    // on. Emitted values are ints/strings only (a correlated avg() of
-    // doubles would be visit-order-dependent in Spark's float sum).
-    QueryEntry(
-      "q_correlated_subquery",
-      (s, dir) => sqlOverViews(s, dir, Seq("orders", "customer", "lineitem"),
-        CorrelatedSubqueryQuery),
-      Some(CorrelatedSubqueryQuery),
-    ),
+    // (→ aggregate + outer-join rewrite) over the same outer row, in ONE
+    // verbatim ANSI text both engines run — the de-correlation surface
+    // reference users' SQL leans on. Emitted values are ints/strings only
+    // (a correlated avg() of doubles would be visit-order-dependent in
+    // Spark's float sum).
+    QueryEntry.sql("q_correlated_subquery", "orders", "customer", "lineitem")(
+      """SELECT o.o_orderkey, o.o_orderstatus
+      FROM orders o
+      WHERE EXISTS (SELECT 1 FROM customer c
+                    WHERE c.c_custkey = o.o_custkey
+                      AND c.c_mktsegment = 'BUILDING')
+        AND (SELECT count(*) FROM lineitem l
+             WHERE l.l_orderkey = o.o_orderkey) >= 5
+      ORDER BY o.o_orderkey"""),
     // ---- TPC-H Q3 shape: selective 3-table join + grouped top-k -------------
     // The canonical multi-join: a highly selective dimension filter
     // (c_mktsegment) that Catalyst broadcasts, a date-partitioned fact
@@ -465,27 +305,8 @@ object Relational {
     // so the DECIMAL(28,6) cast is exact and the sum order-free. The
     // deliberately declarative form is the point: join order, broadcast
     // choice and pushdown all come from the optimizer (PLANS.md audit).
-    QueryEntry(
-      "q_priority_join",
-      (s, dir) => {
-        val cut = lit("1998-01-01").cast("timestamp")
-        val cust = t(s, dir, "customer")
-          .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-        val ord = t(s, dir, "orders").filter(col("o_orderdate") < cut)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-        val li = t(s, dir, "lineitem").filter(col("l_shipdate") > cut)
-          .select(col("l_orderkey"),
-            (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-              .cast(DecimalType(28, 6)).as("rev"))
-        li.join(ord, col("l_orderkey") === col("o_orderkey"))
-          .join(cust, col("o_custkey") === col("c_custkey"))
-          .groupBy(col("l_orderkey"), col("o_orderdate"))
-          .agg(sum(col("rev")).cast("double").as("revenue"))
-          .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
-          .limit(10)
-          .select("l_orderkey", "o_orderdate", "revenue")
-      },
-      Some("""SELECT l_orderkey, o_orderdate,
+    QueryEntry.sql("q_priority_join", "customer", "orders", "lineitem")(
+      """SELECT l_orderkey, o_orderdate,
             CAST(sum(CAST(l_extendedprice * (1 - l_discount)
               AS DECIMAL(28,6))) AS DOUBLE) AS revenue
           FROM customer, orders, lineitem
@@ -495,35 +316,20 @@ object Relational {
             AND l_shipdate > TIMESTAMP '1998-01-01'
           GROUP BY 1, 2
           ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10"""),
-    ),
     // ---- null semantics: null-safe equality, NULL groups, coalesce ----------
     // SQL's three-valued logic made portable: nullif plants NULLs, groupBy
     // keeps NULL as a group in both engines, and the join runs on <=>
     // (IS NOT DISTINCT FROM) so the NULL groups MATCH — a plain = join
     // silently drops them, the classic dedup-on-nullable-key bug. Output
     // key is coalesce-filled so row ordering/hashing never sees a NULL.
-    QueryEntry(
-      "q_null_semantics",
-      (s, dir) => {
-        val a = t(s, dir, "orders")
-          .select(nullif(col("o_orderkey") % 7, lit(0L)).as("k"))
-          .groupBy("k").agg(count(lit(1)).as("n_orders"))
-        val b = t(s, dir, "lineitem")
-          .select(nullif(col("l_orderkey") % 7, lit(0L)).as("kb"))
-          .groupBy("kb").agg(count(lit(1)).as("n_items"))
-        a.join(b, col("k") <=> col("kb"))
-          .select(coalesce(col("k"), lit(-1L)).as("k_filled"),
-            col("n_orders"), col("n_items"))
-          .orderBy("k_filled")
-      },
-      Some("""WITH a AS (SELECT nullif(o_orderkey % 7, 0) AS k,
+    QueryEntry.sql("q_null_semantics", "orders", "lineitem")(
+      """WITH a AS (SELECT nullif(o_orderkey % 7, 0) AS k,
               count(*) AS n_orders FROM orders GROUP BY 1),
             b AS (SELECT nullif(l_orderkey % 7, 0) AS kb,
               count(*) AS n_items FROM lineitem GROUP BY 1)
           SELECT coalesce(a.k, -1) AS k_filled, a.n_orders, b.n_items
           FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.kb
           ORDER BY k_filled"""),
-    ),
     // ---- Pearson correlation via exact integer moments ----------------------
     // corr(quantity, discount·100) from the five raw moments, every one an
     // EXACT BIGINT (both variables are integral after the portable round).
@@ -533,25 +339,8 @@ object Relational {
     // repo's exact-sum idiom — at the cost of the final casts' last-ulp
     // portability. Rebuilt order-independent, unlike the one-pass corr()'s
     // float accumulation. ONE scan, ONE 1-row aggregate.
-    QueryEntry(
-      "q_corr_stats",
-      (s, dir) => {
-        val d = t(s, dir, "lineitem").select(
-          col("l_quantity").cast("long").as("x"),
-          round(col("l_discount") * 100).cast("long").as("y"))
-        d.agg(count(lit(1)).as("n"),
-            sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-            sum(col("x") * col("x")).as("sxx"),
-            sum(col("y") * col("y")).as("syy"),
-            sum(col("x") * col("y")).as("sxy"))
-          .select(col("n"),
-            ((col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-              (sqrt((col("n") * col("sxx") - col("sx") * col("sx"))
-                .cast("double")) *
-               sqrt((col("n") * col("syy") - col("sy") * col("sy"))
-                .cast("double")))).as("pearson_r"))
-      },
-      Some("""WITH d AS (SELECT CAST(l_quantity AS BIGINT) AS x,
+    QueryEntry.sql("q_corr_stats", "lineitem")(
+      """WITH d AS (SELECT CAST(l_quantity AS BIGINT) AS x,
               CAST(round(l_discount * 100) AS BIGINT) AS y FROM lineitem),
           m AS (SELECT count(*) AS n,
               CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
@@ -563,7 +352,6 @@ object Relational {
               (sqrt(CAST(n*sxx - sx*sx AS DOUBLE))
                * sqrt(CAST(n*syy - sy*sy AS DOUBLE))) AS pearson_r
           FROM m"""),
-    ),
     // ---- statistical outlier gate (z-score from exact integer moments) -----
     // The distribution-based quality filter (drop events > 2σ from their
     // type's mean — the numeric twin of the text quality gates). Values are
@@ -664,7 +452,6 @@ object Relational {
     QueryEntry(
       "q_ntile_quality",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val d = t(s, dir, "documents")
           .select(col("doc_id"), length(col("text")).cast("long").as("score"))
         d.withColumn("decile",
@@ -687,19 +474,8 @@ object Relational {
     // key shuffle each, no materialized distinct-then-join-then-distinct
     // chain; the remaining classical set operators (D3/D5 cover UNION
     // [ALL], q_table_diff covers EXCEPT ALL's CDC use)
-    QueryEntry(
-      "q_set_ops",
-      (s, dir) => {
-        val orders = t(s, dir, "orders")
-        val a = orders.filter(pmod(col("o_orderkey"), lit(2L)) === 0)
-          .select(col("o_custkey"))
-        val b = orders.filter(pmod(col("o_orderkey"), lit(3L)) === 0)
-          .select(col("o_custkey"))
-        a.intersect(b).withColumn("op", lit("intersect"))
-          .unionByName(a.except(b).withColumn("op", lit("except")))
-          .orderBy("op", "o_custkey")
-      },
-      Some("""WITH a AS (SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0),
+    QueryEntry.sql("q_set_ops", "orders")(
+      """WITH a AS (SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 0),
             b AS (SELECT o_custkey FROM orders WHERE o_orderkey % 3 = 0)
           SELECT o_custkey, 'intersect' AS op
             FROM (SELECT * FROM a INTERSECT SELECT * FROM b)
@@ -707,7 +483,6 @@ object Relational {
           SELECT o_custkey, 'except' AS op
             FROM (SELECT * FROM a EXCEPT SELECT * FROM b)
           ORDER BY op, o_custkey"""),
-    ),
     // ---- CUBE multi-dimensional aggregate -----------------------------------
     // all 2^d grouping sets in ONE pass (Catalyst plans an Expand feeding a
     // single partial-agg'd shuffle — d scans and a union would read the
@@ -725,18 +500,8 @@ object Relational {
     // ROWS BETWEEN 2 PRECEDING AND CURRENT ROW per user — the moving-window
     // twin of q_window_running's cumulative frame; ONE user_id shuffle, sums
     // in decimal so the 3-row fold is order-independent across engines
-    QueryEntry(
-      "q_window_sliding",
-      (s, dir) => {
-        val w = userTimeline.rowsBetween(-2, 0)
-        t(s, dir, "events")
-          .select(col("event_id"), col("user_id"), col("value"),
-            sum(col("value").cast("decimal(28,6)")).over(w).cast("double")
-              .as("mov_sum"),
-            count(lit(1)).over(w).as("mov_n"))
-          .orderBy("event_id")
-      },
-      Some("""SELECT event_id, user_id, value,
+    QueryEntry.sql("q_window_sliding", "events")(
+      """SELECT event_id, user_id, value,
             CAST(sum(CAST(value AS DECIMAL(28,6))) OVER w AS DOUBLE)
               AS mov_sum,
             count(*) OVER w AS mov_n
@@ -744,7 +509,6 @@ object Relational {
           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                        ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
           ORDER BY event_id"""),
-    ),
     // ---- RANGE-frame window (trailing time window, not row count) -----------
     // The moving frame defined by the ORDER VALUE: every event sees the
     // count/sum of its user's events in the trailing hour — rows-frames
@@ -756,7 +520,6 @@ object Relational {
     QueryEntry(
       "q_window_range_frame",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy("user_id")
           .orderBy(col("ts_sec")).rangeBetween(-3599L, 0L)
         t(s, dir, "events")
@@ -829,23 +592,33 @@ object Relational {
     // D narrow joins (log2 N here), never a self-cross-product — the
     // hierarchy / reachability primitive (category trees, org charts,
     // crawl-depth closures) at cluster scale.
-    QueryEntry(
-      "q_recursive_cte",
-      (s, dir) => sqlOverViews(s, dir, Seq("customer"), RecursiveCteQuery),
-      Some(RecursiveCteQuery),
-    ),
+    // `/` is double division in both engines, so FLOOR(x/2) halves portably.
+    QueryEntry.sql("q_recursive_cte", "customer")(
+      """WITH RECURSIVE tree(id, depth) AS (
+        SELECT CAST(0 AS BIGINT) AS id, CAST(0 AS BIGINT) AS depth
+        UNION ALL
+        SELECT c.c_custkey, t.depth + 1
+        FROM customer c JOIN tree t
+          ON CAST(FLOOR(c.c_custkey / 2) AS BIGINT) = t.id
+        WHERE c.c_custkey > 0
+      )
+      SELECT id, depth FROM tree ORDER BY id"""),
     // ---- correlated LATERAL top-k -------------------------------------------
     // Per-nation top-3 customers by balance via LATERAL (... ORDER BY ...
     // LIMIT k): the per-row-subquery surface reference users write.
     // Catalyst decorrelates the limit into a rank window under a single
     // equi-join — no per-outer-row re-execution, one shuffle (plan-audited
     // in PLANS.md).
-    QueryEntry(
-      "q_lateral_topk",
-      (s, dir) => sqlOverViews(s, dir, Seq("nation", "customer"),
-        LateralTopkQuery),
-      Some(LateralTopkQuery),
-    ),
+    // Cents keep the money column integral: rendered doubles differ across engines.
+    QueryEntry.sql("q_lateral_topk", "nation", "customer")(
+      """SELECT n.n_name, l.c_name,
+        CAST(ROUND(l.c_acctbal * 100) AS BIGINT) AS acctbal_cents
+      FROM nation n, LATERAL (
+        SELECT c_name, c_acctbal FROM customer c
+        WHERE c.c_nationkey = n.n_nationkey
+        ORDER BY c_acctbal DESC, c_name LIMIT 3
+      ) l
+      ORDER BY n.n_name, acctbal_cents DESC, l.c_name"""),
     // ---- exact multi-quantile (percentile agg) ------------------------------
     // Exact q25/q50/q75 of line-item price per return flag. Quartiles over
     // BIGINT cents are deliberate: (N-1)*p has fraction in {0, 1/4, 1/2,
@@ -932,20 +705,10 @@ object Relational {
     // distinct column set, then two-stage agg) — one shuffle carries all
     // three, where the naive plan would scan and shuffle once per
     // distinct. The cardinality-dashboard shape.
-    QueryEntry(
-      "q_multi_distinct",
-      (s, dir) => {
-        t(s, dir, "lineitem")
-          .groupBy("l_returnflag")
-          .agg(countDistinct(col("l_suppkey")).as("n_supp"),
-            countDistinct(col("l_partkey")).as("n_part"),
-            count(lit(1)).as("n"))
-          .orderBy("l_returnflag")
-      },
-      Some("""SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supp,
+    QueryEntry.sql("q_multi_distinct", "lineitem")(
+      """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supp,
             count(DISTINCT l_partkey) AS n_part, count(*) AS n
           FROM lineitem GROUP BY 1 ORDER BY 1"""),
-    ),
     // ---- survivorship / golden record (max_by / min_by) ---------------------
     // Entity consolidation: per nation, the surviving representative under
     // an explicit total order — max_by/min_by over a deterministic BIGINT
@@ -1010,19 +773,12 @@ object Relational {
     // survives (orders-per-key - 1) times — the "what's left after
     // consuming one match each" reconciliation shape. Catalyst plans a
     // single hash-based count-diff, not a join loop.
-    QueryEntry(
-      "q_except_all",
-      (s, dir) => {
-        t(s, dir, "orders").select(col("o_custkey").as("k"))
-          .exceptAll(t(s, dir, "customer").select(col("c_custkey").as("k")))
-          .orderBy("k")
-      },
-      Some("""SELECT k FROM (
+    QueryEntry.sql("q_except_all", "orders", "customer")(
+      """SELECT k FROM (
             SELECT o_custkey AS k FROM orders
             EXCEPT ALL
             SELECT c_custkey AS k FROM customer)
           ORDER BY k"""),
-    ),
     // ---- snapshot diff / CDC between two table versions ---------------------
     // see [[snapshotDiff]]: keyed full-outer join, the dataset-versioning
     // primitive (what changed between two Glacier snapshots of a corpus)
@@ -1113,21 +869,8 @@ object Relational {
     // so ties can't make output nondeterministic. percent_rank/cume_dist
     // are single IEEE divisions of exact ints (cross-engine-stable);
     // the two single-order customers pin the n=1 percent_rank=0 edge.
-    QueryEntry(
-      "q_window_ranks",
-      (s, dir) => {
-        val w = Window.partitionBy(col("o_custkey")).orderBy(col("bucket").desc)
-        t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            floor(col("o_totalprice") / lit(10000.0)).cast("long").as("bucket"))
-          .select(col("o_orderkey"), col("o_custkey"), col("bucket"),
-            rank().over(w).cast("long").as("rnk"),
-            dense_rank().over(w).cast("long").as("drnk"),
-            percent_rank().over(w).as("prank"),
-            cume_dist().over(w).as("cdist"))
-          .orderBy("o_orderkey")
-      },
-      Some("""WITH b AS (SELECT o_orderkey, o_custkey,
+    QueryEntry.sql("q_window_ranks", "orders")(
+      """WITH b AS (SELECT o_orderkey, o_custkey,
             CAST(floor(o_totalprice / 10000.0e0) AS BIGINT) AS bucket
           FROM orders)
         SELECT o_orderkey, o_custkey, bucket,
@@ -1137,7 +880,6 @@ object Relational {
           cume_dist() OVER w AS cdist
         FROM b WINDOW w AS (PARTITION BY o_custkey ORDER BY bucket DESC)
         ORDER BY o_orderkey"""),
-    ),
     // ---- incremental aggregate maintenance ---------------------------------
     // The materialized-view refresh shape: yesterday's persisted PARTIAL
     // aggregate (count + exact decimal sum per group) merged with the
@@ -1437,19 +1179,8 @@ object Relational {
     // returns-current-row bug, so the frame is explicit). Order key
     // (ts, event_id) is unique per user → deterministic picks; all three
     // share the single user_id window shuffle.
-    QueryEntry(
-      "q_window_firstlast",
-      (s, dir) => {
-        val w = userTimeline
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        t(s, dir, "events")
-          .select(col("event_id"), col("user_id"),
-            first(col("event_id")).over(w).as("first_ev"),
-            last(col("event_id")).over(w).as("last_ev"),
-            nth_value(col("event_id"), 2).over(w).as("second_ev"))
-          .orderBy("event_id")
-      },
-      Some("""SELECT event_id, user_id,
+    QueryEntry.sql("q_window_firstlast", "events")(
+      """SELECT event_id, user_id,
             first_value(event_id) OVER w AS first_ev,
             last_value(event_id) OVER w AS last_ev,
             nth_value(event_id, 2) OVER w AS second_ev
@@ -1457,7 +1188,6 @@ object Relational {
           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
           ORDER BY event_id"""),
-    ),
   )
 
   /** Single-scan column profiler: per requested column, row count, non-null

@@ -149,26 +149,8 @@ object TemporalJoins {
     // user_id — the per-step aggregates and the joins ride ONE shuffle
     // partitioning family, and per-user state is one timestamp per step,
     // so the op holds at any event volume. Output grain = steps (3 rows).
-    QueryEntry(
-      "q_funnel",
-      (s, dir) => {
-        val ev = t(s, dir, "events").select("user_id", "event_type", "ts")
-        val v = ev.filter(col("event_type") === "view")
-          .groupBy("user_id").agg(min(col("ts")).as("t1"))
-        val c = ev.filter(col("event_type") === "click").join(v, "user_id")
-          .filter(col("ts") > col("t1"))
-          .groupBy("user_id").agg(min(col("ts")).as("t2"))
-        val p = ev.filter(col("event_type") === "purchase").join(c, "user_id")
-          .filter(col("ts") > col("t2"))
-          .groupBy("user_id").agg(min(col("ts")).as("t3"))
-        v.agg(count(lit(1)).as("n_users")).select(lit("step1_view").as("step"), col("n_users"))
-          .unionByName(c.agg(count(lit(1)).as("n_users"))
-            .select(lit("step2_click").as("step"), col("n_users")))
-          .unionByName(p.agg(count(lit(1)).as("n_users"))
-            .select(lit("step3_purchase").as("step"), col("n_users")))
-          .orderBy("step")
-      },
-      Some("""WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
+    QueryEntry.sql("q_funnel", "events")(
+      """WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
               WHERE event_type = 'view' GROUP BY 1),
             c AS (SELECT e.user_id, min(e.ts) AS t2
               FROM events e JOIN v USING (user_id)
@@ -183,7 +165,6 @@ object TemporalJoins {
             UNION ALL
             SELECT 'step3_purchase', CAST(count(*) AS BIGINT) FROM p
           ) ORDER BY step"""),
-    ),
     // ---- as-of join: each click gets the user's latest prior purchase ----
     QueryEntry(
       "q_asof_join",

@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - each entry's `oracleSql` text, by sha256 (the texts are frozen: the
   *    driver hashes them);
   *  - each non-crawl entry's result at sf0.001: row count and
-  *    order-insensitive checksum ([[Fingerprint.of]]).
+  *    order-insensitive checksum ([[Fingerprint.of]]), which must also
+  *    hold at [[EntryRegistrySpec.OddPartitions]] shuffle partitions;
+  *  - how many persisted RDDs each non-crawl entry leaves once its result
+  *    is collected ([[EntryRegistrySpec.PinnedRdds]]; 0 for all others).
   *
   * The golden (`src/test/resources/entry_registry_golden.tsv`) is written
   * by this object's `main` from a commit whose entries are trusted:
@@ -45,14 +48,45 @@ class EntryRegistrySpec extends AnyFunSuite {
     assert(changed.isEmpty, s"oracle text changed: ${changed.mkString(", ")}")
   }
 
+  /** Drop whatever earlier tests or specs left pinned in the shared
+    * session, so a persisted RDD is charged to the entry that made it. */
+  private def clearPinned(): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  }
+
+  private def assertGolden(name: String, rows: Long, checksum: Long): Unit = {
+    val g = golden.getOrElse(name, fail(s"$name is not in the golden"))
+    assert(Some(rows) === g.rows, "row count")
+    if (!RowsOnly.contains(name)) assert(Some(checksum) === g.checksum)
+  }
+
   SparkEntry.allEntries.filterNot(e => isCrawl(e.name)).foreach { e =>
     test(s"${e.name}: rows and checksum match the golden at sf0.001") {
-      val g = golden.getOrElse(e.name, fail(s"${e.name} is not in the golden"))
+      clearPinned()
+      val (fingerprint, pinned) =
+        try (Fingerprint.of(e.fn(spark, Sf)),
+          spark.sparkContext.getPersistentRDDs.size)
+        finally spark.catalog.clearCache()
+      assertGolden(e.name, fingerprint._1, fingerprint._2)
+      assert(pinned === PinnedRdds.getOrElse(e.name, 0),
+        "persisted RDDs left once the result is collected")
+    }
+  }
+
+  SparkEntry.allEntries.filterNot(e => isCrawl(e.name)).foreach { e =>
+    test(s"${e.name}: the golden holds at $OddPartitions shuffle partitions") {
+      clearPinned()
+      val key = "spark.sql.shuffle.partitions"
+      val before = spark.conf.get(key)
+      spark.conf.set(key, OddPartitions.toString)
       val (rows, checksum) =
         try Fingerprint.of(e.fn(spark, Sf))
-        finally spark.catalog.clearCache()
-      assert(Some(rows) === g.rows, "row count")
-      if (!RowsOnly.contains(e.name)) assert(Some(checksum) === g.checksum)
+        finally {
+          spark.conf.set(key, before)
+          spark.catalog.clearCache()
+        }
+      assertGolden(e.name, rows, checksum)
     }
   }
 }
@@ -63,6 +97,22 @@ object EntryRegistrySpec {
   /** Entries whose rows differ between two runs of the same code: only
     * the row count is pinned. */
   val RowsOnly: Map[String, String] = Map()
+
+  /** A shuffle-partition count unlike the session's (one per core), so
+    * every hash-partitioned stage splits its keys differently. */
+  val OddPartitions = 7
+
+  /** Entries that leave persisted RDDs behind once their result is
+    * collected, with how many. `Verify` and `Bench` release them with
+    * `clearCache()` between queries; every other entry leaves none. */
+  val PinnedRdds: Map[String, Int] = Map(
+    "q_ngram_jaccard" -> 1, "q_jaccard_lsh" -> 1, "q_containment" -> 1,
+    "q_incremental_neardup" -> 2, "q_sketch_merge" -> 2,
+    "q_fuzzy_id_pairs" -> 1, "q_term_salience" -> 1,
+    "q_inverted_index" -> 1, "q_bm25" -> 1, "q_cosine_pairs_index" -> 2,
+    "q_dist_drift" -> 1, "q_pmi" -> 1, "q_triangle_count" -> 1,
+    "q_pagerank" -> 2, "q_frontier_drain" -> 1,
+  )
 
   /** Crawl entries run the synthetic crawl, not the sf tables, and have no
     * oracle: pinned by name only; `CrawlParitySpec` checks their content. */
