@@ -439,7 +439,7 @@ object CrawlLoop {
     import spark.implicits._
 
     val frontier = readTable("frontier").get
-    // withSeq is a cheap projection over drainSelect's internal cache (the
+    // withSeq is a cheap projection over the drain's internal cache (the
     // global numbering already needed a counts pass) — no second persist.
     val (withSeq, releaseDrain) =
       drainSelectManaged(frontier, cfg.hostBudget, cfg.salts)
@@ -739,11 +739,6 @@ object CrawlLoop {
       graft.plans.TopKPerKey(frontier, Seq(col("host")), priority, budget)
     assignGlobalSeq(selected)
   }
-
-  /** Test/ad-hoc variant that leaks the (tiny, budget-bounded) cache. */
-  def drainSelect(frontier: DataFrame, hostBudget: Map[String, Int],
-                  salts: Int): DataFrame =
-    drainSelectManaged(frontier, hostBudget, salts)._1
 
   /** Global dense 1-based `seqInRound` by `priority` with NO global window
     * (a `Window.orderBy` without partitioning funnels every row through one

@@ -206,22 +206,11 @@ object DownloadStage {
       Seq(col("file_url"), col("dataset_id"), col("file_name")) ++
         FileParsers.mdpParamColumns(col("content")): _*)
 
-  /** .gro bodies → structure rows (scripts/parse_gro_files.py semantics:
-    * fixed-width residue names at columns 6-10, class sets). */
-  def parseGroParams(store: DataFrame): DataFrame = {
-    val lines = split(col("content"), "\n")
-    val atomCount = trim(element_at(lines, 2)).cast("int")
-    val resnames = array_distinct(transform(
-      slice(lines, lit(3), greatest(size(lines) - 2, lit(0))),
-      l => trim(substring(l, 6, 5))))
-    def overlaps(set: Seq[String]) = arrays_overlap(resnames, typedLit(set))
+  /** .gro bodies → structure rows (scripts/parse_gro_files.py semantics
+    * via the same column functions as the oracle-checked
+    * `q_gro_classify`). */
+  def parseGroParams(store: DataFrame): DataFrame =
     store.filter(col("file_type") === "gro").select(
-      col("file_url"), col("dataset_id"), col("file_name"),
-      atomCount.as("atom_number"),
-      overlaps(FileParsers.proteinSet).as("has_protein"),
-      overlaps(FileParsers.nucleicSet).as("has_nucleic"),
-      overlaps(FileParsers.lipidSet).as("has_lipid"),
-      overlaps(FileParsers.glucidSet).as("has_glucid"),
-      overlaps(FileParsers.waterIonSet).as("has_water_ion"))
-  }
+      Seq(col("file_url"), col("dataset_id"), col("file_name")) ++
+        FileParsers.groParamColumns(col("content")): _*)
 }

@@ -3,9 +3,9 @@ package graft.crawl
 /** Per-host politeness: token buckets in SIMULATED time. One BSP round
   * models a fixed wall-clock window; each host's bucket refills
   * `ratePerMinute × minutes` tokens per round, and the drain
-  * ([[CrawlLoop.drainSelect]]) spends them. Simulated time keeps tests and
-  * parity machine-independent (SURVEY.md §7.3: no wall clock in parity
-  * paths) while preserving the reference's real budgets:
+  * ([[CrawlLoop.drainSelectManaged]]) spends them. Simulated time keeps
+  * tests and parity machine-independent (SURVEY.md §7.3: no wall clock in
+  * parity paths) while preserving the reference's real budgets:
   *
   *  - Zenodo: 100 req/min, 5000/h (docs/zenodo.md:31-35, checked at
   *    scrapers/zenodo.py:35-74)

@@ -86,8 +86,8 @@ object CrawlQueries {
     // The north rule's fetch scheduler (per-host budget + score/discovery
     // priority) driven through the REAL drain path — the custom
     // [[graft.plans.TopKPerKey]] Catalyst operator plus the range-partition
-    // global numbering ([[CrawlLoop.drainSelect]]) — against a plain SQL
-    // window oracle. The synthetic frontier derives deterministically from
+    // global numbering ([[CrawlLoop.drainSelectManaged]]) — against a plain
+    // SQL window oracle. The synthetic frontier derives deterministically from
     // `documents` (score = (id·37 mod 100)/10 ties across hosts; minted
     // discovery seq = doc_id keeps the priority a total order); per-host
     // budgets 3..7 from the host's numeric suffix. The oracle's
@@ -110,7 +110,9 @@ object CrawlQueries {
         val budgets = frontier.select("host").distinct().collect()
           .map(_.getString(0))
           .map(h => h -> (3 + h.drop(3).toInt % 5)).toMap
-        CrawlLoop.drainSelect(frontier, budgets, 1)
+        // the frame is collected after this returns, so the drain's cache
+        // stays pinned (EntryRegistrySpec.PinnedRdds counts it)
+        CrawlLoop.drainSelectManaged(frontier, budgets, 1)._1
           .select(col("url"), col("host"), col("depth"), col("score"),
             col("seqInRound").as("seq_in_round"),
             col("kInHost").as("k_in_host"))

@@ -145,8 +145,27 @@ object FileParsers {
            chr(10)) AS content
        FROM documents"""
 
-  private def overlaps(c: Column, set: Seq[String]): Column =
-    arrays_overlap(c, typedLit(set))
+  /** The six gro structure columns over a content column
+    * (scripts/parse_gro_files.py semantics: atom count on line 2,
+    * fixed-width residue names at columns 6-10 of the atom lines, one flag
+    * per residue class) — the ONE definition shared by the oracle-checked
+    * `q_gro_classify` and the download stage's `gro_params` table. The
+    * `greatest` guard gives a body of fewer than two lines no atom lines
+    * instead of a negative slice length. */
+  def groParamColumns(c: Column): Seq[Column] = {
+    val lines = split(c, "\n")
+    val resnames = array_distinct(transform(
+      slice(lines, lit(3), greatest(size(lines) - 2, lit(0))),
+      l => trim(substring(l, 6, 5))))
+    def overlaps(set: Seq[String]) = arrays_overlap(resnames, typedLit(set))
+    Seq(
+      trim(element_at(lines, 2)).cast("int").as("atom_number"),
+      overlaps(proteinSet).as("has_protein"),
+      overlaps(nucleicSet).as("has_nucleic"),
+      overlaps(lipidSet).as("has_lipid"),
+      overlaps(glucidSet).as("has_glucid"),
+      overlaps(waterIonSet).as("has_water_ion"))
+  }
 
   def entries: Seq[QueryEntry] = Seq(
     // ---- C14 + C13: mdp field extraction + coupling normalization ---------
@@ -181,19 +200,7 @@ object FileParsers {
       (s, dir) => {
         val withContent = t(s, dir, "documents")
           .select(col("doc_id"), groContent.as("content"))
-        val lines = split(col("content"), "\n")
-        val atomCount = trim(element_at(lines, 2)).cast("int")
-        val resnames = array_distinct(transform(
-          slice(lines, lit(3), size(lines) - 2),
-          l => trim(substring(l, 6, 5))))
-        withContent.select(
-            col("doc_id"),
-            atomCount.as("atom_number"),
-            overlaps(resnames, proteinSet).as("has_protein"),
-            overlaps(resnames, nucleicSet).as("has_nucleic"),
-            overlaps(resnames, lipidSet).as("has_lipid"),
-            overlaps(resnames, glucidSet).as("has_glucid"),
-            overlaps(resnames, waterIonSet).as("has_water_ion"))
+        withContent.select(col("doc_id") +: groParamColumns(col("content")): _*)
           .orderBy("doc_id")
       },
       Some(s"""WITH g AS ($sqlGro),

@@ -61,23 +61,6 @@ final class Glacier(val root: String) {
 
   private def metaDir: Path = Paths.get(root, "meta")
 
-  /** Staging root for ONE commit attempt: `data/snap-<id>-<unique tag>/`.
-    * The tag removes the shared-dir race between same-parent committers —
-    * a CAS loser's staged files can never collide with the winner's (the
-    * object-store mapping: stage under unique keys, conditional-put the
-    * pointer). The manifest records the full staged paths, so normal reads
-    * never depend on the name; only readBetween's lineage lookup parses the
-    * id back out (SnapDirRe tolerates the tag). Orphan loser dirs are
-    * unreferenced by every manifest and get swept by expireSnapshots.
-    */
-  private def newStagingDir(snap: Long): String = {
-    // full 64-bit tag: a 32-bit one leaves a ~2^-32 per-race chance of two
-    // same-parent attempts recreating the very collision this removes
-    val tag = java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong())
-    s"$root/data/snap-$snap-$tag"
-  }
-
   // ---- read side -----------------------------------------------------------
 
   def currentSnapshotId: Option[Long] = {
@@ -85,10 +68,11 @@ final class Glacier(val root: String) {
     if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
   }
 
-  def manifest(id: Long): Manifest = {
-    val json = Files.readString(metaDir.resolve(s"snap-$id.json"))
-    JsonMethods.parse(json).extract[Manifest]
-  }
+  def manifest(id: Long): Manifest =
+    readManifest(metaDir.resolve(s"snap-$id.json"))
+
+  private def readManifest(p: Path): Manifest =
+    JsonMethods.parse(Files.readString(p)).extract[Manifest]
 
   /** Missing-tolerant manifest lookup (expired or never-written snapshot
     * ids → None), keeping read()/rowCount()'s documented contract. */
@@ -121,8 +105,7 @@ final class Glacier(val root: String) {
     */
   def read(spark: SparkSession, table: String,
            snapshotId: Option[Long] = None): Option[DataFrame] =
-    stateAt(table, snapshotId).filter(_.files.nonEmpty)
-      .map(st => scan(spark, st.files, st.schema))
+    scanState(spark, stateAt(table, snapshotId))
 
   /** Zone-map read: open only the part-files whose recorded footer range on
     * `column` can intersect `[lo, hi]` — Iceberg-style data skipping over
@@ -164,10 +147,7 @@ final class Glacier(val root: String) {
   private def listParquet(dir: String): List[String] = {
     val p = Paths.get(dir)
     if (!Files.isDirectory(p)) Nil
-    else scala.util.Using.resource(Files.list(p)) { s =>
-      s.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toList.sorted
-    }
+    else listDir(p).map(_.toString).filter(_.endsWith(".parquet")).sorted
   }
 
   /** Can a part whose recorded (min, max) is `cs` hold a value in
@@ -212,6 +192,18 @@ final class Glacier(val root: String) {
     stateAt(table, snapshotId).map(_.rows).getOrElse(0L)
 
   // ---- commit --------------------------------------------------------------
+  //
+  // Every snapshot goes through one core of four steps, each defined once:
+  //  1. an [[Attempt]] takes the base snapshot and the next id;
+  //  2. `Attempt.stage` writes under the attempt's unique tagged dir;
+  //  3. [[stateAfter]] turns one staged write into its table's next state
+  //     (`Attempt.record` assembles the manifest from those states);
+  //  4. [[publish]] puts the manifest in place by compare-and-swap against
+  //     the base it was built on.
+  // `commit` and `stageCommit` run the core on the caller's thread (Spark
+  // job properties are per thread); `commitPipelined` stages its barrier
+  // writes on the caller and the rest on its lane; `stageCommit` parks the
+  // manifest for `publishStaged`; `rollbackTo` publishes without writes.
 
   /** Atomically commit one snapshot containing all `writes` plus carried-
     * forward state of untouched tables. Returns the new snapshot id.
@@ -220,104 +212,124 @@ final class Glacier(val root: String) {
     */
   def commit(spark: SparkSession, writes: Seq[TableWrite],
              metrics: => Map[String, Long] = Map.empty,
-             note: String = "", par: Int = 1): Long = {
-    drainPending()
-    commitLocked(writes, metrics, note, par)
+             note: String = "", par: Int = 1): Long = drained {
+    val a = new Attempt(currentSnapshotId)
+    a.stage(writes, par)
+    publish(a.record(writes, metrics, note))
   }
 
-  private def commitLocked(writes: Seq[TableWrite],
-                           metrics: => Map[String, Long],
-                           note: String, par: Int = 1): Long = synchronized {
-    Files.createDirectories(metaDir)
-    val parent = currentManifest
-    val newId = parent.map(_.snapshotId + 1).getOrElse(1L)
-    val stageRoot = newStagingDir(newId)
-    writeStages(stageRoot, writes, par)
-    val written = tableStates(stageRoot, writes, parent)
-    flip(newId, parent, written, metrics, note)
-    newId
-  }
-
-  /** Write the staged parquet dirs for `ws` under snapshot `newId`.
-    *
-    * Table writes run SERIALLY by default: each write is one Spark job
-    * that already parallelizes across the cluster, and measurement showed
-    * concurrent submission in a shared executor is an anti-optimization —
-    * two heavy jobs racing for the same task slots + cache blocks ran the
-    * same round 4-5× slower at 32 local cores (140 s vs 26 s round-1
-    * wall; see BENCH.md round 2). A caller whose writes are KNOWN to share
-    * no uncached chain (the post-pass's two independent rewrites) passes
-    * `par` > 1 to overlap them within a stage — `TableWrite.stage`
-    * ordering (ascending stages, concurrency only within a stage) still
-    * protects writes that share an uncached upstream chain. Order-
-    * sensitive effects (manifest, row-count thunks) happen after the
-    * final barrier either way.
+  /** Step 1: one commit attempt on the snapshot `baseId` (None: empty
+    * catalog), taking the next id. It stages under
+    * `data/snap-<id>-<tag>/`, unique per attempt: same-base committers
+    * never share a dir, so a CAS loser's files can never collide with the
+    * winner's (the object-store mapping: stage under unique keys,
+    * conditional-put the pointer). Manifests record the full staged paths,
+    * so reads never depend on the name; only readBetween's lineage lookup
+    * parses the id back out (SnapDirRe tolerates the tag). A loser's dirs
+    * are referenced by no manifest and await [[removeOrphans]] or
+    * [[expireSnapshots]].
     */
-  private def writeStages(stageRoot: String, ws: Seq[TableWrite],
-                          par: Int = 1): Unit = {
-    if (ws.isEmpty) return
-    val verbose = sys.env.contains("SPARK_GRAFT_COMMIT_VERBOSE")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(par, ws.size)))
-    try {
-      import scala.jdk.CollectionConverters._
-      ws.groupBy(_.stage).toSeq.sortBy(_._1).foreach { case (_, group) =>
-        val tasks: Seq[java.util.concurrent.Callable[Unit]] = group.map { w =>
-          () => {
-            val t0 = System.nanoTime()
-            w.df.write.mode("overwrite").parquet(s"$stageRoot/${w.table}")
-            if (verbose) System.err.println(
-              f"[commit] $stageRoot ${w.table}%-10s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-          }
+  private final class Attempt(val baseId: Option[Long]) {
+    Files.createDirectories(metaDir)
+    val id: Long = baseId.fold(1L)(_ + 1)
+    // full 64-bit tag: a 32-bit one leaves a ~2^-32 per-race chance of two
+    // same-base attempts recreating the very collision this removes
+    val tag: String = java.lang.Long.toHexString(
+      java.util.concurrent.ThreadLocalRandom.current().nextLong())
+    def dir(table: String): String = s"$root/data/snap-$id-$tag/$table"
+
+    /** The base manifest, read on first use: a pipelined attempt reads it
+      * on its lane, once the commit it was built on has published. */
+    lazy val base: Option[Manifest] = baseId.map(manifest)
+    def baseTables: Map[String, TableState] =
+      base.fold(Map.empty[String, TableState])(_.tables)
+
+    /** Step 2: write the staged parquet dirs of `ws`.
+      *
+      * Table writes run SERIALLY by default: each write is one Spark job
+      * that already parallelizes across the cluster, and measurement showed
+      * concurrent submission in a shared executor is an anti-optimization —
+      * two heavy jobs racing for the same task slots + cache blocks ran the
+      * same round 4-5× slower at 32 local cores (140 s vs 26 s round-1
+      * wall; see BENCH.md round 2). A caller whose writes are KNOWN to
+      * share no uncached chain (the post-pass's two independent rewrites)
+      * passes `par` > 1 to overlap them within a stage — `TableWrite.stage`
+      * ordering (ascending stages, concurrency only within a stage) still
+      * protects writes that share an uncached upstream chain. Order-
+      * sensitive effects (manifest, row-count thunks) happen after the
+      * final barrier either way.
+      */
+    def stage(ws: Seq[TableWrite], par: Int = 1): Unit =
+      if (ws.nonEmpty) onPool(math.min(par, ws.size)) { pool =>
+        ws.groupBy(_.stage).toSeq.sortBy(_._1).foreach { case (_, group) =>
+          pool.invokeAll(group.map(w => callable(
+            w.df.write.mode("overwrite").parquet(dir(w.table)))).asJava)
+            .asScala.foreach(_.get())
         }
-        pool.invokeAll(tasks.asJava).asScala.foreach(_.get())
       }
-    } finally pool.shutdown()
+
+    /** The manifest that records `writes`, staged by this attempt, over
+      * the base: each written table at its [[stateAfter]], every other
+      * table carried forward. */
+    def record(writes: Seq[TableWrite], metrics: => Map[String, Long],
+               note: String): Manifest =
+      manifestOver(writes.map { w =>
+        val (rows, parts) = lineage(w, dir(w.table))
+        w.table -> stateAfter(base.flatMap(_.tables.get(w.table)), w,
+                              dir(w.table), rows, parts)
+      }.toMap, metrics, note)
+
+    def manifestOver(written: Map[String, TableState],
+                     metrics: Map[String, Long], note: String): Manifest =
+      Manifest(id, baseId, (baseTables -- written.keySet) ++ written,
+               metrics, note)
   }
 
-  private def tableStates(stageRoot: String, writes: Seq[TableWrite],
-                          parent: Option[Manifest]): Map[String, TableState] =
-    writes.map { w =>
-      val dir = s"$stageRoot/${w.table}"
-      val local = Paths.get(dir)
-      val paths = scala.util.Using.resource(Files.list(local)) { stream =>
-        stream.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toList
-      }
-      // footer reads are independent local metadata reads — run them on a
-      // small pool (serially they add ~10 ms × parts × tables to every
-      // round's commit floor)
-      val parts = {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(8, paths.size)))
-        try {
-          val tasks: Seq[java.util.concurrent.Callable[FileEntry]] =
-            paths.map { p => () =>
-              val (rows, stats) = footerInfo(p)
-              FileEntry(p.getFileName.toString, Files.size(p), rows, stats)
-            }
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toList
-        } finally pool.shutdown()
-      }.sortBy(_.path)
-      // caller-known count (a thunk, so Observation-backed metrics fired
-      // by this very write can supply it), else the sum of per-part footer
-      // counts — driver-local metadata reads, NO Spark job either way
-      val rows = w.rows.map(_.apply()).getOrElse(parts.map(_.rows).sum)
-      val base = w.mode match {
-        case Append  => parent.flatMap(_.tables.get(w.table))
-        case Replace => None
-      }
-      val baseFiles = base.map(_.files).getOrElse(Nil)
-      w.table -> TableState(baseFiles :+ dir,
-        base.map(_.rows).getOrElse(0L) + rows, parts,
-        schemaAfter(baseFiles, base.flatMap(_.schema), w))
-    }.toMap
+  /** A staged dir's footer lineage (sorted by part name) and its row
+    * count: the caller-known count (a thunk, so Observation-backed metrics
+    * fired by this very write can supply it), else the sum of the per-part
+    * footer counts — driver-local metadata reads, NO Spark job either way.
+    */
+  private def lineage(w: TableWrite, dir: String): (Long, List[FileEntry]) = {
+    val paths = listDir(Paths.get(dir))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    // footer reads are independent local metadata reads — run them on a
+    // small pool (serially they add ~10 ms × parts × tables to every
+    // round's commit floor)
+    val parts = onPool(math.min(8, paths.size)) { pool =>
+      pool.invokeAll(paths.map(p => callable {
+        val (rows, stats) = footerInfo(p)
+        FileEntry(p.getFileName.toString, Files.size(p), rows, stats)
+      }).asJava).asScala.map(_.get()).toList
+    }.sortBy(_.path)
+    (w.rows.fold(parts.map(_.rows).sum)(_.apply()), parts)
+  }
+
+  /** Step 3: the state a table reaches when `w`, staged in `dir` with
+    * `rows` rows and lineage `parts`, lands on its `prior` state: an
+    * Append extends the prior file list and row count, a Replace starts
+    * over. The schema follows the [[Glacier.TableState]] rule: `w`'s frame
+    * schema over no prior dirs or over a byte-equal recorded one, else
+    * none. */
+  private def stateAfter(prior: Option[TableState], w: TableWrite,
+                         dir: String, rows: Long,
+                         parts: List[FileEntry]): TableState = {
+    val kept = w.mode match {
+      case Append  => prior
+      case Replace => None
+    }
+    val files = kept.fold(List.empty[String])(_.files)
+    val written = w.df.schema.json
+    val schema =
+      if (files.isEmpty || kept.flatMap(_.schema).contains(written)) Some(written)
+      else None
+    TableState(files :+ dir, kept.fold(0L)(_.rows) + rows, parts, schema)
+  }
 
   /** The commit-critical-section guard: JVM-wide per-root monitor nested
     * inside an OS file lock on `meta/COMMIT_LOCK` — covers same-process
-    * AND cross-process committers. Every CURRENT mutation goes through
-    * here (flip, publishStaged). */
+    * AND cross-process committers. Every CURRENT and ref mutation goes
+    * through here. */
   private def withCommitLock[T](f: => T): T = synchronized {
     Glacier.rootLock(root).synchronized {
       val ch = java.nio.channels.FileChannel.open(
@@ -332,45 +344,33 @@ final class Glacier(val root: String) {
     }
   }
 
-  /** Atomic CURRENT pointer swap (tmp-write + ATOMIC_MOVE). Caller holds
-    * the commit lock. */
-  private def swapCurrent(newId: Long): Unit = {
-    val tmp = metaDir.resolve(s"CURRENT.tmp-$newId")
-    Files.writeString(tmp, newId.toString)
-    Files.move(tmp, metaDir.resolve("CURRENT"),
-               StandardCopyOption.ATOMIC_MOVE,
-               StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Write the manifest and flip CURRENT — the atomic commit point, as a
-    * COMPARE-AND-SWAP on the parent id: under an exclusive lock (a JVM-wide
-    * per-root monitor nested inside an OS file lock on `meta/COMMIT_LOCK`,
-    * covering both same-process and cross-process committers) verify
-    * CURRENT still names the parent this commit was built on, then publish
-    * manifest + pointer. A committer that lost the race gets a retryable
-    * [[Glacier.CommitConflictException]] and publishes NOTHING — two
-    * drivers on one root can no longer silently fork history with
-    * last-writer-wins. Staged data dirs carry a per-attempt unique tag
-    * (see [[newStagingDir]]), so a loser's staged files never touched the
-    * winner's — the loser retries cleanly and its orphan dirs await
-    * expiry.
+  /** Step 4, the atomic commit point: a COMPARE-AND-SWAP on the base id.
+    * Under the commit lock, verify CURRENT still names the snapshot `m` was
+    * built on, put `m` in place as `snap-<id>.json` (moved from `staged`
+    * when given, else written), then swap CURRENT (tmp-write +
+    * ATOMIC_MOVE). A committer that lost the race — sync, pipelined or
+    * staged alike — gets a retryable [[Glacier.CommitConflictException]]
+    * and publishes NOTHING, so two drivers on one root never fork history
+    * with last-writer-wins. Returns the published id.
     */
-  private def flip(newId: Long, parent: Option[Manifest],
-                   written: Map[String, TableState],
-                   metrics: Map[String, Long], note: String): Unit =
+  private def publish(m: Manifest, staged: Option[Path] = None): Long =
     withCommitLock {
       val cur = currentSnapshotId
-      if (cur != parent.map(_.snapshotId))
+      if (cur != m.parentId)
         throw new Glacier.CommitConflictException(
-          s"CURRENT moved to $cur while committing snap-$newId on " +
-            s"parent ${parent.map(_.snapshotId)}; re-read and retry")
-      val carried =
-        parent.map(_.tables).getOrElse(Map.empty) -- written.keySet
-      val m = Manifest(newId, parent.map(_.snapshotId),
-                       carried ++ written, metrics, note)
-      Files.writeString(metaDir.resolve(s"snap-$newId.json"),
-                        Serialization.writePretty(m))
-      swapCurrent(newId)
+          s"CURRENT moved to $cur while committing snap-${m.snapshotId} on " +
+            s"parent ${m.parentId}; re-read and retry")
+      val target = metaDir.resolve(s"snap-${m.snapshotId}.json")
+      staged match {
+        case Some(p) => Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
+        case None    => Files.writeString(target, Serialization.writePretty(m))
+      }
+      val tmp = metaDir.resolve(s"CURRENT.tmp-${m.snapshotId}")
+      Files.writeString(tmp, m.snapshotId.toString)
+      Files.move(tmp, metaDir.resolve("CURRENT"),
+                 StandardCopyOption.ATOMIC_MOVE,
+                 StandardCopyOption.REPLACE_EXISTING)
+      m.snapshotId
     }
 
   // ---- pipelined commit ----------------------------------------------------
@@ -389,8 +389,15 @@ final class Glacier(val root: String) {
 
   /** Join the in-flight pipelined commit, if any, rethrowing its failure.
     * MUST be called (and is) outside `synchronized` — the background phase
-    * takes the same lock to flip. */
+    * takes the same lock to publish. */
   def drainPending(): Unit = headPending.foreach(_.await())
+
+  /** Run `f` under the instance lock once the pipelined commit in flight,
+    * if any, has finished (see [[drainPending]]). */
+  private def drained[T](f: => T): T = {
+    drainPending()
+    synchronized(f)
+  }
 
   /** Two-phase pipelined commit — the cross-snapshot overlap lever for a
     * BSP loop: round N's bulk output writes are dead time the next round's
@@ -399,7 +406,7 @@ final class Glacier(val root: String) {
     * Phase A (caller thread, returns when done): writes marked `barrier` —
     * the tables the NEXT round must read (frontier/seen/bloom) — staged
     * serially in stage order. Phase B (single background lane): the
-    * remaining writes, footer lineage, manifest, CURRENT flip, then
+    * remaining writes, footer lineage, manifest, CAS publish, then
     * `onComplete` (cache release). The handle's `read` serves barrier
     * tables from their staged dirs plus carried ancestor state, so the next
     * round can start BEFORE this snapshot flips.
@@ -407,61 +414,45 @@ final class Glacier(val root: String) {
     * Invariants kept from the serial design: writes of ONE snapshot never
     * race each other (phase A serial, phase B serial, stages honored
     * within each — the round-2 same-chain race stays impossible); the
-    * manifest chain is strictly serial (single lane, FIFO); a kill at any
-    * point leaves CURRENT on the last fully-flipped snapshot and only
-    * orphan staged dirs (rerun overwrites them). A background failure
-    * poisons the chain: later pipelined commits and any sync commit
-    * rethrow it instead of forking history.
+    * manifest chain is strictly serial (single lane, FIFO), and each
+    * publish is a CAS against the snapshot the commit was built on, so a
+    * commit that another handle overtook fails with a
+    * [[Glacier.CommitConflictException]]; a kill at any point leaves
+    * CURRENT on the last fully-flipped snapshot and only orphan staged
+    * dirs. A background failure poisons the chain: later pipelined commits
+    * and any sync commit rethrow it instead of forking history.
     */
   def commitPipelined(spark: SparkSession, writes: Seq[TableWrite],
                       metrics: => Map[String, Long] = Map.empty,
                       note: String = "",
                       onComplete: () => Unit = () => ()): PendingCommit = {
-    Files.createDirectories(metaDir)
-    val (newId, prevHandle, base) = synchronized {
+    val (a, prevHandle, view) = synchronized {
       // a completed-successful head is equivalent to no head (its state is
-      // in currentManifest); a failed head poisons the chain via await below
+      // in the current manifest); a failed head poisons the chain below
       val prev = headPending.filterNot(h => h.isDone && !h.failed)
-      val id = prev.map(_.snapshotId + 1)
-        .orElse(currentSnapshotId.map(_ + 1)).getOrElse(1L)
-      val baseView: Map[String, Readable] = prev.map(_.readableTables)
-        .getOrElse(currentManifest
-          .map(_.tables.view.mapValues(st => Readable(st.files, st.schema))
-            .toMap)
-          .getOrElse(Map.empty))
-      (id, prev, baseView)
+      val a = new Attempt(prev.map(_.snapshotId).orElse(currentSnapshotId))
+      (a, prev, prev.fold(a.baseTables)(_.readableTables))
     }
     prevHandle.filter(_.failed).foreach(_.await()) // rethrow, fail fast
     val (front, back) = writes.partition(_.barrier)
-    val stageRoot = newStagingDir(newId)
-    writeStages(stageRoot, front) // phase A: durable before the handle returns
-    val readable: Map[String, Readable] = {
-      val dropped = base -- back.map(_.table) // their dirs don't exist yet
-      front.foldLeft(dropped) { (acc, w) =>
-        val dir = s"$stageRoot/${w.table}"
-        val prior = w.mode match {
-          case Append  => acc.getOrElse(w.table, Readable(Nil, None))
-          case Replace => Readable(Nil, None)
-        }
-        acc + (w.table -> Readable(prior.dirs :+ dir,
-          schemaAfter(prior.dirs, prior.schema, w)))
-      }
+    a.stage(front) // phase A: durable before the handle returns
+    // tables with a write still to come have no readable dirs yet; the
+    // view's rows and lineage are not read here (the lane records them)
+    val readable = front.foldLeft(view -- back.map(_.table)) { (acc, w) =>
+      acc + (w.table ->
+        stateAfter(acc.get(w.table), w, a.dir(w.table), 0L, Nil))
     }
     val fut = new java.util.concurrent.CompletableFuture[Long]()
-    val handle = new PendingCommit(newId, readable, fut)
+    val handle = new PendingCommit(a.id, readable, fut)
     synchronized { headPending = Some(handle) }
     pipelinePool.submit(new Runnable {
       def run(): Unit =
         try {
           prevHandle.foreach(_.await()) // FIFO ⇒ instant unless it failed
-          writeStages(stageRoot, back)
-          val parent = currentManifest // prev flipped by the await above
-          require(parent.map(_.snapshotId + 1).getOrElse(1L) == newId,
-            s"pipelined commit $newId lost its parent (CURRENT moved)")
-          val written = tableStates(stageRoot, writes, parent)
-          flip(newId, parent, written, metrics, note)
+          a.stage(back)
+          publish(a.record(writes, metrics, note))
           onComplete()
-          fut.complete(newId)
+          fut.complete(a.id)
         } catch {
           case t: Throwable => fut.completeExceptionally(t)
         }
@@ -638,37 +629,13 @@ final class Glacier(val root: String) {
     * snapshots is untouched (their manifests may reference old data dirs —
     * those are kept). Returns the expired snapshot ids.
     */
-  def expireSnapshots(keepLast: Int): Seq[Long] = {
-    drainPending() // outside the lock — the pipeline thread flips under it
-    expireLocked(keepLast)
-  }
-
-  private def expireLocked(keepLast: Int): Seq[Long] = synchronized {
+  def expireSnapshots(keepLast: Int): Seq[Long] = drained {
     require(keepLast >= 1, "must retain at least the current snapshot")
-    val all = scala.util.Using.resource(Files.list(metaDir)) { s =>
-      s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case SnapJsonRe(id) => id.toLong }.toList.sorted
-    }
     val retained =
       (history.map(_.snapshotId).takeRight(keepLast) ++ refs.values).toSet
-    val expired = all.filterNot(retained)
-    val referencedDirs: Set[String] = retained.flatMap(id =>
-      manifestOpt(id).toSeq.flatMap(_.tables.values.flatMap(_.files))) ++
-      stagedReferencedDirs
+    val expired = snapshotIds.filterNot(retained)
     expired.foreach(id => Files.deleteIfExists(metaDir.resolve(s"snap-$id.json")))
-    val dataRoot = Paths.get(root, "data")
-    if (Files.isDirectory(dataRoot)) {
-      val dirs = scala.util.Using.resource(Files.list(dataRoot))(
-        _.iterator().asScala.toList)
-      dirs.foreach { d =>
-        val snapDirs = scala.util.Using.resource(Files.list(d))(
-          _.iterator().asScala.toList)
-        snapDirs.filterNot(t => referencedDirs.contains(t.toString))
-          .foreach(deleteRecursively)
-        if (scala.util.Using.resource(Files.list(d))(!_.iterator().hasNext))
-          Files.deleteIfExists(d)
-      }
-    }
+    sweep(retained, cutoffMs = Long.MaxValue)
     expired
   }
 
@@ -679,22 +646,17 @@ final class Glacier(val root: String) {
     * `q_table_diff`) until `expireSnapshots` retires them. Tables created
     * AFTER the target are tombstoned (empty file list → `read` returns
     * None), so reads at the new head see precisely the target's world.
-    * Goes through the same CAS flip as every commit — a racing committer
+    * Goes through the same CAS publish as every commit — a racing committer
     * loses with a retryable conflict, never a forked chain.
     */
-  def rollbackTo(snapshotId: Long): Long = {
-    drainPending()
-    synchronized {
-      val target = manifestOpt(snapshotId).getOrElse(throw
-        new IllegalArgumentException(s"snapshot $snapshotId unknown or expired"))
-      val parent = currentManifest
-      val newId = parent.map(_.snapshotId + 1).getOrElse(1L)
-      val tombstones = parent.map(_.tables.keySet).getOrElse(Set.empty[String])
-        .diff(target.tables.keySet).map(_ -> TableState(Nil, 0L, Nil)).toMap
-      flip(newId, parent, target.tables ++ tombstones,
-        Map("rollback_to" -> snapshotId), s"rollback to snap-$snapshotId")
-      newId
-    }
+  def rollbackTo(snapshotId: Long): Long = drained {
+    val target = manifestOpt(snapshotId).getOrElse(throw
+      new IllegalArgumentException(s"snapshot $snapshotId unknown or expired"))
+    val a = new Attempt(currentSnapshotId)
+    val tombstones = a.baseTables.keySet.diff(target.tables.keySet)
+      .map(_ -> TableState(Nil, 0L, Nil)).toMap
+    publish(a.manifestOver(target.tables ++ tombstones,
+      Map("rollback_to" -> snapshotId), s"rollback to snap-$snapshotId"))
   }
 
   /** Delete staged data dirs referenced by NO manifest on disk — CAS
@@ -705,35 +667,32 @@ final class Glacier(val root: String) {
     * still staging in another process whose manifest isn't published yet
     * (the object-store GC grace-window rule). Returns the deleted dirs.
     */
-  def removeOrphans(graceMs: Long = 3600000L): Seq[String] = {
-    drainPending()
-    synchronized {
-      val dataRoot = Paths.get(root, "data")
-      if (!Files.isDirectory(dataRoot)) return Nil
-      val ids = scala.util.Using.resource(Files.list(metaDir)) { s =>
-        s.iterator().asScala.map(_.getFileName.toString)
-          .collect { case SnapJsonRe(id) => id.toLong }.toList
-      }
-      val referenced: Set[String] = ids.flatMap(id =>
-        manifestOpt(id).toSeq.flatMap(_.tables.values.flatMap(_.files)))
-        .toSet ++ stagedReferencedDirs
-      val now = System.currentTimeMillis()
-      val snapDirs = scala.util.Using.resource(Files.list(dataRoot))(
-        _.iterator().asScala.toList)
-      val deleted = snapDirs.flatMap { snapDir =>
-        scala.util.Using.resource(Files.list(snapDir))(
-          _.iterator().asScala.toList).filter { t =>
-            !referenced.contains(t.toString) &&
-              now - Files.getLastModifiedTime(t).toMillis >= graceMs
-          }.map { t => deleteRecursively(t); t.toString }
-      }
-      snapDirs.foreach { d =>
-        if (Files.isDirectory(d) &&
-            scala.util.Using.resource(Files.list(d))(!_.iterator().hasNext))
-          Files.deleteIfExists(d)
-      }
-      deleted.sorted
-    }
+  def removeOrphans(graceMs: Long = 3600000L): Seq[String] = drained {
+    sweep(snapshotIds, cutoffMs = System.currentTimeMillis() - graceMs)
+  }
+
+  /** The ids of the snapshot manifests on disk, ascending. */
+  private def snapshotIds: List[Long] =
+    if (!Files.isDirectory(metaDir)) Nil
+    else listDir(metaDir).map(_.getFileName.toString)
+      .collect { case SnapJsonRe(id) => id.toLong }.sorted
+
+  /** The one data sweep: delete every staged table dir that neither a
+    * manifest of `keep` nor a staged (unpublished) manifest references and
+    * that was last modified at or before `cutoffMs`, then every snap dir
+    * left empty. Returns the deleted table dirs, sorted. */
+  private def sweep(keep: Iterable[Long], cutoffMs: Long): Seq[String] = {
+    val dataRoot = Paths.get(root, "data")
+    if (!Files.isDirectory(dataRoot)) return Nil
+    val referenced = keep.flatMap(manifestOpt)
+      .flatMap(_.tables.values.flatMap(_.files)).toSet ++ stagedReferencedDirs
+    val snapDirs = listDir(dataRoot)
+    val deleted = snapDirs.flatMap(listDir).filter(t =>
+      !referenced.contains(t.toString) &&
+        Files.getLastModifiedTime(t).toMillis <= cutoffMs)
+    deleted.foreach(deleteRecursively)
+    snapDirs.filter(listDir(_).isEmpty).foreach(Files.deleteIfExists)
+    deleted.map(_.toString).sorted
   }
 
   /** Incremental consumption of an Append-mode table: the rows committed
@@ -800,13 +759,11 @@ final class Glacier(val root: String) {
   /** All refs (name → snapshot id). */
   def refs: Map[String, Long] = {
     if (!Files.isDirectory(metaDir)) return Map.empty
-    scala.util.Using.resource(Files.list(metaDir)) { s =>
-      s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("ref-") && !n.endsWith(".tmp"))
-        .flatMap(n => refSnapshot(n.stripPrefix("ref-"))
-          .map(n.stripPrefix("ref-") -> _))
-        .toMap
-    }
+    listDir(metaDir).map(_.getFileName.toString)
+      .filter(n => n.startsWith("ref-") && !n.endsWith(".tmp"))
+      .flatMap(n => refSnapshot(n.stripPrefix("ref-"))
+        .map(n.stripPrefix("ref-") -> _))
+      .toMap
   }
 
   /** Drop a ref; its snapshot becomes expirable again (if otherwise
@@ -834,23 +791,13 @@ final class Glacier(val root: String) {
     */
   def stageCommit(spark: SparkSession, writes: Seq[TableWrite],
                   metrics: => Map[String, Long] = Map.empty,
-                  note: String = ""): StagedCommit = {
-    drainPending()
-    synchronized {
-      Files.createDirectories(metaDir)
-      val parent = currentManifest
-      val newId = parent.map(_.snapshotId + 1).getOrElse(1L)
-      val stageRoot = newStagingDir(newId)
-      writeStages(stageRoot, writes)
-      val written = tableStates(stageRoot, writes, parent)
-      val carried = parent.map(_.tables).getOrElse(Map.empty) -- written.keySet
-      val m = Manifest(newId, parent.map(_.snapshotId),
-                       carried ++ written, metrics, note)
-      val tag = stageRoot.substring(stageRoot.lastIndexOf('-') + 1)
-      Files.writeString(metaDir.resolve(s"staged-$newId-$tag.json"),
-                        Serialization.writePretty(m))
-      StagedCommit(newId, parent.map(_.snapshotId), tag)
-    }
+                  note: String = ""): StagedCommit = drained {
+    val a = new Attempt(currentSnapshotId)
+    a.stage(writes)
+    val m = a.record(writes, metrics, note)
+    val sc = StagedCommit(a.id, a.baseId, a.tag)
+    Files.writeString(stagedManifestPath(sc), Serialization.writePretty(m))
+    sc
   }
 
   private def stagedManifestPath(sc: StagedCommit): Path =
@@ -860,35 +807,21 @@ final class Glacier(val root: String) {
     val p = stagedManifestPath(sc)
     require(Files.exists(p), s"staged commit ${sc.snapshotId}-${sc.tag} " +
       "does not exist (published, aborted, or never staged here)")
-    JsonMethods.parse(Files.readString(p)).extract[Manifest]
+    readManifest(p)
   }
 
   /** Audit read of a staged commit's table (the WAP validation step). */
   def readStaged(spark: SparkSession, sc: StagedCommit,
                  table: String): Option[DataFrame] =
-    stagedManifest(sc).tables.get(table).filter(_.files.nonEmpty)
-      .map(st => scan(spark, st.files, st.schema))
+    scanState(spark, stagedManifest(sc).tables.get(table))
 
   /** Publish a staged commit: CAS on the parent (CURRENT must not have
     * moved during the audit), promote the staged manifest to `snap-<id>`,
     * swap CURRENT. A loser gets the retryable
     * [[Glacier.CommitConflictException]] and should re-stage on the new
     * head; its data dirs await [[removeOrphans]]. */
-  def publishStaged(sc: StagedCommit): Long = {
-    drainPending()
-    withCommitLock {
-      val m = stagedManifest(sc)
-      val cur = currentSnapshotId
-      if (cur != m.parentId)
-        throw new Glacier.CommitConflictException(
-          s"CURRENT moved to $cur during the audit of staged " +
-            s"snap-${m.snapshotId} on parent ${m.parentId}; re-stage and retry")
-      Files.move(stagedManifestPath(sc),
-                 metaDir.resolve(s"snap-${m.snapshotId}.json"),
-                 StandardCopyOption.ATOMIC_MOVE)
-      swapCurrent(m.snapshotId)
-      m.snapshotId
-    }
+  def publishStaged(sc: StagedCommit): Long = drained {
+    publish(stagedManifest(sc), Some(stagedManifestPath(sc)))
   }
 
   /** Discard a staged commit: delete its manifest and the data dirs IT
@@ -909,15 +842,11 @@ final class Glacier(val root: String) {
     * is in flight. */
   private def stagedReferencedDirs: Set[String] = {
     if (!Files.isDirectory(metaDir)) return Set.empty
-    val staged = scala.util.Using.resource(Files.list(metaDir)) { s =>
-      s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("staged-") && n.endsWith(".json")).toList
-    }
-    staged.flatMap { n =>
-      scala.util.Try(JsonMethods.parse(
-          Files.readString(metaDir.resolve(n))).extract[Manifest])
-        .toOption.toSeq.flatMap(_.tables.values.flatMap(_.files))
-    }.toSet
+    listDir(metaDir).map(_.getFileName.toString)
+      .filter(n => n.startsWith("staged-") && n.endsWith(".json"))
+      .flatMap(n => scala.util.Try(readManifest(metaDir.resolve(n))).toOption
+        .toSeq.flatMap(_.tables.values.flatMap(_.files)))
+      .toSet
   }
 
   /** Row count + per-column zone-map stats of one part-file from its
@@ -1027,9 +956,7 @@ final class Glacier(val root: String) {
     }
 
   private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      scala.util.Using.resource(Files.list(p))(
-        _.iterator().asScala.toList).foreach(deleteRecursively)
+    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 }
@@ -1115,13 +1042,19 @@ object Glacier {
                               partitions: List[FileEntry],
                               schema: Option[String] = None)
 
-  /** The schema a state records once `w`'s dir follows `priorDirs`, whose
-    * recorded schema is `priorSchema` (see [[TableState]]). */
-  private def schemaAfter(priorDirs: List[String], priorSchema: Option[String],
-                          w: TableWrite): Option[String] = {
-    val written = w.df.schema.json
-    if (priorDirs.isEmpty || priorSchema.contains(written)) Some(written)
-    else None
+  private def listDir(p: Path): List[Path] =
+    scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toList)
+
+  private def callable[T](body: => T): java.util.concurrent.Callable[T] =
+    () => body
+
+  /** Run `f` on a fixed pool of `n` threads (at least one), shut down
+    * after. */
+  private def onPool[T](n: Int)(
+      f: java.util.concurrent.ExecutorService => T): T = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, n))
+    try f(pool)
+    finally pool.shutdown()
   }
 
   /** Every Glacier read goes through here. A recorded schema spares Spark
@@ -1134,10 +1067,10 @@ object Glacier {
       spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]))
       .parquet(files: _*)
 
-  /** A pipelined commit's readable table: its durable dirs and the schema
-    * they share, under the [[TableState]] rule. */
-  private[tables] final case class Readable(dirs: List[String],
-                                            schema: Option[String])
+  /** A table state's frame; None for a missing or tombstoned table. */
+  private def scanState(spark: SparkSession,
+                        st: Option[TableState]): Option[DataFrame] =
+    st.filter(_.files.nonEmpty).map(st => scan(spark, st.files, st.schema))
 
   /** Handle to a staged (write-audit-publish) commit: the would-be
     * snapshot id, the parent it was built on (the publish CAS check), and
@@ -1175,15 +1108,16 @@ object Glacier {
     * state carried from fully-written ancestors; a table touched by a
     * still-running background write is NOT readable (its dirs don't exist
     * yet) and returns None. `await` joins the background phase and returns
-    * the committed snapshot id, rethrowing its failure.
+    * the committed snapshot id, rethrowing its failure. `readableTables`
+    * holds file lists and schemas only: the rows and lineage of this
+    * commit's writes are read into its manifest on the lane.
     */
   final class PendingCommit private[tables] (
       val snapshotId: Long,
-      private[tables] val readableTables: Map[String, Readable],
+      private[tables] val readableTables: Map[String, TableState],
       completion: java.util.concurrent.CompletableFuture[Long]) {
     def read(spark: SparkSession, table: String): Option[DataFrame] =
-      readableTables.get(table).filter(_.dirs.nonEmpty)
-        .map(r => scan(spark, r.dirs, r.schema))
+      scanState(spark, readableTables.get(table))
     def await(): Long =
       try completion.get()
       catch {

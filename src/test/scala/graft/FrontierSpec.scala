@@ -24,11 +24,14 @@ class FrontierSpec extends AnyFunSuite {
     }
     val budget = Map("zenodo" -> 120, "figshare" -> 75, "osf" -> 50)
 
-    val got = CrawlLoop.drainSelect(tasks.toDF(), budget, salts = 4)
-      .orderBy("seqInRound")
-      .as[(String, String, Int, Double, Int, Int, Int, Int, Int, Int)]
-      .collect()
-      .map(r => (r._1, r._9, r._10)) // (url, seqInRound, kInHost)
+    val (drained, release) =
+      CrawlLoop.drainSelectManaged(tasks.toDF(), budget, salts = 4)
+    val got =
+      try drained.orderBy("seqInRound")
+        .as[(String, String, Int, Double, Int, Int, Int, Int, Int, Int)]
+        .collect()
+        .map(r => (r._1, r._9, r._10)) // (url, seqInRound, kInHost)
+      finally release()
 
     // brute force: per-host top-budget in task order; global order for the
     // seq; per-host position for the politeness-schedule rank
@@ -46,8 +49,11 @@ class FrontierSpec extends AnyFunSuite {
   test("host without budget entry is never drained") {
     import spark.implicits._
     val tasks = (0 until 100).map(i => mk(i, if (i % 2 == 0) "zenodo" else "mystery", 1.0))
-    val got = CrawlLoop.drainSelect(tasks.toDF(), Map("zenodo" -> 10), salts = 4)
-      .select("host").as[String].collect()
+    val (drained, release) =
+      CrawlLoop.drainSelectManaged(tasks.toDF(), Map("zenodo" -> 10), salts = 4)
+    val got =
+      try drained.select("host").as[String].collect()
+      finally release()
     assert(got.length === 10)
     assert(got.forall(_ == "zenodo"))
   }

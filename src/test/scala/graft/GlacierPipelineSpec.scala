@@ -181,6 +181,40 @@ class GlacierPipelineSpec extends AnyFunSuite {
     assert(snap2Dirs.size === 2, s"expected winner + orphan loser dir: $snap2Dirs")
   }
 
+  test("pipelined commit that loses CURRENT to another handle conflicts") {
+    val root = tmpRoot()
+    val g = new Glacier(root)
+    g.commit(spark, Seq(g.TableWrite("t", Seq(0).toDF("v"), g.Append)))
+    // the background (non-barrier) write blocks inside its task until
+    // released: a second handle on the same root commits snap-2 while the
+    // pipelined snap-2 is still staging, so its publish must lose the CAS
+    val gated = spark.range(0, 2, 1, 1).as[Long].map { v =>
+      LaneGate.entered.countDown()
+      LaneGate.release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      v.toInt
+    }.toDF("v")
+    val h = g.commitPipelined(spark, Seq(
+      g.TableWrite("t", Seq(1).toDF("v"), g.Append, barrier = true),
+      g.TableWrite("log", gated, g.Append)))
+    assert(h.snapshotId === 2L)
+    assert(LaneGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    val other = new Glacier(root)
+    assert(other.commit(spark,
+      Seq(other.TableWrite("t", Seq(2).toDF("v"), other.Append))) === 2L)
+    LaneGate.release.countDown()
+    val ex = intercept[Throwable](h.await())
+    assert(ex.isInstanceOf[Glacier.CommitConflictException],
+      s"the pipelined loser must get a retryable conflict, got $ex")
+    assert(h.failed)
+    // CURRENT stays on the winner's snapshot, with the winner's rows
+    val fresh = new Glacier(root)
+    assert(fresh.currentSnapshotId === Some(2L))
+    assert(fresh.currentManifest.get.parentId === Some(1L))
+    assert(fresh.read(spark, "t").get.as[Int].collect().sorted
+      === Array(0, 2))
+    assert(fresh.read(spark, "log").isEmpty)
+  }
+
   test("CURRENT compare-and-swap: racing committers, one wins, loser conflicts") {
     val root = tmpRoot()
     val g0 = new Glacier(root)
@@ -240,10 +274,13 @@ class GlacierPipelineSpec extends AnyFunSuite {
   }
 }
 
-/** Static latches the gated staging write reaches from its task (local
-  * mode: executors share the JVM). One-shot — spent latches pass through,
-  * which the retry in the unique-staging test relies on. */
-object StagingGate {
+/** Static latches a gated write reaches from its task (local mode:
+  * executors share the JVM); one object per test. One-shot — spent
+  * latches pass through, which the retry in the unique-staging test
+  * relies on. */
+sealed class Gate {
   val entered = new CountDownLatch(1)
   val release = new CountDownLatch(1)
 }
+object StagingGate extends Gate
+object LaneGate extends Gate
