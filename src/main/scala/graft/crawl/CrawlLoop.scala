@@ -351,15 +351,9 @@ object CrawlLoop {
           .drop("__hurl", "__hsize")
     }
 
-    val obsDs = Observation("postpass_ds")
-    val obsFs = Observation("postpass_fs")
     g.commit(spark, Seq(
-      g.TableWrite("datasets_clean",
-        datasetsClean.observe(obsDs, count(lit(1)).as("n")), g.Replace,
-        Some(() => obsDs.get("n").asInstanceOf[Number].longValue())),
-      g.TableWrite("files_clean",
-        filesClean.observe(obsFs, count(lit(1)).as("n")), g.Replace,
-        Some(() => obsFs.get("n").asInstanceOf[Number].longValue())),
+      g.TableWrite("datasets_clean", datasetsClean, g.Replace),
+      g.TableWrite("files_clean", filesClean, g.Replace),
     ), metrics = {
       def m(i: Int): Long =
         obsExcl.get(s"e_$i").asInstanceOf[Number].longValue()
@@ -519,11 +513,8 @@ object CrawlLoop {
       }
       ds ++ fs ++ hs
     }.observe(obsParsed,
-        count_if($"kind" === 0 && !$"bad").as("dsV"),
         count_if($"kind" === 0 && $"bad").as("dsQ"),
-        count_if($"kind" === 1 && !$"bad").as("fV"),
-        count_if($"kind" === 1 && $"bad").as("fQ"),
-        count_if($"kind" === 2).as("hV"))
+        count_if($"kind" === 1 && $"bad").as("fQ"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val datasets = parsed.filter($"kind" === 0 && !$"bad")
       .select(lit(round).as("round"), $"seqInRound", $"ordinal", $"ds.*")
@@ -600,10 +591,9 @@ object CrawlLoop {
     val obsBloom = Observation(s"bloom_r$round")
     val deltaBloom = SeenSet.buildShardsWith(newSeenUrls, cfg.bloomShards,
       cfg.sketch)
-      // rows AND per-shard fill deltas ride the write like every other
-      // metric — without the thunks the commit would fire a read-back
-      // count job (rows) and a state-history rescan (fill) every round
-      .observe(obsBloom, count(lit(1)).as("n"), shardDeltas)
+      // per-shard fill deltas ride the write like every other metric —
+      // without them the fill watch would rescan the state history
+      .observe(obsBloom, shardDeltas)
 
     def m(o: Observation, k: String): Long =
       o.get(k).asInstanceOf[Number].longValue()
@@ -621,42 +611,31 @@ object CrawlLoop {
     val writeParts = math.max(2, parallelism / 4)
     def bounded(df: DataFrame): DataFrame = df.coalesce(writeParts)
 
-    // The table writes themselves materialize the shared caches, staged so
-    // no two concurrent writes race to build the same uncached chain
-    // (racing writes serialize on block locks while occupying task slots —
-    // measured 2-3× slower at 32 cores). Stage 0: crawl_log materializes
-    // the fetch (fires obsFetch). Stage 1: docs reads the fetch cache,
-    // datasets materializes the parse (obsParsed), frontier materializes
-    // the link/dedup chain (obsLinks/obsFirst/obsNew) — disjoint chains
-    // over the cached fetch. Stage 2: files/seen/bloom read caches filled
-    // in stage 1. Every rows-thunk and the metrics map are evaluated after
-    // all stages, reading observations already fired. This replaces round
-    // 1's standalone count() staging jobs — the round fires ZERO actions
-    // that aren't table writes (minus the drain's tiny offsets collect).
-    // barrier = the three tables the NEXT round reads. The pipelined
-    // commit writes them synchronously in stage order (frontier
-    // materializes the fetch+link caches, then seen/bloom read them) and
-    // the bulk outputs (log/docs/datasets/files) follow on the background
-    // lane, overlapped with the next round's drain+fetch.
+    // The table writes themselves materialize the shared caches, in list
+    // order, so no two concurrent writes race to build the same uncached
+    // chain (racing writes serialize on block locks while occupying task
+    // slots — measured 2-3× slower at 32 cores). barrier = the three
+    // tables the NEXT round reads: the pipelined commit writes them first,
+    // on this thread, in list order — frontier materializes the fetch
+    // (obsFetch) and the link/dedup chain (obsLinks/obsFirst/obsNew), then
+    // seen/bloom read those caches. The rest follow on the background lane
+    // in list order, overlapped with the next round's drain+fetch:
+    // crawl_log and docs read the fetch cache, datasets materializes the
+    // parse (obsParsed), files/head_sizes read it. Row counts come from
+    // the written parts' footers, and the metrics map is evaluated after
+    // the last write, reading observations already fired. The round fires
+    // ZERO actions that aren't table writes (minus the drain's tiny
+    // offsets collect).
     val writes = Seq(
-      g.TableWrite("crawl_log", log, g.Append,
-        Some(() => m(obsFetch, "n")), stage = 0),
-      g.TableWrite("docs", docs, g.Append,
-        Some(() => m(obsFetch, "ok")), stage = 1),
-      g.TableWrite("datasets", datasets, g.Append,
-        Some(() => m(obsParsed, "dsV")), stage = 1),
-      g.TableWrite("frontier", newFrontier, g.Replace,
-        Some(() => pendingBefore - m(obsFetch, "n") + m(obsNew, "n")),
-        stage = 1, barrier = true),
-      g.TableWrite("files", files, g.Append,
-        Some(() => m(obsParsed, "fV")), stage = 2),
-      g.TableWrite("seen", bounded(newSeenUrls), g.Append,
-        Some(() => m(obsNew, "n")), stage = 2, barrier = true),
-      g.TableWrite("bloom", bounded(deltaBloom), g.Append,
-        Some(() => m(obsBloom, "n")), stage = 2, barrier = true),
+      g.TableWrite("crawl_log", log, g.Append),
+      g.TableWrite("docs", docs, g.Append),
+      g.TableWrite("datasets", datasets, g.Append),
+      g.TableWrite("frontier", newFrontier, g.Replace, barrier = true),
+      g.TableWrite("files", files, g.Append),
+      g.TableWrite("seen", bounded(newSeenUrls), g.Append, barrier = true),
+      g.TableWrite("bloom", bounded(deltaBloom), g.Append, barrier = true),
     ) ++ (if (cfg.repo.gpcrmdCount > 0) Seq(
-      g.TableWrite("head_sizes", headSizes, g.Append,
-        Some(() => m(obsParsed, "hV")), stage = 2)) else Seq.empty)
+      g.TableWrite("head_sizes", headSizes, g.Append)) else Seq.empty)
     // evaluated at manifest time (on the background lane — obsParsed
     // fires with the datasets write there)
     // Sketch saturation watch: this round's per-shard delta counts arrive

@@ -184,9 +184,9 @@ object DownloadStage {
 
     val targetCount = targets.count() // one tiny job; selection is cheap
     g.commit(spark, Seq(
-      g.TableWrite("download_cache", delta, g.Append, stage = 0),
-      g.TableWrite("mdp_params", mdp, g.Replace, stage = 1),
-      g.TableWrite("gro_params", gro, g.Replace, stage = 1),
+      g.TableWrite("download_cache", delta, g.Append),
+      g.TableWrite("mdp_params", mdp, g.Replace),
+      g.TableWrite("gro_params", gro, g.Replace),
     ), metrics = Map(
       "dl_targets" -> targetCount,
       "dl_downloaded" -> m(obsFetch, "n"),

@@ -51,32 +51,16 @@ case class NormalizeText(child: Expression, stripAccents: Boolean)
 object NormalizeText {
   import java.text.Normalizer
 
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graftshim.GraftSqlShim.{column, expression}
 
-  /** NFC composition as a Column (registers the expression once). */
-  def nfc(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function("graft_nfc", c)
-  }
+  /** NFC composition as a Column. */
+  def nfc(c: Column): Column =
+    column(NormalizeText(expression(c), stripAccents = false))
 
   /** Accent fold (NFD → drop marks → NFC) as a Column. */
-  def foldAccents(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function("graft_fold_accents", c)
-  }
-
-  private def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(name: String, strip: Boolean): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id)) reg.registerFunction(
-        id, new ExpressionInfo("graft.functions.NormalizeText", name),
-        (children: Seq[Expression]) => NormalizeText(children.head, strip))
-    }
-    one("graft_nfc", strip = false)
-    one("graft_fold_accents", strip = true)
-  }
+  def foldAccents(c: Column): Column =
+    column(NormalizeText(expression(c), stripAccents = true))
 
   /** Shared kernel for the interpreted and generated paths. */
   def compute(s: UTF8String, stripAccents: Boolean): UTF8String = {

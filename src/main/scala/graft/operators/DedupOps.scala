@@ -45,28 +45,11 @@ object DedupOps {
     array_min(transform(shingleCol, x => md5(concat(lit(s"$i:"), x))))
 
   /** ALL `NumHashes` signatures in one pass via the native Catalyst
-    * expression [[graft.functions.MinhashSignature]] (registered
-    * per-session, idempotent): bit-identical to `minhashSig(sh, i)` per
-    * lane, one array traversal instead of eight. */
-  def minhashSigArray(spark: org.apache.spark.sql.SparkSession,
-                      shingleCol: Column): Column = {
-    registerFused(spark)
-    call_function("graft_minhash_sig", shingleCol, lit(NumHashes))
-  }
-
-  private def registerFused(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    val id = FunctionIdentifier("graft_minhash_sig")
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(id)) reg.registerFunction(
-      id,
-      new ExpressionInfo("graft.functions.MinhashSignature",
-        "graft_minhash_sig"),
-      (children: Seq[Expression]) => graft.functions.MinhashSignature(
-        children.head,
-        children(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-          .asInstanceOf[Number].intValue()))
+    * expression [[graft.functions.MinhashSignature]]: bit-identical to
+    * `minhashSig(sh, i)` per lane, one array traversal instead of eight. */
+  def minhashSigArray(shingleCol: Column): Column = {
+    import org.apache.spark.sql.graftshim.GraftSqlShim.{column, expression}
+    column(graft.functions.MinhashSignature(expression(shingleCol), NumHashes))
   }
 
   /** 16-bit SimHash from the per-word md5 hex digits: bit i is set iff the
@@ -225,7 +208,7 @@ object DedupOps {
     val withSig = Tables.fanOut(docs)
       .filter(size(split(col(textCol), " ")) >= ShingleSize)
       .select(col(idCol).as("doc"),
-        minhashSigArray(docs.sparkSession, sh).as("sig"))
+        minhashSigArray(sh).as("sig"))
     val bands = (0 until NumHashes / BandRows).map { b =>
       val parts = (0 until BandRows).map(r =>
         element_at(col("sig"), b * BandRows + r + 1))
@@ -524,7 +507,7 @@ object DedupOps {
           .filter(size(split(col("text"), " ")) >= ShingleSize)
         val sh = shingles(col("text"))
         val withArr = docs
-          .select(col("doc_id"), minhashSigArray(s, sh).as("__sigs"))
+          .select(col("doc_id"), minhashSigArray(sh).as("__sigs"))
         val sigs = (0 until NumHashes)
           .map(i => element_at(col("__sigs"), i + 1).as(s"sig_$i"))
         withArr.select(col("doc_id") +: sigs: _*)

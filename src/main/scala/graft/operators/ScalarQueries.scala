@@ -34,9 +34,9 @@ object ScalarQueries {
         t(s, dir, "documents")
           .select(col("doc_id"), raw.as("raw"))
           .select(col("doc_id"),
-            NormalizeText.nfc(s, col("raw")).as("nfc"),
-            NormalizeText.foldAccents(s, col("raw")).as("folded"),
-            length(NormalizeText.nfc(s, col("raw"))).as("nfc_len"),
+            NormalizeText.nfc(col("raw")).as("nfc"),
+            NormalizeText.foldAccents(col("raw")).as("folded"),
+            length(NormalizeText.nfc(col("raw"))).as("nfc_len"),
             length(col("raw")).as("raw_len"))
           .orderBy("doc_id")
       },

@@ -51,10 +51,8 @@ final class Glacier(val root: String) {
   val Append: Glacier.Append.type = Glacier.Append
   val Replace: Glacier.Replace.type = Glacier.Replace
   def TableWrite(table: String, df: DataFrame, mode: Mode,
-                 rows: Option[() => Long] = None,
-                 stage: Int = 0,
                  barrier: Boolean = false): Glacier.TableWrite =
-    Glacier.TableWrite(table, df, mode, rows, stage, barrier)
+    Glacier.TableWrite(table, df, mode, barrier)
 
   private implicit val fmts: Formats = DefaultFormats
   private val SnapJsonRe = "^snap-(\\d+)\\.json$".r
@@ -195,7 +193,8 @@ final class Glacier(val root: String) {
   //
   // Every snapshot goes through one core of four steps, each defined once:
   //  1. an [[Attempt]] takes the base snapshot and the next id;
-  //  2. `Attempt.stage` writes under the attempt's unique tagged dir;
+  //  2. `Attempt.stage` writes under the attempt's unique tagged dir, in
+  //     the order given;
   //  3. [[stateAfter]] turns one staged write into its table's next state
   //     (`Attempt.record` assembles the manifest from those states);
   //  4. [[publish]] puts the manifest in place by compare-and-swap against
@@ -244,29 +243,28 @@ final class Glacier(val root: String) {
     def baseTables: Map[String, TableState] =
       base.fold(Map.empty[String, TableState])(_.tables)
 
-    /** Step 2: write the staged parquet dirs of `ws`.
+    /** Step 2: write the staged parquet dirs of `ws`, in the order given.
       *
-      * Table writes run SERIALLY by default: each write is one Spark job
-      * that already parallelizes across the cluster, and measurement showed
-      * concurrent submission in a shared executor is an anti-optimization —
-      * two heavy jobs racing for the same task slots + cache blocks ran the
-      * same round 4-5× slower at 32 local cores (140 s vs 26 s round-1
-      * wall; see BENCH.md round 2). A caller whose writes are KNOWN to
-      * share no uncached chain (the post-pass's two independent rewrites)
-      * passes `par` > 1 to overlap them within a stage — `TableWrite.stage`
-      * ordering (ascending stages, concurrency only within a stage) still
-      * protects writes that share an uncached upstream chain. Order-
-      * sensitive effects (manifest, row-count thunks) happen after the
-      * final barrier either way.
+      * Writes run SERIALLY on the caller's thread by default: each write is
+      * one Spark job that already parallelizes across the cluster, and
+      * measurement showed concurrent submission in a shared executor is an
+      * anti-optimization — two heavy jobs racing for the same task slots +
+      * cache blocks ran the same round 4-5× slower at 32 local cores (140 s
+      * vs 26 s round-1 wall; see BENCH.md round 2). The list order is the
+      * caller's dependency order: a write that materializes a cache comes
+      * before the writes that read it. A caller whose writes share no
+      * uncached chain (the post-pass's two independent rewrites) passes
+      * `par` > 1 to run them concurrently on a pool of that size.
       */
-    def stage(ws: Seq[TableWrite], par: Int = 1): Unit =
-      if (ws.nonEmpty) onPool(math.min(par, ws.size)) { pool =>
-        ws.groupBy(_.stage).toSeq.sortBy(_._1).foreach { case (_, group) =>
-          pool.invokeAll(group.map(w => callable(
-            w.df.write.mode("overwrite").parquet(dir(w.table)))).asJava)
-            .asScala.foreach(_.get())
-        }
+    def stage(ws: Seq[TableWrite], par: Int = 1): Unit = {
+      def write(w: TableWrite): Unit =
+        w.df.write.mode("overwrite").parquet(dir(w.table))
+      if (par <= 1) ws.foreach(write)
+      else onPool(math.min(par, ws.size)) { pool =>
+        pool.invokeAll(ws.map(w => callable(write(w))).asJava)
+          .asScala.foreach(_.get())
       }
+    }
 
     /** The manifest that records `writes`, staged by this attempt, over
       * the base: each written table at its [[stateAfter]], every other
@@ -274,9 +272,8 @@ final class Glacier(val root: String) {
     def record(writes: Seq[TableWrite], metrics: => Map[String, Long],
                note: String): Manifest =
       manifestOver(writes.map { w =>
-        val (rows, parts) = lineage(w, dir(w.table))
         w.table -> stateAfter(base.flatMap(_.tables.get(w.table)), w,
-                              dir(w.table), rows, parts)
+                              dir(w.table), lineage(dir(w.table)))
       }.toMap, metrics, note)
 
     def manifestOver(written: Map[String, TableState],
@@ -285,35 +282,32 @@ final class Glacier(val root: String) {
                metrics, note)
   }
 
-  /** A staged dir's footer lineage (sorted by part name) and its row
-    * count: the caller-known count (a thunk, so Observation-backed metrics
-    * fired by this very write can supply it), else the sum of the per-part
-    * footer counts — driver-local metadata reads, NO Spark job either way.
+  /** A staged dir's footer lineage, sorted by part name: each part's bytes,
+    * row count and zone-map stats — driver-local metadata reads, NO Spark
+    * job. The parts' row counts are the only source of a table's rows.
     */
-  private def lineage(w: TableWrite, dir: String): (Long, List[FileEntry]) = {
+  private def lineage(dir: String): List[FileEntry] = {
     val paths = listDir(Paths.get(dir))
       .filter(_.getFileName.toString.endsWith(".parquet"))
     // footer reads are independent local metadata reads — run them on a
     // small pool (serially they add ~10 ms × parts × tables to every
     // round's commit floor)
-    val parts = onPool(math.min(8, paths.size)) { pool =>
+    onPool(math.min(8, paths.size)) { pool =>
       pool.invokeAll(paths.map(p => callable {
         val (rows, stats) = footerInfo(p)
         FileEntry(p.getFileName.toString, Files.size(p), rows, stats)
       }).asJava).asScala.map(_.get()).toList
     }.sortBy(_.path)
-    (w.rows.fold(parts.map(_.rows).sum)(_.apply()), parts)
   }
 
   /** Step 3: the state a table reaches when `w`, staged in `dir` with
-    * `rows` rows and lineage `parts`, lands on its `prior` state: an
-    * Append extends the prior file list and row count, a Replace starts
-    * over. The schema follows the [[Glacier.TableState]] rule: `w`'s frame
-    * schema over no prior dirs or over a byte-equal recorded one, else
-    * none. */
+    * lineage `parts`, lands on its `prior` state: an Append extends the
+    * prior file list and row count (by the sum of the parts' rows), a
+    * Replace starts over. The schema follows the [[Glacier.TableState]]
+    * rule: `w`'s frame schema over no prior dirs or over a byte-equal
+    * recorded one, else none. */
   private def stateAfter(prior: Option[TableState], w: TableWrite,
-                         dir: String, rows: Long,
-                         parts: List[FileEntry]): TableState = {
+                         dir: String, parts: List[FileEntry]): TableState = {
     val kept = w.mode match {
       case Append  => prior
       case Replace => None
@@ -323,7 +317,8 @@ final class Glacier(val root: String) {
     val schema =
       if (files.isEmpty || kept.flatMap(_.schema).contains(written)) Some(written)
       else None
-    TableState(files :+ dir, kept.fold(0L)(_.rows) + rows, parts, schema)
+    TableState(files :+ dir, kept.fold(0L)(_.rows) + parts.map(_.rows).sum,
+               parts, schema)
   }
 
   /** The commit-critical-section guard: JVM-wide per-root monitor nested
@@ -387,10 +382,15 @@ final class Glacier(val root: String) {
     }
   @volatile private var headPending: Option[PendingCommit] = None
 
+  /** The pipelined commit the next commit must follow, if any. A settled
+    * head (published, or a lost CAS already thrown once) holds nothing the
+    * current manifest lacks; a failed write stays and poisons the chain. */
+  private def head: Option[PendingCommit] = headPending.filterNot(_.settled)
+
   /** Join the in-flight pipelined commit, if any, rethrowing its failure.
     * MUST be called (and is) outside `synchronized` — the background phase
     * takes the same lock to publish. */
-  def drainPending(): Unit = headPending.foreach(_.await())
+  def drainPending(): Unit = head.foreach(_.await())
 
   /** Run `f` under the instance lock once the pipelined commit in flight,
     * if any, has finished (see [[drainPending]]). */
@@ -405,31 +405,32 @@ final class Glacier(val root: String) {
     *
     * Phase A (caller thread, returns when done): writes marked `barrier` —
     * the tables the NEXT round must read (frontier/seen/bloom) — staged
-    * serially in stage order. Phase B (single background lane): the
-    * remaining writes, footer lineage, manifest, CAS publish, then
-    * `onComplete` (cache release). The handle's `read` serves barrier
-    * tables from their staged dirs plus carried ancestor state, so the next
-    * round can start BEFORE this snapshot flips.
+    * serially in the order given. Phase B (single background lane): the
+    * remaining writes in the order given, footer lineage, manifest, CAS
+    * publish, then `onComplete` (cache release). The handle's `read`
+    * serves barrier tables from their staged dirs plus carried ancestor
+    * state, so the next round can start BEFORE this snapshot flips.
     *
     * Invariants kept from the serial design: writes of ONE snapshot never
-    * race each other (phase A serial, phase B serial, stages honored
-    * within each — the round-2 same-chain race stays impossible); the
-    * manifest chain is strictly serial (single lane, FIFO), and each
-    * publish is a CAS against the snapshot the commit was built on, so a
-    * commit that another handle overtook fails with a
-    * [[Glacier.CommitConflictException]]; a kill at any point leaves
-    * CURRENT on the last fully-flipped snapshot and only orphan staged
-    * dirs. A background failure poisons the chain: later pipelined commits
-    * and any sync commit rethrow it instead of forking history.
+    * race each other (phase A serial, then phase B serial — the round-2
+    * same-chain race stays impossible); the manifest chain is strictly
+    * serial (single lane, FIFO), and each publish is a CAS against the
+    * snapshot the commit was built on, so a commit that another handle
+    * overtook fails with a [[Glacier.CommitConflictException]], and so
+    * does every pipelined commit queued on it (their bases were never
+    * published). A kill at any point leaves CURRENT on the last
+    * fully-flipped snapshot and only orphan staged dirs. A failed write
+    * poisons the chain: later pipelined commits and any sync commit
+    * rethrow it instead of forking history. A lost CAS published nothing:
+    * once its conflict has been thrown, the next commit builds on the new
+    * CURRENT.
     */
   def commitPipelined(spark: SparkSession, writes: Seq[TableWrite],
                       metrics: => Map[String, Long] = Map.empty,
                       note: String = "",
                       onComplete: () => Unit = () => ()): PendingCommit = {
     val (a, prevHandle, view) = synchronized {
-      // a completed-successful head is equivalent to no head (its state is
-      // in the current manifest); a failed head poisons the chain below
-      val prev = headPending.filterNot(h => h.isDone && !h.failed)
+      val prev = head // a failed one poisons the chain below
       val a = new Attempt(prev.map(_.snapshotId).orElse(currentSnapshotId))
       (a, prev, prev.fold(a.baseTables)(_.readableTables))
     }
@@ -440,7 +441,7 @@ final class Glacier(val root: String) {
     // view's rows and lineage are not read here (the lane records them)
     val readable = front.foldLeft(view -- back.map(_.table)) { (acc, w) =>
       acc + (w.table ->
-        stateAfter(acc.get(w.table), w, a.dir(w.table), 0L, Nil))
+        stateAfter(acc.get(w.table), w, a.dir(w.table), Nil))
     }
     val fut = new java.util.concurrent.CompletableFuture[Long]()
     val handle = new PendingCommit(a.id, readable, fut)
@@ -1088,18 +1089,15 @@ object Glacier {
   sealed trait Mode
   case object Append extends Mode
   case object Replace extends Mode
-  /** `rows`: caller-known row count of `df`; when provided the commit skips
-    * the read-back count job (the crawl loop already knows every delta's
-    * cardinality from its metric aggregations). `stage`: writes in a lower
-    * stage complete before a higher stage starts — the caller's way to
-    * declare "this write materializes a cache that one reads". `barrier`:
-    * under [[Glacier.commitPipelined]], barrier writes complete on the
-    * caller thread before the handle returns (the tables the next round
-    * must read); non-barrier writes continue in the background.
+  /** One table of a commit: what to write and how it lands. A commit runs
+    * its writes in the order given, so a write that materializes a cache
+    * goes before the writes that read it; the table's row count comes from
+    * the written parts' footers. `barrier`: under
+    * [[Glacier.commitPipelined]], barrier writes complete on the caller
+    * thread before the handle returns (the tables the next round must
+    * read); non-barrier writes continue in the background.
     */
   final case class TableWrite(table: String, df: DataFrame, mode: Mode,
-                              rows: Option[() => Long] = None,
-                              stage: Int = 0,
                               barrier: Boolean = false)
 
   /** Handle to a pipelined commit in flight (see
@@ -1118,12 +1116,19 @@ object Glacier {
       completion: java.util.concurrent.CompletableFuture[Long]) {
     def read(spark: SparkSession, table: String): Option[DataFrame] =
       scanState(spark, readableTables.get(table))
+    @volatile private var conflictThrown = false
     def await(): Long =
       try completion.get()
       catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+        case e: java.util.concurrent.ExecutionException =>
+          if (e.getCause.isInstanceOf[CommitConflictException])
+            conflictThrown = true
+          throw e.getCause
       }
     def isDone: Boolean = completion.isDone
     def failed: Boolean = completion.isCompletedExceptionally
+    /** Published, or lost its CAS and has thrown that conflict once. */
+    private[tables] def settled: Boolean =
+      isDone && (!failed || conflictThrown)
   }
 }

@@ -40,7 +40,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val sh = DedupOps.shingles(col("text"))
     val rows = docs.filter(size(sh) > 0)
       .select(col("doc_id"),
-        DedupOps.minhashSigArray(spark, sh).as("fused"),
+        DedupOps.minhashSigArray(sh).as("fused"),
         array((0 until 8).map(i => DedupOps.minhashSig(sh, i)): _*)
           .as("composed"))
       .collect()
@@ -51,8 +51,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
     // empty shingle array → null lanes (array_min-of-empty semantics)
     val empty = Seq((9L, "ab")).toDF("doc_id", "text")
-      .select(DedupOps.minhashSigArray(spark,
-        DedupOps.shingles(col("text"))).as("s")).collect()(0).getSeq[String](0)
+      .select(DedupOps.minhashSigArray(DedupOps.shingles(col("text")))
+        .as("s")).collect()(0).getSeq[String](0)
     assert(empty.length === 8 && empty.forall(_ == null))
     // interpreted eval path (no codegen) agrees with the kernel
     import org.apache.spark.sql.catalyst.util.GenericArrayData

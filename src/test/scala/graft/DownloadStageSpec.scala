@@ -80,6 +80,31 @@ class DownloadStageSpec extends AnyFunSuite {
     assert(cacheRows === m1("dl_downloaded") + m1("dl_extracted"))
   }
 
+  test("manifest row counts equal the rows read back, at every snapshot") {
+    // its own small crawl: the shared one above must reach the pooch test
+    // with an empty download cache
+    val small = RepoConfig(seed = 78L, universe = 60,
+      fileTypes = types, pageSize = 20, maxHitsPerQuery = 30,
+      gpcrmdCount = 5)
+    val root = Files.createTempDirectory("dl-rows").toString
+    val gl = CrawlLoop.run(spark, CrawlConfig(small, budget + ("gpcrmd" -> 5),
+      maxRounds = 3, root, salts = 4, bloomShards = 8,
+      bloomExpectedPerShard = 1 << 12))
+    DownloadStage.run(spark, gl, small, types, withZipFiles = true)
+    ExportStage.run(spark, gl)
+    val hist = gl.history
+    // the bootstrap, two chained pipelined rounds, the post-pass, the
+    // download and the export are all on the checked chain
+    assert(Seq("bootstrap", "round 1", "round 2", "post-pass", "download",
+      "export").forall(n => hist.exists(_.note == n)), hist.map(_.note))
+    assert(hist.last.tables.contains("head_sizes"))
+    assert(hist.last.tables("crawl_log").rows > 0)
+    for (m <- hist; (t, st) <- m.tables)
+      assert(st.rows ===
+        gl.read(spark, t, Some(m.snapshotId)).fold(0L)(_.count()),
+        s"snap-${m.snapshotId} (${m.note}) $t")
+  }
+
   test("parsed mdp/gro parameter tables decode the downloaded bodies") {
     DownloadStage.run(spark, g, repo, types, withZipFiles = true)
     val mdp = g.read(spark, "mdp_params").get.collect()

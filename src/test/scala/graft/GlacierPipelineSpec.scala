@@ -198,6 +198,10 @@ class GlacierPipelineSpec extends AnyFunSuite {
       g.TableWrite("log", gated, g.Append)))
     assert(h.snapshotId === 2L)
     assert(LaneGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    // a second pipelined commit queued on the loser: its base is never
+    // published, so it must fail too
+    val queued = g.commitPipelined(spark, Seq(
+      g.TableWrite("t", Seq(3).toDF("v"), g.Append, barrier = true)))
     val other = new Glacier(root)
     assert(other.commit(spark,
       Seq(other.TableWrite("t", Seq(2).toDF("v"), other.Append))) === 2L)
@@ -206,6 +210,9 @@ class GlacierPipelineSpec extends AnyFunSuite {
     assert(ex.isInstanceOf[Glacier.CommitConflictException],
       s"the pipelined loser must get a retryable conflict, got $ex")
     assert(h.failed)
+    val exQueued = intercept[Throwable](queued.await())
+    assert(exQueued.isInstanceOf[Glacier.CommitConflictException],
+      s"a commit queued on the loser must conflict too, got $exQueued")
     // CURRENT stays on the winner's snapshot, with the winner's rows
     val fresh = new Glacier(root)
     assert(fresh.currentSnapshotId === Some(2L))
@@ -213,6 +220,13 @@ class GlacierPipelineSpec extends AnyFunSuite {
     assert(fresh.read(spark, "t").get.as[Int].collect().sorted
       === Array(0, 2))
     assert(fresh.read(spark, "log").isEmpty)
+    // the conflict has been thrown: the same handle commits again, on the
+    // winner's snapshot
+    val retried = g.commit(spark,
+      Seq(g.TableWrite("t", Seq(4).toDF("v"), g.Append)))
+    assert(retried === 3L)
+    assert(g.manifest(retried).parentId === Some(2L))
+    assert(g.read(spark, "t").get.as[Int].collect().sorted === Array(0, 2, 4))
   }
 
   test("CURRENT compare-and-swap: racing committers, one wins, loser conflicts") {

@@ -157,8 +157,8 @@ class TextFunctionsSpec extends AnyFunSuite {
       (4L, "à ñ ö"),
     ).toDF("id", "t")
     val got = df.select(col("id"),
-        NormalizeText.nfc(spark, col("t")).as("n"),
-        NormalizeText.foldAccents(spark, col("t")).as("f"))
+        NormalizeText.nfc(col("t")).as("n"),
+        NormalizeText.foldAccents(col("t")).as("f"))
       .orderBy("id").collect().map(r => (r.getString(1), r.getString(2)))
     assert(got(0) === (("plain ascii", "plain ascii")))
     assert(got(1) === (("café", "cafe")))
