@@ -101,27 +101,35 @@ object CrawlLoop {
     * whole run — a BSP round is many small known-shape stages, and
     * per-stage re-planning is pure fixed cost there (BENCH.md round 2; the
     * logical results are identical either way) — and [[crawl]] sizes the
-    * shuffle grain round by round. Both session confs are restored on
-    * every exit, a failed round included.
+    * shuffle grain round by round. The bootstrap and the rounds run in
+    * [[PlanMode]]'s interpreted mode at any size, the post-pass in the
+    * mode its snapshot calls for. Every session conf it changes is
+    * restored on every exit, a failed round included.
     */
   def run(spark: SparkSession, cfg: CrawlConfig): Glacier = {
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    val codegen = PlanMode.sessionConfs(spark)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try crawl(spark, cfg, partsBefore)
+    try crawl(spark, cfg, partsBefore, codegen)
     finally {
       spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+      codegen.foreach { case (k, v) => spark.conf.set(k, v) }
     }
   }
 
   /** The crawl under [[run]]'s plan policy; the post-pass runs at the
-    * session's own shuffle grain, `sessionParts`. */
+    * session's own shuffle grain, `sessionParts`, and sized against the
+    * session's own codegen confs, `codegen`. */
   private def crawl(spark: SparkSession, cfg: CrawlConfig,
-                    sessionParts: String): Glacier = {
+                    sessionParts: String,
+                    codegen: Seq[(String, String)]): Glacier = {
     import spark.implicits._
     val tStart = System.nanoTime()
     val g = new Glacier(cfg.glacierRoot)
+    // rounds won interpreted at every size measured: sized as empty
+    val interpreted = PlanMode.set(spark, 0L, codegen)
 
     // ---- bootstrap or resume ----------------------------------------------
     // resume off the newest snapshot that recorded a round (maintenance
@@ -160,7 +168,8 @@ object CrawlLoop {
           g.TableWrite("frontier", seedDs.toDF(), g.Replace),
           g.TableWrite("seen", seedUrls, g.Append),
           g.TableWrite("bloom", bloom, g.Append),
-        ), bloomSizing(cfg) + ("round" -> 0L), note = "bootstrap")
+        ), bloomSizing(cfg) ++ PlanMode.metric(spark) + ("round" -> 0L),
+          note = "bootstrap")
         (1, new SketchFillState(observedDeltas(obsBloom)
           .groupMapReduce(_._1)(_._2)(_ + _)))
       }
@@ -211,7 +220,8 @@ object CrawlLoop {
       if (sys.env.contains("SPARK_GRAFT_CRAWL_VERBOSE")) {
         System.err.println(f"[crawl] round $round%2d: fetched=${r.fetched}%6d " +
           f"enqueued=${r.enqueued}%6d pending=$pending%7d " +
-          f"${(System.nanoTime() - t0) / 1e9}%6.1fs")
+          f"${(System.nanoTime() - t0) / 1e9}%6.1fs " +
+          (if (interpreted) "interpreted" else "codegen"))
       }
       if (cfg.compactEvery > 0 && round % cfg.compactEvery == 0) {
         prev.foreach(_.await()); prev = None // compaction reads CURRENT
@@ -225,9 +235,11 @@ object CrawlLoop {
     spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
     prev.foreach(_.await()); prev = None
     // post-pass once the crawl is done (idempotent on resume: skipped when
-    // the current snapshot already is the post-pass)
+    // the current snapshot already is the post-pass), sized now that every
+    // round's writes are durable
     if (!g.currentManifest.exists(_.note == "post-pass")) {
       val tp = System.nanoTime()
+      PlanMode.set(spark, PlanMode.snapshotRows(g), codegen)
       postPass(spark, g, cfg)
       if (sys.env.contains("SPARK_GRAFT_CRAWL_VERBOSE"))
         System.err.println(f"[crawl] post-pass ${(System.nanoTime() - tp) / 1e9}%.1fs")
@@ -359,7 +371,7 @@ object CrawlLoop {
         obsExcl.get(s"e_$i").asInstanceOf[Number].longValue()
       val exclusionCounts = exclLabels.indices.map(i => exclLabels(i) -> m(i))
         .filter(_._2 > 0) // only patterns that HIT, like the reference log
-      bloomSizing(cfg) ++
+      bloomSizing(cfg) ++ PlanMode.metric(spark) ++
         exclusionCounts.map { case (k, v) => s"excl:$k" -> v } ++ Map(
           "round" -> lastRound, // resume reads `round` off the latest snapshot
           "files_excluded" -> exclusionCounts.map(_._2).sum,
@@ -431,6 +443,9 @@ object CrawlLoop {
                fill: SketchFillState = new SketchFillState(Map.empty))
       : RoundResult = {
     import spark.implicits._
+    // read now: the metrics below are evaluated on the commit lane, which
+    // may still run after a failed next round has restored the session
+    val planMode = PlanMode.metric(spark)
 
     val frontier = readTable("frontier").get
     // withSeq is a cheap projection over the drain's internal cache (the
@@ -657,7 +672,7 @@ object CrawlLoop {
     }
     def roundMetrics: Map[String, Long] = {
       val (fillPct, saturated) = sketchFill
-      bloomSizing(cfg) ++ Map(
+      bloomSizing(cfg) ++ planMode ++ Map(
       "sketch_fill_max_pct" -> fillPct,
       "sketch_saturated_shards" -> saturated,
       "round" -> round.toLong,

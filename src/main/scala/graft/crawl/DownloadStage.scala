@@ -71,11 +71,18 @@ object DownloadStage {
   private val cacheCols = Seq("file_url", "file_md5", "file_name",
     "dataset_id", "file_type", "content", "attempts").map(col)
 
-  /** Run the stage over a crawl's Glacier root. Returns the metrics it
+  /** Run the stage over a crawl's Glacier root, in [[PlanMode]]'s
+    * interpreted mode at any size (download won interpreted up to a
+    * 2.1 M-row root, so it is sized as empty). Returns the metrics it
     * committed (downloaded / cache_hits / extracted / attempts).
     */
   def run(spark: SparkSession, g: Glacier, repo: RepoConfig,
-          types: Seq[String], withZipFiles: Boolean): Map[String, Long] = {
+          types: Seq[String], withZipFiles: Boolean): Map[String, Long] =
+    PlanMode.sizedTo(spark, 0L)(download(spark, g, repo, types, withZipFiles))
+
+  private def download(spark: SparkSession, g: Glacier, repo: RepoConfig,
+                       types: Seq[String],
+                       withZipFiles: Boolean): Map[String, Long] = {
     import spark.implicits._
 
     val files = g.read(spark, "files_clean").orElse(g.read(spark, "files"))
@@ -193,7 +200,7 @@ object DownloadStage {
       "dl_cache_hits" -> (targetCount - m(obsFetch, "n")),
       "dl_extracted" -> m(obsExtract, "n"),
       "dl_attempts" -> m(obsFetch, "attempts"),
-    ), note = "download")
+    ) ++ PlanMode.metric(spark), note = "download")
     delta.unpersist(blocking = false)
     g.currentManifest.get.metrics.filter(_._1.startsWith("dl_"))
   }

@@ -183,9 +183,15 @@ object ExportStage {
     * under `<root>/legacy_tsv/<kind>/dataset_origin=<o>/`. Idempotent on
     * resume: skipped only while the export is FRESH — an existing export
     * snapshot with a crawl commit (a round or a forget) after it is stale
-    * and gets recomputed, replacing the export tables in a new snapshot. */
+    * and gets recomputed, replacing the export tables in a new snapshot.
+    * Runs in the [[PlanMode]] the root's current snapshot calls for. */
   def run(spark: SparkSession, g: Glacier,
-          fetchDate: String = DefaultFetchDate): Unit = {
+          fetchDate: String = DefaultFetchDate): Unit =
+    PlanMode.sizedTo(spark, PlanMode.snapshotRows(g))(
+      exportTables(spark, g, fetchDate))
+
+  private def exportTables(spark: SparkSession, g: Glacier,
+                           fetchDate: String): Unit = {
     val hist = g.history
     val lastExport = hist.lastIndexWhere(_.note == "export")
     val lastCrawl = hist.lastIndexWhere(
@@ -225,6 +231,6 @@ object ExportStage {
       g.TableWrite("export_files", files, g.Replace),
       g.TableWrite("export_stats", stats.coalesce(1), g.Replace),
       g.TableWrite("export_timeline", tl.coalesce(1), g.Replace),
-    ), note = "export")
+    ), PlanMode.metric(spark), note = "export")
   }
 }

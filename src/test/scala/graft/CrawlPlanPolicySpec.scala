@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,14 +23,16 @@ object RefusingFetchClient extends FetchClient {
 
 /** `CrawlLoop.run` owns the crawl's plan policy: whatever the session says,
   * a crawl executes with AQE off, and the session confs it changes (AQE,
-  * shuffle partitions) read back as they were afterwards — also when the
-  * crawl fails.
+  * shuffle partitions, the plan mode's codegen confs) read back as they
+  * were afterwards — also when the crawl fails.
   */
 class CrawlPlanPolicySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   private val Aqe = "spark.sql.adaptive.enabled"
   private val Parts = "spark.sql.shuffle.partitions"
+  private val Codegen = Seq("spark.sql.codegen.wholeStage",
+    "spark.sql.codegen.factoryMode")
 
   private val repo = RepoConfig(seed = 9L, universe = 60,
     fileTypes = Seq("gro"), pageSize = 30, maxHitsPerQuery = 60,
@@ -50,6 +52,13 @@ class CrawlPlanPolicySpec extends AnyFunSuite {
     spark.conf.set(Aqe, "true")
     spark.conf.set(Parts, "4")
     try body finally before.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** The codegen confs, read before `body` and checked unchanged after. */
+  private def codegenRestored(body: => Unit): Unit = {
+    val before = Codegen.map(spark.conf.get)
+    body
+    assert(Codegen.map(spark.conf.get) === before)
   }
 
   /** The executed plans of every query that finished while `body` ran.
@@ -78,19 +87,23 @@ class CrawlPlanPolicySpec extends AnyFunSuite {
   }
 
   test("a crawl runs without adaptive plans and restores the session confs") {
-    withSessionConfs {
+    withSessionConfs { codegenRestored {
       val plans = plansDuring(CrawlLoop.run(spark, cfg))
       assert(plans.nonEmpty, "the listener saw no crawl query")
       val adaptive = plans.filter(_.exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
       assert(adaptive.isEmpty,
         s"${adaptive.size} of ${plans.size} crawl plans ran under AQE")
+      // a 1-round micro-crawl is far below PlanMode's bound: interpreted
+      val compiled = plans.filter(_.exists(_.isInstanceOf[WholeStageCodegenExec]))
+      assert(compiled.isEmpty,
+        s"${compiled.size} of ${plans.size} crawl plans ran generated code")
       assert(spark.conf.get(Aqe) === "true")
       assert(spark.conf.get(Parts) === "4")
-    }
+    }}
   }
 
   test("a failing crawl restores the session confs") {
-    withSessionConfs {
+    withSessionConfs { codegenRestored {
       val e = intercept[Exception] {
         CrawlLoop.run(spark, cfg.copy(client = Some(RefusingFetchClient)))
       }
@@ -99,6 +112,6 @@ class CrawlPlanPolicySpec extends AnyFunSuite {
         s"the crawl failed for another reason: $e")
       assert(spark.conf.get(Aqe) === "true")
       assert(spark.conf.get(Parts) === "4")
-    }
+    }}
   }
 }
