@@ -13,8 +13,8 @@ import graft.tables.Glacier
   * against [[ReferenceCrawl]]). One round =
   *
   *   drain priority queue (per-host budget, custom TopKPerKey operator)
-  *   → fetch (`mapPartitions`, salted-host partitioning — no hot-host
-  *     straggler partitions)
+  *   → fetch (`mapPartitions` over uniform `xxhash64(url)` partitioning —
+  *     politeness is enforced by the drain, so no hot-host stragglers)
   *   → parse spans → validate (quarantine counts, drop-and-log semantics)
   *   → discovered links: robots gate → first-wins in-round dedup (window
   *     over url ordered by discovery seq) → URL-seen check (per-shard
@@ -453,7 +453,7 @@ object CrawlLoop {
     val (withSeq, releaseDrain) =
       drainSelectManaged(frontier, cfg.hostBudget, cfg.salts)
 
-    // ---- fetch: salted-host partitioning, executor-pure -------------------
+    // ---- fetch: uniform url-hash partitioning, executor-pure --------------
     // Every cardinality metric below rides on the write actions via
     // Observation/CollectMetrics — a BSP round fires NO standalone count
     // jobs (per-round fixed cost is what bounds crawl throughput; it was
@@ -539,9 +539,10 @@ object CrawlLoop {
       .select(lit(round).as("round"), $"seqInRound", $"ordinal", $"hp.*")
 
     // ---- discovered links → frontier candidates ---------------------------
-    // Column-expression gates (no UDF — the whole link chain stays inside
-    // whole-stage codegen): the fixed-two-round OSF expansion bound
-    // (CrawlSpec.linkAllowed) before the robots rules (Robots.allowedCol).
+    // Column-expression gates (no UDF, so no per-row conversion into Scala
+    // objects; rounds run interpreted, see PlanMode): the fixed-two-round
+    // OSF expansion bound (CrawlSpec.linkAllowed) before the robots rules
+    // (Robots.allowedCol).
     val obsLinks = Observation(s"links_r$round")
     val allowedLinks = fetched.filter($"status" === 200)
       .select($"seqInRound", $"depth", explode($"links").as("l"))

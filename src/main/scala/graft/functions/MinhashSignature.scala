@@ -1,19 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression computing the full MinHash signature of a
-  * shingle array in ONE pass: for permutation p ∈ [0, perms),
+/** Native kernel computing the full MinHash signature of a shingle array
+  * in ONE pass: for permutation p ∈ [0, perms),
   * `min_lex(md5_hex("p:" || shingle))` over all shingles — bit-identical
   * to the composable-column form
   * `array_min(transform(sh, x => md5(concat(lit("p:"), x))))` evaluated
-  * per permutation (DedupOps.minhashSig; the DuckDB oracle mirrors that
-  * form), but:
+  * per permutation (the golden reference in the test tree; the DuckDB
+  * oracle mirrors that form), but:
   *
   *  - the shingle array is traversed ONCE instead of `perms` times, with
   *    one UTF8String→bytes conversion per shingle instead of `perms`
@@ -25,43 +21,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    allocation profile the crawl's parse-side sketcher already uses
   *    (PageParser.sketch).
   *
-  * This is the brief's extension preference (b): a custom `Expression`
-  * whose `doGenCode` emits a static call, keeping the operator inside
-  * whole-stage codegen (no UDF boundary, no iterator break). Used by the
-  * LSH dedup flagships (`q_minhash_sig`, `q_minhash_pairs`,
+  * `DedupOps.minhashSigArray` calls it through [[Kernel]] (a static call
+  * inside whole-stage codegen: no UDF boundary, no iterator break). Used
+  * by the LSH dedup flagships (`q_minhash_sig`, `q_minhash_pairs`,
   * `q_jaccard_lsh`, `q_dedup_clusters`).
   */
-case class MinhashSignature(child: Expression, perms: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_signature requires array<string>, got ${other.catalogString}")
-  }
-
-  /** One hex digest per permutation; empty input → null elements (the
-    * `array_min` of an empty transform), which callers filter upstream. */
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-
-  override def nullSafeEval(input: Any): Any =
-    MinhashSignature.compute(input.asInstanceOf[ArrayData], perms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashSignature.compute($c, $perms);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_signature"
-}
-
 object MinhashSignature {
   private val HexChars = "0123456789abcdef".toCharArray
 
-  /** Single-pass signature kernel — called from both the interpreted
-    * `eval` and the generated code. */
+  /** Single-pass signature kernel. One hex digest per permutation; an
+    * empty input gives null elements (the `array_min` of an empty
+    * transform), which callers filter upstream. */
   def compute(shingles: ArrayData, perms: Int): ArrayData = {
     val n = shingles.numElements()
     val md = java.security.MessageDigest.getInstance("MD5")

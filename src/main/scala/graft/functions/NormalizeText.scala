@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for Unicode text canonicalization — the first
+/** Native kernel for Unicode text canonicalization — the first
   * normalization pass of any multilingual training-data pipeline (the same
   * logical text must dedup/fingerprint identically whether a crawler
   * delivered it composed or decomposed):
@@ -19,50 +18,24 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Spark has no normalizer built-in, and a Scala UDF would break
   * whole-stage codegen around a per-row operation that sits in the hottest
-  * scan of the pipeline — so this is the brief's extension preference (b):
-  * a custom `Expression` whose `doGenCode` emits one static call
-  * (`java.text.Normalizer` under the hood, already ICU-correct in the JDK).
-  * ASCII rows short-circuit without allocating.
+  * scan of the pipeline — so the Columns call the static `compute` through
+  * [[Kernel]] (`java.text.Normalizer` under the hood, already ICU-correct
+  * in the JDK). ASCII rows short-circuit without allocating.
   */
-case class NormalizeText(child: Expression, stripAccents: Boolean)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"normalize_text requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    NormalizeText.compute(input.asInstanceOf[UTF8String], stripAccents)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeText.compute($c, $stripAccents);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "normalize_text"
-}
-
 object NormalizeText {
   import java.text.Normalizer
 
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graftshim.GraftSqlShim.{column, expression}
+  private def normalize(c: Column, stripAccents: Boolean): Column =
+    Kernel.call(this, "compute", StringType)(
+      c -> StringType, lit(stripAccents) -> BooleanType)
 
   /** NFC composition as a Column. */
-  def nfc(c: Column): Column =
-    column(NormalizeText(expression(c), stripAccents = false))
+  def nfc(c: Column): Column = normalize(c, stripAccents = false)
 
   /** Accent fold (NFD → drop marks → NFC) as a Column. */
-  def foldAccents(c: Column): Column =
-    column(NormalizeText(expression(c), stripAccents = true))
+  def foldAccents(c: Column): Column = normalize(c, stripAccents = true)
 
-  /** Shared kernel for the interpreted and generated paths. */
+  /** NFC of `s`, or its accent fold when `stripAccents`. */
   def compute(s: UTF8String, stripAccents: Boolean): UTF8String = {
     // fast path: pure-ASCII bytes are NFC-normal and accent-free already
     val n = s.numBytes()

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryEntry, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 
 /** Document deduplication suite for training-data pipelines: exact hash,
   * MinHash+LSH, SimHash, n-gram Jaccard. All hash functions are md5-based so
@@ -38,43 +39,26 @@ object DedupOps {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** MinHash signature i: lexicographic min of md5(i:shingle) — the
-    * composable-column form (what the DuckDB oracle mirrors and the
-    * fused-expression golden test compares against). */
-  def minhashSig(shingleCol: Column, i: Int): Column =
-    array_min(transform(shingleCol, x => md5(concat(lit(s"$i:"), x))))
-
-  /** ALL `NumHashes` signatures in one pass via the native Catalyst
-    * expression [[graft.functions.MinhashSignature]]: bit-identical to
-    * `minhashSig(sh, i)` per lane, one array traversal instead of eight. */
-  def minhashSigArray(shingleCol: Column): Column = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim.{column, expression}
-    column(graft.functions.MinhashSignature(expression(shingleCol), NumHashes))
-  }
+  /** ALL `NumHashes` MinHash signatures in one pass via the native kernel
+    * [[graft.functions.MinhashSignature]]: signature i is the
+    * lexicographic min of md5(i:shingle), bit-identical per lane to the
+    * composable `array_min(transform(sh, x => md5('i:' || x)))` the
+    * DuckDB oracle mirrors, with one array traversal instead of eight. */
+  def minhashSigArray(shingleCol: Column): Column =
+    graft.functions.Kernel.call(graft.functions.MinhashSignature, "compute",
+      ArrayType(StringType))(
+      shingleCol -> ArrayType(StringType), lit(NumHashes) -> IntegerType)
 
   /** 16-bit SimHash from the per-word md5 hex digits: bit i is set iff the
     * count of words whose i-th hex digit has its high bit set exceeds the
     * count of those that don't. Native one-pass kernel
-    * ([[graft.functions.Simhash16]]: one md5 per word, all 16 counters in
-    * one traversal) — bit-identical to [[simhash16Hof]], the 16-pass HOF
+    * ([[graft.functions.VectorKernels.simhash16]]: one md5 per word, all
+    * 16 counters in one traversal) — bit-identical to the 16-pass HOF
     * chain it replaced (each of whose bit expressions re-evaluated the
     * md5 transform); pinned by the golden spec.
     */
   def simhash16(text: Column): Column =
     graft.functions.VectorKernels.simhash16Col(text)
-
-  /** The composable-column twin of [[simhash16]], kept as the golden-test
-    * reference for the native kernel. */
-  def simhash16Hof(text: Column): Column = {
-    val hashes = transform(split(text, " "), w => md5(w))
-    val bits = (1 to 16).map { i =>
-      val s = aggregate(hashes, lit(0),
-        (acc, h) => acc + when(substring(h, i, 1)
-          .isin("8", "9", "a", "b", "c", "d", "e", "f"), 1).otherwise(-1))
-      when(s > 0, lit(1L << (i - 1))).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   // ---- matching DuckDB SQL fragments (kept in lockstep with the above) ----
   // i ranges over 1..len-k+1 (range() is end-exclusive → end = len-k+2)

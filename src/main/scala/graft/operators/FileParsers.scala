@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
+import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -67,26 +68,23 @@ object FileParsers {
          (CASE WHEN doc_id % 5 = 0 THEN 'dt = 0.009' ELSE '' END) AS content
        FROM documents"""
 
-  /** last case-insensitive `key = value` match in the body (C14). */
+  /** last case-insensitive `key = value` match in the body (C14); NULL
+    * when the body has no such key (`try_element_at`: the ANSI
+    * `element_at` throws on an empty match list). */
   def mdpField(content: Column, key: String): Column = {
     val all = regexp_extract_all(content,
       lit(s"(?i)$key\\s*=\\s*([^\\s\\n]+)"), lit(1))
-    element_at(all, -1)
+    try_element_at(all, lit(-1))
   }
 
-  /** C13 normalization: lowercase, strip -/_ , lookup; miss → "unknown". */
+  /** C13 normalization: lowercase, strip -/_ , lookup; miss or NULL →
+    * "unknown". Not `TextFunctions.normalizeCoupling`, which maps NULL to
+    * "undefined": the `q_mdp_parse` and `q_fn_thermostat` oracles pin
+    * each rule. */
   def normalizeCoupling(raw: Column, table: Map[String, String]): Column = {
     val k = translate(lower(raw), "-_", "")
     coalesce(element_at(typedLit(table), k), lit("unknown"))
   }
-
-  val thermostatTable = Map(
-    "no" -> "no", "berendsen" -> "Berendsen", "nosehoover" -> "Nose-Hoover",
-    "andersen" -> "Andersen", "andersenmassive" -> "Andersen-massive",
-    "vrescale" -> "V-rescale")
-  val barostatTable = Map(
-    "no" -> "no", "berendsen" -> "Berendsen", "crescale" -> "C-rescale",
-    "parrinellorahman" -> "Parrinello-Rahman", "mttk" -> "MTTK")
 
   /** The six mdp parameter columns over a content column — the ONE
     * definition shared by the oracle-checked `q_mdp_parse` and the
@@ -96,8 +94,8 @@ object FileParsers {
     mdpField(c, "dt").cast("double").as("dt"),
     mdpField(c, "nsteps").cast("long").as("nsteps"),
     mdpField(c, "ref[-_ ]?t").cast("double").as("temperature"),
-    normalizeCoupling(mdpField(c, "tcoupl"), thermostatTable).as("thermostat"),
-    normalizeCoupling(mdpField(c, "pcoupl"), barostatTable).as("barostat"),
+    normalizeCoupling(mdpField(c, "tcoupl"), TextFunctions.thermostats).as("thermostat"),
+    normalizeCoupling(mdpField(c, "pcoupl"), TextFunctions.barostats).as("barostat"),
     mdpField(c, "integrator").as("integrator"))
 
   // ---- gro synthesis + classification --------------------------------------
@@ -151,7 +149,8 @@ object FileParsers {
     * per residue class) — the ONE definition shared by the oracle-checked
     * `q_gro_classify` and the download stage's `gro_params` table. The
     * `greatest` guard gives a body of fewer than two lines no atom lines
-    * instead of a negative slice length. */
+    * instead of a negative slice length, and `try_element_at` a NULL atom
+    * count instead of the ANSI index error. */
   def groParamColumns(c: Column): Seq[Column] = {
     val lines = split(c, "\n")
     val resnames = array_distinct(transform(
@@ -159,7 +158,7 @@ object FileParsers {
       l => trim(substring(l, 6, 5))))
     def overlaps(set: Seq[String]) = arrays_overlap(resnames, typedLit(set))
     Seq(
-      trim(element_at(lines, 2)).cast("int").as("atom_number"),
+      trim(try_element_at(lines, lit(2))).cast("int").as("atom_number"),
       overlaps(proteinSet).as("has_protein"),
       overlaps(nucleicSet).as("has_nucleic"),
       overlaps(lipidSet).as("has_lipid"),

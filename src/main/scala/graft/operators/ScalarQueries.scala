@@ -22,7 +22,7 @@ object ScalarQueries {
 
   def entries: Seq[QueryEntry] = Seq(
     // ---- Unicode canonicalization (NFC + accent fold) ---------------------
-    // see [[graft.functions.NormalizeText]]: native expression (doGenCode);
+    // see [[graft.functions.NormalizeText]]: a static kernel StaticInvoke calls;
     // input mixes composed literals (via translate) with raw combining
     // marks so the normalizer has real work on every row
     QueryEntry(

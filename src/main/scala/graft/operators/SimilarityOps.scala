@@ -30,28 +30,6 @@ object SimilarityOps {
   private val BandBits = 4
   private val Dim = 64 // embeddings table dimension (driver testdata)
 
-  private def planeSign(j: Int, d: Int): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val first = md.digest(s"$j:$d".getBytes("UTF-8"))(0)
-    if (((first >> 4) & 0xf) >= 8) 1.0 else -1.0
-  }
-  private lazy val planes: Seq[Seq[Double]] =
-    (0 until LshBits).map(j => (0 until Dim).map(d => planeSign(j, d)))
-
-  /** Signature bit j of an array<double> column: sign of the dot product
-    * with hyperplane j (a codegen'd HOF over the vector — no UDF). */
-  private def lshBit(v: Column, j: Int): Column = {
-    val dot = aggregate(
-      zip_with(typedLit(planes(j)), v, (s, x) => s * x), lit(0.0), _ + _)
-    when(dot > 0, lit(1)).otherwise(lit(0))
-  }
-
-  /** Composable-column twin of one [[graft.functions.LshBandValues]] lane,
-    * kept as the golden-test reference for the native kernel. */
-  def bandValue(v: Column, b: Int): Column =
-    (0 until BandBits).map(r => lshBit(v, b * BandBits + r) * lit(1 << r))
-      .reduce(_ + _)
-
   /** Near-duplicate pairs by embedding cosine, LSH-bucketed: vectors whose
     * signatures collide in ANY band are paired inside that band's bucket.
     * ONE shuffle on (band, bucket); the quadratic pair expansion happens
@@ -64,9 +42,9 @@ object SimilarityOps {
   def embeddingLshPairs(emb: DataFrame, threshold: Double): DataFrame = {
     val e = emb.select(col("vec_id"), vecCol)
     // all 16 signature bits in ONE native pass over the vector
-    // ([[graft.functions.LshBandValues]], bit-identical to the per-band
-    // [[bandValue]] HOF chain — golden-spec pinned); posexplode's position
-    // is the band index
+    // ([[graft.functions.VectorKernels.lshBands]], bit-identical to the
+    // per-band HOF chain — golden-spec pinned); posexplode's position is
+    // the band index
     val exploded = e.select(col("vec_id"), col("v"),
       posexplode(graft.functions.VectorKernels
         .lshBandsCol(col("v"), LshBits, BandBits, Dim))
@@ -86,7 +64,7 @@ object SimilarityOps {
       .distinct()
   }
 
-  // DuckDB twin of the signature bits (kept in lockstep with lshBit)
+  // DuckDB twin of the signature bits (kept in lockstep with the kernel)
   private def sqlLshBit(v: String, j: Int): String = {
     val terms = s"""list_transform(range(1, ${Dim + 1}), d ->
       (CASE WHEN substr(md5('$j:' || CAST(d - 1 AS VARCHAR)), 1, 1)
@@ -103,22 +81,13 @@ object SimilarityOps {
   /** Cosine similarity of two array<double> columns, computed as
     * dot / (sqrt(na) * sqrt(nb)) with sequential left-to-right accumulation
     * (bit-identical in DuckDB's scalar evaluation). Native single-pass
-    * kernel ([[graft.functions.CosineSimilarity]]) — bit-identical to
-    * [[cosineHof]], the interpreted HOF chain it replaced (pinned by the
-    * golden spec); the pair-expansion loops evaluate this per candidate
-    * pair, so the per-call constant is the whole game.
+    * kernel ([[graft.functions.VectorKernels.cosine]]) — bit-identical to
+    * the interpreted HOF chain it replaced (pinned by the golden spec);
+    * the pair-expansion loops evaluate this per candidate pair, so the
+    * per-call constant is the whole game.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorKernels.cosineCol(a, b)
-
-  /** The composable-column twin of [[cosine]], kept as the golden-test
-    * reference for the native kernel. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), _ + _)
-    val na = aggregate(transform(a, x => x * x), lit(0.0), _ + _)
-    val nb = aggregate(transform(b, x => x * x), lit(0.0), _ + _)
-    dot / (sqrt(na) * sqrt(nb))
-  }
 
   private val sqlCosine = (a: String, b: String) =>
     s"""(list_aggregate(list_transform(list_zip($a, $b), p -> p[1]*p[2]), 'sum') /

@@ -41,7 +41,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val rows = docs.filter(size(sh) > 0)
       .select(col("doc_id"),
         DedupOps.minhashSigArray(sh).as("fused"),
-        array((0 until 8).map(i => DedupOps.minhashSig(sh, i)): _*)
+        array((0 until 8).map(i => KernelReferences.minhashSig(sh, i)): _*)
           .as("composed"))
       .collect()
     assert(rows.nonEmpty)
@@ -424,7 +424,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     ).toDF("id", "a", "b")
     val rows = vecs.select(col("id"),
       SimilarityOps.cosine(col("a"), col("b")).as("native"),
-      SimilarityOps.cosineHof(col("a"), col("b")).as("hof")).collect()
+      KernelReferences.cosineHof(col("a"), col("b")).as("hof")).collect()
     rows.foreach { r =>
       val n = if (r.isNullAt(1)) None else Some(r.getDouble(1))
       val h = if (r.isNullAt(2)) None else Some(r.getDouble(2))
@@ -439,7 +439,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val withNull = Seq((9L, Seq(Some(1.0), None, Some(2.0)),
       Seq(Some(1.0), Some(1.0), Some(1.0)))).toDF("id", "a", "b")
       .select(SimilarityOps.cosine(col("a"), col("b")).as("n"),
-        SimilarityOps.cosineHof(col("a"), col("b")).as("h")).collect()(0)
+        KernelReferences.cosineHof(col("a"), col("b")).as("h")).collect()(0)
     assert(withNull.isNullAt(0) && withNull.isNullAt(1))
   }
 
@@ -451,7 +451,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       graft.functions.VectorKernels.lshBandsCol(col("v"), 16, 4, 64).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     val hof = vecs.select(col("id"),
-      array((0 until 4).map(b => SimilarityOps.bandValue(col("v"), b)): _*)
+      array((0 until 4).map(b => KernelReferences.bandValue(col("v"), b)): _*)
         .as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(native === hof)
@@ -461,7 +461,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val ns = short.select(graft.functions.VectorKernels
       .lshBandsCol(col("v"), 16, 4, 64).as("b")).collect()(0).getSeq[Int](0)
     val hs = short.select(array((0 until 4)
-      .map(b => SimilarityOps.bandValue(col("v"), b)): _*).as("b"))
+      .map(b => KernelReferences.bandValue(col("v"), b)): _*).as("b"))
       .collect()(0).getSeq[Int](0)
     assert(ns === Seq(0, 0, 0, 0) && hs === ns)
   }
@@ -476,7 +476,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val rows = texts.select(col("doc_id"),
       DedupOps.simhash16(col("text")).as("native"),
-      DedupOps.simhash16Hof(col("text")).as("hof")).collect()
+      KernelReferences.simhash16Hof(col("text")).as("hof")).collect()
     rows.foreach(r =>
       assert(r.getLong(1) === r.getLong(2), s"doc ${r.getLong(0)}"))
   }

@@ -139,4 +139,26 @@ class DownloadStageSpec extends AnyFunSuite {
     assert(mdp.exists(_.getAs[String]("file_url").startsWith("zip://")) ||
       gro.exists(_.getAs[String]("file_url").startsWith("zip://")))
   }
+
+  test("an .mdp without a key, or a one-line .gro, parses to NULL under ANSI") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.FileParsers
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val mdp = Seq(
+      "integrator = md\ndt = 0.002\ntcoupl = V-rescale", // no pcoupl line
+      "integrator = sd\nnsteps = 10\nPcoupl = C-rescale", // no dt line
+    ).toDF("content")
+      .select(FileParsers.mdpParamColumns(col("content")): _*).collect()
+    assert(mdp(0).getAs[Double]("dt") === 0.002)
+    assert(mdp(0).getAs[String]("thermostat") === "V-rescale")
+    assert(mdp(0).getAs[String]("barostat") === "unknown")
+    assert(mdp(1).isNullAt(mdp(1).fieldIndex("dt")))
+    assert(mdp(1).getAs[Long]("nsteps") === 10L)
+    assert(mdp(1).getAs[String]("barostat") === "C-rescale")
+    val gro = Seq("doc 1 molecule").toDF("content")
+      .select(FileParsers.groParamColumns(col("content")): _*).collect()(0)
+    assert(gro.isNullAt(gro.fieldIndex("atom_number")))
+    assert(!gro.getAs[Boolean]("has_protein") && !gro.getAs[Boolean]("has_lipid"))
+  }
 }

@@ -165,12 +165,7 @@ class TextFunctionsSpec extends AnyFunSuite {
     // decomposed input composes to the SAME bytes as the composed literal
     assert(got(2) === (("café", "cafe")))
     assert(got(3)._2 === "a n o")
-    // interpreted eval agrees with the codegen kernel
-    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.unsafe.types.UTF8String
-    val e = NormalizeText(Literal(UTF8String.fromString("café"),
-      org.apache.spark.sql.types.StringType), stripAccents = false)
-    assert(e.eval(null).toString === "café")
     // supplementary-plane combining mark (surrogate pair) is stripped too:
     // U+1D167 MUSICAL SYMBOL COMBINING TREMOLO-1 is category Mn
     val astral = "x" + new String(Character.toChars(0x1D167)) + "y"
