@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.model._
+import graft.operators.Relational
 import graft.tables.Glacier
 
 /** The distributed crawl engine: BSP rounds over a Glacier-checkpointed
@@ -310,17 +311,10 @@ object CrawlLoop {
     val lastRound = g.history.reverse.find(_.metrics.contains("round"))
       .map(_.metrics("round")).getOrElse(0L)
 
-    val basename = substring_index($"file_name", "/", -1)
-    val exclLabels: Seq[String] =
-      cu.excludedPathPatterns.map(p => s"in path: $p") ++
-        cu.excludedFilePatterns.map(p => s"starting with: $p")
-    val cascade = (cu.excludedPathPatterns.map(p =>
-        (contains($"file_name", lit(p)), lit(s"in path: $p"))) ++
-      cu.excludedFilePatterns.map(p =>
-        (startswith(basename, lit(p)), lit(s"starting with: $p"))))
-      .foldRight(lit(null).cast("string")) { case ((cond, label), rest) =>
-        when(cond, label).otherwise(rest)
-      }
+    val exclLabels = Relational.exclusionLabels(cu.excludedPathPatterns,
+      cu.excludedFilePatterns)
+    val cascade = Relational.exclusionLabel(cu.excludedPathPatterns,
+      cu.excludedFilePatterns)
     // Per-pattern exclusion counts RIDE the files_clean write action
     // (count_if per static label — the label set is the config, not the
     // data): no standalone count job, and no full-table cache. The cascade

@@ -85,26 +85,6 @@ object PageParser {
       .toSeq
   }
 
-  /** Scala-side clean_text = strip_html ∘ strip_whitespace (reference
-    * core/toolbox.py:212-262; Column-side twin in
-    * graft.functions.TextFunctions). Runs per record inside the parse
-    * flatMap — part of the measured parse cost.
-    */
-  // precompiled — String.replaceAll compiles its pattern on EVERY call,
-  // and cleanText runs once per scraped record in the parse hot path
-  private val TagRe = java.util.regex.Pattern.compile("<[^>]*>")
-  private val CtlRe = java.util.regex.Pattern.compile("[\\n\\r\\t]")
-  private val SpcRe = java.util.regex.Pattern.compile(" {2,}")
-
-  def cleanText(s: String): String = {
-    val noTags = TagRe.matcher(s).replaceAll("")
-    val decoded = noTags.replace("&amp;", "&").replace("&lt;", "<")
-      .replace("&gt;", ">").replace("&quot;", "\"").replace("&#39;", "'")
-      .replace("&nbsp;", " ")
-    SpcRe.matcher(CtlRe.matcher(decoded).replaceAll(" "))
-      .replaceAll(" ").trim
-  }
-
   /** Ingest-time dedup sketches (MinHash + SimHash + token count) over a
     * cleaned text — the same md5-shingle scheme as operators.DedupOps
     * (md5("perm:shingle"), min per permutation) so crawl-side and
@@ -207,7 +187,7 @@ object PageParser {
     groups.map { case (id, spans) =>
       val dl = field(spans, "downloads")
         .map(_.split(" views: ")).getOrElse(Array.empty[String])
-      val desc = field(spans, "description").map(cleanText)
+      val desc = field(spans, "description").map(Validators.cleanText)
       val (mh, sh, tok) = desc.map(sketch)
         .getOrElse((Seq.fill(MinhashPerms)(-1L), 0L, 0L))
       DatasetRecord(
@@ -270,7 +250,7 @@ object PageParser {
   // a chain directory) and the size pattern on the anchor TEXT
   // (`Download \(<human size>\)`); an anchor failing either is skipped.
   // Sizes sometimes use a comma decimal separator → normalized to '.'
-  // (atlas.py:118-121), then parsed by the pydantic-ByteSize twin.
+  // (atlas.py:118-121), then parsed by `Validators.parseByteSizeText`.
   private val AnchorRe = """<a href="([^"]+)"[^>]*>([^<]*)</a>""".r
   private val AtlasDownloadHrefRe =
     """dl://atlas/[A-Za-z0-9]{4}_[A-Za-z]/[^"]*zip""".r
@@ -286,35 +266,13 @@ object PageParser {
           for {
             _ <- AtlasDownloadHrefRe.findFirstIn(href)
             m <- AtlasSizeRe.findFirstMatchIn(text)
-            bytes <- parseByteSizeText(m.group(1).replace(',', '.'))
+            bytes <- Validators.parseByteSizeText(m.group(1).replace(',', '.'))
           } yield FileRecord("atlas", chain, doc.doc_id,
             href.substring(href.lastIndexOf('/') + 1), href, Some(bytes),
             None, None, "")
         }
       }
     case _ => Seq.empty
-  }
-
-  /** Scala-side twin of `TextFunctions.parseByteSize` (pydantic ByteSize,
-    * models/file.py:48-65): same normalization, same double product, same
-    * truncation — the parse hot path can't call Column code. */
-  private val ByteUnitMult: Map[String, Double] = Map(
-    "b" -> 1d, "kb" -> 1e3, "mb" -> 1e6, "gb" -> 1e9, "tb" -> 1e12,
-    "pb" -> 1e15, "eb" -> 1e18,
-    "kib" -> 1024d, "mib" -> math.pow(1024, 2), "gib" -> math.pow(1024, 3),
-    "tib" -> math.pow(1024, 4), "pib" -> math.pow(1024, 5))
-  private val ByteNumRe = "([-+]?[0-9]*\\.?[0-9]+)".r
-  private val ByteUnitRe = "([a-z]+)\\s*$".r
-
-  def parseByteSizeText(raw: String): Option[Long] = {
-    val s = raw.trim.toLowerCase.replace("bytes", "b")
-    for {
-      numM <- ByteNumRe.findFirstMatchIn(s)
-      num = numM.group(1).toDouble
-      mult <- ByteUnitRe.findFirstMatchIn(s)
-        .map(m => ByteUnitMult.get(m.group(1).trim))
-        .getOrElse(Some(1d))
-    } yield math.floor(num * mult).toLong
   }
 
   /** HEAD-probe answers on a page → (file_url, size) rows (S13,

@@ -685,8 +685,8 @@ object SyntheticRepo {
       val comma = pos(h(cfg, "afc", chain, j), 3) == 0
       val txt = s"${tenth / 10}${if (comma) "," else "."}${tenth % 10} $unit"
       val mult = if (unit == "GB") 1e9 else 1e6
-      // bytes = floor of the SAME double product the parser computes —
-      // the pydantic-ByteSize twin (TextFunctions.parseByteSize)
+      // bytes = floor of the SAME double product the parser computes
+      // (pydantic ByteSize, Validators.parseByteSizeText)
       val bytes = math.floor(tenth / 10.0 * mult).toLong
       AtlasFile(name, s"dl://atlas/$chain/$name", txt, bytes)
     }

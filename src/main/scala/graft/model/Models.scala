@@ -188,6 +188,50 @@ object Validators {
   /** DOI regex gate (models/dataset.py:19-22). */
   def validDoi(s: String): Boolean = DoiRe.matches(s)
 
+  // precompiled — String.replaceAll compiles its pattern on EVERY call,
+  // and cleanText runs once per scraped record in the parse hot path
+  private val TagRe = java.util.regex.Pattern.compile("<[^>]*>")
+  private val CtlRe = java.util.regex.Pattern.compile("[\\n\\r\\t]")
+  private val SpcRe = java.util.regex.Pattern.compile(" {2,}")
+
+  /** clean_text = strip_html ∘ strip_whitespace (core/toolbox.py:212-262):
+    * tags removed, the common HTML entities decoded, `[\n\r\t]` → space,
+    * runs of spaces → one, trimmed. Runs per record inside the crawl's
+    * parse flatMap — part of the measured parse cost.
+    */
+  def cleanText(s: String): String = {
+    val noTags = TagRe.matcher(s).replaceAll("")
+    val decoded = noTags.replace("&amp;", "&").replace("&lt;", "<")
+      .replace("&gt;", ">").replace("&quot;", "\"").replace("&#39;", "'")
+      .replace("&nbsp;", " ")
+    SpcRe.matcher(CtlRe.matcher(decoded).replaceAll(" "))
+      .replaceAll(" ").trim
+  }
+
+  private val ByteUnitMult: Map[String, Double] = Map(
+    "b" -> 1d, "kb" -> 1e3, "mb" -> 1e6, "gb" -> 1e9, "tb" -> 1e12,
+    "pb" -> 1e15, "eb" -> 1e18,
+    "kib" -> 1024d, "mib" -> math.pow(1024, 2), "gib" -> math.pow(1024, 3),
+    "tib" -> math.pow(1024, 4), "pib" -> math.pow(1024, 5))
+  private val ByteNumRe = "([-+]?[0-9]*\\.?[0-9]+)".r
+  private val ByteUnitRe = "([a-z]+)\\s*$".r
+
+  /** pydantic ByteSize (models/file.py:48-65): "24.4 kB" → 24400,
+    * "689 Bytes" → 689 ("bytes" normalized to "b" first); the number times
+    * the unit's multiplier as a double, truncated like pydantic's `int(...)`.
+    * No number, or an unknown unit → None.
+    */
+  def parseByteSizeText(raw: String): Option[Long] = {
+    val s = raw.trim.toLowerCase.replace("bytes", "b")
+    for {
+      numM <- ByteNumRe.findFirstMatchIn(s)
+      num = numM.group(1).toDouble
+      mult <- ByteUnitRe.findFirstMatchIn(s)
+        .map(m => ByteUnitMult.get(m.group(1).trim))
+        .getOrElse(Some(1d))
+    } yield math.floor(num * mult).toLong
+  }
+
   /** Python Path.suffix semantics minus the dot (models/file.py:67-80,
     * pinned by tests/models/test_file.py:60-82): extension of the basename;
     * `archive.tar.gz → gz`; no dot or leading-dot-only → "".
@@ -209,6 +253,10 @@ object Validators {
     * (simulation.py:201-214). */
   def numericPart(s: String): Option[Double] =
     NumRe.findFirstMatchIn(s).map(_.group(1).toDouble)
+
+  /** Strictly positive value-with-units (simulation.py:174-225): "2.0" and
+    * "0.0997μs" pass; "0", "-1" or no number → None. */
+  def positiveValue(s: String): Option[Double] = numericPart(s).filter(_ > 0)
 
   /** Temperature string → Kelvin (simulation.py:230-278): "300K"/"300" →
     * 300.0; "27C"/"27°C" or any negative value → Celsius, +273.15. */
@@ -267,7 +315,7 @@ object Validators {
       }
 
       val timesteps = arr(j, "simulation_timesteps_in_fs").map {
-        case JString(s) => numericPart(s).filter(_ > 0)
+        case JString(s) => positiveValue(s)
           .getOrElse(return Left(s"invalid timestep: $s"))
         case JDouble(d) if d > 0 => d
         case JInt(n) if n > 0    => n.toDouble

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.DecimalType
   * DataFrame builder remains where the text does not run in Spark, or
   * where the builder adds what the text can't say: a broadcast or shuffle
   * hint, salting, a bloom pre-filter, a Glacier or file-layout step, a
-  * reusable operator (`excludeFiles`, `snapshotDiff`, `profileColumns`)
-  * or a single-operator plan (`unpivot`'s Expand).
+  * reusable operator (`excludeFiles` over the crawl post-pass's
+  * `exclusionLabel`, `snapshotDiff`, `profileColumns`) or a
+  * single-operator plan (`unpivot`'s Expand).
   *
   * Scale notes (100 TB design intent):
   *  - aggregations are plain `groupBy` → Catalyst plans partial (map-side)
@@ -72,6 +73,35 @@ object Relational {
             CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS total,
             CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
           FROM orders GROUP BY"""
+
+  /** The explicit salting pattern for a hot join key: the fact side
+    * (`events`) carries a deterministic salt (event_id mod 8), the
+    * dimension (`customer`) is replicated once per salt value, and the join
+    * key becomes (key, salt) — one hot key's rows land on 8 reducers
+    * instead of 1. The dim side is hinted shuffle_hash, NOT broadcast:
+    * salting is the remedy for exactly the case where broadcast is
+    * impossible, and under a broadcast there is no join-side exchange for
+    * the salt to spread. The result is salt-invariant (the oracle is the
+    * plain join): per market segment (the column `segment` names), the
+    * row count and the decimal-exact value total.
+    */
+  private def saltedJoin(s: SparkSession, dir: String,
+                         segment: String): DataFrame = {
+    val nSalt = 8
+    val ev = t(s, dir, "events")
+      .select(col("user_id"), col("value"),
+        pmod(col("event_id"), lit(nSalt.toLong)).as("salt"))
+    val dim = t(s, dir, "customer")
+      .select((col("c_custkey") - 1).as("user_id"),
+        col("c_mktsegment").as(segment))
+      .withColumn("salt",
+        explode(array((0 until nSalt).map(i => lit(i.toLong)): _*)))
+    ev.join(dim.hint("shuffle_hash"), Seq("user_id", "salt"))
+      .groupBy(segment)
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(28,6)")).cast("double").as("total"))
+      .orderBy(segment)
+  }
 
   def entries: Seq[QueryEntry] = Seq(
     // ---- A-ops: aggregation --------------------------------------------
@@ -235,37 +265,11 @@ object Relational {
           AS running_value
         FROM events ORDER BY user_id, event_id"""),
     // ---- salted join (explicit skew handling, north-rule axis A) -----------
-    // The manual form of what the crawl loop's `salts` config does for hot
-    // hosts: the fact side gets a deterministic salt, the (small) dim side
-    // is exploded ×SALTS, and the join key becomes (key, salt) — a single
-    // hot key now lands on SALTS reducers instead of one. The dim side is
-    // hinted shuffle_hash, NOT broadcast: salting is the remedy for
-    // exactly the case where broadcast is impossible, and under a
-    // broadcast there is no join-side exchange for the salt to spread
-    // (the technique would be inert). Results must be IDENTICAL to the
-    // unsalted join (the oracle is the plain SQL join); sums ride
-    // decimal(28,6) so no float re-association leaks into the hash. At
-    // sandbox SF nothing is skewed — the entry pins the technique and its
-    // equality, the crawl parity suite pins it under real salting.
+    // see [[saltedJoin]]: the manual form of what the crawl loop's `salts`
+    // config does for hot hosts
     QueryEntry(
       "q_skew_join_salted",
-      (s, dir) => {
-        val Salts = 8
-        val fact = t(s, dir, "events")
-          .select(col("user_id"), col("value"), col("event_id"))
-          .withColumn("salt", pmod(col("event_id"), lit(Salts)))
-        val dim = t(s, dir, "customer")
-          .select(col("c_custkey"), col("c_mktsegment"))
-          .withColumn("salt", explode(lit((0 until Salts).toArray)))
-          .hint("shuffle_hash")
-        fact.join(dim,
-            fact("user_id") + 1 === dim("c_custkey") &&
-              fact("salt") === dim("salt"))
-          .groupBy(col("c_mktsegment").as("segment"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(28,6)")).cast("double").as("total"))
-          .orderBy("segment")
-      },
+      (s, dir) => saltedJoin(s, dir, "segment"),
       Some("""SELECT c_mktsegment AS segment, count(*) AS n,
             CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
           FROM events JOIN customer ON user_id + 1 = c_custkey
@@ -739,30 +743,10 @@ object Relational {
           GROUP BY 1 ORDER BY 1"""),
     ),
     // ---- manual salted join (deterministic skew kill) -----------------------
-    // The explicit salting pattern for hot keys: the fact side carries a
-    // deterministic salt (event_id mod 8), the dimension is replicated
-    // once per salt value, and the join key becomes (key, salt) — one hot
-    // key's rows now land on 8 reducers instead of 1. shuffle_hash hint
-    // pins the shuffled plan (a broadcast would hide the salted exchange
-    // at test scale; AQE skew-split is the adaptive twin — SkewJoinSpec).
-    // Result is salt-invariant: the oracle is the plain join.
+    // see [[saltedJoin]]; AQE skew-split is the adaptive twin (SkewJoinSpec)
     QueryEntry(
       "q_salted_join",
-      (s, dir) => {
-        val nSalt = 8
-        val ev = t(s, dir, "events")
-          .select(col("user_id"), col("value"),
-            pmod(col("event_id"), lit(nSalt.toLong)).as("salt"))
-        val dim = t(s, dir, "customer")
-          .select((col("c_custkey") - 1).as("user_id"), col("c_mktsegment"))
-          .withColumn("salt",
-            explode(array((0 until nSalt).map(i => lit(i.toLong)): _*)))
-        ev.join(dim.hint("shuffle_hash"), Seq("user_id", "salt"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(28,6)")).cast("double").as("total"))
-          .orderBy("c_mktsegment")
-      },
+      (s, dir) => saltedJoin(s, dir, "c_mktsegment"),
       Some("""SELECT c_mktsegment, count(*) AS n,
             CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
           FROM events JOIN customer ON user_id + 1 = c_custkey
@@ -1249,21 +1233,33 @@ object Relational {
           payload.map(c => col(s"new_row.$c").as(s"new_$c"))): _*)
   }
 
-  /** F3 exclusion filter as a reusable operator: drop a row if any path
-    * pattern is a substring of `file_name`; otherwise drop if the basename
-    * starts with any file pattern. Pure column expressions → whole-stage
-    * codegen, predicate evaluated at the scan.
-    * Reference: core/toolbox.py:265-325.
+  /** F3 exclusion labels (core/toolbox.py:265-325), in the order they are
+    * checked: every path pattern, then every file pattern. */
+  def exclusionLabels(pathPatterns: Seq[String],
+                      filePatterns: Seq[String]): Seq[String] =
+    pathPatterns.map(p => s"in path: $p") ++
+      filePatterns.map(p => s"starting with: $p")
+
+  /** F3 exclusion rule: the label of the first pattern that excludes
+    * `file_name` — a path pattern that is a substring of it, then a file
+    * pattern its basename starts with — or NULL when none does (also for
+    * a NULL `file_name`). Built-in expressions only, so a filter on it
+    * runs at the scan; the crawl's post-pass counts rows per label.
     */
-  def excludeFiles(df: DataFrame, pathPatterns: Seq[String],
-                   filePatterns: Seq[String]): DataFrame = {
-    val pathHit = pathPatterns
-      .map(p => col("file_name").contains(p))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val base = regexp_extract(col("file_name"), "([^/]*)$", 1)
-    val nameHit = filePatterns
-      .map(p => base.startsWith(p))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    df.filter(!pathHit && !nameHit)
+  def exclusionLabel(pathPatterns: Seq[String],
+                     filePatterns: Seq[String]): Column = {
+    val basename = substring_index(col("file_name"), "/", -1)
+    val hits = pathPatterns.map(p => contains(col("file_name"), lit(p))) ++
+      filePatterns.map(p => startswith(basename, lit(p)))
+    hits.zip(exclusionLabels(pathPatterns, filePatterns))
+      .foldRight(lit(null).cast("string")) { case ((hit, label), rest) =>
+        when(hit, lit(label)).otherwise(rest)
+      }
   }
+
+  /** F3 exclusion filter as a reusable operator: the rows no pattern
+    * excludes ([[exclusionLabel]] is NULL). */
+  def excludeFiles(df: DataFrame, pathPatterns: Seq[String],
+                   filePatterns: Seq[String]): DataFrame =
+    df.filter(exclusionLabel(pathPatterns, filePatterns).isNull)
 }

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * Inputs are synthesized deterministically from the driver's tables with
   * integer arithmetic only, so the Spark and DuckDB sides see byte-identical
   * strings; each query then applies one reference function and its SQL
-  * mirror. All expressions are Catalyst built-ins (whole-stage codegen)
-  * except the two pinned-format UDFs.
+  * mirror. The rules the crawl also runs are `Validators` kernels (one
+  * static call in generated code); the rest are Catalyst built-ins, except
+  * the integer-exact size formatter, a UDF.
   */
 object ScalarQueries {
   import Tables.t

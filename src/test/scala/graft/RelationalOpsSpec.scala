@@ -52,6 +52,21 @@ class RelationalOpsSpec extends AnyFunSuite {
     assert(rows.count(_._4 == 2L) === 2) // (p) subtotals: x, y
   }
 
+  test("exclusion: first matching pattern labels a file; NULL matches none") {
+    import org.apache.spark.sql.functions.col
+    val df = Seq[(Int, String)]((1, "__MACOSX/.git/x"), (2, "a/.hidden"),
+      (3, "a/.git.b/y"), (4, "a/b.gro"), (5, null)).toDF("id", "file_name")
+    val paths = Seq("__MACOSX", ".git")
+    val got = df.select(col("id"),
+        Relational.exclusionLabel(paths, Seq(".")).as("label"))
+      .orderBy("id").collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(got === Map(1 -> "in path: __MACOSX", 2 -> "starting with: .",
+      3 -> "in path: .git", 4 -> null, 5 -> null))
+    // the filter keeps exactly the unlabelled rows, a NULL file_name too
+    assert(Relational.excludeFiles(df, paths, Seq(".")).orderBy("id")
+      .collect().map(_.getInt(0)).toSeq === Seq(4, 5))
+  }
+
   test("snapshot diff: added/removed/changed classified, unchanged dropped") {
     val v1 = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0))
       .toDF("k", "st", "price")

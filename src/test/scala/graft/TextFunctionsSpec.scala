@@ -28,6 +28,8 @@ class TextFunctionsSpec extends AnyFunSuite {
       "long path/with/some spaces/to/this_file.txt" -> "txt",
       ".hidden" -> "",
       "a." -> "",
+      // pathlib: Path("a..b").suffix == ".b"
+      "a..b" -> "b",
     )
     table.foreach { case (in, want) =>
       assert(eval1(fileType(col("v")), in) === want, s"file_type($in)")
@@ -46,13 +48,6 @@ class TextFunctionsSpec extends AnyFunSuite {
       -500L -> "Negative size!",
       1000000L -> "1.00 MB", 1000000000000L -> "1.00 TB",
     )
-    val py = table.map { case (in, want) =>
-      val got = Seq(in.toDouble).toDF("v")
-        .select(humanSizePyUdf(col("v"))).collect()(0).getString(0)
-      (in, want, got)
-    }
-    py.foreach { case (in, want, got) => assert(got === want, s"py($in)") }
-    // integer-exact variant agrees on every golden value too
     table.foreach { case (in, want) =>
       val got = Seq(in).toDF("v")
         .select(humanSizeInt(col("v"))).collect()(0).getString(0)
@@ -68,6 +63,10 @@ class TextFunctionsSpec extends AnyFunSuite {
     table.foreach { case (in, want) =>
       assert(eval1(parseByteSize(col("v")), in) === want, s"parse($in)")
     }
+    // no number, or an unknown unit: NULL, not an ANSI cast error
+    Seq("junk", "file.xtc").foreach { in =>
+      assert(eval1(parseByteSize(col("v")), in) === null, s"parse($in)")
+    }
   }
 
   test("temperature → Kelvin (tests/models/test_simulation.py:41-54)") {
@@ -81,13 +80,15 @@ class TextFunctionsSpec extends AnyFunSuite {
       val got = eval1(temperatureToKelvin(col("v")), in).asInstanceOf[Double]
       assert(math.abs(got - want) < 1e-9, s"kelvin($in): $got != $want")
     }
+    assert(eval1(temperatureToKelvin(col("v")), "hot") === null)
   }
 
   test("positive simulation values (tests/models/test_simulation.py:19-36)") {
-    assert(eval1(isPositiveSimValue(col("v")), "0.0997μs") === true)
-    assert(eval1(isPositiveSimValue(col("v")), "0") === false)
-    assert(eval1(isPositiveSimValue(col("v")), "-1") === false)
-    assert(eval1(isPositiveSimValue(col("v")), "2.0") === true)
+    import graft.model.Validators.positiveValue
+    assert(positiveValue("0.0997μs") === Some(0.0997))
+    assert(positiveValue("0") === None)
+    assert(positiveValue("-1") === None)
+    assert(positiveValue("2.0") === Some(2.0))
   }
 
   test("thermostat/barostat normalization (parse_mdp_files.py:37-52,146-194)") {
@@ -123,6 +124,7 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(eval1(normalizeDate(col("v")), "2023-06-01 10:30:00")
       === "2023-06-01T10:30:00")
     assert(eval1(normalizeDate(col("v")), "2023-06-01") === "2023-06-01T00:00:00")
+    assert(eval1(normalizeDate(col("v")), "junk") === null)
   }
 
   test("ext classification: declaration-order tie-breaks (analyze.py:256-280)") {
