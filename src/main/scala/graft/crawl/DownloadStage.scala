@@ -63,10 +63,11 @@ object DownloadStage {
     }
   }
 
-  /** One fetched body in the content cache. */
+  /** One fetched body in the content cache; `member` marks a body
+    * extracted from a fetched zip archive (not a cache column). */
   final case class CachedFile(file_url: String, file_md5: String,
       file_name: String, dataset_id: String, file_type: String,
-      content: String, attempts: Int)
+      content: String, attempts: Int, member: Boolean)
 
   private val cacheCols = Seq("file_url", "file_md5", "file_name",
     "dataset_id", "file_type", "content", "attempts").map(col)
@@ -117,53 +118,41 @@ object DownloadStage {
     val targets = cacheTargets(
       if (withZipFiles) direct.unionByName(selectFiles(files, types, ZipArchives))
       else direct)
-    val toFetch = uncached(targets)
-
-    val obsFetch = Observation("dl_fetch")
-    val fetched = toFetch
-      .repartition(spark.sparkContext.defaultParallelism, xxhash64(col("file_url")))
-      .as[(String, String, String, String, String)]
-      .mapPartitions { it =>
-        it.map { case (url, md5, name, ds, ft) =>
-          // retry envelope (download_files.py:167-187): a failed attempt is
-          // retried after a pause; deterministic 1-in-41 first-try failure
-          val attempts =
-            if (SyntheticRepo.pos(SyntheticRepo.h(repo, "dlfail", url), 41) == 0) 2
-            else 1
-          CachedFile(url, md5, name, ds, ft,
-            SyntheticRepo.fileContent(repo, url), attempts)
-        }
-      }
-      .observe(obsFetch, count(lit(1)).as("n"),
-        // sum over zero rows is NULL — a fully-cached rerun must still
-        // commit clean metrics
-        coalesce(sum($"attempts"), lit(0L)).cast("long").as("attempts"))
-
-    // ---- zip extraction: members of interest inside fetched archives -----
+    // zip members of interest inside the fetched archives, tagged
     // (extract_zip_content, download_files.py:190-210 — members land next
     // to the archive in the store, i.e. in the same cache table)
-    val obsExtract = Observation("dl_extract")
-    val extracted: DataFrame = if (!withZipFiles) {
-      spark.emptyDataset[CachedFile].toDF()
-        .observe(obsExtract, count(lit(1)).as("n"))
-    } else {
-      uncached(cacheTargets(selectFiles(files, types, InZipFiles)))
-        .repartition(spark.sparkContext.defaultParallelism, xxhash64(col("file_url")))
-        .as[(String, String, String, String, String)]
-        .mapPartitions { it =>
-          it.map { case (url, md5, name, ds, ft) =>
-            CachedFile(url, md5, name, ds, ft,
-              SyntheticRepo.fileContent(repo, url), 1)
-          }
-        }
-        .observe(obsExtract, count(lit(1)).as("n")).toDF()
-    }
+    val tagged = targets.withColumn("member", lit(false))
+    val toFetch = uncached(if (!withZipFiles) tagged else tagged.unionByName(
+      cacheTargets(selectFiles(files, types, InZipFiles))
+        .withColumn("member", lit(true))))
 
     // persisted: the commit runs download_cache / mdp_params / gro_params
     // as SEPARATE write actions — without the cache each would re-execute
     // the fetch pipeline, tripling the downloads a run performs (the exact
     // thing the pooch-cache contract forbids)
-    val delta = fetched.toDF().unionByName(extracted)
+    val obs = Observation("dl")
+    val delta = toFetch
+      .repartition(spark.sparkContext.defaultParallelism, xxhash64(col("file_url")))
+      .as[(String, String, String, String, String, Boolean)]
+      .mapPartitions { it =>
+        it.map { case (url, md5, name, ds, ft, member) =>
+          // retry envelope (download_files.py:167-187): a failed download is
+          // retried after a pause; deterministic 1-in-41 first-try failure.
+          // A member is extracted from its fetched archive: one attempt.
+          val attempts =
+            if (!member && SyntheticRepo.pos(SyntheticRepo.h(repo, "dlfail", url), 41) == 0) 2
+            else 1
+          CachedFile(url, md5, name, ds, ft,
+            SyntheticRepo.fileContent(repo, url), attempts, member)
+        }
+      }
+      .observe(obs, count_if(!$"member").as("downloaded"),
+        count_if($"member").as("extracted"),
+        // sum over zero rows is NULL — a fully-cached rerun must still
+        // commit clean metrics
+        coalesce(sum(when(!$"member", $"attempts")), lit(0L)).cast("long")
+          .as("attempts"))
+      .select(cacheCols: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- parse tables over the FULL store (old cache + this delta) --------
@@ -173,21 +162,20 @@ object DownloadStage {
     // (this delta over the old cache) so the parse tables see exactly one
     // body per file, like the pooch store on disk.
     val store = cache match {
-      case None    => delta.select(cacheCols: _*)
+      case None    => delta
       case Some(c) =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("file_url"))
           .orderBy(col("__gen").desc, col("file_md5").desc)
         c.select(cacheCols: _*).withColumn("__gen", lit(0))
-          .unionByName(delta.select(cacheCols: _*).withColumn("__gen", lit(1)))
+          .unionByName(delta.withColumn("__gen", lit(1)))
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__gen", "__rn")
     }
     val mdp = parseMdpParams(store)
     val gro = parseGroParams(store)
 
-    def m(o: Observation, k: String): Long =
-      o.get(k).asInstanceOf[Number].longValue()
+    def m(k: String): Long = obs.get(k).asInstanceOf[Number].longValue()
 
     val targetCount = targets.count() // one tiny job; selection is cheap
     g.commit(spark, Seq(
@@ -196,10 +184,10 @@ object DownloadStage {
       g.TableWrite("gro_params", gro, g.Replace),
     ), metrics = Map(
       "dl_targets" -> targetCount,
-      "dl_downloaded" -> m(obsFetch, "n"),
-      "dl_cache_hits" -> (targetCount - m(obsFetch, "n")),
-      "dl_extracted" -> m(obsExtract, "n"),
-      "dl_attempts" -> m(obsFetch, "attempts"),
+      "dl_downloaded" -> m("downloaded"),
+      "dl_cache_hits" -> (targetCount - m("downloaded")),
+      "dl_extracted" -> m("extracted"),
+      "dl_attempts" -> m("attempts"),
     ) ++ PlanMode.metric(spark), note = "download")
     delta.unpersist(blocking = false)
     g.currentManifest.get.metrics.filter(_._1.startsWith("dl_"))

@@ -34,7 +34,8 @@ object CrawlQueries {
     cached match {
       case Some((sess, g)) if sess eq s => g
       case _ =>
-        val root = Files.createTempDirectory("crawl-q").toString
+        val root = graft.BenchDirs.deleteOnExit(
+          Files.createTempDirectory("crawl-q").toString)
         val g = CrawlLoop.run(s, CrawlConfig(repo, budget, maxRounds = 6,
           root, salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))
         cached = Some((s, g))

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{QueryEntry, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 
 /** Document deduplication suite for training-data pipelines: exact hash,
   * MinHash+LSH, SimHash, n-gram Jaccard. All hash functions are md5-based so
@@ -1035,7 +1035,8 @@ object DedupOps {
       .distinct()
   }
 
-  /** Connected components of an undirected edge list (src, dst), returned
+  /** Connected components of an undirected edge list of long ids
+    * (src, dst) — any other id type is refused up front — returned
     * as (id, component-min) star edges for every NON-root member; isolated
     * nodes simply don't appear (callers left-join + coalesce to their own
     * id). Alternates small-star/large-star until the edge set is a fixed
@@ -1048,7 +1049,7 @@ object DedupOps {
     * `checkpoint` dir to survive executor loss on long chains.
     */
   def connectedComponents(edges: DataFrame,
-      localFinishEdges: Long = LocalFinishEdges): (DataFrame, Int) =
+      localFinishEdges: Long = LocalGraph.LocalFinishEdges): (DataFrame, Int) =
     connectedComponentsCanonical(edges
       .select(greatest(col("src"), col("dst")).as("src"),
               least(col("src"), col("dst")).as("dst"))
@@ -1067,28 +1068,14 @@ object DedupOps {
       case _ => ()
     }
 
-  /** Edge count at or below which the contraction finishes driver-local.
-    * Rationale (r4 quiet-window probe): each distributed star round costs
-    * ~2 s of fixed job latency regardless of data volume — and under a
-    * loaded box that per-job latency multiplies (the r4/r5 driver benches
-    * sampled the loop at 29 s and 155 s where quiet-window probes sit at
-    * 4-5 s: the loop's ~3 sequential barriers per round are pure
-    * latency-amplification surface). ≤2·10⁶ edges is still a bounded
-    * driver transfer (two longs per edge ≈ 32 MB, far under the 1 GB
-    * driver-result cap) and one in-memory union-find pass measured in
-    * tens of milliseconds. Deciding costs one count() on entry (over
-    * checkpointed blocks) and NOTHING mid-loop — there the count rides
-    * the fixed-point signature the loop computes anyway. At 100 TB the
-    * big early rounds stay fully distributed; only the (now larger)
-    * logarithmic tail collapses. */
-  val LocalFinishEdges: Long = 2000000L
-
   /** Fast path when the caller guarantees edges are already canonical
     * (src > dst) and distinct — e.g. LSH candidate pairs, which arrive as
     * distinct (doc_a < doc_b) rows — skipping one full shuffle+distinct
     * of the initial (largest) edge set. */
   def connectedComponentsCanonical(edges: DataFrame,
-      localFinishEdges: Long = LocalFinishEdges): (DataFrame, Int) = {
+      localFinishEdges: Long = LocalGraph.LocalFinishEdges): (DataFrame, Int) = {
+    require(edges.schema.map(_.dataType) == Seq(LongType, LongType),
+      s"connected components take long (src, dst) ids, got ${edges.schema.simpleString}")
     var e = edges.localCheckpoint(true)
     def sig(d: DataFrame): (Long, java.math.BigDecimal) = {
       val r = d.agg(count(lit(1)).as("n"),
@@ -1129,54 +1116,27 @@ object DedupOps {
     (e, iters)
   }
 
-  /** Collapse a SMALL edge set (≤ [[LocalFinishEdges]], enforced by the
-    * callers' count check) to its final star form in one driver pass: a
-    * path-compressed union-find over the collected rows, then (member →
-    * component min) edges for every non-root — exactly the contraction's
-    * fixed point, without its per-iteration job latency. Key-type generic
-    * (ids are Comparable: long doc ids here, strings in tests). */
+  /** Collapse a SMALL edge set (≤ [[LocalGraph.LocalFinishEdges]],
+    * enforced by the callers' count check) to its final star form in one
+    * driver pass: a union-find over the collected edges' node indices,
+    * then (member → component min) edges for every non-root — exactly the
+    * contraction's fixed point, without its per-iteration job latency.
+    * Ids are sorted, so each component's root is its minimum and the rows
+    * come out in src order. */
   private def localFinishStars(e: DataFrame): DataFrame = {
-    // strings must order like Spark's min/least (UTF-8 BINARY order), not
-    // java.lang.String's UTF-16 compareTo — they disagree on surrogate
-    // pairs vs U+E000..U+FFFF, which would make the local and distributed
-    // paths elect different component minima
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: String, y: String) =>
-        java.util.Arrays.compareUnsigned(
-          x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          y.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-      case _ => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+    val rows = e.collect()
+    val ends = new Array[Long](2 * rows.length) // edge k: src at 2k, dst at 2k+1
+    for (k <- rows.indices) {
+      ends(2 * k) = rows(k).getLong(0); ends(2 * k + 1) = rows(k).getLong(1)
     }
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.containsKey(r)) r = parent.get(r)
-      var c = x // path compression
-      while (parent.containsKey(c)) {
-        val nxt = parent.get(c); parent.put(c, r); c = nxt
-      }
-      r
+    val idx = new LocalGraph.IdIndex(ends)
+    val uf = new LocalGraph.UnionFind(idx.size)
+    for (k <- rows.indices)
+      uf.union(idx.indexOf(ends(2 * k)), idx.indexOf(ends(2 * k + 1)))
+    val members = Array.range(0, idx.size).filter(i => uf.find(i) != i)
+    LocalGraph.frame(e.sparkSession, e.schema, members.length) { (k, row) =>
+      row(0) = idx.ids(members(k)); row(1) = idx.ids(uf.find(members(k)))
     }
-    val nodes = new java.util.LinkedHashSet[Any]()
-    e.collect().foreach { r =>
-      val s = r.get(0); val d = r.get(1)
-      nodes.add(s); nodes.add(d)
-      val rs = find(s); val rd = find(d)
-      if (rs != rd) parent.put(rs, rd)
-    }
-    import scala.jdk.CollectionConverters._
-    val minOf = new java.util.HashMap[Any, Any]()
-    nodes.asScala.foreach { v =>
-      val r = find(v)
-      val cur = minOf.get(r)
-      if (cur == null || lt(v, cur)) minOf.put(r, v)
-    }
-    val out = nodes.asScala.toSeq.flatMap { v =>
-      val m = minOf.get(find(v))
-      if (v == m) None
-      else Some(org.apache.spark.sql.Row(v, m))
-    }.sortWith((a, b) => lt(a.get(0), b.get(0)))
-    e.sparkSession.createDataFrame(out.asJava, e.schema)
   }
 
   private def computeClusters(s: org.apache.spark.sql.SparkSession,

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryEntry, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph operators. PageRank-style authority ranking is the crawl
@@ -29,13 +30,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphOps {
   import Tables.t
+  import LocalGraph.LinkCoeffs
 
   private val Quant = 1e12
-
-  /** The affine link coefficients (a, b) of the synthetic graph: every
-    * node links to (a·node + b) mod N. The oracle SQL is rendered from the
-    * same pairs ([[sqlLinks]]). */
-  private val LinkCoeffs = Seq((7L, 1L), (13L, 5L), (31L, 11L))
 
   /** Deterministic synthetic out-links: node → (a·node + b) mod N for
     * (a,b) ∈ [[LinkCoeffs]], self-loops dropped, deduplicated. */
@@ -97,99 +94,46 @@ object GraphOps {
     * 100 TB.
     */
   def hits(docs: DataFrame, iterations: Int): DataFrame =
-    // Small-graph fast path (the bfsLayers/DedupOps.LocalFinishEdges
-    // pattern): collect the node ids only — the 3·|nodes| edge set is
-    // derived arithmetic — and run the fixed iterations in memory. Every
-    // step is exact-long quantized sums plus the same IEEE double
-    // divisions the distributed loop performs, so the result is
-    // bit-identical (pinned by the equality spec); one job replaces the
-    // ~8 join/agg/norm barriers per iteration that amplify under load.
-    localNodeIds(docs.select(col("doc_id").cast("long"))) match {
+    // Small-graph fast path (the bfsLayers pattern): collect the node ids
+    // only and run the fixed iterations in memory on [[LocalGraph]]. Every
+    // step is exact-long quantized sums plus the same IEEE double divisions
+    // the distributed loop performs, so the result is bit-identical (pinned
+    // by the equality spec); one job replaces the ~8 join/agg/norm
+    // barriers per iteration that amplify under load.
+    LocalGraph.localNodeIds(docs.select(col("doc_id").cast("long"))) match {
       case Some(ids) => hitsLocal(docs.sparkSession, ids, iterations)
       case None      => hitsDistributed(docs, iterations)
     }
 
-  /** The node ids of a one-column (long) id frame when the synthetic
-    * graph over them — 3 directed edges per node — fits the driver-local
-    * budget [[DedupOps.LocalFinishEdges]]; None above it. Collects at most
-    * bound + 1 ids, so a graph above the bound never crosses the driver:
-    * the size gate comes before the collect, not after it. */
-  private[graft] def localNodeIds(ids: DataFrame): Option[Array[Long]] = {
-    val bound = DedupOps.LocalFinishEdges / 3
-    val got = ids.limit((bound + 1).toInt).collect().map(_.getLong(0))
-    if (got.length > bound) None else Some(got)
-  }
-
   private def hitsLocal(spark: org.apache.spark.sql.SparkSession,
       nodeIds: Array[Long], iterations: Int): DataFrame = {
-    val n = nodeIds.length.toLong
-    def mod(x: Long): Long = { val m = x % n; if (m < 0) m + n else m }
-    // distinct out-neighbors per node (self-loops dropped) — the exact
-    // syntheticEdges set; in-neighbors derived by reversal
-    val out = new java.util.HashMap[Long, Array[Long]]()
-    val in = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-    nodeIds.foreach { v =>
-      val ds = LinkCoeffs.map { case (a, b) => mod(v * a + b) }
-        .distinct.filter(_ != v).toArray
-      out.put(v, ds)
-      ds.foreach { d =>
-        val buf = in.get(d)
-        if (buf == null) {
-          val nb = new scala.collection.mutable.ArrayBuffer[Long]()
-          nb += v; in.put(d, nb)
-        } else buf += v
-      }
-    }
-    val auth = new java.util.HashMap[Long, Double]()
-    val hub = new java.util.HashMap[Long, Double]()
-    nodeIds.foreach { v => auth.put(v, 1.0); hub.put(v, 1.0) }
-    // dst-side values may be non-node ids: they hold no score row in the
-    // distributed loop's node-keyed frames either (left joins on nodes)
+    val idx = new LocalGraph.IdIndex(nodeIds)
+    val m = idx.size
+    // out-links as node indices; -1 marks a dst that is not a node id: no
+    // score row (the distributed frames are node-keyed), but its auth mass
+    // counts in the norm
+    val out = idx.ids.map(v =>
+      LocalGraph.outLinks(v, nodeIds.length.toLong).map(idx.indexOf))
+    val auth = Array.fill(m)(1.0)
+    val hub = Array.fill(m)(1.0)
     for (_ <- 1 to iterations) {
-      // hub: per src, exact long sum of floor(auth(dst)·1e9) over out(src)
-      val hq = new java.util.HashMap[Long, Long]()
-      var hsum = 0L
-      nodeIds.foreach { v =>
-        var s = 0L
-        var any = false
-        out.get(v).foreach { d =>
-          // the distributed join edges⋈auth on dst drops non-node dsts
-          if (auth.containsKey(d)) {
-            s += math.floor(auth.get(d) * 1e9).toLong; any = true
-          }
-        }
-        if (any) { hq.put(v, s); hsum += s }
-      }
-      nodeIds.foreach { v =>
-        val q = if (hq.containsKey(v)) hq.get(v) else 0L
-        hub.put(v, q.toDouble / hsum.toDouble)
-      }
-      val aq = new java.util.HashMap[Long, Long]()
+      // hub: per src, exact long sum of floor(auth(dst)·1e9) over node dsts
+      // (the distributed join edges⋈auth on dst drops the others)
+      val hq = out.map(_.filter(_ >= 0).map(d => math.floor(auth(d) * 1e9).toLong).sum)
+      val hsum = hq.sum
+      for (v <- 0 until m) hub(v) = hq(v).toDouble / hsum.toDouble
+      val aq = new Array[Long](m)
       var asum = 0L
-      nodeIds.foreach { v =>
-        out.get(v).foreach { d =>
-          val add = math.floor(hub.get(v) * 1e9).toLong
-          val cur = if (aq.containsKey(d)) aq.get(d) else 0L
-          aq.put(d, cur + add)
-          asum += add
-        }
+      for (v <- 0 until m) {
+        val add = math.floor(hub(v) * 1e9).toLong
+        out(v).foreach { d => if (d >= 0) aq(d) += add; asum += add }
       }
-      nodeIds.foreach { v =>
-        val q = if (aq.containsKey(v)) aq.get(v) else 0L
-        auth.put(v, q.toDouble / asum.toDouble)
-      }
+      for (v <- 0 until m) auth(v) = aq(v).toDouble / asum.toDouble
     }
-    val rows = nodeIds.sorted.map(v =>
-      org.apache.spark.sql.Row(v, hub.get(v), auth.get(v))).toSeq
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("hub",
-        org.apache.spark.sql.types.DoubleType, nullable = true),
-      org.apache.spark.sql.types.StructField("auth",
-        org.apache.spark.sql.types.DoubleType, nullable = true)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
+    LocalGraph.frame(spark, StructType.fromDDL(
+        "node BIGINT NOT NULL, hub DOUBLE, auth DOUBLE"), m) { (v, row) =>
+      row(0) = idx.ids(v); row(1) = hub(v); row(2) = auth(v)
+    }
   }
 
   /** The distributed iteration loop — public above the local-finish bound
@@ -263,66 +207,42 @@ object GraphOps {
     * any corpus size.
     */
   def bfsLayers(docs: DataFrame, maxDepth: Int): DataFrame = {
-    // Small-graph fast path (the DedupOps.LocalFinishEdges pattern, same
-    // bound): the synthetic graph has exactly 3·|nodes| directed edges, so
-    // when that fits the driver-local budget, collect the NODE IDS ONLY
-    // (the edge set is derived arithmetic — nothing else crosses the
-    // driver) and run the whole BFS + per-depth rollup in memory: pure
-    // integer arithmetic, bit-identical to the distributed loop, with ONE
-    // job instead of ~3 per level. Under a loaded box the level loop's
-    // sequential job barriers amplify exactly like the clusters
-    // contraction did (r5 driver: 25.4 s vs 4.5 s quiet). Above the bound
-    // the distributed level loop below runs unchanged — at web scale the
-    // anti-join becomes the SeenSet probe, as documented above.
-    val spark = docs.sparkSession
-    val nodeIds = localNodeIds(docs.select(col("doc_id").cast("long")))
+    // Small-graph fast path: when the 3·|nodes| synthetic edges fit
+    // [[LocalGraph.LocalFinishEdges]], collect the NODE IDS ONLY and run
+    // the whole BFS + rollup in memory — pure integer arithmetic,
+    // bit-identical to the level loop, ONE job instead of ~3 per level
+    // (whose barriers amplify under load: r5 driver 25.4 s vs 4.5 s quiet).
+    // Above the bound the distributed level loop runs unchanged.
+    val nodeIds = LocalGraph.localNodeIds(docs.select(col("doc_id").cast("long")))
       .getOrElse(return bfsLayersDistributed(docs, maxDepth))
-    val n = nodeIds.length.toLong
-    val idSet = new java.util.HashSet[Long](nodeIds.length * 2)
-    nodeIds.foreach(idSet.add)
-    def mod(x: Long): Long = { val m = x % n; if (m < 0) m + n else m }
-    // adjacency is implicit: out(v) = (a·v+b) mod N, self-loops dropped.
-    // Mirror the distributed semantics exactly: edges exist only for
-    // src ∈ node table (a discovered dst that is not a real node id has
-    // NO out-edges — the level join keys edges on src), while any dst
-    // value participates in layers and the rollup.
-    val depthOf = new java.util.HashMap[Long, Int]()
-    var frontier = nodeIds.filter(v => mod0(v, 97L) == 0).sorted
-    frontier.foreach(v => depthOf.put(v, 0))
+    val idx = new LocalGraph.IdIndex(nodeIds)
+    // Mirror the distributed semantics exactly: edges exist only for src ∈
+    // node table (a discovered dst that is not a node id — an "alien",
+    // always in [0, N) — has NO out-edges: the level join keys edges on
+    // src), while any dst value participates in layers and the rollup.
+    val depth = Array.fill(idx.size)(-1)
+    val alien = new java.util.BitSet()
+    val nAt = new Array[Long](math.max(maxDepth, 0) + 1)
+    val sumAt = new Array[Long](nAt.length)
+    def visit(w: Long, d: Int): Unit = { nAt(d) += 1; sumAt(d) += w }
+    var frontier = Array.range(0, idx.size).filter(i => Math.floorMod(idx.ids(i), 97L) == 0)
+    frontier.foreach { i => depth(i) = 0; visit(idx.ids(i), 0) }
     var d = 1
     while (d <= maxDepth && frontier.nonEmpty) {
-      val nxt = new java.util.TreeSet[java.lang.Long]()
-      frontier.foreach { v =>
-        if (idSet.contains(v)) {
-          LinkCoeffs.foreach { case (a, b) =>
-            val w = mod(v * a + b)
-            if (w != v && !depthOf.containsKey(w)) nxt.add(w)
-          }
-        }
+      val next = Array.newBuilder[Int]
+      for (v <- frontier; w <- LocalGraph.outLinks(idx.ids(v), nodeIds.length)) {
+        val i = idx.indexOf(w)
+        if (i >= 0 && depth(i) < 0) { depth(i) = d; next += i; visit(w, d) }
+        else if (i < 0 && !alien.get(w.toInt)) { alien.set(w.toInt); visit(w, d) }
       }
-      val arr = new Array[Long](nxt.size())
-      val it = nxt.iterator()
-      var i = 0
-      while (it.hasNext) { arr(i) = it.next(); i += 1 }
-      arr.foreach(w => depthOf.put(w, d))
-      frontier = arr
+      frontier = next.result()
       d += 1
     }
-    import scala.jdk.CollectionConverters._
-    val rollup = depthOf.asScala.toSeq
-      .groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (depth, vs) =>
-        org.apache.spark.sql.Row(depth.toLong, vs.size.toLong,
-          vs.map(_._1).sum)
-      }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("depth",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("n_nodes",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("sum_nodes",
-        org.apache.spark.sql.types.LongType, nullable = true)))
-    spark.createDataFrame(rollup.asJava, schema).orderBy("depth")
+    val depths = nAt.indices.filter(nAt(_) > 0)
+    LocalGraph.frame(docs.sparkSession, StructType.fromDDL("depth BIGINT NOT NULL, " +
+        "n_nodes BIGINT NOT NULL, sum_nodes BIGINT"), depths.size) { (k, row) =>
+      row(0) = depths(k).toLong; row(1) = nAt(depths(k)); row(2) = sumAt(depths(k))
+    }.orderBy("depth")
   }
 
   /** The distributed level loop — public surface above the local-finish
@@ -349,11 +269,6 @@ object GraphOps {
     visited.groupBy("depth")
       .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("sum_nodes"))
       .orderBy("depth")
-  }
-
-  /** pmod twin for the driver-local path. */
-  private def mod0(x: Long, m: Long): Long = {
-    val r = x % m; if (r < 0) r + m else r
   }
 
   private val sqlN = "(SELECT count(*) FROM documents)"

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
-import org.apache.spark.sql.Column
+import graft.functions.TextFunctions
 import org.apache.spark.sql.functions._
 
 /** Deep nested-JSON extraction + simulation-metadata validation — the
@@ -19,13 +19,6 @@ object SimulationOps {
   import Tables.t
 
   private val NumPat = "([-+]?\\d*\\.?\\d+)"
-
-  /** Normalize a temperature-with-unit string column to Kelvin
-    * (simulation.py:230-278): trailing C or negative → +273.15. */
-  def tempToKelvin(raw: Column): Column = {
-    val num = regexp_extract(raw, NumPat, 1).cast("double")
-    when(instr(raw, "C") > 0 || num < 0, num + 273.15).otherwise(num)
-  }
 
   def entries: Seq[QueryEntry] = Seq(
     QueryEntry(
@@ -65,7 +58,7 @@ object SimulationOps {
           get_json_object(col("j"),
             "$.results.properties.structures.structure_original.n_atoms")
             .cast("long").as("n_atoms"),
-          tempToKelvin(tRaw).as("temp_kelvin"),
+          TextFunctions.temperatureToKelvin(tRaw).as("temp_kelvin"),
           ts.as("timestep_fs"),
           concat(lit("https://www.rcsb.org/structure/"),
             get_json_object(col("j"), "$.material.topology[0].pdb_id"))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.IntegerType
 /** Whole-operator Catalyst extension (brief's tier (c)): exact per-key
   * top-k as a first-class plan node — logical node, partial/final
   * physical operators with bounded heaps, a planner [[SparkStrategy]],
-  * and an optimizer [[Rule]] that rewrites the
+  * and an explicitly applied optimizer [[Rule]] that rewrites the
   * `row_number() OVER (PARTITION BY k ORDER BY o) <= n` + rank-pruning
   * idiom into this node.
   *
@@ -429,19 +429,21 @@ object TopKPerKeyStrategy extends SparkStrategy {
   * the way Spark's own `InferWindowGroupLimit` does. Fires only when the
   * rank column is provably dead (the enclosing Project drops it) and no
   * residual predicate references it; `row_number` only (rank/dense_rank
-  * keep ties and can exceed k rows). Runs in the user-rule batch, i.e.
-  * after `InferWindowGroupLimit` may have inserted its node — that
-  * helper is stripped along with the Window.
+  * keep ties and can exceed k rows). Applied explicitly to one frame's
+  * optimized plan ([[TopKPerKey.rewrite]]), i.e. after
+  * `InferWindowGroupLimit` may have inserted its node — that helper is
+  * stripped along with the Window.
   *
-  * Gated to `k ≥ spark.graft.topk.rewriteMinK` (default 2): at k=1 the
-  * idiom is usually a first-wins dedup over a near-unique key (the
-  * crawl's in-round URL dedup), where hash-grouping every key loses ~2×
-  * to the window's radix sort (measured; PLANS.md, "Measured regime
-  * boundary") and nothing can prune — and the rule has no cardinality
-  * estimate to tell that apart from a heavy-group argmin, so it stays
-  * conservative. Workloads with few heavy groups can set the conf to 1.
+  * Gated to `k ≥ minK` (default 2): at k=1 the idiom is usually a
+  * first-wins dedup over a near-unique key (the crawl's in-round URL
+  * dedup), where hash-grouping every key loses ~2× to the window's radix
+  * sort (measured; PLANS.md, "Measured regime boundary") and nothing can
+  * prune — and the rule has no cardinality estimate to tell that apart
+  * from a heavy-group argmin, so it stays conservative. Workloads with
+  * few heavy groups can pass `minK = 1`.
   */
-object RewriteRankLimitToTopK extends Rule[LogicalPlan] with PredicateHelper {
+case class RewriteRankLimitToTopK(minK: Int = 2)
+    extends Rule[LogicalPlan] with PredicateHelper {
   private def limitOf(e: Expression, rn: Attribute): Option[Int] = e match {
     case LessThanOrEqual(a: Attribute, IntegerLiteral(v)) if a.semanticEquals(rn) => Some(v)
     case LessThan(a: Attribute, IntegerLiteral(v)) if a.semanticEquals(rn) => Some(v - 1)
@@ -471,7 +473,6 @@ object RewriteRankLimitToTopK extends Rule[LogicalPlan] with PredicateHelper {
       val ks = rankPreds.flatMap(limitOf(_, rn))
       val deadRank = !projList.exists(_.references.contains(rn)) &&
         !rest.exists(_.references.contains(rn))
-      val minK = conf.getConfString("spark.graft.topk.rewriteMinK", "2").toInt
       if (ks.nonEmpty && ks.min >= minK && ks.min > 0 && deadRank) {
         val topk = TopKPerKeyNode(ps, os, Literal(ks.min), stripGroupLimit(wChild))
         val filtered = rest.reduceOption(And).map(Filter(_, topk)).getOrElse(topk)
@@ -482,16 +483,22 @@ object RewriteRankLimitToTopK extends Rule[LogicalPlan] with PredicateHelper {
 
 /** Registration + public API. */
 object TopKPerKey {
-  /** Idempotent runtime injection — works on any already-built session
-    * (the driver's Verify/Bench sessions included), no builder config
-    * needed. `ExperimentalMethods` is the public seam Spark provides for
-    * exactly this. */
-  def register(spark: SparkSession): Unit = {
+  /** Idempotent runtime injection of the planner strategy into any
+    * already-built session, through Spark's public `ExperimentalMethods`
+    * seam. It plans only [[TopKPerKeyNode]], so no other plan changes; the
+    * rewrite rule is never installed session-wide ([[rewrite]]). */
+  private def register(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     if (!exp.extraStrategies.contains(TopKPerKeyStrategy))
       exp.extraStrategies = exp.extraStrategies :+ TopKPerKeyStrategy
-    if (!exp.extraOptimizations.contains(RewriteRankLimitToTopK))
-      exp.extraOptimizations = exp.extraOptimizations :+ RewriteRankLimitToTopK
+  }
+
+  /** `df` with [[RewriteRankLimitToTopK]] applied to its optimized plan:
+    * the rank-filter idiom becomes a [[TopKPerKeyNode]] in this frame only. */
+  def rewrite(df: DataFrame, minK: Int = 2): DataFrame = {
+    register(df.sparkSession)
+    GraftSqlShim.ofRows(df.sparkSession,
+      RewriteRankLimitToTopK(minK)(df.queryExecution.optimizedPlan))
   }
 
   private def toSortOrder(c: Column): SortOrder =
@@ -523,7 +530,7 @@ object TopKPerKey {
   /** Both entries share one DuckDB oracle shape: per-returnflag top-5
     * lineitem rows by price, tie-broken to a total order. `q_topk_per_key`
     * drives the node through the public API; `q_topk_rewrite` writes the
-    * plain window idiom and relies on [[RewriteRankLimitToTopK]] to plan
+    * plain window idiom and applies [[RewriteRankLimitToTopK]] to plan
     * it as the custom operator (TopKPerKeySpec pins that the rewrite
     * fires and the Window is gone).
     */
@@ -548,12 +555,11 @@ object TopKPerKey {
     QueryEntry(
       "q_topk_rewrite",
       (s, dir) => {
-        register(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("l_returnflag").orderBy(ordering: _*)
-        Tables.t(s, dir, "lineitem")
+        rewrite(Tables.t(s, dir, "lineitem")
           .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-          .select("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
+          .select("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice"))
       },
       Some(topkOracle),
     ),

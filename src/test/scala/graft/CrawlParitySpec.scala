@@ -32,7 +32,7 @@ class CrawlParitySpec extends AnyFunSuite {
   private lazy val oracle = ReferenceCrawl.run(repo, budget, maxRounds)
 
   private lazy val engineRoot = {
-    val root = Files.createTempDirectory("crawl-parity").toString
+    val root = SparkTestSession.scratchDir("crawl-parity")
     CrawlLoop.run(spark, cfg(root))
     root
   }
@@ -257,10 +257,10 @@ class CrawlParitySpec extends AnyFunSuite {
       CrawlLoop.run(spark, CrawlConfig(repo, budget, maxRounds = rounds, root,
         salts = 4, bloomShards = 8, bloomExpectedPerShard = 4))
     val expected = Seq((2050L, 8L), (2425L, 8L), (2825L, 8L))
-    val root = Files.createTempDirectory("crawl-sat").toString
+    val root = SparkTestSession.scratchDir("crawl-sat")
     satRun(root, 3)
     assert(roundFills(root) === expected)
-    val resumed = Files.createTempDirectory("crawl-sat-resume").toString
+    val resumed = SparkTestSession.scratchDir("crawl-sat-resume")
     satRun(resumed, 1)
     satRun(resumed, 3)
     assert(roundFills(resumed) === expected)
@@ -339,7 +339,7 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(cursorLog.map(_.url) ===
       (1 to 22).map(k => SyntheticRepo.cursorUrl(chainRepo, k)).toVector)
 
-    val root = Files.createTempDirectory("crawl-chain").toString
+    val root = SparkTestSession.scratchDir("crawl-chain")
     CrawlLoop.run(spark,
       CrawlConfig(chainRepo, chainBudget, rounds, root,
         salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))
@@ -356,7 +356,7 @@ class CrawlParitySpec extends AnyFunSuite {
 
   test("resume from a mid-crawl snapshot reproduces the identical final state") {
     // run 3 rounds, "crash", then resume to completion
-    val root2 = Files.createTempDirectory("crawl-resume").toString
+    val root2 = SparkTestSession.scratchDir("crawl-resume")
     val c = cfg(root2).copy(maxRounds = 3)
     CrawlLoop.run(spark, c)
     val g2 = new graft.tables.Glacier(root2)

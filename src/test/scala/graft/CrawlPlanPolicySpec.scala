@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
@@ -42,7 +41,7 @@ class CrawlPlanPolicySpec extends AnyFunSuite {
 
   /** A 1-round micro-crawl into a fresh root. */
   private def cfg = CrawlConfig(repo, budget, maxRounds = 1,
-    Files.createTempDirectory("crawl-policy").toString,
+    SparkTestSession.scratchDir("crawl-policy"),
     bloomShards = 4, bloomExpectedPerShard = 1 << 10)
 
   /** Sets AQE on and 4 shuffle partitions for `body`, restoring the

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -258,7 +256,7 @@ class CuckooSeenSpec extends AnyFunSuite {
 
   test("full crawl under the cuckoo sketch matches the sequential oracle") {
     val oracle = ReferenceCrawl.run(repo, budget, maxRounds)
-    val root = Files.createTempDirectory("crawl-cuckoo").toString
+    val root = SparkTestSession.scratchDir("crawl-cuckoo")
     CrawlLoop.run(spark, cfg(root, "cuckoo"))
     val g = new graft.tables.Glacier(root)
     val engineLog = g.read(spark, "crawl_log").get
@@ -278,7 +276,7 @@ class CuckooSeenSpec extends AnyFunSuite {
   }
 
   test("forget + re-crawl: forgotten URLs are fetched again, others skipped") {
-    val root = Files.createTempDirectory("crawl-forget").toString
+    val root = SparkTestSession.scratchDir("crawl-forget")
     // enough rounds to DRAIN the frontier: the re-crawl assertions need the
     // first crawl to have finished with nothing pending
     val c = cfg(root, "cuckoo").copy(maxRounds = 20)
@@ -307,7 +305,7 @@ class CuckooSeenSpec extends AnyFunSuite {
     // pending urls are already in the seen table, so forget's left_semi
     // passes — without the anti-join vs the carried frontier it would union
     // a SECOND live row and the url would be fetched twice
-    val root = Files.createTempDirectory("crawl-forget-pending").toString
+    val root = SparkTestSession.scratchDir("crawl-forget-pending")
     val c = cfg(root, "cuckoo").copy(maxRounds = 2) // stop mid-crawl
     CrawlLoop.run(spark, c)
     val g = new graft.tables.Glacier(root)

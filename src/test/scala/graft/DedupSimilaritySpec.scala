@@ -145,16 +145,16 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("connected components: path-shaped cluster closes in O(log n) rounds") {
     // a 64-node PATH is plain min-propagation's worst case (64 rounds);
     // alternating small-star/large-star must close it logarithmically
-    val path = (0 until 63).map(i => (f"d$i%03d", f"d${i + 1}%03d"))
-    val other = Seq(("x1", "x2"), ("x2", "x3")) // second component
+    val path = (0L until 63L).map(i => (i, i + 1))
+    val other = Seq((1001L, 1002L), (1002L, 1003L)) // second component
     val edges = (path ++ other).toDF("src", "dst")
     // localFinishEdges = 0 forces the DISTRIBUTED contraction — this test
     // pins the log-round closure, not the small-set shortcut
     val (stars, iters) = DedupOps.connectedComponents(edges, localFinishEdges = 0L)
-    val got = stars.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    (1 to 63).foreach(i => assert(got(f"d$i%03d") === "d000"))
-    assert(got("x2") === "x1" && got("x3") === "x1")
-    assert(!got.contains("d000") && !got.contains("x1")) // roots emit no edge
+    val got = stars.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (1L to 63L).foreach(i => assert(got(i) === 0L))
+    assert(got(1002L) === 1001L && got(1003L) === 1001L)
+    assert(!got.contains(0L) && !got.contains(1001L)) // roots emit no edge
     assert(iters <= 14, s"path of 64 took $iters rounds (expected ~2·log2)")
   }
 
@@ -162,14 +162,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // same worst-case path + side component, default threshold → the
     // driver union-find takes over at iteration 0; star edges must be
     // IDENTICAL to the distributed contraction's
-    val path = (0 until 63).map(i => (f"d$i%03d", f"d${i + 1}%03d"))
-    val other = Seq(("x1", "x2"), ("x2", "x3"))
+    val path = (0L until 63L).map(i => (i, i + 1))
+    val other = Seq((1001L, 1002L), (1002L, 1003L))
     val edges = (path ++ other).toDF("src", "dst")
     val (local, itersLocal) = DedupOps.connectedComponents(edges)
     val (dist, _) = DedupOps.connectedComponents(edges, localFinishEdges = 0L)
     assert(itersLocal === 0, "small input must not pay a distributed round")
     def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(local) === pairs(dist))
 
     // MID-LOOP takeover: threshold 64 < the 65 input edges, so the entry
@@ -182,20 +182,16 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(pairs(mid) === pairs(dist))
   }
 
-  test("local finish orders strings like Spark: UTF-8 binary, not UTF-16") {
-    // U+1F600 (surrogate pair) vs U+FFFF: java.lang.String.compareTo puts
-    // the emoji FIRST (0xD83D < 0xFFFF), UTF-8 binary puts it LAST
-    // (F0 > EF) — the component min must follow Spark's order on both
-    // the local and distributed paths
-    val emoji = "\uD83D\uDE00-b" // U+1F600, a surrogate pair
-    val bmp = "\uFFFF-a"
-    val edges = Seq((emoji, bmp)).toDF("src", "dst")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val (local, _) = DedupOps.connectedComponents(edges)
-    val (dist, _) = DedupOps.connectedComponents(edges, localFinishEdges = 0L)
-    assert(pairs(local) === pairs(dist))
-    assert(pairs(local) === Set((emoji, bmp)), "min must be the UTF-8-smaller id")
+  test("connected components refuse non-long ids before any job") {
+    val edges = Seq(("a", "b")).toDF("src", "dst")
+    val ex = intercept[IllegalArgumentException] {
+      DedupOps.connectedComponents(edges)
+    }
+    assert(ex.getMessage.contains("long"), ex.getMessage)
+    val ints = Seq((1, 2)).toDF("src", "dst")
+    intercept[IllegalArgumentException] {
+      DedupOps.connectedComponentsCanonical(ints)
+    }
   }
 
   test("quadratic-twin guard refuses oversized blocks, passes small ones") {

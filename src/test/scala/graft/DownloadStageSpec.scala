@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.crawl._
@@ -23,7 +21,7 @@ class DownloadStageSpec extends AnyFunSuite {
   private val types = Seq("gro", "mdp")
 
   private lazy val (g, oracle) = {
-    val root = Files.createTempDirectory("dl-stage").toString
+    val root = SparkTestSession.scratchDir("dl-stage")
     val gl = CrawlLoop.run(spark, CrawlConfig(repo, budget, maxRounds = 8,
       root, salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))
     (gl, ReferenceCrawl.run(repo, budget, maxRounds = 8))
@@ -86,7 +84,7 @@ class DownloadStageSpec extends AnyFunSuite {
     val small = RepoConfig(seed = 78L, universe = 60,
       fileTypes = types, pageSize = 20, maxHitsPerQuery = 30,
       gpcrmdCount = 5)
-    val root = Files.createTempDirectory("dl-rows").toString
+    val root = SparkTestSession.scratchDir("dl-rows")
     val gl = CrawlLoop.run(spark, CrawlConfig(small, budget + ("gpcrmd" -> 5),
       maxRounds = 3, root, salts = 4, bloomShards = 8,
       bloomExpectedPerShard = 1 << 12))
@@ -160,5 +158,21 @@ class DownloadStageSpec extends AnyFunSuite {
       .select(FileParsers.groParamColumns(col("content")): _*).collect()(0)
     assert(gro.isNullAt(gro.fieldIndex("atom_number")))
     assert(!gro.getAs[Boolean]("has_protein") && !gro.getAs[Boolean]("has_lipid"))
+  }
+
+  test("download metrics and the cached bodies are pinned") {
+    // a fresh crawl: a direct-files run, then a run that adds the zip
+    // archives and their members (the retry envelope fires in both)
+    val root = SparkTestSession.scratchDir("dl-pins")
+    val gl = CrawlLoop.run(spark, CrawlConfig(repo, budget, maxRounds = 8,
+      root, salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))
+    val direct = DownloadStage.run(spark, gl, repo, types, withZipFiles = false)
+    val zips = DownloadStage.run(spark, gl, repo, types, withZipFiles = true)
+    val cache = Fingerprint.of(gl.read(spark, "download_cache").get)
+    assert(direct === Map("dl_targets" -> 247L, "dl_downloaded" -> 247L,
+      "dl_cache_hits" -> 0L, "dl_extracted" -> 0L, "dl_attempts" -> 257L))
+    assert(zips === Map("dl_targets" -> 301L, "dl_downloaded" -> 54L,
+      "dl_cache_hits" -> 247L, "dl_extracted" -> 566L, "dl_attempts" -> 56L))
+    assert(cache === ((867L, 2576105697925666195L)))
   }
 }

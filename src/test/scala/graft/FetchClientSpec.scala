@@ -145,7 +145,7 @@ class FetchClientSpec extends AnyFunSuite with BeforeAndAfterAll {
       "nomad" -> 3, "gpcrmd" -> 8, "mddb" -> 6)
     val custom = CountingClient(repo)
     CountingClient.calls.set(0)
-    val root = java.nio.file.Files.createTempDirectory("fetch-seam").toString
+    val root = SparkTestSession.scratchDir("fetch-seam")
     val g = CrawlLoop.run(SparkTestSession.get,
       CrawlConfig(repo, budget, maxRounds = 10, root, salts = 4,
         bloomShards = 8, bloomExpectedPerShard = 1 << 12,

@@ -14,7 +14,7 @@ class GlacierMaintSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("glacier-maint").toString
+    SparkTestSession.scratchDir("glacier-maint")
 
   test("rollbackTo restores the target's world as a new commit") {
     val g = new Glacier(tmpRoot())

@@ -19,7 +19,7 @@ class GlacierPipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("glacier-pipe").toString
+    SparkTestSession.scratchDir("glacier-pipe")
 
   private def causes(t: Throwable): List[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toList

@@ -26,7 +26,7 @@ class GlacierSchemaSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpRoot(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    SparkTestSession.scratchDir(prefix)
 
   /** The analyzed plan with expression ids masked: two reads of the same
     * files differ only in those. */

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,9 +18,9 @@ class GlacierSinkSpec extends AnyFunSuite {
   test("stream appends exactly once; replayed batch ids are no-ops") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = Files.createTempDirectory("glacier-sink").toString
+    val root = SparkTestSession.scratchDir("glacier-sink")
     val g = new Glacier(root)
-    val ckpt = Files.createTempDirectory("glacier-sink-ckpt").toString
+    val ckpt = SparkTestSession.scratchDir("glacier-sink-ckpt")
 
     // drive two micro-batches through the REAL foreachBatch path
     val mem = MemoryStream[Long]

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +9,7 @@ class GlacierSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("glacier-test").toString
+    SparkTestSession.scratchDir("glacier-test")
 
   test("commit / read / append / replace / time-travel") {
     val g = new Glacier(tmpRoot())

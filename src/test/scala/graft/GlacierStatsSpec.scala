@@ -16,7 +16,7 @@ class GlacierStatsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("glacier-stats-test").toString
+    SparkTestSession.scratchDir("glacier-stats-test")
 
   /** Three appended commits with disjoint `round` ranges, one part each. */
   private def threeRounds(g: Glacier): Unit =

@@ -111,9 +111,9 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("local node-id gate: None above the bound, every id below it") {
-    val bound = operators.DedupOps.LocalFinishEdges / 3
-    assert(GraphOps.localNodeIds(spark.range(bound + 10).toDF()).isEmpty)
-    assert(GraphOps.localNodeIds(spark.range(50).toDF())
+    val bound = operators.LocalGraph.LocalFinishEdges / 3
+    assert(operators.LocalGraph.localNodeIds(spark.range(bound + 10).toDF()).isEmpty)
+    assert(operators.LocalGraph.localNodeIds(spark.range(50).toDF())
       .map(_.sorted.toSeq) === Some(0L until 50L))
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.functions.{NormalizeText, TextFunctions, VectorKernels}
 import graft.operators.DedupOps
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row}
@@ -48,7 +46,7 @@ class KernelModesSpec extends AnyFunSuite {
         lit(null).cast("array<double>"), lit(null).cast("array<double>"),
         lit(null).cast("string"), lit(null).cast("string"),
         lit(null).cast("string")))
-    val dir = Files.createTempDirectory("kernel-modes").resolve("t").toString
+    val dir = SparkTestSession.scratchDir("kernel-modes") + "/t"
     rows.write.parquet(dir)
     spark.read.parquet(dir)
   }

@@ -21,7 +21,7 @@ class NmrLipidsSpec extends AnyFunSuite {
     * README.yaml (some without an ID → must be dropped), plus decoy files
     * the scan must ignore. Returns (root, expected valid source_IDs). */
   private def writeTree(): (Path, Set[String]) = {
-    val root = Files.createTempDirectory("nmrlipids")
+    val root = java.nio.file.Paths.get(SparkTestSession.scratchDir("nmrlipids"))
     val valid = Set.newBuilder[String]
     (0 until 3).foreach { a =>
       (0 until 1 + (mix(a).abs % 4).toInt).foreach { b =>

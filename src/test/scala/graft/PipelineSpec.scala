@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,7 +24,7 @@ class PipelineSpec extends AnyFunSuite {
     "nomad" -> 5, "gpcrmd" -> 15, "mddb" -> 12, "atlas" -> 12)
 
   test("crawl → clean → download → parse → analyze, checked against the oracle") {
-    val root = Files.createTempDirectory("pipeline").toString
+    val root = SparkTestSession.scratchDir("pipeline")
     val g = CrawlLoop.run(spark, CrawlConfig(repo, budget, maxRounds = 7,
       root, salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))
     DownloadStage.run(spark, g, repo, Seq("gro", "mdp"), withZipFiles = true)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +29,7 @@ class PlanModeSpec extends AnyFunSuite {
   /** A 2-round micro-crawl, download and export into a fresh root; the
     * root and the compiles the crawl itself took. */
   private def crawlAndEtl(): (Glacier, Long) = {
-    val root = Files.createTempDirectory("plan-mode").toString
+    val root = SparkTestSession.scratchDir("plan-mode")
     val n0 = compiles
     val g = CrawlLoop.run(spark, CrawlConfig(repo, budget, maxRounds = 2,
       root, salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))

@@ -16,7 +16,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("TSV sink + schema'd scan round-trips (K2/S16)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tsv-sink").toString + "/files.tsv"
+    val dir = SparkTestSession.scratchDir("tsv-sink") + "/files.tsv"
     val df = Seq(
       ("zenodo", "z-1", "gro", 1234L, "traj\tfile.gro"), // tab inside a value
       ("osf", "o-2", "mdp", 77L, "params.mdp"),
@@ -45,7 +45,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("parquet export verifies schema agreement (K3)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pq-sink").toString + "/datasets.parquet"
+    val dir = SparkTestSession.scratchDir("pq-sink") + "/datasets.parquet"
     val df = Seq(("zenodo", "z-1", 5L), ("figshare", "f-2", 9L))
       .toDF("dataset_origin", "dataset_id", "file_number")
     df.write.mode("overwrite").parquet(dir)
@@ -59,7 +59,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("partitioned output layout {out}/{source}/{date}/ (K4)") {
-    val base = Files.createTempDirectory("layout").toString
+    val base = SparkTestSession.scratchDir("layout")
     val source = "zenodo"; val date = "2026-08-16"
     val path = s"$base/$source/$date/${source}_datasets.parquet"
     import spark.implicits._
@@ -73,7 +73,7 @@ class SinkSpec extends AnyFunSuite {
     import spark.implicits._
     val tricky = "a \"quoted\" \\ backslash\nnewline\ttab €uro"
     val df = Seq((1L, tricky)).toDF("doc_id", "text")
-    val path = Files.createTempDirectory("jsonl-spec").toString + "/t"
+    val path = SparkTestSession.scratchDir("jsonl-spec") + "/t"
     sources.JsonlStore.writeJsonl(df, path)
     val back = sources.JsonlStore.readJsonl(spark, path,
       StructType(Seq(StructField("doc_id", LongType),

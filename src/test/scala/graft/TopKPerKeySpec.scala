@@ -79,8 +79,8 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("optimizer rule rewrites pruned row_number filter to TopKPerKeyNode") {
-    TopKPerKey.register(spark)
-    val df = windowRef(9) // Project drops rn above Filter(rn<=9) above Window
+    // Project drops rn above Filter(rn<=9) above Window
+    val df = TopKPerKey.rewrite(windowRef(9))
     val s = planString(df)
     assert(s.contains("TopKPerKeyFinal"), s"rewrite did not fire:\n$s")
     assert(!s.contains("Window ") && !s.contains("RunningWindowFunction"), s)
@@ -88,19 +88,18 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("rewrite does NOT fire when the rank column survives") {
-    TopKPerKey.register(spark)
     val w = Window.partitionBy("host").orderBy(col("score").desc, col("id").asc)
-    val df = frontier.withColumn("rn", row_number().over(w)).filter(col("rn") <= 4)
+    val df = TopKPerKey.rewrite(
+      frontier.withColumn("rn", row_number().over(w)).filter(col("rn") <= 4))
     val s = planString(df)
     assert(!s.contains("TopKPerKeyFinal"), s)
     assert(s.contains("Window"), s)
   }
 
   test("residual non-rank predicates are preserved") {
-    TopKPerKey.register(spark)
     val w = Window.partitionBy("host").orderBy(col("score").desc, col("id").asc)
-    val df = frontier.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 6 && col("score") > 10).drop("rn")
+    val df = TopKPerKey.rewrite(frontier.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 6 && col("score") > 10).drop("rn"))
     val ref = frontier.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 6).filter(col("score") > 10).drop("rn")
     assert(planString(df).contains("TopKPerKeyFinal"))
@@ -119,28 +118,39 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("k=1 first-wins idiom: gated off by default, exact when opted in") {
-    TopKPerKey.register(spark)
     val w = Window.partitionBy(col("k")).orderBy(col("score").asc, col("id").asc)
     val base = frontier.withColumn("k", col("id") % 997)
     def firstWins = base.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
 
-    // Default rewriteMinK=2: k=1 keeps the window plan (near-unique keys
+    // Default minK = 2: k=1 keeps the window plan (near-unique keys
     // beat hash-grouping — see RewriteRankLimitToTopK scaladoc).
-    assert(!planString(firstWins).contains("TopKPerKeyFinal"))
+    assert(!planString(TopKPerKey.rewrite(firstWins)).contains("TopKPerKeyFinal"))
 
     // Opted in (heavy-group argmin workloads): rewrite fires and is exact.
-    spark.conf.set("spark.graft.topk.rewriteMinK", "1")
-    try {
-      val df = firstWins
-      assert(planString(df).contains("TopKPerKeyFinal"), planString(df))
-      val ref = base.collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
-        .groupBy(t => t._2 % 997).values
-        .map(_.minBy(t => (t._3, t._2))).toSeq.sortBy(_._2)
-      val got = df.select("host", "id", "score").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).sortBy(_._2)
-      assert(got.toSeq === ref)
-    } finally spark.conf.unset("spark.graft.topk.rewriteMinK")
+    val df = TopKPerKey.rewrite(firstWins, minK = 1)
+    assert(planString(df).contains("TopKPerKeyFinal"), planString(df))
+    val ref = base.collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
+      .groupBy(t => t._2 % 997).values
+      .map(_.minBy(t => (t._3, t._2))).toSeq.sortBy(_._2)
+    val got = df.select("host", "id", "score").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).sortBy(_._2)
+    assert(got.toSeq === ref)
+  }
+
+  test("a TopKPerKey call leaves other plans of its session alone") {
+    // a fresh session: the shared one may already have run TopKPerKey
+    val s = spark.newSession()
+    val lateral = graft.operators.Relational.entries
+      .find(_.name == "q_lateral_topk").get
+    def plan = lateral.fn(s, EntryRegistrySpec.Sf).queryExecution
+      .optimizedPlan.toString.replaceAll("#\\d+", "#")
+    val before = plan
+    TopKPerKey(s.range(10).toDF("id"), Seq(col("id") % 2), Seq(col("id").asc), 2)
+      .collect()
+    assert(plan === before)
+    assert(before.contains("WindowGroupLimit") && !before.contains("TopKPerKey"),
+      before)
   }
 
   test("empty input and k<=0 yield empty output") {
