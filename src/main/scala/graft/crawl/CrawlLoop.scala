@@ -533,10 +533,10 @@ object CrawlLoop {
       .select(lit(round).as("round"), $"seqInRound", $"ordinal", $"hp.*")
 
     // ---- discovered links → frontier candidates ---------------------------
-    // Column-expression gates (no UDF, so no per-row conversion into Scala
-    // objects; rounds run interpreted, see PlanMode): the fixed-two-round
-    // OSF expansion bound (CrawlSpec.linkAllowed) before the robots rules
-    // (Robots.allowedCol).
+    // Column gates (no UDF, so no per-row conversion into Scala objects;
+    // rounds run interpreted, see PlanMode): the fixed-two-round OSF
+    // expansion bound (CrawlSpec.linkAllowed) before the robots rules (the
+    // Robots.allowed kernel).
     val obsLinks = Observation(s"links_r$round")
     val allowedLinks = fetched.filter($"status" === 200)
       .select($"seqInRound", $"depth", explode($"links").as("l"))

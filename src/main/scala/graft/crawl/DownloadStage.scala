@@ -23,8 +23,9 @@ import graft.tables.Glacier
   * story.
   *
   * Scale: selection is a codegen'd filter (+ one broadcast-size
-  * distinct-join for archive mode); the cache check is ONE shuffle
-  * co-partitioning targets and cache on url hash; fetch is a narrow
+  * distinct-join for archive mode); the targets cross ONE url-hash
+  * exchange, which carries their one-fetch-per-URL dedup, before the
+  * cache anti-join; fetch is a narrow
   * mapPartitions (the bytes never visit the driver); parsing is pure
   * column work over the fetched partition. At 100 TB the cache table is
   * the big side and the day's new targets the small side — the anti-join
@@ -93,15 +94,17 @@ object DownloadStage {
     // cache check, so their cache key — (file_url, file_md5) — is equal by
     // construction: an archive member whose md5 changed re-extracts
     // exactly like a direct file re-downloads (divergent keys would let
-    // one path append dup urls the other path would have skipped).
-    def cacheTargets(selected: DataFrame): DataFrame = selected.select(
+    // one path append dup urls the other path would have skipped). Zip
+    // members of interest inside the fetched archives are tagged
+    // (extract_zip_content, download_files.py:190-210 — members land next
+    // to the archive in the store, i.e. in the same cache table).
+    def cacheTargets(selected: DataFrame, member: Boolean): DataFrame = selected.select(
       col("file_url_in_repository").as("file_url"),
       coalesce(col("file_md5"), lit("")).as("file_md5"),
       col("file_name"),
       col("dataset_id_in_repository").as("dataset_id"),
-      col("file_type"))
-      .dropDuplicates("file_url") // one fetch per URL (pooch store is keyed
-                                  // by file name within the dataset dir)
+      col("file_type"),
+      lit(member).as("member"))
 
     // ---- pooch cache check: skip bodies already in the store --------------
     val cache = g.read(spark, "download_cache")
@@ -113,18 +116,20 @@ object DownloadStage {
         "left_anti")
     }
 
-    // ---- targets: direct files (+ archives when --withzipfiles) ----------
+    // ---- targets: direct files (+ archives and their members when
+    // --withzipfiles), one fetch per URL (pooch store is keyed by file name
+    // within the dataset dir). The url repartition also serves the dedup
+    // and the fetch, so a target crosses one exchange.
     val direct = selectFiles(files, types, DirectFiles)
-    val targets = cacheTargets(
-      if (withZipFiles) direct.unionByName(selectFiles(files, types, ZipArchives))
-      else direct)
-    // zip members of interest inside the fetched archives, tagged
-    // (extract_zip_content, download_files.py:190-210 — members land next
-    // to the archive in the store, i.e. in the same cache table)
-    val tagged = targets.withColumn("member", lit(false))
-    val toFetch = uncached(if (!withZipFiles) tagged else tagged.unionByName(
-      cacheTargets(selectFiles(files, types, InZipFiles))
-        .withColumn("member", lit(true))))
+    val groups =
+      if (!withZipFiles) cacheTargets(direct, member = false)
+      else cacheTargets(direct.unionByName(selectFiles(files, types, ZipArchives)), member = false)
+        .unionByName(cacheTargets(selectFiles(files, types, InZipFiles), member = true))
+    val targets = Observation("dl_targets")
+    val toFetch = uncached(groups
+      .repartition(spark.sparkContext.defaultParallelism, col("file_url"))
+      .dropDuplicates("file_url")
+      .observe(targets, count_if(!$"member").as("targets")))
 
     // persisted: the commit runs download_cache / mdp_params / gro_params
     // as SEPARATE write actions — without the cache each would re-execute
@@ -132,7 +137,6 @@ object DownloadStage {
     // thing the pooch-cache contract forbids)
     val obs = Observation("dl")
     val delta = toFetch
-      .repartition(spark.sparkContext.defaultParallelism, xxhash64(col("file_url")))
       .as[(String, String, String, String, String, Boolean)]
       .mapPartitions { it =>
         it.map { case (url, md5, name, ds, ft, member) =>
@@ -175,19 +179,18 @@ object DownloadStage {
     val mdp = parseMdpParams(store)
     val gro = parseGroParams(store)
 
-    def m(k: String): Long = obs.get(k).asInstanceOf[Number].longValue()
+    def m(o: Observation, k: String): Long = o.get(k).asInstanceOf[Number].longValue()
 
-    val targetCount = targets.count() // one tiny job; selection is cheap
     g.commit(spark, Seq(
       g.TableWrite("download_cache", delta, g.Append),
       g.TableWrite("mdp_params", mdp, g.Replace),
       g.TableWrite("gro_params", gro, g.Replace),
     ), metrics = Map(
-      "dl_targets" -> targetCount,
-      "dl_downloaded" -> m("downloaded"),
-      "dl_cache_hits" -> (targetCount - m("downloaded")),
-      "dl_extracted" -> m("extracted"),
-      "dl_attempts" -> m("attempts"),
+      "dl_targets" -> m(targets, "targets"),
+      "dl_downloaded" -> m(obs, "downloaded"),
+      "dl_cache_hits" -> (m(targets, "targets") - m(obs, "downloaded")),
+      "dl_extracted" -> m(obs, "extracted"),
+      "dl_attempts" -> m(obs, "attempts"),
     ) ++ PlanMode.metric(spark), note = "download")
     delta.unpersist(blocking = false)
     g.currentManifest.get.metrics.filter(_._1.startsWith("dl_"))

@@ -1,6 +1,8 @@
 package graft.crawl
 
 import graft.model._
+import org.apache.spark.sql.types.{BooleanType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Parses an interleaved text+media span document into (a) frontier
   * candidate links and (b) validated dataset/file record rows. Pure
@@ -300,10 +302,8 @@ object PageParser {
   * numeric suffix ≡ 0 (mod 17) are disallowed. Pure, executor-safe.
   */
 object Robots {
-  private val OsfNodePat = "^osf://node/(\\d+)$"
-  private val ZenPrevPat = "^zenodo://preview/\\d+/archive_(\\d+)\\.zip$"
-  private val OsfNode = OsfNodePat.r
-  private val ZenPrev = ZenPrevPat.r
+  private val OsfNode = "^osf://node/(\\d+)$".r
+  private val ZenPrev = "^zenodo://preview/\\d+/archive_(\\d+)\\.zip$".r
 
   def allowed(url: String): Boolean = url match {
     case OsfNode(n)  => n.toLong % 13 != 0
@@ -311,15 +311,11 @@ object Robots {
     case _           => true
   }
 
-  /** Column twin of [[allowed]] — pure regexp_extract/pmod expressions so
-    * the link-gating chain stays inside whole-stage codegen (a Scala UDF
-    * here was the one avoidable codegen break in the hot path). */
-  def allowedCol(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val osfN = regexp_extract(url, OsfNodePat, 1)
-    val zenK = regexp_extract(url, ZenPrevPat, 1)
-    when(osfN =!= "", osfN.cast("long") % 13 =!= 0)
-      .when(zenK =!= "", zenK.cast("long") % 17 =!= 0)
-      .otherwise(lit(true))
-  }
+  /** [[allowed]] as a Column: one [[graft.functions.Kernel]] call of its
+    * `UTF8String` adapter below, so the crawl's link gate and
+    * `q_robots_gate` run the rule [[ReferenceCrawl]] runs. A NULL url
+    * gives NULL. */
+  def allowedCol(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.functions.Kernel.call(this, "allowed", BooleanType)(url -> StringType)
+  def allowed(url: UTF8String): Boolean = allowed(url.toString)
 }

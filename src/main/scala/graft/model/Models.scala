@@ -239,10 +239,7 @@ object Validators {
   def fileType(name: String): String = {
     val base = name.substring(name.lastIndexOf('/') + 1)
     val i = base.lastIndexOf('.')
-    if (i <= 0) "" else base.substring(i + 1) match {
-      case ext if ext.contains('.') || ext.isEmpty => ""
-      case ext => ext
-    }
+    if (i <= 0) "" else base.substring(i + 1)
   }
 
   // ---- nested simulation metadata (models/simulation.py) ------------------

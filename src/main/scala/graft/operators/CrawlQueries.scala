@@ -47,9 +47,10 @@ object CrawlQueries {
     // ---- robots gate, oracle-checked ---------------------------------------
     // the ONE crawl-core rule that IS SQL-expressible (pure regex + mod),
     // so the north rule's robots gating gets a hashed CORRECTNESS row in
-    // addition to its parity coverage: same Column twin the crawl loop's
-    // link gate runs ([[graft.crawl.Robots.allowedCol]]), mirrored in
-    // DuckDB regexp_extract over a deterministic URL mix
+    // addition to its parity coverage: the rule the crawl loop's link
+    // gate and the reference crawl run ([[graft.crawl.Robots.allowed]],
+    // as a kernel), mirrored in DuckDB regexp_extract over a
+    // deterministic URL mix
     QueryEntry(
       "q_robots_gate",
       (s, dir) => {

@@ -3,6 +3,7 @@ package graft.plans
 import java.util.{HashMap => JHashMap}
 
 import scala.jdk.CollectionConverters._
+import scala.util.DynamicVariable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -11,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types.IntegerType
 
@@ -37,8 +38,8 @@ import org.apache.spark.sql.types.IntegerType
   *    leaves each partition with ≤k of them — the round-2 salted
   *    two-phase drain did this with an extra shuffle), then ONE shuffle
   *    on the keys moves ≤ partitions×k rows per key into the final heap.
-  *    Nothing is ever sorted — output order within a key is unspecified
-  *    (see [[TopKHeaps.topK]]).
+  *    Nothing is sorted unless a final task overflows its memory budget;
+  *    output order within a key is unspecified (see [[TopKHeaps.topK]]).
   *
   * `limit` is an [[Expression]] evaluated against each row, so the k may
   * vary per key (the drain's per-host budget map); it must be constant
@@ -52,12 +53,10 @@ import org.apache.spark.sql.types.IntegerType
   * Memory: per task, heaps hold ≤ k rows per distinct key in that
   * partition. The partial pass degrades gracefully past its key budget
   * (new keys stream through unpruned); the final pass is exact AND
-  * bounded — past `spark.graft.topk.maxRetainedRows` retained rows, rows
-  * of further keys hash-spill to local disk and each spill bucket is
-  * processed recursively ([[TopKHeaps.topKExact]]), so key-cardinality ×
-  * k beyond task memory costs disk passes, never an OOM. A SINGLE key
-  * whose own k exceeds memory is the one remaining unbounded shape (same
-  * envelope as `TakeOrderedAndProjectExec`'s k).
+  * bounded — past [[TopKHeaps.MaxRetainedRows]] retained rows, the kept
+  * rows and the rest of the partition overflow into Spark's own spilling
+  * sort ([[TopKHeaps.topKExact]]), so key-cardinality × k beyond task
+  * memory, or one key's k, costs sorter spills, never an OOM.
   */
 case class TopKPerKeyNode(
     keys: Seq[Expression],
@@ -137,8 +136,8 @@ object TopKHeaps {
     * — so degradation under extreme key cardinality (e.g. the
     * first-wins URL dedup the rewrite rule captures, where keys ≈ rows)
     * costs shuffle volume, never correctness or unbounded memory. The
-    * final pass uses [[topKExact]], which must group fully but
-    * hash-spills past its row budget instead of growing without bound.
+    * final pass ([[topKExact]]) must group fully; it overflows into a
+    * sort instead.
     */
   def topK(
       iter: Iterator[InternalRow],
@@ -191,104 +190,32 @@ object TopKHeaps {
     }
   }
 
-  /** Hash-partitioned local-disk spill: overflow rows land in `fanout`
-    * temp files keyed by a depth-seeded hash of the grouping key (the
-    * reseed matters — recursing with the SAME hash would send a bucket's
-    * every key back to one child bucket and never shrink). UnsafeRow
-    * wire format: [int size][row bytes]. Files are deleted as each
-    * bucket's read completes, and unconditionally on task end.
-    */
-  private final class Spiller(numFields: Int, fanout: Int, depth: Int) {
-    import java.io._
-    private val files = new Array[File](fanout)
-    private val outs = new Array[DataOutputStream](fanout)
-    private val ins = scala.collection.mutable.ArrayBuffer.empty[DataInputStream]
-    private val writeBuf = new Array[Byte](4096)
-    var rows = 0L
+  /** Final pass: retained heap rows per task before the partition
+    * overflows into a sort; `withRetainedRows` is its test seam. */
+  val MaxRetainedRows: Long = 1L << 22
+  private[plans] val retainedRows = new DynamicVariable[Long](MaxRetainedRows)
+  private[graft] def withRetainedRows[A](rows: Long)(body: => A): A =
+    retainedRows.withValue(rows)(body)
+  /** Partial pass: distinct keys per task before rows of new keys stream
+    * through unpruned. */
+  val MaxPartialKeys: Int = 1 << 20
 
-    // Spill under Spark's configured scratch space, not java.io.tmpdir —
-    // on a cluster spark.local.dir points at the executors' large scratch
-    // disks while /tmp is often a small root tmpfs. First dir of the
-    // (possibly comma-separated) list; tmpdir only as the final fallback.
-    private val spillDir: File = {
-      val conf = Option(org.apache.spark.SparkEnv.get).map(_.conf)
-      val base = conf.flatMap(c => c.getOption("spark.local.dir"))
-        .map(_.split(',').head.trim)
-        .getOrElse(System.getProperty("java.io.tmpdir"))
-      val d = new File(base)
-      if (d.isDirectory && d.canWrite) d
-      else new File(System.getProperty("java.io.tmpdir"))
-    }
-
-    // best-effort cleanup if the task dies (or a consumer abandons the
-    // result iterator mid-drain): close every stream FIRST — on POSIX an
-    // unlinked file's blocks are only reclaimed once its descriptors
-    // close — then unlink
-    Option(org.apache.spark.TaskContext.get()).foreach(
-      _.addTaskCompletionListener[Unit] { _ =>
-        outs.foreach(o => if (o != null) try o.close() catch { case _: IOException => })
-        ins.foreach(i => try i.close() catch { case _: IOException => })
-        files.foreach(f => if (f != null) f.delete())
-      })
-
-    def write(keyHash: Int, row: UnsafeRow): Unit = {
-      val mixed = scala.util.hashing.byteswap32(keyHash ^ (depth * 0x9e3779b9))
-      val b = (mixed >>> 1) % fanout
-      if (outs(b) == null) {
-        files(b) = File.createTempFile(s"graft-topk-d$depth-b$b-", ".spill", spillDir)
-        outs(b) = new DataOutputStream(
-          new BufferedOutputStream(new FileOutputStream(files(b)), 1 << 16))
-      }
-      outs(b).writeInt(row.getSizeInBytes)
-      row.writeToStream(outs(b), writeBuf)
-      rows += 1
-    }
-
-    def bucketIterator(b: Int): Iterator[InternalRow] = {
-      if (outs(b) != null) { outs(b).close(); outs(b) = null }
-      val f = files(b)
-      if (f == null) Iterator.empty
-      else new Iterator[InternalRow] {
-        private val in = new DataInputStream(
-          new BufferedInputStream(new FileInputStream(f), 1 << 16))
-        ins += in
-        private val row = new UnsafeRow(numFields)
-        private var rowSize = readSize()
-        private def readSize(): Int =
-          try in.readInt()
-          catch { case _: EOFException => in.close(); f.delete(); -1 }
-        override def hasNext: Boolean = rowSize >= 0
-        override def next(): InternalRow = {
-          val bytes = new Array[Byte](rowSize)
-          in.readFully(bytes)
-          row.pointTo(bytes, rowSize)
-          rowSize = readSize()
-          row // consumers copy (KeyHeap.offer / keyProj both copy)
-        }
-      }
-    }
-  }
+  /** The final pass's overflow sort: keys ascending, then `order`. Built
+    * on the driver, its sorter only in a task that overflows, so no sort
+    * node enters the plan. */
+  def overflowSort(keys: Seq[Expression], order: Seq[SortOrder], child: SparkPlan): SortExec =
+    SortExec(keys.map(SortOrder(_, Ascending)) ++ order, global = false, child)
 
   /** Exact per-key top-k with bounded memory — the final pass. Unlike
-    * [[topK]] it may not emit unpruned overflow rows (it must be exact),
-    * so past `budgetRows` retained rows, rows of NEW keys hash-spill to
-    * disk ([[Spiller]]) and each bucket recurses with a reseeded hash;
-    * and an already-admitted key whose heap GROWS past the budget is
-    * DEMOTED — its kept rows (the key's only surviving top-k candidates;
-    * pruned rows are provably out) move to its spill bucket and the key
-    * leaves the map — so retained rows stay ≤ budget + k of the largest
-    * single append run, not budget × k. Invariants: admission closes
-    * permanently once a spiller exists, so a key is wholly in-memory or
-    * wholly in one bucket and per-bucket recursion is exact; each level
-    * admits ≥1 key (budgetRows ≥ 1) and demotion requires ≥2 in-memory
-    * keys, so a key alone in its bucket stays in memory (the documented
-    * single-key k envelope — the one shape that cannot spill) and
-    * recursion strictly shrinks. Depth is capped defensively at 64; past
-    * it the pass completes in-memory (still exact — the budget, not
-    * correctness, is abandoned).
-    *
-    * Consumes the input eagerly: a final pass can emit nothing until the
-    * partition is exhausted anyway, so laziness buys nothing here.
+    * [[topK]] it may not emit unpruned rows, so it groups every key, in
+    * heaps while they retain at most `budgetRows` rows. Past that, the
+    * kept rows (each key's only surviving candidates) and the rest of the
+    * partition go through one Spark `UnsafeExternalRowSorter` from
+    * `overflow` ([[overflowSort]]), which spills under memory pressure,
+    * and the first k rows of each key stream out of it (k read from the
+    * key's first row). So many keys, or one key whose k exceeds the
+    * budget, cost sorter spills, never an OOM. `onSpill` gets the count
+    * of rows handed to the sorter.
     */
   def topKExact(
       iter: Iterator[InternalRow],
@@ -297,65 +224,60 @@ object TopKHeaps {
       limit: Expression,
       input: Seq[Attribute],
       budgetRows: Long,
-      fanout: Int = 32,
-      depth: Int = 0,
+      overflow: SortExec,
       onSpill: Long => Unit = _ => ()): Iterator[InternalRow] = {
     if (!iter.hasNext) return Iterator.empty
     val keyProj = UnsafeProjection.create(keys, input)
     val limitProj = UnsafeProjection.create(Seq(Cast(limit, IntegerType)), input)
+    def limitOf(row: InternalRow): Int = {
+      val lim = limitProj(row)
+      if (lim.isNullAt(0)) 0 else lim.getInt(0)
+    }
     val ord = RowOrdering.create(order, input)
-    val toUnsafe = UnsafeProjection.create(input.map(_.dataType).toArray)
     val heaps = new JHashMap[UnsafeRow, KeyHeap]()
     val budget = math.max(1L, budgetRows)
     var retained = 0L
-    var spiller: Spiller = null
 
-    while (iter.hasNext) {
+    while (retained <= budget && iter.hasNext) {
       val row = iter.next()
-      val lim = limitProj(row)
-      val k = if (lim.isNullAt(0)) 0 else lim.getInt(0)
+      val k = limitOf(row)
       if (k > 0) {
         val key = keyProj(row)
         val h = heaps.get(key)
-        if (h != null) {
-          retained += h.offer(row)
-          // growth past the budget demotes the whole key to its bucket
-          // (exact: the heap's kept rows are the key's only candidates)
-          if (retained > budget && heaps.size > 1 && depth < 64) {
-            if (spiller == null) spiller = new Spiller(input.size, fanout, depth)
-            heaps.remove(key)
-            retained -= h.size
-            val hash = key.hashCode
-            val dr = h.drain()
-            while (dr.hasNext) spiller.write(hash, toUnsafe(dr.next()))
-          }
-        } else if (depth >= 64 || (spiller == null && retained < budget)) {
+        if (h != null) retained += h.offer(row)
+        else {
           val nh = new KeyHeap(k, ord)
           heaps.put(key.copy(), nh)
           retained += nh.offer(row)
-        } else {
-          if (spiller == null) spiller = new Spiller(input.size, fanout, depth)
-          spiller.write(key.hashCode, toUnsafe(row))
         }
       }
     }
     val inMem = heaps.values.iterator().asScala.flatMap(_.drain())
-    if (spiller == null) inMem
-    else {
-      onSpill(spiller.rows)
-      val s = spiller
-      inMem ++ (0 until fanout).iterator.flatMap(b =>
-        topKExact(s.bucketIterator(b), keys, order, limit, input,
-          budget, fanout, depth + 1, onSpill))
+    if (retained <= budget) return inMem
+
+    val sorter = overflow.createSorter()
+    val toUnsafe = UnsafeProjection.create(input.map(_.dataType).toArray)
+    var sorted = 0L
+    inMem.foreach { r => sorter.insertRow(toUnsafe(r)); sorted += 1 }
+    heaps.clear()
+    iter.foreach { r => if (limitOf(r) > 0) { sorter.insertRow(toUnsafe(r)); sorted += 1 } }
+    onSpill(sorted)
+    val sameKey = RowOrdering.create(keys.map(SortOrder(_, Ascending)), input)
+    var head: InternalRow = null
+    var left = 0
+    sorter.sort().filter { r =>
+      if (head == null || sameKey.compare(r, head) != 0) { head = r.copy(); left = limitOf(r) }
+      left -= 1
+      left >= 0
     }
   }
 }
 
 /** Map-side pass: bounds every partition to ≤k rows per key in place —
   * no sort, no shuffle. Mirrors partial aggregation, including its
-  * bounded-memory degradation: past `spark.graft.topk.maxPartialKeys`
-  * distinct keys per task (default 2^20), new keys stream through to the
-  * exchange unpruned (see [[TopKHeaps.topK]]). */
+  * bounded-memory degradation: past [[TopKHeaps.MaxPartialKeys]]
+  * distinct keys per task, new keys stream through to the exchange
+  * unpruned (see [[TopKHeaps.topK]]). */
 case class TopKPerKeyPartialExec(
     keys: Seq[Expression],
     order: Seq[SortOrder],
@@ -365,10 +287,8 @@ case class TopKPerKeyPartialExec(
   override def outputPartitioning = child.outputPartitioning
   override protected def doExecute(): RDD[InternalRow] = {
     val (ks, os, lim, in) = (keys, order, limit, child.output)
-    val maxKeys = conf.getConfString(
-      "spark.graft.topk.maxPartialKeys", (1 << 20).toString).toInt
     child.execute().mapPartitions(
-      TopKHeaps.topK(_, ks, os, lim, in, maxKeys),
+      TopKHeaps.topK(_, ks, os, lim, in, TopKHeaps.MaxPartialKeys),
       preservesPartitioning = true)
   }
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerKeyPartialExec =
@@ -376,11 +296,9 @@ case class TopKPerKeyPartialExec(
 }
 
 /** Reduce-side pass: requires clustering on the keys (the planner
-  * inserts the single exchange), emits each key's exact top-k. Bounded
-  * memory: past `spark.graft.topk.maxRetainedRows` retained rows per
-  * task (default 2^22), overflow keys hash-spill to local disk and
-  * recurse ([[TopKHeaps.topKExact]]); `spillRows` in the SQL metrics
-  * counts diverted rows (summed across recursion levels). */
+  * inserts the single exchange), emits each key's exact top-k, past
+  * [[TopKHeaps.MaxRetainedRows]] retained rows per task through a
+  * spilling sort ([[TopKHeaps.topKExact]]); `spillRows` counts its rows. */
 case class TopKPerKeyFinalExec(
     keys: Seq[Expression],
     order: Seq[SortOrder],
@@ -393,15 +311,14 @@ case class TopKPerKeyFinalExec(
     else ClusteredDistribution(keys, requireAllClusterKeys = false, None) :: Nil
   override lazy val metrics = Map(
     "spillRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "rows spilled by exact final pass"))
+      .createMetric(sparkContext, "rows sorted by exact final pass"))
   override protected def doExecute(): RDD[InternalRow] = {
     val (ks, os, lim, in) = (keys, order, limit, child.output)
-    val budget = conf.getConfString(
-      "spark.graft.topk.maxRetainedRows", (1L << 22).toString).toLong
+    val (budget, overflow) = (TopKHeaps.retainedRows.value,
+      TopKHeaps.overflowSort(keys, order, child))
     val spillMetric = longMetric("spillRows")
     child.execute().mapPartitions(
-      TopKHeaps.topKExact(_, ks, os, lim, in, budget,
-        onSpill = spillMetric.add(_)),
+      TopKHeaps.topKExact(_, ks, os, lim, in, budget, overflow, spillMetric.add(_)),
       preservesPartitioning = true)
   }
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerKeyFinalExec =

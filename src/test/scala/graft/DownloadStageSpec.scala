@@ -175,4 +175,54 @@ class DownloadStageSpec extends AnyFunSuite {
       "dl_cache_hits" -> 247L, "dl_extracted" -> 566L, "dl_attempts" -> 56L))
     assert(cache === ((867L, 2576105697925666195L)))
   }
+
+  test("with no cache the fetch plan has one exchange, keyed on file_url") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    val root = SparkTestSession.scratchDir("dl-plan")
+    val gl = CrawlLoop.run(spark, CrawlConfig(repo, budget, maxRounds = 3,
+      root, salts = 4, bloomShards = 8, bloomExpectedPerShard = 1 << 12))
+    val marker = "dl_plan_marker"
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) markerSeen.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      DownloadStage.run(spark, gl, repo, types, withZipFiles = true)
+      spark.range(1).toDF(marker).collect()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "query listener events did not arrive")
+    } finally spark.listenerManager.unregister(listener)
+
+    // every node, through adaptive stages and the persisted fetch
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case o => o.children.flatMap(nodes)
+    })
+    val fetches = plans.asScala.toSeq.flatMap(nodes)
+      .collect { case m: MapPartitionsExec => m }
+    assert(fetches.nonEmpty, "the listener saw no fetch")
+    // the selection's own archive distinct shuffles on (dataset, archive)
+    fetches.foreach { f =>
+      val byUrl = nodes(f).collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+        .collect { case HashPartitioning(ks, _)
+          if ks.exists(_.references.exists(_.name == "file_url")) => ks }
+      assert(byUrl.size === 1, f.treeString)
+      assert(byUrl.head.collect { case a: Attribute => a.name } === Seq("file_url"))
+    }
+  }
 }

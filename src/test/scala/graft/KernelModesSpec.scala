@@ -1,5 +1,6 @@
 package graft
 
+import graft.crawl.Robots
 import graft.functions.{NormalizeText, TextFunctions, VectorKernels}
 import graft.operators.DedupOps
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row}
@@ -7,9 +8,9 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The native kernels, and the `TextFunctions` builders over the
-  * `Validators` rules, give the same values in generated code and when a
-  * plan runs interpreted (`StaticInvoke`'s reflective path, the mode
+/** The native kernels, the `TextFunctions` builders over the `Validators`
+  * rules and the robots rule give the same values in generated code and
+  * when a plan runs interpreted (`StaticInvoke`'s reflective path, the mode
   * `PlanMode` uses), and a wrong-typed argument fails at analysis. */
 class KernelModesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
@@ -63,7 +64,8 @@ class KernelModesSpec extends AnyFunSuite {
     TextFunctions.parseByteSize(col("s")).as("bytes"),
     TextFunctions.normalizeDate(col("s")).as("date"),
     TextFunctions.temperatureToKelvin(col("s")).as("kelvin"),
-    TextFunctions.isValidDoi(col("s")).as("doi"))
+    TextFunctions.isValidDoi(col("s")).as("doi"),
+    Robots.allowedCol(col("s")).as("robots"))
 
   /** The kernel columns over `frame`, in id order, and whether the plan
     * ran whole-stage generated code. */
@@ -75,19 +77,9 @@ class KernelModesSpec extends AnyFunSuite {
     (rows, generated)
   }
 
-  private def interpreted[A](body: => A): A = {
-    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val own = keys.map(k => k -> spark.conf.get(k))
-    try {
-      spark.conf.set(keys(0), "false")
-      spark.conf.set(keys(1), "NO_CODEGEN")
-      body
-    } finally own.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
   test("every kernel gives the same values generated and interpreted") {
     val (gen, genCompiled) = evaluate()
-    val (interp, interpCompiled) = interpreted(evaluate())
+    val (interp, interpCompiled) = SparkTestSession.interpreted(evaluate())
     assert(genCompiled && !interpCompiled)
     assert(gen.length === 5)
     gen.zip(interp).foreach { case (g, i) => assert(g === i, s"id ${g.getLong(0)}") }
@@ -112,6 +104,7 @@ class KernelModesSpec extends AnyFunSuite {
     assert(byId(1L).getAs[String]("clean") === "hot")
     assert(byId(2L).getAs[String]("date") === "2023-06-01T10:30:00")
     assert(byId(3L).getAs[String]("clean") === "a & b")
+    assert(byId(1L).getAs[Boolean]("robots"))
     // a null argument gives null without calling the kernel
     assert((1 until byId(5L).length).forall(byId(5L).isNullAt))
   }
@@ -129,7 +122,8 @@ class KernelModesSpec extends AnyFunSuite {
       TextFunctions.parseByteSize(col("v")),
       TextFunctions.normalizeDate(col("a")),
       TextFunctions.temperatureToKelvin(col("sh")),
-      TextFunctions.isValidDoi(col("b")))
+      TextFunctions.isValidDoi(col("b")),
+      Robots.allowedCol(col("v")))
     wrong.foreach { c =>
       val e = intercept[AnalysisException](frame.select(c).schema)
       assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)

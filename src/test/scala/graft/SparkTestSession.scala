@@ -14,4 +14,16 @@ object SparkTestSession {
     * end of every run). */
   def scratchDir(prefix: String): String =
     BenchDirs.deleteOnExit(Files.createTempDirectory(prefix).toString)
+
+  /** `body` with the shared session's plans interpreted (the two confs
+    * `PlanMode` sets for a small step), its own confs restored after. */
+  def interpreted[A](body: => A): A = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val own = keys.map(k => k -> get.conf.get(k))
+    try {
+      get.conf.set(keys(0), "false")
+      get.conf.set(keys(1), "NO_CODEGEN")
+      body
+    } finally own.foreach { case (k, v) => get.conf.set(k, v) }
+  }
 }

@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, InterpretedUnsafeProjection, Literal, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.TopKPerKey
+import graft.plans.{TopKHeaps, TopKPerKey}
 
 /** The custom Catalyst top-k operator must (a) agree row-for-row with the
   * window `row_number` reference, (b) plan as partial→one-exchange→final
@@ -16,6 +20,7 @@ import graft.plans.TopKPerKey
   * tree string renders the full current plan.
   */
 class TopKPerKeySpec extends AnyFunSuite {
+  import TopKPerKeySpec._
   private lazy val spark = SparkTestSession.get
 
   // Deterministic synthetic frontier: total ordering via unique id.
@@ -109,12 +114,17 @@ class TopKPerKeySpec extends AnyFunSuite {
   test("partial-pass memory valve: tiny maxPartialKeys stays exact") {
     // With the valve at 2 keys, most partial-pass rows stream through
     // unpruned; the final pass must still produce the exact top-k.
-    spark.conf.set("spark.graft.topk.maxPartialKeys", "2")
-    try {
-      val got = TopKPerKey(frontier, Seq(col("host")),
-        Seq(col("score").desc, col("id").asc), 17)
-      assert(collectSorted(got) === collectSorted(windowRef(17)))
-    } finally spark.conf.unset("spark.graft.topk.maxPartialKeys")
+    for (interp <- Seq(false, true)) {
+      val (partial, got) = inTask(interp) { () =>
+        val chunks = Valve.grouped(500).map(c => pairs(
+          TopKHeaps.topK(rows(c), Seq(K), Seq(Desc), Literal(17),
+            Input, maxKeys = 2))).toVector
+        (chunks.map(_.size).sum, pairs(exact(
+          rows(chunks.flatten), Desc, 17, TopKHeaps.MaxRetainedRows)))
+      }
+      assert(partial > 8 * 5 * 17, "the valve let no row through")
+      assert(got.sorted === reference(Valve, 17), s"interpreted=$interp")
+    }
   }
 
   test("k=1 first-wins idiom: gated off by default, exact when opted in") {
@@ -159,88 +169,58 @@ class TopKPerKeySpec extends AnyFunSuite {
     assert(TopKPerKey(frontier, Seq(col("host")), Seq(col("id").asc), lit(0)).count() === 0)
   }
 
-  // ---- final-pass spill fallback -----------------------------------------
+  // ---- final-pass overflow into the sort ---------------------------------
 
-  test("topKExact kernel: tiny row budget spills, recurses, stays exact") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, Literal, SortOrder}
-    import org.apache.spark.sql.types.IntegerType
-    import graft.plans.TopKHeaps
-
-    val k = AttributeReference("k", IntegerType)()
-    val v = AttributeReference("v", IntegerType)()
-    val input = Seq(k, v)
-    // 500 keys × 20 rows; top-3 by v desc per key = v in {9980+key pattern}
-    val n = 10000
-    def rows = (0 until n).iterator.map(i => InternalRow(i % 500, i): InternalRow)
-    var spilled = 0L
-    val got = TopKHeaps.topKExact(
-      rows, Seq(k), Seq(SortOrder(v, Descending)), Literal(3), input,
-      budgetRows = 10, fanout = 8, onSpill = spilled += _)
-      .map(r => (r.getInt(0), r.getInt(1))).toVector
-    assert(spilled > 0, "budget of 10 rows over 500 keys must spill")
-    val expect = (0 until n).map(i => (i % 500, i)).groupBy(_._1)
-      .values.flatMap(_.sortBy(-_._2).take(3)).toVector.sorted
-    assert(got.sorted === expect)
-    // duplicate-safe: no row lost or doubled across recursion levels
-    assert(got.size === 1500)
-
-    // k larger than the whole budget for a single key: stays in memory,
-    // exact, no infinite recursion (single-key k is the documented
-    // non-spilling envelope; demotion requires >= 2 in-memory keys).
-    var sp2 = 0L
-    val one = TopKHeaps.topKExact(
-      (0 until 100).iterator.map(i => InternalRow(7, i): InternalRow),
-      Seq(k), Seq(SortOrder(v, Ascending)), Literal(50), input,
-      budgetRows = 5, fanout = 4, onSpill = sp2 += _)
-      .map(_.getInt(1)).toVector
-    assert(one.sorted === (0 until 50).toVector)
-    assert(sp2 === 0L)
+  test("topKExact kernel: tiny row budget overflows into the sort, stays exact") {
+    // 500 keys × 20 rows, top 3 by v desc per key, past budgets of 1 and
+    // 32 rows, with and without forced sorter spills every 1000 rows
+    val in = (0 until 10000).map(i => (i % 500, i))
+    for (interp <- Seq(false, true); budget <- Seq(1L, 32L); spillEvery <- Seq(0, 1000)) {
+      val (got, sorted) = exactInTask(interp, in, Desc, 3, budget, spillEvery)
+      val mode = s"interpreted=$interp budget=$budget spillEvery=$spillEvery"
+      assert(sorted > 0, mode)
+      // duplicate-safe: no row lost or doubled
+      assert(got.size === 1500, mode)
+      assert(got.sorted === reference(in, 3), mode)
+    }
   }
 
-  test("topKExact demotion: admitted keys growing past the budget spill") {
-    // Without demotion this shape retains keys×k = 40×50 = 2000 rows
-    // against a budget of 30: all 40 keys arrive (one row each) before
-    // any key's second row, so admission alone never spills. Demotion
-    // must move growing keys to disk and the result must stay exact.
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Descending, Literal, SortOrder}
-    import org.apache.spark.sql.types.IntegerType
-    import graft.plans.TopKHeaps
+  test("topKExact: admitted keys growing past the budget overflow into the sort") {
+    // Breadth-first: all 40 keys arrive (one row each) before any key's
+    // second row, so the budget of 45 rows is passed by keys already
+    // admitted, never by a new one; keys × k = 2000 rows would be held.
+    val in = (0 until 40 * 120).map(i => (i % 40, i))
+    for (interp <- Seq(false, true)) {
+      val (got, sorted) = exactInTask(interp, in, Desc, 50, 45L, 1000)
+      assert(sorted > 0, "growth past the budget must overflow")
+      assert(got.size === 40 * 50)
+      assert(got.sorted === reference(in, 50), s"interpreted=$interp")
+    }
+  }
 
-    val k = AttributeReference("k", IntegerType)()
-    val v = AttributeReference("v", IntegerType)()
-    val input = Seq(k, v)
-    val nKeys = 40; val perKey = 120; val keep = 50
-    // round-robin: key i gets rows i, i+40, i+80, ... — breadth-first
-    def rows = (0 until nKeys * perKey).iterator
-      .map(i => InternalRow(i % nKeys, i): InternalRow)
-    var spilled = 0L
-    val got = TopKHeaps.topKExact(
-      rows, Seq(k), Seq(SortOrder(v, Descending)), Literal(keep), input,
-      budgetRows = 30, fanout = 8, onSpill = spilled += _)
-      .map(r => (r.getInt(0), r.getInt(1))).toVector
-    assert(spilled > 0, "growth past the budget must demote keys to disk")
-    val expect = (0 until nKeys * perKey).map(i => (i % nKeys, i))
-      .groupBy(_._1).values.flatMap(_.sortBy(-_._2).take(keep))
-      .toVector.sorted
-    assert(got.sorted === expect)
-    assert(got.size === nKeys * keep)
+  test("topKExact: a single key whose k exceeds the budget goes through the sort") {
+    val in = (0 until 6000).map(i => (7, (i * 7919) % 6000))
+    for (interp <- Seq(false, true)) {
+      val (got, sorted) = exactInTask(interp, in, Asc, 5000, 5L, 1000)
+      assert(sorted === 6000L, s"interpreted=$interp")
+      assert(got.map(_._2).sorted === (0 until 5000).toVector)
+    }
   }
 
   test("final-pass spill e2e: exact under a tiny retained-row budget") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    spark.conf.set("spark.graft.topk.maxRetainedRows", "32")
-    try {
-      val base = frontier.withColumn("k", col("id") % 997)
+    val base = frontier.withColumn("k", col("id") % 997)
+    val w = Window.partitionBy("k").orderBy(col("score").desc, col("id").asc)
+    val ref = base.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3).drop("rn").select("k", "id")
+    def sorted(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getInt(0), r.getInt(1))).sorted
+    val expect = sorted(ref.collect())
+    for (interp <- Seq(false, true)) TopKHeaps.withRetainedRows(32) {
       val got = TopKPerKey(base, Seq(col("k")),
         Seq(col("score").desc, col("id").asc), 3).select("k", "id")
-      val w = Window.partitionBy("k").orderBy(col("score").desc, col("id").asc)
-      val ref = base.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3).drop("rn").select("k", "id")
-      def sorted(rows: Array[org.apache.spark.sql.Row]) =
-        rows.map(r => (r.getInt(0), r.getInt(1))).sorted
-      assert(sorted(got.collect()) === sorted(ref.collect()))
+      assert(sorted(
+        if (interp) SparkTestSession.interpreted(got.collect()) else got.collect()) === expect)
 
       // the spillRows SQL metric on the exec instance that just ran; AQE
       // wraps each stage in a leaf QueryStageExec, so descend manually
@@ -261,7 +241,64 @@ class TopKPerKeySpec extends AnyFunSuite {
       val fin = finals(plan)
       assert(fin.nonEmpty, plan.toString)
       assert(fin.head.metrics("spillRows").value > 0,
-        "997 keys × budget 32 rows must spill in the final pass")
-    } finally spark.conf.unset("spark.graft.topk.maxRetainedRows")
+        "997 keys × budget 32 rows must overflow in the final pass")
+    }
   }
+
+  /** `body` inside one Spark task — the overflow sorter takes the task's
+    * memory manager — with the task's projections and orderings
+    * interpreted or generated (the factory mode reaches a task through
+    * its local properties). */
+  private def inTask[A: scala.reflect.ClassTag](interp: Boolean)(body: () => A): A = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(FactoryMode, if (interp) "NO_CODEGEN" else "CODEGEN_ONLY")
+    val (modeSeen, result) =
+      try sc.parallelize(Seq(0), 1).map { _ =>
+        (UnsafeProjection.create(Seq(K), Input).isInstanceOf[InterpretedUnsafeProjection],
+          body())
+      }.collect().head
+      finally sc.setLocalProperty(FactoryMode, null)
+    assert(modeSeen === interp, "the task ran in the other mode")
+    result
+  }
+
+  /** [[TopKHeaps.topKExact]] over (key, v) pairs with a constant k, in a
+    * task; the kept pairs and the rows handed to the sorter. */
+  private def exactInTask(interp: Boolean, in: Seq[(Int, Int)], order: SortOrder,
+      k: Int, budget: Long, spillEvery: Int): (Vector[(Int, Int)], Long) =
+    inTask(interp) { () =>
+      var sorted = 0L
+      (pairs(exact(rows(in), order, k, budget, spillEvery, sorted += _)), sorted)
+    }
+
+  /** The first k pairs of each key by v descending, sorted. */
+  private def reference(in: Seq[(Int, Int)], k: Int): Vector[(Int, Int)] =
+    in.groupBy(_._1).values.flatMap(_.sortBy(-_._2).take(k)).toVector.sorted
+}
+
+/** The final-pass kernel over (key, v) int rows, outside the suite so a
+  * task's closure captures nothing of it. */
+object TopKPerKeySpec {
+  val FactoryMode = "spark.sql.codegen.factoryMode"
+  val K = AttributeReference("k", IntegerType)()
+  val V = AttributeReference("v", IntegerType)()
+  val Input = Seq(K, V)
+  val Asc = SortOrder(V, Ascending)
+  val Desc = SortOrder(V, Descending)
+  /** 4000 rows over 5 keys, v a permutation of 0 until 4000. */
+  val Valve: Seq[(Int, Int)] = (0 until 4000).map(i => (i % 5, (i * 7919) % 4000))
+
+  def rows(in: Seq[(Int, Int)]): Iterator[InternalRow] =
+    in.iterator.map { case (a, b) => InternalRow(a, b) }
+  def pairs(it: Iterator[InternalRow]): Vector[(Int, Int)] =
+    it.map(r => (r.getInt(0), r.getInt(1))).toVector
+
+  /** Exact top-k by `order` per key, sorting past `budget` retained rows
+    * and spilling every `spillEvery` sorted rows (0: only under memory
+    * pressure). */
+  def exact(in: Iterator[InternalRow], order: SortOrder, k: Int, budget: Long,
+      spillEvery: Int = 0, onSpill: Long => Unit = _ => ()): Iterator[InternalRow] =
+    TopKHeaps.topKExact(in, Seq(K), Seq(order), Literal(k), Input, budget,
+      TopKHeaps.overflowSort(Seq(K), Seq(order), LocalTableScanExec(Input, Nil, None))
+        .copy(testSpillFrequency = spillEvery), onSpill)
 }
